@@ -1,0 +1,5 @@
+"""Layered parse->route benchmark for ``access_log_parser_spark``.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root; see ``perfbench/README.md``.
+"""
