@@ -3,13 +3,19 @@
 Everything the reference does per line in its eager loop
 (`/root/reference/parser_core.go:176-254`: skip-check -> decode ->
 unmatched? -> filter -> selectLabels -> addLineNumber -> LineHandler ->
-prefix -> write) runs here as ONE Arrow-batched ``mapInPandas`` pass
-followed by pure-Catalyst finalization. Design goals at 100 TB:
+prefix -> write) runs here as ONE Arrow-batched Python pass followed by
+pure-Catalyst finalization: ``mapInPandas`` in :func:`parse_routed`, and
+``mapInArrow`` in :func:`extract_fields` (the decode step of
+:func:`fast_parse_routed`), which takes and returns Arrow arrays with no
+pandas frame in between. Design goals at 100 TB:
 
 - exactly one Python<->JVM hop on the hot path (regex decode + DSL filter +
   serialization all happen in the same pandas batch function);
-- regexes and filter predicates compile once per executor, not per line
-  (the reference recompiles filters per line — parser_core.go:220);
+- regexes and filter predicates compile once per task, not per line
+  (the reference recompiles filters per line — parser_core.go:220), and a
+  prefix-chained pattern list such as the S3 preset compiles into one
+  fused regex, so a line costs one search instead of up to five
+  (:class:`.decoders.DecodePlan`);
 - TSV "isFirst" header and prefix decoration are JVM-side Catalyst
   expressions (window-free ``min(when(...)) over source`` + ``transform``),
   so no global ordering is ever collected to the driver;
@@ -30,6 +36,7 @@ from __future__ import annotations
 from collections.abc import Iterator, Sequence
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -128,12 +135,11 @@ def parse_routed(
         raise ValueError(f"keep_raw must be unmatched/all/none, got {keep_raw!r}")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        compiled = (
-            [pat.validate_pattern(p) for p in pattern_strs]
+        plan = (
+            decoders.compile_plan(pat.compile_patterns(pattern_strs))
             if pattern_strs is not None
             else None
         )
-        names = [pat.group_names(p) for p in compiled] if compiled else None
         filt = compile_filters(filter_exprs)
         for pdf in batches:
             raws = pdf["raw"].tolist()
@@ -150,16 +156,14 @@ def parse_routed(
                 else:
                     live_idx.append(i)
 
-            if compiled is not None:
-                sub_pids, sub_vals = decoders.regex_decode_batch(
-                    [raws[i] for i in live_idx], compiled, names
-                )
+            if plan is not None:
+                sub_pids, sub_vals = plan.decode([raws[i] for i in live_idx])
                 row_ls: list[list[str] | None] = [None] * n
                 row_vs: list[list[str] | None] = [None] * n
                 for k, i in enumerate(live_idx):
                     pids[i] = sub_pids[k]
                     if sub_pids[k] >= 0:
-                        row_ls[i] = names[sub_pids[k]]
+                        row_ls[i] = plan.names[sub_pids[k]]
                         row_vs[i] = sub_vals[k]
             else:
                 sub_ls, sub_vs = decoders.ltsv_decode_batch(
@@ -283,20 +287,23 @@ def extract_fields(
     column-oriented equivalent of the reference's (labels, values) slices
     (parser_core.go:69) and feeds joins/aggregations without further Python.
 
+    The Python hop is ``mapInArrow``: passthrough columns go back as the
+    Arrow arrays they arrived as, and decoded columns are built straight
+    into Arrow arrays, with no pandas frame on either side.
+
     ``fields`` pushes column pruning through the UDF boundary: Catalyst
-    cannot prune inside a black-box ``mapInPandas``, so a downstream
+    cannot prune inside a black-box ``mapInArrow``, so a downstream
     ``.select`` of 5 of 33 CloudFront fields would otherwise still pay
     Python materialization + Arrow transfer for all 33. Selection keeps
     union (line) order and silently drops unknown names — the reference's
     ``selectLabels`` semantics (parser_core.go:291-305).
     """
+    if isinstance(fmt, str) and fmt == "ltsv":
+        raise ValueError("extract_fields is regex-only; use extract_ltsv for LTSV")
     pattern_strs = _resolve_patterns(fmt)
     if not pattern_strs:
         raise decoders.NoPatternError
-    for p in pattern_strs:
-        pat.validate_pattern(p)
-    compiled0 = [pat.validate_pattern(p) for p in pattern_strs]
-    union = pat.union_schema(compiled0)
+    union = pat.union_schema(pat.compile_patterns(pattern_strs))
     if fields is not None:
         wanted = set(fields)
         union = [n for n in union if n in wanted]
@@ -308,41 +315,26 @@ def extract_fields(
         + ([StructField("raw", StringType())] if raw_when_unmatched else [])
         + [StructField(name, StringType()) for name in union]
     )
+    n_pass = len(passthrough)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        compiled = [pat.validate_pattern(p) for p in pattern_strs]
-        names = [pat.group_names(p) for p in compiled]
-        # per-pattern: union position -> capture position (or None)
-        slot: list[list[int | None]] = []
-        for ns in names:
-            pos = {nm: k for k, nm in enumerate(ns)}
-            slot.append([pos.get(nm) for nm in union])
-        width = len(union)
-        for pdf in batches:
-            raws = pdf[line_col].tolist()
-            pids, vals = decoders.regex_decode_batch(raws, compiled, names)
-            cols: list[list[str | None]] = [[None] * len(raws) for _ in range(width)]
-            for i, pid in enumerate(pids):
-                if pid < 0:
-                    continue
-                vs = vals[i]
-                sl = slot[pid]
-                for j in range(width):
-                    k = sl[j]
-                    if k is not None:
-                        cols[j][i] = vs[k]
-            data = {c: pdf[c] for c in passthrough}
-            data["pattern_id"] = pd.Series(pids, dtype="int32")
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        plan = decoders.compile_plan(pat.compile_patterns(pattern_strs))
+        for batch in batches:
+            # columns by position: line_col may also be a passthrough column
+            raws = batch.column(n_pass).to_pylist()
+            pids, cols = plan.columns(raws, union)
+            arrays = [batch.column(k) for k in range(n_pass)]
+            arrays.append(pa.array(pids, pa.int32()))
             if raw_when_unmatched:
-                data["raw"] = pd.Series(
-                    [raws[i] if pids[i] < 0 else None for i in range(len(raws))],
-                    dtype="object",
+                # built from Python strings: pyarrow's if_else would keep
+                # every line's bytes in the data buffer sent back to the JVM
+                arrays.append(
+                    pa.array([r if p < 0 else None for r, p in zip(raws, pids)], pa.string())
                 )
-            for j, name in enumerate(union):
-                data[name] = pd.Series(cols[j], dtype="object")
-            yield pd.DataFrame(data)
+            arrays.extend(pa.array(c, pa.string()) for c in cols)
+            yield pa.RecordBatch.from_arrays(arrays, names=out_schema.fieldNames())
 
-    return lines_df.select(*passthrough, line_col).mapInPandas(run, out_schema)
+    return lines_df.select(*passthrough, line_col).mapInArrow(run, out_schema)
 
 
 def fast_parse_routed(

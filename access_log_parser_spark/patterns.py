@@ -15,6 +15,9 @@ group must be named.
 from __future__ import annotations
 
 import re
+from collections.abc import Callable, Sequence
+from dataclasses import dataclass
+from re import _parser as _sre
 
 REGEX_PATTERN_ERROR = "invalid regex pattern"
 
@@ -327,6 +330,248 @@ def fast_twin(pattern: re.Pattern) -> tuple[re.Pattern, int] | None:
     if not changed:
         return None
     return re.compile("".join(out)), n_tabs
+
+
+class _Unproven(Exception):
+    """Raised inside the fusion analysis for anything it cannot prove."""
+
+
+_CATEGORIES = {
+    _sre.CATEGORY_DIGIT: re.compile(r"\d"),
+    _sre.CATEGORY_NOT_DIGIT: re.compile(r"\D"),
+    _sre.CATEGORY_SPACE: re.compile(r"\s"),
+    _sre.CATEGORY_NOT_SPACE: re.compile(r"\S"),
+    _sre.CATEGORY_WORD: re.compile(r"\w"),
+    _sre.CATEGORY_NOT_WORD: re.compile(r"\W"),
+}
+
+
+def _char_test(op, av) -> Callable[[str], bool] | None:
+    """Membership test of a one-character item (literal, negated literal,
+    class, ``.``); None for any other item."""
+    if op is _sre.LITERAL:
+        return chr(av).__eq__
+    if op is _sre.NOT_LITERAL:
+        return chr(av).__ne__
+    if op is _sre.ANY:
+        return "\n".__ne__
+    if op is not _sre.IN:
+        return None
+    negate, tests = False, []
+    for iop, iav in av:
+        if iop is _sre.NEGATE:
+            negate = True
+        elif iop is _sre.LITERAL:
+            tests.append(chr(iav).__eq__)
+        elif iop is _sre.RANGE:
+            tests.append(lambda c, lo=iav[0], hi=iav[1]: lo <= ord(c) <= hi)
+        elif iop is _sre.CATEGORY and iav in _CATEGORIES:
+            tests.append(lambda c, rx=_CATEGORIES[iav]: rx.fullmatch(c) is not None)
+        else:
+            raise _Unproven
+    return lambda c: any(t(c) for t in tests) != negate
+
+
+# A first-character set: a frozenset of literal characters, or a
+# membership test when the set is a class.
+_First = frozenset | Callable[[str], bool]
+
+
+def _first(items) -> _First:
+    """Set holding the first character of every match of ``items``, which
+    must be proven to consume at least one character."""
+    if not items:
+        raise _Unproven
+    op, av = items[0]
+    if op is _sre.LITERAL:
+        return frozenset(chr(av))
+    test = _char_test(op, av)
+    if test is not None:
+        return test
+    if op is _sre.MAX_REPEAT and av[0] >= 1:
+        return _first(av[2])
+    if op is _sre.SUBPATTERN:
+        return _first(av[3])
+    if op is _sre.BRANCH:
+        firsts = [_first(alt) for alt in av[1]]
+        if all(isinstance(f, frozenset) for f in firsts):
+            return frozenset().union(*firsts)
+    raise _Unproven
+
+
+def _disjoint(a: _First, b: _First) -> bool:
+    if isinstance(a, frozenset) and isinstance(b, frozenset):
+        return a.isdisjoint(b)
+    if isinstance(a, frozenset):
+        return not any(b(c) for c in a)
+    if isinstance(b, frozenset):
+        return not any(a(c) for c in b)
+    return False
+
+
+def _check_forced(items, follow: Callable[[], _First | None]) -> None:
+    """Raise :class:`_Unproven` unless every item of ``items`` ends where
+    it must (see :func:`fuse_cascade`). ``follow`` returns the first set of
+    what comes after ``items``, or None at the end of the pattern."""
+    for k, (op, av) in enumerate(items):
+        rest = items[k + 1:]
+        nxt = (lambda rest=rest: _first(rest)) if rest else follow
+        if _char_test(op, av) is not None:
+            continue
+        if op is _sre.MAX_REPEAT:
+            lo, hi, sub = av
+            test = _char_test(*sub[0]) if len(sub) == 1 else None
+            if test is None:
+                raise _Unproven
+            if lo == hi:
+                continue
+            after = nxt()
+            if after is not None and not _disjoint(test, after):
+                raise _Unproven
+        elif op is _sre.SUBPATTERN:
+            if av[1] or av[2]:  # scoped inline flags
+                raise _Unproven
+            _check_forced(av[3], nxt)
+        elif op is _sre.BRANCH:
+            alts = av[1]
+            firsts = [_first(alt) for alt in alts]
+            for i in range(len(firsts)):
+                for j in range(i + 1, len(firsts)):
+                    if not _disjoint(firsts[i], firsts[j]):
+                        raise _Unproven
+            for alt in alts:
+                _check_forced(alt, nxt)
+        else:
+            raise _Unproven
+
+
+@dataclass(frozen=True)
+class FusedCascade:
+    """One regex standing in for a whole first-match-wins pattern list.
+
+    ``levels`` maps a match of ``regex`` back to the list, deepest tail
+    first: ``(marker, pattern_id)`` says that when 0-based group ``marker``
+    took part, the cascade's winner is ``pattern_id``, whose values are the
+    match's first ``patterns[pattern_id].groups`` groups. The last level is
+    the head and has ``marker = -1``.
+    """
+
+    regex: re.Pattern
+    levels: tuple[tuple[int, int], ...]
+
+
+def fuse_cascade(patterns: Sequence[re.Pattern]) -> FusedCascade | None:
+    """Fuse a prefix-chained pattern list into ONE regex, or return None.
+
+    The reference tries an ordered list until one pattern matches. The S3
+    preset is ``HEAD + TAIL[:k]`` for shrinking k, so a depth-5 line parses
+    the same head five times. When the list is ``P0 = H T1 .. Tk``,
+    ``P1 = H T1 .. Tk-1``, ..., ``Pk = H``, one search of
+    ``H(?:T1(?:T2(?:..Tk)?)?)?`` gives the same answer, and the deepest tail
+    that took part names the winner. Three conditions make that exact:
+
+    1. Every pattern is the next one's source plus a suffix, and its parse
+       tree is the next one's tree plus the suffix's items, so group
+       numbers and names agree across the list and the fused regex.
+    2. The first item is ``^`` (or ``\\A``) and no other anchor appears, so
+       every search starts at offset 0 only. Without it ``search`` takes
+       the leftmost start: the head alone could match at 0 while a longer
+       pattern matches at 5, and the two would disagree.
+    3. Every match is forced. Each variable-length item is a repeated
+       one-character class whose class excludes every character that can
+       start the item after it. Such a repeat must stop exactly at the end
+       of its run of class characters, since a shorter run leaves a class
+       character where the next item needs a non-class one. Alternatives
+       must start with disjoint character sets, so at most one can match.
+       A repeat at the very end is followed by nothing and takes its
+       greedy run, as it does at the end of any shorter pattern and, in
+       the fused regex, ahead of an optional tail that needs a non-class
+       character. So each prefix ``H T1 .. Tj`` matches a line in at most
+       one way, its final repeat aside, and a longer prefix's match extends
+       a shorter one's.
+
+    Under these, the cascade's winner is the longest prefix that matches,
+    and the fused regex, which tries each optional tail before skipping
+    it, takes exactly that many tails with the same group values. Condition
+    3 is checked on the ``re`` parse tree, item by item, and anything it
+    cannot prove (lazy or possessive repeats, repeated groups, nullable
+    items ahead of a repeat, lookaround, backreferences, inline flags,
+    ``$``) keeps the cascade. Apache CLF fails it: ``remote_user`` is
+    ``[\\S ]+`` followed by a space, so the fused regex can let it run on
+    into the next fields of a line the first pattern matches.
+
+    Each tail must also hold a capture group directly, not inside a repeat
+    or alternative: the marker that shows the tail took part.
+    """
+    if len(patterns) < 2:
+        return None
+    srcs = [p.pattern for p in patterns]
+    if any(p.flags != re.UNICODE for p in patterns) or any(
+        not longer.startswith(shorter) or longer == shorter
+        for longer, shorter in zip(srcs, srcs[1:])
+    ):
+        return None
+    trees = [_sre.parse(s).data for s in srcs]
+    full = [repr(item) for item in trees[0]]
+    if any([repr(item) for item in t] != full[: len(t)] for t in trees[1:]):
+        return None
+    names = patterns[0].groupindex
+    for p in patterns[1:]:
+        if dict(p.groupindex) != {k: v for k, v in names.items() if v <= p.groups}:
+            return None
+    first = trees[0][0] if trees[0] else None
+    if first is None or first[0] is not _sre.AT or first[1] not in (
+        _sre.AT_BEGINNING,
+        _sre.AT_BEGINNING_STRING,
+    ):
+        return None
+    try:
+        _check_forced(trees[0][1:], lambda: None)
+    except _Unproven:
+        return None
+
+    # tree lengths from the head outwards; tail d is full[cuts[d-1]:cuts[d]]
+    cuts = [len(t) for t in reversed(trees)]
+    levels = [(-1, len(patterns) - 1)]
+    for depth in range(1, len(patterns)):
+        tail = trees[0][cuts[depth - 1]: cuts[depth]]
+        marker = next((av[0] for op, av in tail if op is _sre.SUBPATTERN and av[0]), None)
+        if marker is None:
+            return None
+        levels.append((marker - 1, len(patterns) - 1 - depth))
+
+    shortest_first = srcs[::-1]
+    fused_src = (
+        shortest_first[0]
+        + "".join(
+            "(?:" + longer[len(shorter):]
+            for shorter, longer in zip(shortest_first, shortest_first[1:])
+        )
+        + ")?" * (len(srcs) - 1)
+    )
+    # the fused tree must be the head's items, then each tail's items
+    # nested in an optional group, exactly as they parse in the full pattern
+    items, start = list(_sre.parse(fused_src).data), 0
+    for depth, cut in enumerate(cuts):
+        own, rest = items[: cut - start], items[cut - start:]
+        if [repr(i) for i in own] != full[start:cut]:
+            return None
+        if depth == len(cuts) - 1:
+            if rest:
+                return None
+        elif (
+            len(rest) != 1
+            or rest[0][0] is not _sre.MAX_REPEAT
+            or rest[0][1][:2] != (0, 1)
+        ):
+            return None
+        else:
+            items = list(rest[0][1][2])
+        start = cut
+    fused = re.compile(fused_src)
+    if fused.groups != patterns[0].groups or fused.groupindex != names:
+        return None
+    return FusedCascade(fused, tuple(reversed(levels)))
 
 
 def group_names(pattern: re.Pattern) -> list[str]:

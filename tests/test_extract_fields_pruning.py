@@ -1,4 +1,4 @@
-"""extract_fields(fields=...): column pruning through the mapInPandas
+"""extract_fields(fields=...): column pruning through the mapInArrow
 boundary must keep union (line) order, silently drop unknown names
 (selectLabels semantics, parser_core.go:291-305), and leave decode
 results for the kept columns identical to the unpruned run."""
@@ -48,3 +48,8 @@ def test_empty_selection_keeps_pattern_id(lines):
     out = extract_fields(lines, "apache_clf", fields=[])
     assert out.columns == ["pattern_id"]
     assert sorted(r["pattern_id"] for r in out.collect()) == [-1, 0, 0]
+
+
+def test_ltsv_points_to_extract_ltsv(lines):
+    with pytest.raises(ValueError, match="extract_ltsv"):
+        extract_fields(lines, "ltsv")
