@@ -1,7 +1,7 @@
 # Dev ergonomics (the reference ships a Makefile too: /root/reference/Makefile)
 PY := PYTHONPATH=.
 
-.PHONY: test parity dtypes plans bench validate pipeline-demo submit-check
+.PHONY: test parity dtypes plans bench perfbench perfbench-test validate pipeline-demo submit-check
 
 test:
 	python -m pytest tests/ -x -q
@@ -17,6 +17,17 @@ plans:
 
 bench:
 	SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python bench.py
+
+# layered parse->route benchmark (perfbench/README.md), one process:
+#   make perfbench WL=s3_cascade_agg SEED=7 TRACE=1
+WL ?= s3_route
+SEED ?= 1
+TRACE ?= 0
+perfbench:
+	python3 perfbench/run.py --workload $(WL) --seed $(SEED) --seconds 6 --trace $(TRACE)
+
+perfbench-test:
+	python3 -m pytest perfbench/tests -q
 
 validate:
 	$(PY) python tools/validate_all.py

@@ -1,19 +1,28 @@
 """Line sources: string / file / gzip / document-text scans.
 
-The reference scans lines with ``bufio.Scanner``
-(`/root/reference/parser_core.go:190-201`): split on ``\\n``, tolerate a
-``\\r\\n`` terminator, no trailing empty line for newline-terminated input,
-1-based line numbers per source. :func:`explode_lines` reproduces exactly
-that with pure Catalyst expressions (``split`` + ``posexplode``), so
-document-level predicates still push down to the scan and no Python runs.
+The reference scans lines with ``bufio.Scanner`` and its default split
+function ``bufio.ScanLines`` (reference ``parser_core.go:190-201``).
+``ScanLines`` cuts a token at every ``\\n`` and drops ONE trailing
+``\\r`` from each token (``dropCR``), the last, unterminated token at EOF
+included; newline-terminated input yields no trailing empty line, and empty
+input yields no line at all. Line numbers are 1-based per source.
+:func:`explode_lines` reproduces exactly that with pure Catalyst
+expressions and no regex, so document-level predicates still push down to
+the scan and no Python runs. ``ziparchive._scan_lines`` is the same
+semantics in plain Python, used for zip entries and as the test oracle.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def _drop_last(c: Column, ch: str) -> Column:
+    """``c`` without its final character when that is ``ch``."""
+    return F.when(c.endswith(ch), c.substr(F.lit(1), F.length(c) - 1)).otherwise(c)
 
 
 def explode_lines(
@@ -22,26 +31,35 @@ def explode_lines(
     source_col: str = "url",
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(source, text) -> (source, line_no, raw) with scanner semantics.
+    """(source, text) -> (source, line_no, raw) with ``bufio.ScanLines``
+    semantics.
 
+    Drop one final ``\\n``, split on the literal ``\\n``, then drop one
+    trailing ``\\r`` per line. NULL and empty texts yield no rows.
     ``line_no`` is 1-based within each source document — the coordinate
     system of the reference's Errors table (parser_result.go:33-35).
+
+    Every step is a literal string operation: a one-character delimiter
+    that is not a regex metacharacter takes Java's ``String.split`` fast
+    path, which never compiles a pattern. A regex strip or split here
+    (``\\r?\\n``) made this layer over 9x slower, so
+    ``tests/test_scanner.py`` pins the plan.
     """
-    # strip exactly one trailing newline at absolute end (\z anchor avoids
-    # Java's $-before-final-terminator surprise), then split on \r?\n
-    t = F.regexp_replace(F.col(text_col), r"\r?\n\z", "")
-    lines = F.split(t, r"\r?\n")
-    out = (
-        df.filter(F.col(text_col).isNotNull() & (F.col(text_col) != ""))
+    text = F.col(text_col)
+    return (
+        df.filter(text.isNotNull() & (text != ""))
         .select(
             F.col(source_col).alias("source"),
             *[F.col(c) for c in keep],
-            F.posexplode(lines).alias("pos", "raw"),
+            F.posexplode(F.split(_drop_last(text, "\n"), "\n")).alias("pos", "raw"),
         )
-        .withColumn("line_no", (F.col("pos") + 1).cast("long"))
-        .drop("pos")
+        .select(
+            "source",
+            (F.col("pos") + 1).cast("long").alias("line_no"),
+            _drop_last(F.col("raw"), "\r").alias("raw"),
+            *keep,
+        )
     )
-    return out.select("source", "line_no", "raw", *keep)
 
 
 def lines_from_string(spark: SparkSession, s: str, source: str = "") -> DataFrame:

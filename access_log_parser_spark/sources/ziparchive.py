@@ -33,14 +33,15 @@ ZIP_LINES_SCHEMA = StructType(
 
 
 def _scan_lines(data: bytes) -> list[str]:
-    """bufio.Scanner semantics: split \\n, tolerate \\r\\n, no trailing
-    empty line for newline-terminated input."""
+    """``bufio.ScanLines`` in plain Python: drop one final ``\\n``, split on
+    ``\\n``, then drop one trailing ``\\r`` per token (``dropCR``, which
+    Go applies to the unterminated last token too). Empty input has no
+    lines. ``sources.text.explode_lines`` must agree with this row for row
+    (tests/test_scanner.py)."""
     text = data.decode("utf-8", errors="replace")
     if text == "":
         return []
-    if text.endswith("\r\n"):
-        text = text[:-2]
-    elif text.endswith("\n"):
+    if text.endswith("\n"):
         text = text[:-1]
     return [ln[:-1] if ln.endswith("\r") else ln for ln in text.split("\n")]
 

@@ -1,0 +1,139 @@
+"""Line scanner parity with Go's ``bufio.ScanLines`` (parser_core.go:190-201).
+
+``ScanLines`` cuts a token at every ``\\n`` and drops one trailing ``\\r``
+from each token, the unterminated last one included. ``explode_lines``
+(Catalyst, every text source) and ``ziparchive._scan_lines`` (Python, zip
+entries) must both reproduce it; ``_scan_lines`` is the oracle for the fuzz.
+"""
+
+from __future__ import annotations
+
+import json
+
+import pytest
+from pyspark.sql import functions as F
+
+from access_log_parser_spark import LTSVParser, Option
+from access_log_parser_spark.sources.text import explode_lines, lines_from_string
+from access_log_parser_spark.sources.ziparchive import _scan_lines
+
+# input -> the reference's tokens
+GOLDEN = [
+    ("a\nb\r", ["a", "b"]),
+    ("\r", [""]),
+    ("a\r\r\n", ["a\r"]),
+    ("\n", [""]),
+    ("\r\n", [""]),
+    ("a\n\r\n", ["a", ""]),
+    ("a\r\nb\r\n\r\n", ["a", "b", ""]),
+    ("é\r\nü", ["é", "ü"]),
+    ("", []),
+]
+
+
+@pytest.mark.parametrize("text,expected", GOLDEN, ids=[repr(t) for t, _ in GOLDEN])
+def test_scan_lines_golden(text, expected):
+    assert _scan_lines(text.encode()) == expected
+
+
+@pytest.mark.parametrize("text,expected", GOLDEN, ids=[repr(t) for t, _ in GOLDEN])
+def test_lines_from_string_golden(spark, text, expected):
+    rows = lines_from_string(spark, text, source="s").orderBy("line_no").collect()
+    assert [(r.source, r.line_no, r.raw) for r in rows] == [
+        ("s", i + 1, ln) for i, ln in enumerate(expected)
+    ]
+
+
+def test_ltsv_last_line_drops_cr(spark):
+    """The unterminated last line loses its ``\\r`` too, so its status is
+    ``200`` and the filter keeps it."""
+    out, r = LTSVParser(spark, Option(filters=("status == 200",))).parse_string(
+        "host:a\tstatus:200\r\nhost:b\tstatus:200\r"
+    )
+    assert r.counters() == (2, 2, 0, 0, 0)
+    assert out == ['{"host":"a","status":"200"}', '{"host":"b","status":"200"}']
+
+
+def test_explode_keeps_schema_and_skips_empty_docs(spark):
+    df = spark.createDataFrame(
+        [("u1", "x\ny", 7), ("u2", "", 8), ("u3", None, 9)],
+        "url string, text string, k int",
+    )
+    out = explode_lines(df, keep=("k",))
+    assert out.schema.simpleString() == "struct<source:string,line_no:bigint,raw:string,k:int>"
+    assert [tuple(r) for r in out.orderBy("line_no").collect()] == [
+        ("u1", 1, "x", 7),
+        ("u1", 2, "y", 7),
+    ]
+
+
+def _preorder_end(nodes: list[dict], i: int) -> int:
+    """Index just past the subtree rooted at ``nodes[i]`` in a pre-order
+    flattened expression (Catalyst's ``toJSON`` layout)."""
+    pending = 1
+    while pending:
+        pending += nodes[i]["num-children"] - 1
+        i += 1
+    return i
+
+
+def _expression_lists(x):
+    """Every pre-order flattened expression list in a plan's JSON."""
+    if isinstance(x, list):
+        if x and all(isinstance(d, dict) and "num-children" in d for d in x):
+            yield x
+        for v in x:
+            yield from _expression_lists(v)
+    elif isinstance(x, dict):
+        for v in x.values():
+            yield from _expression_lists(v)
+
+
+def test_explode_plan_has_no_regex(spark):
+    """Pin the literal split: no regex expression anywhere in the optimized
+    plan, and every split delimiter is one character that is not a regex
+    metacharacter, so Java's ``String.split`` takes its no-regex fast path.
+    A regex strip or split made this layer over 9x slower."""
+    df = spark.createDataFrame([("u", "a\r\nb")], "url string, text string")
+    plan = json.loads(explode_lines(df)._jdf.queryExecution().optimizedPlan().toJSON())
+    splits = 0
+    for nodes in _expression_lists(plan):
+        for i, node in enumerate(nodes):
+            cls = node["class"].rsplit(".", 1)[-1]
+            assert "RegExp" not in cls and cls != "RLike", cls
+            if cls == "StringSplit":
+                splits += 1
+                delim = nodes[_preorder_end(nodes, i + 1)]
+                assert delim["class"].endswith(".Literal")
+                assert len(delim["value"]) == 1
+                assert delim["value"] not in ".$|()[{^?*+\\"
+    assert splits == 1
+
+
+def test_explode_matches_scan_lines_fuzz(spark):
+    """Random texts over the characters that matter to the scanner: one
+    DataFrame per example, compared row for row and by line number."""
+    from hypothesis import given, settings, strategies as st
+
+    texts = st.text(alphabet=["a", "é", "\t", " ", "\r", "\n"], max_size=12)
+
+    @given(st.lists(texts, min_size=1, max_size=8))
+    @settings(max_examples=60, deadline=None)
+    def check(batch):
+        # a JVM-side literal table: no Python worker per example
+        rows = [
+            F.struct(F.lit(str(i)).alias("url"), F.lit(t).alias("text"))
+            for i, t in enumerate(batch)
+        ]
+        df = spark.range(1).select(F.inline(F.array(*rows)))
+        got = sorted(
+            (int(r.source), r.line_no, r.raw) for r in explode_lines(df).collect()
+        )
+        want = [
+            (i, n + 1, ln)
+            for i, t in enumerate(batch)
+            for n, ln in enumerate(_scan_lines(t.encode()))
+        ]
+        assert got == want
+
+    check()
