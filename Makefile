@@ -1,7 +1,7 @@
 # Dev ergonomics (the reference ships a Makefile too: /root/reference/Makefile)
 PY := PYTHONPATH=.
 
-.PHONY: test parity dtypes plans bench perfbench perfbench-test validate pipeline-demo submit-check
+.PHONY: test parity dtypes plans bench perfbench perfbench-test pytask-cost validate pipeline-demo submit-check
 
 test:
 	python -m pytest tests/ -x -q
@@ -28,6 +28,13 @@ perfbench:
 
 perfbench-test:
 	python3 -m pytest perfbench/tests -q
+
+# fixed Python cost per PySpark task and the workers' zip importer count,
+# with and without this package imported (scripts/pytask_cost.py):
+#   make pytask-cost JOBS=20
+JOBS ?= 20
+pytask-cost:
+	python3 scripts/pytask_cost.py --jobs $(JOBS)
 
 validate:
 	$(PY) python tools/validate_all.py

@@ -6,8 +6,15 @@ DataFrame plan with one Arrow-vectorized decode/serialize stage; routing,
 enrichment, aggregation, skew handling and resume are Catalyst-native.
 """
 
+from . import worker_imports  # noqa: F401  (patches zipimport in Python workers)
 from .decoders import EXCLUDED, MATCHED, SKIPPED, UNMATCHED
-from .engine import extract_fields, extract_ltsv, fast_parse_routed, parse_routed
+from .engine import (
+    extract_fields,
+    extract_ltsv,
+    fast_parse_routed,
+    parse_documents,
+    parse_routed,
+)
 from .filters import FilterError, filters_to_column
 from .grok import compile_grok, grok_parser, grok_to_regex
 from .handlers import HANDLERS
@@ -38,6 +45,7 @@ __all__ = [
     "extract_fields",
     "extract_ltsv",
     "fast_parse_routed",
+    "parse_documents",
     "parse_routed",
     "FilterError",
     "filters_to_column",

@@ -4,36 +4,47 @@ Everything the reference does per line in its eager loop
 (`/root/reference/parser_core.go:176-254`: skip-check -> decode ->
 unmatched? -> filter -> selectLabels -> addLineNumber -> LineHandler ->
 prefix -> write) runs here as ONE Arrow-batched Python pass followed by
-pure-Catalyst finalization: ``mapInPandas`` in :func:`parse_routed`, and
-``mapInArrow`` in :func:`extract_fields` (the decode step of
-:func:`fast_parse_routed`), which takes and returns Arrow arrays with no
-pandas frame in between. Design goals at 100 TB:
+pure-Catalyst finalization. Design goals at 100 TB:
 
 - exactly one Python<->JVM hop on the hot path (regex decode + DSL filter +
-  serialization all happen in the same pandas batch function);
+  serialization all happen in the same batch function);
 - regexes and filter predicates compile once per task, not per line
   (the reference recompiles filters per line — parser_core.go:220), and a
   prefix-chained pattern list such as the S3 preset compiles into one
   fused regex, so a line costs one search instead of up to five
   (:class:`.decoders.DecodePlan`);
-- TSV "isFirst" header and prefix decoration are JVM-side Catalyst
-  expressions (window-free ``min(when(...)) over source`` + ``transform``),
-  so no global ordering is ever collected to the driver;
+- prefix decoration is a JVM-side Catalyst ``transform``, and no global
+  ordering is ever collected to the driver;
 - document-level predicates (skip lines, source pruning) stay JVM-side
   ahead of the Python stage so Catalyst pushes them into the scan.
 
-Two surfaces:
+Surfaces:
 
-- :func:`parse_routed` — reference-parity: Option semantics, byte-exact
-  serialized output lines, status routing column, error rows;
+- reference parity (Option semantics, byte-exact serialized output lines,
+  status routing column, error rows): two entries share ONE per-line core
+  (``_RouteSpec`` built and validated on the driver, ``_Router.route``
+  per batch), so their outputs cannot drift apart:
+
+  - :func:`parse_documents` takes whole documents and is one
+    ``mapInArrow`` stage: it splits each text with the scanner's exact
+    ``bufio.ScanLines`` model, passes the reference's per-document
+    ``isFirst`` to the handler (so the TSV header needs no window), and
+    hands carried document columns back as Arrow arrays. The pipeline and
+    the streaming surface use it;
+  - :func:`parse_routed` takes exploded lines through ``mapInPandas``,
+    for callers that already hold lines (string/file/zip parsers);
+- :func:`fast_parse_routed` — the same routed contract with Catalyst
+  serialization; its decode step is :func:`extract_fields`;
 - :func:`extract_fields` / :func:`extract_ltsv` — the Spark-native
   structured surface: typed string columns (union of capture groups) for
-  SQL, joins and aggregation.
+  SQL, joins and aggregation. ``extract_fields`` hops through
+  ``mapInArrow`` and builds ``pa.array``s directly.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Callable, Iterator, Sequence
+from dataclasses import dataclass
 
 import pandas as pd
 import pyarrow as pa
@@ -51,8 +62,9 @@ from pyspark.sql.types import (
 from . import decoders, patterns as pat
 from .decoders import EXCLUDED, MATCHED, SKIPPED, UNMATCHED
 from .filters import apply_filters, compile_filters
-from .handlers import prefix_strings
+from .handlers import HANDLERS, prefix_strings
 from .options import Option
+from .sources.ziparchive import _scan_lines
 
 LINE_SCHEMA = StructType(
     [
@@ -84,6 +96,144 @@ def _resolve_patterns(fmt: str | Sequence[str]) -> list[str] | None:
     return [str(p) for p in fmt]
 
 
+@dataclass(frozen=True)
+class _RouteSpec:
+    """Everything the per-line core needs, validated on the driver and
+    shipped to the tasks."""
+
+    pattern_strs: list[str] | None
+    skip_set: frozenset[int]
+    labels_sel: tuple[str, ...]
+    add_no: bool
+    handler: Callable[[Sequence[str], Sequence[str], bool], str]
+    is_tsv: bool
+    filter_exprs: tuple[str, ...]
+    emit_unmatch: bool
+
+    @classmethod
+    def build(cls, fmt: str | Sequence[str], opt: Option) -> _RouteSpec:
+        pattern_strs = _resolve_patterns(fmt)
+        if pattern_strs is not None:
+            # Driver-side validation, AddPattern semantics (parser_regex.go:74-89).
+            for p in pattern_strs:
+                pat.validate_pattern(p)
+            if not pattern_strs:
+                raise decoders.NoPatternError
+        # Driver-side DSL validation: syntax + operator errors surface before
+        # any task runs; data-dependent errors (unknown label, non-numeric
+        # value) still abort at execution, matching parser_core.go:220-223.
+        compile_filters(opt.filters)
+        handler = opt.resolve_handler()
+        # identity check, not just the name: Option(line_handler=
+        # handlers.tsv_line_handler) (the callable spelling of the same
+        # built-in) must get the first-matched-per-source header row too
+        is_tsv = opt.line_handler == "tsv" or handler is HANDLERS.get("tsv")
+        return cls(
+            pattern_strs=pattern_strs,
+            skip_set=frozenset(int(s) for s in opt.skip_lines),
+            labels_sel=tuple(opt.labels),
+            add_no=bool(opt.line_number),
+            handler=handler,
+            is_tsv=is_tsv,
+            filter_exprs=tuple(opt.filters),
+            emit_unmatch=bool(opt.unmatch_lines),
+        )
+
+    def compile(self) -> _Router:
+        """Once per task: the decode plan and the filter predicates."""
+        plan = (
+            decoders.compile_plan(pat.compile_patterns(self.pattern_strs))
+            if self.pattern_strs is not None
+            else None
+        )
+        return _Router(self, plan, compile_filters(self.filter_exprs))
+
+
+@dataclass
+class _Router:
+    spec: _RouteSpec
+    plan: decoders.DecodePlan | None
+    filt: list
+
+    def route(
+        self,
+        raws: list[str],
+        line_nos: list[int],
+        doc_ids: list[int] | None = None,
+    ) -> tuple[list[str], list[int], list[str | None], list[str | None]]:
+        """The reference's per-line loop over one batch: skip-check ->
+        decode -> unmatched? -> filter -> selectLabels -> addLineNumber ->
+        LineHandler (parser_core.go:176-254).
+
+        Returns (status, pattern_id, out_line, tsv_header). With
+        ``doc_ids`` (one per line, lines of a document contiguous) the
+        handler gets the reference's ``isFirst``: True for the first line
+        of each document that reaches it. Without, it always gets False and
+        a TSV run returns each output line's header row for the caller to
+        attach; otherwise ``tsv_header`` is all None."""
+        spec, plan, filt = self.spec, self.plan, self.filt
+        n = len(raws)
+        status = [MATCHED] * n
+        pids = [-1] * n
+        out: list[str | None] = [None] * n
+        headers: list[str | None] = [None] * n
+        want_headers = spec.is_tsv and doc_ids is None
+
+        live_idx = []
+        for i, ln in enumerate(line_nos):
+            if ln in spec.skip_set:
+                status[i] = SKIPPED
+            else:
+                live_idx.append(i)
+
+        live_raws = [raws[i] for i in live_idx]
+        if plan is not None:
+            sub_pids, sub_vals = plan.decode(live_raws)
+            row_ls: list[list[str] | None] = [None] * n
+            row_vs: list[list[str] | None] = [None] * n
+            for k, i in enumerate(live_idx):
+                pids[i] = sub_pids[k]
+                if sub_pids[k] >= 0:
+                    row_ls[i] = plan.names[sub_pids[k]]
+                    row_vs[i] = sub_vals[k]
+        else:
+            sub_ls, sub_vs = decoders.ltsv_decode_batch(live_raws)
+            row_ls = [None] * n
+            row_vs = [None] * n
+            for k, i in enumerate(live_idx):
+                row_ls[i] = sub_ls[k]
+                row_vs[i] = sub_vs[k]
+                if sub_ls[k] is not None:
+                    pids[i] = 0
+
+        handler = spec.handler
+        last_doc = None
+        for i in live_idx:
+            ls = row_ls[i]
+            if ls is None:
+                status[i] = UNMATCHED
+                if spec.emit_unmatch:
+                    out[i] = raws[i]
+                continue
+            vs = row_vs[i]
+            if filt and not apply_filters(filt, ls, vs):
+                status[i] = EXCLUDED
+                continue
+            if spec.labels_sel:
+                ls, vs = decoders.select_labels(spec.labels_sel, ls, vs)
+            if spec.add_no:
+                ls = ["no", *ls]
+                vs = [str(line_nos[i]), *vs]
+            if doc_ids is None:
+                out[i] = handler(ls, vs, False)
+                if want_headers:
+                    headers[i] = "\t".join(ls)
+            else:
+                out[i] = handler(ls, vs, doc_ids[i] != last_doc)
+                last_doc = doc_ids[i]
+        return status, pids, out, headers
+
+
 def parse_routed(
     lines_df: DataFrame,
     fmt: str | Sequence[str],
@@ -104,100 +254,27 @@ def parse_routed(
     "unmatched" (default: only the errors-sink rows, halving Arrow
     transfer and sink bytes for mostly-matching corpora), "all", or
     "none".
+
+    Divergence from the reference: lines arrive one by one, not per
+    document, so the line handler is always called with
+    ``is_first=False``. The reference passes True for the first line of
+    each input that reaches the handler (parser_core.go:182,245). The
+    built-in ``tsv`` handler's header row is restored by a window over
+    ``source`` (one header per source, so two documents sharing a source
+    get one between them); a custom callable never sees True. Use
+    :func:`parse_documents` for the reference's per-document ``isFirst``.
     """
     opt = opt or Option()
-    pattern_strs = _resolve_patterns(fmt)
-    if pattern_strs is not None:
-        # Driver-side validation, AddPattern semantics (parser_regex.go:74-89).
-        for p in pattern_strs:
-            pat.validate_pattern(p)
-        if not pattern_strs:
-            raise decoders.NoPatternError
-    # Driver-side DSL validation: syntax + operator errors surface before any
-    # task runs; data-dependent errors (unknown label, non-numeric value)
-    # still abort at execution, matching parser_core.go:220-223.
-    compile_filters(opt.filters)
-
-    skip_set = frozenset(int(s) for s in opt.skip_lines)
-    labels_sel = tuple(opt.labels)
-    add_no = bool(opt.line_number)
-    handler_name = opt.line_handler if isinstance(opt.line_handler, str) else None
-    handler = opt.resolve_handler()
-    # identity check, not just the name: Option(line_handler=
-    # handlers.tsv_line_handler) (the callable spelling of the same
-    # built-in) must get the first-matched-per-source header row too
-    from .handlers import HANDLERS as _H
-
-    is_tsv = handler_name == "tsv" or handler is _H.get("tsv")
-    filter_exprs = tuple(opt.filters)
-    emit_unmatch = bool(opt.unmatch_lines)
+    spec = _RouteSpec.build(fmt, opt)
     if keep_raw not in ("unmatched", "all", "none"):
         raise ValueError(f"keep_raw must be unmatched/all/none, got {keep_raw!r}")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        plan = (
-            decoders.compile_plan(pat.compile_patterns(pattern_strs))
-            if pattern_strs is not None
-            else None
-        )
-        filt = compile_filters(filter_exprs)
+        router = spec.compile()
         for pdf in batches:
             raws = pdf["raw"].tolist()
-            line_nos = pdf["line_no"].tolist()
+            status, pids, out, headers = router.route(raws, pdf["line_no"].tolist())
             n = len(raws)
-            status = [MATCHED] * n
-            pids = [-1] * n
-            out = [None] * n
-
-            live_idx = []
-            for i, ln in enumerate(line_nos):
-                if ln in skip_set:
-                    status[i] = SKIPPED
-                else:
-                    live_idx.append(i)
-
-            if plan is not None:
-                sub_pids, sub_vals = plan.decode([raws[i] for i in live_idx])
-                row_ls: list[list[str] | None] = [None] * n
-                row_vs: list[list[str] | None] = [None] * n
-                for k, i in enumerate(live_idx):
-                    pids[i] = sub_pids[k]
-                    if sub_pids[k] >= 0:
-                        row_ls[i] = plan.names[sub_pids[k]]
-                        row_vs[i] = sub_vals[k]
-            else:
-                sub_ls, sub_vs = decoders.ltsv_decode_batch(
-                    [raws[i] for i in live_idx]
-                )
-                row_ls = [None] * n
-                row_vs = [None] * n
-                for k, i in enumerate(live_idx):
-                    row_ls[i] = sub_ls[k]
-                    row_vs[i] = sub_vs[k]
-                    if sub_ls[k] is not None:
-                        pids[i] = 0
-
-            headers = [None] * n
-            for i in live_idx:
-                ls = row_ls[i]
-                if ls is None:
-                    status[i] = UNMATCHED
-                    if emit_unmatch:
-                        out[i] = raws[i]
-                    continue
-                vs = row_vs[i]
-                if filt and not apply_filters(filt, ls, vs):
-                    status[i] = EXCLUDED
-                    continue
-                if labels_sel:
-                    ls, vs = decoders.select_labels(labels_sel, ls, vs)
-                if add_no:
-                    ls = ["no", *ls]
-                    vs = [str(line_nos[i]), *vs]
-                out[i] = handler(ls, vs, False)
-                if is_tsv:
-                    headers[i] = "\t".join(ls)
-
             if keep_raw == "all":
                 raw_out = pdf["raw"]
             elif keep_raw == "none":
@@ -222,7 +299,74 @@ def parse_routed(
     routed = lines_df.select("source", "line_no", "raw").mapInPandas(
         run, ROUTED_SCHEMA
     )
-    return _finalize_routed(routed, is_tsv, opt)
+    return _finalize_routed(routed, spec.is_tsv, opt)
+
+
+def parse_documents(
+    docs: DataFrame,
+    fmt: str | Sequence[str],
+    opt: Option | None = None,
+    source_col: str = "url",
+    text_col: str = "text",
+    keep: Sequence[str] = (),
+) -> DataFrame:
+    """Whole documents in, routed lines out, in ONE ``mapInArrow`` stage.
+
+    Each non-empty ``text_col`` is split with ``bufio.ScanLines``
+    semantics (``ziparchive._scan_lines``, the model
+    :func:`.sources.text.explode_lines` follows) and its lines run the same
+    core as :func:`parse_routed`. Returns (source, line_no, status,
+    pattern_id, out_line, raw, *keep): ``explode_lines(keep=keep)`` then
+    ``parse_routed`` row for row, except that the line handler gets
+    ``is_first=True`` for the first line of each DOCUMENT that reaches it,
+    as in the reference (parser_core.go:182,245). So the ``tsv`` header
+    row needs no window, a url on two pages gets a header on each, and a
+    custom handler sees ``isFirst``. The ``keep`` columns are the
+    document's own Arrow values repeated per line (``pa.Array.take``),
+    never converted to Python.
+    """
+    opt = opt or Option()
+    spec = _RouteSpec.build(fmt, opt)
+    keep = list(keep)
+    out_schema = StructType(
+        [f for f in ROUTED_SCHEMA.fields if f.name != "tsv_header"]
+        + [docs.schema[c] for c in keep]
+    )
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        router = spec.compile()
+        for batch in batches:
+            doc_ids: list[int] = []
+            line_nos: list[int] = []
+            raws: list[str] = []
+            for d, text in enumerate(batch.column(1).to_pylist()):
+                lines = _scan_lines(text)
+                doc_ids.extend([d] * len(lines))
+                line_nos.extend(range(1, len(lines) + 1))
+                raws.extend(lines)
+            status, pids, out, _ = router.route(raws, line_nos, doc_ids)
+            take = pa.array(doc_ids, pa.int32())
+            arrays = [
+                batch.column(0).take(take),
+                pa.array(line_nos, pa.int64()),
+                pa.array(status, pa.string()),
+                pa.array(pids, pa.int32()),
+                pa.array(out, pa.string()),
+                pa.array(
+                    [r if s == UNMATCHED else None for r, s in zip(raws, status)],
+                    pa.string(),
+                ),
+            ]
+            arrays.extend(batch.column(2 + k).take(take) for k in range(len(keep)))
+            yield pa.RecordBatch.from_arrays(arrays, names=out_schema.fieldNames())
+
+    text = F.col(text_col)
+    routed = (
+        docs.filter(text.isNotNull() & (text != ""))
+        .select(F.col(source_col).alias("source"), text.alias("text"), *keep)
+        .mapInArrow(run, out_schema)
+    )
+    return _finalize_routed(routed, False, opt)
 
 
 def _finalize_routed(routed: DataFrame, is_tsv: bool, opt: Option) -> DataFrame:
@@ -342,9 +486,14 @@ def fast_parse_routed(
     fmt: str | Sequence[str],
     opt: Option | None = None,
     decoder: str = "python",
+    passthrough: Sequence[str] = (),
 ) -> DataFrame:
     """JVM-serialization fast path: same routed output contract as
     :func:`parse_routed`, ~2x throughput on mostly-matching corpora.
+
+    ``passthrough`` columns of ``lines_df`` (document attributes carried
+    by ``explode_lines(keep=...)``) ride through the decode hop and are
+    appended to the output unchanged.
 
     Python does ONLY the regex decode (struct columns out); status
     derivation, DSL filtering, label projection, line numbers and the
@@ -374,21 +523,25 @@ def fast_parse_routed(
 
     if decoder not in ("python", "jvm"):
         raise ValueError(f"decoder must be python/jvm, got {decoder!r}")
+    # carried columns travel under private names, so they can neither
+    # shadow a capture group nor answer a filter label
+    carried = [(c, f"_carry{k}") for k, c in enumerate(passthrough)]
+    if carried:
+        lines_df = lines_df.select(
+            "source", "line_no", "raw", *[F.col(c).alias(a) for c, a in carried]
+        )
+    decode_pass = ["source", "line_no", *[a for _, a in carried]]
     if decoder == "jvm":
         # zero-Python plan: regexp_replace group rewrite (see
         # functions/jvm_decode.py for semantics caveats)
         from .functions.jvm_decode import extract_fields_jvm
 
         fields = extract_fields_jvm(
-            lines_df, fmt, passthrough=["source", "line_no"],
-            raw_when_unmatched=True,
+            lines_df, fmt, passthrough=decode_pass, raw_when_unmatched=True,
         )
     else:
         fields = extract_fields(
-            lines_df,
-            fmt,
-            passthrough=["source", "line_no"],
-            raw_when_unmatched=True,
+            lines_df, fmt, passthrough=decode_pass, raw_when_unmatched=True,
         )
 
     skip = [int(s) for s in opt.skip_lines]
@@ -426,6 +579,7 @@ def fast_parse_routed(
             "tsv_header"
         ),
         F.when(F.col("status") == UNMATCHED, F.col("raw")).alias("raw"),
+        *[F.col(a).alias(c) for c, a in carried],
     )
 
     return _finalize_routed(routed, handler == "tsv", opt)

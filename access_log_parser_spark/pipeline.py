@@ -1,10 +1,20 @@
 """The full parse -> enrich -> route -> aggregate pipeline (north_rule).
 
-One batch run over a pages table:
+One batch run over a pages table is ONE job with ONE Python stage:
 
-1. **parse**: explode page ``text`` into lines (pure Catalyst), decode +
-   filter + serialize in the engine's single vectorized pass;
-2. **enrich**: broadcast-join lookup tables (lang/geo) onto the routed rows;
+1. **enrich**: lookup tables (lang/geo) are broadcast-joined onto the
+   batch's PAGES, before the parse. Lookup keys are page attributes, so
+   page grain is the right one: the join sees one row per url instead of
+   ~20 lines, and nothing has to re-scan the pages to join them back
+   afterwards. Each lookup is materialized once per run (a persisted
+   derived frame, released when the run ends), not re-computed per batch;
+2. **parse**: the compat engine parses whole documents in one
+   ``mapInArrow`` stage (:func:`.engine.parse_documents`: split, decode,
+   filter, serialize, with the reference's per-document ``isFirst`` for
+   the TSV header), carrying the lookup columns through as Arrow arrays;
+   the fast engine explodes lines in Catalyst and decodes with
+   ``fast_parse_routed``, carrying them as passthrough columns. Neither
+   needs a shuffle;
 3. **route**: one dynamic-partitioned write fans rows out to
    ``(status, pattern_id)`` sinks;
 4. **aggregate**: lineage counters ride the SAME action via
@@ -25,7 +35,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .engine import fast_parse_routed, parse_routed
+from .engine import fast_parse_routed, parse_documents
 from .metrics import Result, observe_routed, result_from_observation
 from .options import Option
 from .sinks import processed_batches, write_manifest, write_routed
@@ -60,10 +70,10 @@ def run_pipeline(
     engine: str = "auto",
     partition_lineage: bool = False,
 ) -> PipelineReport:
-    """Run the pipeline; ``lookups`` maps name -> (lookup_df, join_key) and
-    each lookup is broadcast-joined onto the routed rows (join_key must be
-    a column of both sides; pages-side keys are carried through the
-    explode).
+    """Run the pipeline; ``lookups`` maps name -> (lookup_df, join_key)
+    and each lookup is broadcast-joined onto the pages on ``join_key``,
+    which must be a column of both sides. The joined columns (key and
+    lookup values) are carried onto every routed row of the page.
 
     ``engine``: "fast" (JVM serialization, regex presets only), "compat"
     (reference-exact Python path), or "auto" (fast when eligible).
@@ -84,7 +94,6 @@ def run_pipeline(
     use_fast = engine == "fast" or (
         engine == "auto" and fmt != "ltsv" and not callable(opt.line_handler)
     )
-    parse = fast_parse_routed if use_fast else parse_routed
     start = time.monotonic()
 
     pages = _with_batch_id(pages, url_col, n_batches)
@@ -93,79 +102,84 @@ def run_pipeline(
     todo = [b for b in all_ids if b not in done]
     skipped = [b for b in all_ids if b in done]
 
+    # A lookup built from driver data (createDataFrame of a list) is a
+    # Python RDD: joined as is, every batch would re-run its Python tasks.
+    # Persist a derived frame, so the caller's DataFrame keeps its own
+    # storage level, and release it when the run ends.
+    cached = [
+        (lk.select("*").persist(), key) for lk, key in (lookups or {}).values() if todo
+    ]
+    carry: list[str] = []
+    for lk, _ in cached:
+        carry.extend(c for c in lk.columns if c not in carry)
+
     total = Result()
     par = spark.sparkContext.defaultParallelism
-    for batch_id in todo:
-        batch_pages = pages.filter(F.col("batch_id") == batch_id)
-        # A compact parquet corpus (one row group / few small files) arrives
-        # as fewer input splits than cores, and the decode — the CPU-heavy
-        # stage — would run at the split count no matter how many executors
-        # the cluster has (measured: local[2] == local[8] wall-clock on a
-        # 2M-line corpus before this spread). Repartition only when the
-        # batch is under-split; at 100 TB the input arrives as thousands of
-        # splits and this branch never fires, costing nothing.
-        if batch_pages.rdd.getNumPartitions() < par:
-            batch_pages = batch_pages.repartition(par)
-        lines = explode_lines(
-            batch_pages, text_col=text_col, source_col=url_col
-        )
-        routed = parse(lines.select("source", "line_no", "raw"), fmt, opt)
+    try:
+        for batch_id in todo:
+            batch_pages = pages.filter(F.col("batch_id") == batch_id)
+            # A compact parquet corpus (one row group / few small files)
+            # arrives as fewer input splits than cores, and the decode — the
+            # CPU-heavy stage — would run at the split count no matter how
+            # many executors the cluster has (measured: local[2] == local[8]
+            # wall-clock on a 2M-line corpus before this spread). Repartition
+            # only when the batch is under-split; at 100 TB the input arrives
+            # as thousands of splits and this branch never fires.
+            if batch_pages.rdd.getNumPartitions() < par:
+                batch_pages = batch_pages.repartition(par)
+            # a lookup with duplicate keys duplicates the page's lines, as
+            # any left join would
+            for lk, key in cached:
+                batch_pages = batch_pages.join(F.broadcast(lk), on=key, how="left")
+            if use_fast:
+                lines = explode_lines(
+                    batch_pages, text_col=text_col, source_col=url_col, keep=tuple(carry)
+                )
+                routed = fast_parse_routed(lines, fmt, opt, passthrough=carry)
+            else:
+                routed = parse_documents(
+                    batch_pages, fmt, opt, source_col=url_col, text_col=text_col,
+                    keep=carry,
+                )
 
-        if lookups:
-            # Lookup keys are PAGE-level attributes, so the carry joins at
-            # page grain (one row per url), not line grain: the previous
-            # shape — routed (lines-sized) |><| keyed lines (lines-sized)
-            # on (source, line_no) — shuffled the whole corpus twice per
-            # lookup and measurably stopped the 2->8 core scaling of the
-            # submit-mode pipeline. Page-grain is 20x smaller here,
-            # AQE-broadcastable when the page table fits, and joins on the
-            # single source key. Contract: url is the page key (one row
-            # per url, per the input_hint schema); duplicate urls would
-            # duplicate routed rows under either shape.
-            carry = tuple(k for _, (_, k) in (lookups or {}).items())
-            page_attrs = batch_pages.select(
-                F.col(url_col).alias("source"),
-                *[F.col(k) for k in carry],
-            )
-            routed = routed.join(page_attrs, on="source", how="left")
-            for _, (lk, key) in lookups.items():
-                routed = routed.join(F.broadcast(lk), on=key, how="left")
-
-        if partition_lineage:
-            routed = routed.persist()
-        observed, obs = observe_routed(routed)
-        # crash-safe resume: the batch writes its OWN partitions with
-        # dynamic overwrite, so re-running a batch that died mid-write
-        # (partial files, no manifest) replaces — never duplicates — them
-        write_routed(
-            observed.withColumn("batch_id", F.lit(batch_id)),
-            out_dir,
-            mode="overwrite",
-            extra_partition_cols=("batch_id",),
-        )  # the ONLY action for this batch
-        r = result_from_observation(obs)
-        manifest = {
-            "counters": {
-                "total": r.total,
-                "matched": r.matched,
-                "unmatched": r.unmatched,
-                "excluded": r.excluded,
-                "skipped": r.skipped,
+            if partition_lineage:
+                routed = routed.persist()
+            observed, obs = observe_routed(routed)
+            # crash-safe resume: the batch writes its OWN partitions with
+            # dynamic overwrite, so re-running a batch that died mid-write
+            # (partial files, no manifest) replaces — never duplicates — them
+            write_routed(
+                observed.withColumn("batch_id", F.lit(batch_id)),
+                out_dir,
+                mode="overwrite",
+                extra_partition_cols=("batch_id",),
+            )  # the ONLY action for this batch
+            r = result_from_observation(obs)
+            manifest = {
+                "counters": {
+                    "total": r.total,
+                    "matched": r.matched,
+                    "unmatched": r.unmatched,
+                    "excluded": r.excluded,
+                    "skipped": r.skipped,
+                }
             }
-        }
-        if partition_lineage:
-            from .metrics import counters_by_partition
+            if partition_lineage:
+                from .metrics import counters_by_partition
 
-            manifest["partition_lineage"] = [
-                row.asDict() for row in counters_by_partition(routed).collect()
-            ]
-            routed.unpersist()
-        write_manifest(out_dir, batch_id, manifest)
-        total.total += r.total
-        total.matched += r.matched
-        total.unmatched += r.unmatched
-        total.excluded += r.excluded
-        total.skipped += r.skipped
+                manifest["partition_lineage"] = [
+                    row.asDict() for row in counters_by_partition(routed).collect()
+                ]
+                routed.unpersist()
+            write_manifest(out_dir, batch_id, manifest)
+            total.total += r.total
+            total.matched += r.matched
+            total.unmatched += r.unmatched
+            total.excluded += r.excluded
+            total.skipped += r.skipped
+    finally:
+        for lk, _ in cached:
+            lk.unpersist()
 
     total.elapsed_time = time.monotonic() - start
     return PipelineReport(

@@ -32,13 +32,13 @@ ZIP_LINES_SCHEMA = StructType(
 )
 
 
-def _scan_lines(data: bytes) -> list[str]:
+def _scan_lines(text: str) -> list[str]:
     """``bufio.ScanLines`` in plain Python: drop one final ``\\n``, split on
     ``\\n``, then drop one trailing ``\\r`` per token (``dropCR``, which
     Go applies to the unterminated last token too). Empty input has no
-    lines. ``sources.text.explode_lines`` must agree with this row for row
+    lines. ``sources.text.explode_lines`` must agree with this row for row,
+    and ``engine.parse_documents`` splits documents with it
     (tests/test_scanner.py)."""
-    text = data.decode("utf-8", errors="replace")
     if text == "":
         return []
     if text.endswith("\n"):
@@ -69,7 +69,9 @@ def lines_from_zip_entries(
                     for info in zf.infolist():
                         if glob_re.match(info.filename) is None:
                             continue
-                        lines = _scan_lines(zf.read(info))
+                        lines = _scan_lines(
+                            zf.read(info).decode("utf-8", errors="replace")
+                        )
                         rows.extend(
                             (base, info.filename, i + 1, ln)
                             for i, ln in enumerate(lines)

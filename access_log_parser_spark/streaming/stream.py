@@ -4,8 +4,9 @@ The reference is I/O-streaming (constant memory, line-at-a-time,
 cancellable — parser_core.go:177-194) but stateless. The Spark mapping
 (SURVEY.md §2.5): an incremental Structured Streaming reader over the
 pages table with ``trigger(availableNow=True)`` for resumable batch-like
-runs, checkpointed to disk; the SAME engine stage (mapInPandas works
-unchanged under streaming) parses each micro-batch, and fan-out happens in
+runs, checkpointed to disk; the SAME engine stage
+(:func:`..engine.parse_documents`, one ``mapInArrow`` over whole pages)
+parses each micro-batch, and fan-out happens in
 ``foreachBatch`` with the batch writer.
 
 Event-time analytics the reference lacks: watermarked windowed counts over
@@ -17,10 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..engine import parse_routed
+from ..engine import parse_documents
 from ..options import Option
 from ..sinks import write_routed
-from ..sources.text import explode_lines
 
 
 def routed_stream(
@@ -33,12 +33,8 @@ def routed_stream(
     """Streaming pages -> routed lines. ``schema`` is the pages schema
     (streaming file sources require an explicit schema)."""
     pages = spark.readStream.schema(schema).parquet(pages_dir)
-    lines = explode_lines(pages, text_col="text", source_col="url", keep=("warc_ts",))
-    routed = parse_routed(lines.select("source", "line_no", "raw"), fmt, opt)
-    # re-attach event time for windowed aggs
-    return routed.join(
-        lines.select("source", "line_no", "warc_ts"), ["source", "line_no"], "left"
-    )
+    # event time rides through the parse, for windowed aggs
+    return parse_documents(pages, fmt, opt, keep=("warc_ts",))
 
 
 def run_stream_once(
@@ -55,8 +51,7 @@ def run_stream_once(
     stops. Re-invoking resumes from the checkpoint — the streaming twin of
     pipeline.run_pipeline's manifest resume."""
     pages = spark.readStream.schema(schema).parquet(pages_dir)
-    lines = explode_lines(pages, text_col="text", source_col="url")
-    routed = parse_routed(lines.select("source", "line_no", "raw"), fmt, opt)
+    routed = parse_documents(pages, fmt, opt)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         write_routed(batch_df, out_dir)

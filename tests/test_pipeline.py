@@ -325,3 +325,136 @@ def test_curate_corpus_gopher_and_c4_gates(spark):
     for text in rows.values():
         for ln in text.split("\n"):
             assert ln.rstrip().endswith((".", "!", "?", '"'))
+
+
+def _tsv(line: str, header: bool) -> str:
+    """The tsv handler's output for a golden LTSV line, from its pinned
+    JSON: values with "-" for empty, the label row first when ``header``."""
+    import json
+
+    import golden_ltsv as g
+
+    rec = json.loads(g.ALL_MATCH_DATA[[g.T1, g.T2, g.T3, g.T4, g.T5].index(line)])
+    body = "\t".join(v or "-" for v in rec.values())
+    return "\t".join(rec) + "\n" + body if header else body
+
+
+def test_ltsv_pipeline_golden_tsv_headers_and_lookup(spark, tmp_path):
+    """LTSV through run_pipeline with the tsv handler, a filter and a lang
+    lookup: every (source, line_no) pinned. The header row sits on each
+    PAGE's first matched line only (parser_core.go:182,245), so lines
+    excluded or unmatched before it get none, and two pages that share a
+    url each get their own."""
+    import golden_ltsv as g
+
+    from access_log_parser_spark.sinks import read_manifests
+
+    pages = spark.createDataFrame(
+        [
+            ("https://a/1", "en", "\n".join([g.T2, g.T4_BAD, g.T1, g.T3, g.T5])),
+            ("https://b/1", "de", "\n".join([g.AU1, g.T5, g.T4]) + "\n"),
+            ("https://c/dup", "fr", "\n".join([g.T4, g.T3])),
+            ("https://c/dup", "xx", "\r\n".join([g.T1, g.T2, g.T5])),
+            ("https://d/1", "ja", "\n".join([g.T2, g.T4])),
+        ],
+        "url string, lang string, text string",
+    )
+    lang = spark.createDataFrame(
+        [("en", "English"), ("de", "German"), ("fr", "French"), ("ja", "Japanese")],
+        "lang string, lang_name string",
+    )
+    opt = Option(filters=["status == 200"], line_handler="tsv")
+    out = str(tmp_path / "ltsv_out")
+    rep = run_pipeline(
+        spark, pages, out, fmt="ltsv", opt=opt,
+        lookups={"lang": (lang, "lang")}, n_batches=2,
+    )
+    assert rep.batches_run == ["0", "1"]
+    assert rep.result.counters() == (15, 7, 2, 6, 0)
+
+    want = sorted([
+        ("https://a/1", 1, "excluded", None, "English"),
+        ("https://a/1", 2, "unmatched", None, "English"),
+        ("https://a/1", 3, "matched", _tsv(g.T1, True), "English"),
+        ("https://a/1", 4, "matched", _tsv(g.T3, False), "English"),
+        ("https://a/1", 5, "matched", _tsv(g.T5, False), "English"),
+        ("https://b/1", 1, "unmatched", None, "German"),
+        ("https://b/1", 2, "matched", _tsv(g.T5, True), "German"),
+        ("https://b/1", 3, "excluded", None, "German"),
+        ("https://c/dup", 1, "excluded", None, "French"),
+        ("https://c/dup", 2, "matched", _tsv(g.T3, True), "French"),
+        ("https://c/dup", 1, "matched", _tsv(g.T1, True), None),
+        ("https://c/dup", 2, "excluded", None, None),
+        ("https://c/dup", 3, "matched", _tsv(g.T5, False), None),
+        ("https://d/1", 1, "excluded", None, "Japanese"),
+        ("https://d/1", 2, "excluded", None, "Japanese"),
+    ], key=repr)
+
+    def written():
+        return sorted(
+            (
+                (r.source, r.line_no, r.status, r.out_line, r.lang_name)
+                for r in read_sink(spark, out).collect()
+            ),
+            key=repr,
+        )
+
+    assert written() == want
+    assert sum(m["counters"]["total"] for m in read_manifests(out)) == 15
+
+    again = run_pipeline(
+        spark, pages, out, fmt="ltsv", opt=opt,
+        lookups={"lang": (lang, "lang")}, n_batches=2, resume=True,
+    )
+    assert again.batches_run == [] and again.batches_skipped == ["0", "1"]
+    assert written() == want
+
+
+def test_pipeline_batch_plan_one_python_stage(spark, tmp_path, monkeypatch):
+    """One compat batch (LTSV, tsv handler, a filter, one lookup) is one
+    Python operator over one pages scan: no window, no shuffle, no second
+    scan of the pages to join page attributes back. The lookup, a Python
+    RDD, is computed by its own Python tasks once per run, not per batch."""
+    from access_log_parser_spark import pipeline
+
+    pages = spark.range(0, 40, 1, 4).select(
+        F.concat(F.lit("https://p/"), F.col("id").cast("string")).alias("url"),
+        F.when(F.col("id") % 2 == 0, "en").otherwise("de").alias("lang"),
+        F.lit("status:200\tsize:1\nstatus:404\tsize:2\nbad").alias("text"),
+    )
+    lang = spark.createDataFrame(
+        [("en", "English"), ("de", "German")], "lang string, lang_name string"
+    )
+    plans: list[str] = []
+    write_routed = pipeline.write_routed
+
+    def capture(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write_routed(df, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "write_routed", capture)
+    lookup_scans = spark.sparkContext.accumulator(0)
+
+    def count_scans(rows):
+        lookup_scans.add(1)
+        return rows
+
+    counted = spark.createDataFrame(
+        lang.rdd.mapPartitions(count_scans), lang.schema
+    )
+    rep = run_pipeline(
+        spark, pages, str(tmp_path / "plan_out"), fmt="ltsv",
+        opt=Option(filters=["status == 200"], line_handler="tsv"),
+        lookups={"lang": (counted, "lang")}, n_batches=3,
+    )
+    assert rep.result.counters() == (120, 40, 40, 40, 0)
+    assert len(plans) == 3
+    for plan in plans:
+        assert "Window" not in plan, plan
+        assert plan.count("Exchange") == plan.count("BroadcastExchange"), plan
+        assert plan.count("Range (") == 1, plan  # the pages, scanned once
+        assert plan.count("MapInArrow") == 1, plan
+        assert "MapInPandas" not in plan and "BatchEvalPython" not in plan, plan
+    # one lookup materialization (its partitions' tasks) for three batches
+    assert lookup_scans.value == counted.rdd.getNumPartitions()
+    assert counted.storageLevel == lang.storageLevel  # caller's frame untouched

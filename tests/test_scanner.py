@@ -33,7 +33,7 @@ GOLDEN = [
 
 @pytest.mark.parametrize("text,expected", GOLDEN, ids=[repr(t) for t, _ in GOLDEN])
 def test_scan_lines_golden(text, expected):
-    assert _scan_lines(text.encode()) == expected
+    assert _scan_lines(text) == expected
 
 
 @pytest.mark.parametrize("text,expected", GOLDEN, ids=[repr(t) for t, _ in GOLDEN])
@@ -132,8 +132,90 @@ def test_explode_matches_scan_lines_fuzz(spark):
         want = [
             (i, n + 1, ln)
             for i, t in enumerate(batch)
-            for n, ln in enumerate(_scan_lines(t.encode()))
+            for n, ln in enumerate(_scan_lines(t))
         ]
         assert got == want
 
     check()
+
+
+def _literal_docs(spark, texts):
+    """(url, text) rows as a JVM-side literal table: no Python worker to
+    build it."""
+    rows = [
+        F.struct(F.lit(str(i)).alias("url"), F.lit(t).alias("text"))
+        for i, t in enumerate(texts)
+    ]
+    return spark.range(1).select(F.inline(F.array(*rows)))
+
+
+ROUTED_COLS = ("source", "line_no", "status", "pattern_id", "out_line", "raw")
+
+
+def test_parse_documents_matches_explode_then_parse_routed_fuzz(spark):
+    """``parse_documents`` is ``explode_lines`` -> ``parse_routed`` row for
+    row, on random texts over the scanner's characters mixed with LTSV and
+    S3 golden lines, for both decoders."""
+    import golden_ltsv as gl
+    import golden_s3 as gs
+    from hypothesis import given, settings, strategies as st
+
+    from access_log_parser_spark import parse_documents, parse_routed
+
+    tokens = st.sampled_from(
+        ["a", "é", "\t", " ", "\r", "\n", gl.T1, gl.T4, gl.T4_BAD, gl.AU2,
+         gs.L1, gs.L3, gs.L5, gs.L4_TRUNC]
+    )
+    texts = st.lists(tokens, max_size=10).map("".join)
+    opt = Option(line_number=True, unmatch_lines=True)
+
+    @given(st.lists(texts, min_size=1, max_size=8))
+    @settings(max_examples=25, deadline=None)
+    def check(batch):
+        docs = _literal_docs(spark, batch)
+        lines = explode_lines(docs)
+        for fmt in ("ltsv", "s3"):
+            got = parse_documents(docs, fmt, opt).select(*ROUTED_COLS).collect()
+            want = parse_routed(lines, fmt, opt).select(*ROUTED_COLS).collect()
+            assert sorted(map(tuple, got)) == sorted(map(tuple, want)), fmt
+
+    check()
+
+
+def test_custom_handler_is_first_once_per_document(spark):
+    """The reference passes ``isFirst`` True to the handler for the first
+    line of each input that reaches it (parser_core.go:182,245):
+    ``parse_documents`` does, per document even when two share a url;
+    ``parse_routed`` sees lines, not documents, and always passes False."""
+    from access_log_parser_spark import parse_documents, parse_routed
+
+    def handler(labels, values, is_first):
+        return f"{is_first}|{values[0]}"
+
+    docs = spark.createDataFrame(
+        [
+            ("u1", "bad\nk:1\nk:2\nk:3"),
+            ("u2", "k:4\nbad\nk:5"),
+            ("u3", "bad\nbad"),
+            ("dup", "k:6\nk:7"),
+            ("dup", "bad\nk:8"),
+        ],
+        "url string, text string",
+    )
+    opt = Option(line_handler=handler, skip_lines=[1])
+    got = sorted(
+        (r.source, r.line_no, r.out_line)
+        for r in parse_documents(docs, "ltsv", opt).filter("status = 'matched'").collect()
+    )
+    assert got == [
+        ("dup", 2, "True|7"),
+        ("dup", 2, "True|8"),
+        ("u1", 2, "True|1"),
+        ("u1", 3, "False|2"),
+        ("u1", 4, "False|3"),
+        ("u2", 3, "True|5"),
+    ]
+    routed = parse_routed(explode_lines(docs), "ltsv", opt)
+    assert {r.out_line.split("|")[0] for r in routed.filter("status = 'matched'").collect()} == {
+        "False"
+    }

@@ -114,3 +114,27 @@ def test_paragraph_dedup_stream_state_metrics(spark, tmp_path):
     # and the deduped output is the distinct-digest set
     out = spark.read.parquet(out_dir)
     assert out.count() == out.select("digest").distinct().count()
+
+
+def test_routed_stream_carries_event_time(spark, tmp_path):
+    """routed_stream parses whole pages in one stage and carries each
+    page's warc_ts onto its lines, with no (source, line_no) join back."""
+    from access_log_parser_spark.streaming import routed_stream
+
+    pages_dir = str(tmp_path / "pages_rs")
+    pages = synth_pages(spark, 10, 5, 5)
+    pages.write.mode("overwrite").parquet(pages_dir)
+    stream = routed_stream(spark, pages_dir, pages.schema, fmt="s3")
+    out_dir, ckpt = str(tmp_path / "out_rs"), str(tmp_path / "ckpt_rs")
+    (
+        stream.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    got = spark.read.parquet(out_dir)
+    assert got.count() == 50
+    want = {r.url: r.warc_ts for r in pages.select("url", "warc_ts").collect()}
+    assert {r.source: r.warc_ts for r in got.select("source", "warc_ts").collect()} == want
