@@ -1824,7 +1824,7 @@ def _q_stream_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_stream_parse_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PARSE ENGINE under Structured Streaming, oracle-backed: events
     streamed (availableNow), CLF lines synthesized per micro-batch, the
-    vectorized decode (mapInPandas works unchanged under streaming) routes
+    vectorized decode (mapInArrow works unchanged under streaming) routes
     them, per-(status, pattern_id) counts in complete mode must equal the
     closed-form batch expectation."""
     import os
@@ -1832,7 +1832,7 @@ def _q_stream_parse_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    from access_log_parser_spark.engine import fast_parse_routed
+    from access_log_parser_spark.engine import parse_routed
 
     src = tempfile.mkdtemp(prefix="alp_stream_parse_")
     shutil.copy(f"{sf_dir}/events.parquet", os.path.join(src, "events.parquet"))
@@ -1843,7 +1843,7 @@ def _q_stream_parse_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(LINE_NO).alias("line_no"),
         F.expr(CLF_LINE).alias("raw"),
     )
-    routed = fast_parse_routed(lines, "apache_clf")
+    routed = parse_routed(lines, "apache_clf")
     agg = routed.groupBy("status", "pattern_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows")
     )

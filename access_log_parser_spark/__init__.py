@@ -11,7 +11,6 @@ from .decoders import EXCLUDED, MATCHED, SKIPPED, UNMATCHED
 from .engine import (
     extract_fields,
     extract_ltsv,
-    fast_parse_routed,
     parse_documents,
     parse_routed,
 )
@@ -44,7 +43,6 @@ __all__ = [
     "UNMATCHED",
     "extract_fields",
     "extract_ltsv",
-    "fast_parse_routed",
     "parse_documents",
     "parse_routed",
     "FilterError",

@@ -1,8 +1,9 @@
 """Line decoders: regex first-match-wins cascade and LTSV.
 
-Plain-Python batch decoders used inside the engine's Python hop
-(``mapInArrow`` for :func:`..engine.extract_fields`, ``mapInPandas`` for
-:func:`..engine.parse_routed`). Semantics match the reference's
+Plain-Python batch decoders used inside the engine's one Python hop
+(``mapInArrow``: :func:`..engine.extract_fields`,
+:func:`..engine.parse_routed`, :func:`..engine.parse_documents`). They are
+the engine's only decoders. Semantics match the reference's
 ``parser_core.go:259-288``:
 
 - regex: ordered pattern list, first match wins, match index = pattern_id;

@@ -7,7 +7,7 @@ prefix -> write) runs here as ONE Arrow-batched Python pass followed by
 pure-Catalyst finalization. Design goals at 100 TB:
 
 - exactly one Python<->JVM hop on the hot path (regex decode + DSL filter +
-  serialization all happen in the same batch function);
+  serialization all happen in the same Arrow batch function);
 - regexes and filter predicates compile once per task, not per line
   (the reference recompiles filters per line — parser_core.go:220), and a
   prefix-chained pattern list such as the S3 preset compiles into one
@@ -21,9 +21,10 @@ pure-Catalyst finalization. Design goals at 100 TB:
 Surfaces:
 
 - reference parity (Option semantics, byte-exact serialized output lines,
-  status routing column, error rows): two entries share ONE per-line core
-  (``_RouteSpec`` built and validated on the driver, ``_Router.route``
-  per batch), so their outputs cannot drift apart:
+  status routing column, error rows): ONE routed implementation. Two
+  entries share one per-line core (``_RouteSpec`` built and validated
+  before any task runs, ``_Router.route`` per batch) and one Arrow output
+  builder (:func:`_route_arrays`), so their outputs cannot drift apart:
 
   - :func:`parse_documents` takes whole documents and is one
     ``mapInArrow`` stage: it splits each text with the scanner's exact
@@ -31,10 +32,8 @@ Surfaces:
     ``isFirst`` to the handler (so the TSV header needs no window), and
     hands carried document columns back as Arrow arrays. The pipeline and
     the streaming surface use it;
-  - :func:`parse_routed` takes exploded lines through ``mapInPandas``,
-    for callers that already hold lines (string/file/zip parsers);
-- :func:`fast_parse_routed` — the same routed contract with Catalyst
-  serialization; its decode step is :func:`extract_fields`;
+  - :func:`parse_routed` takes exploded lines through ``mapInArrow``, for
+    callers that already hold lines (string/file/zip parsers, the bench);
 - :func:`extract_fields` / :func:`extract_ltsv` — the Spark-native
   structured surface: typed string columns (union of capture groups) for
   SQL, joins and aggregation. ``extract_fields`` hops through
@@ -62,6 +61,7 @@ from pyspark.sql.types import (
 from . import decoders, patterns as pat
 from .decoders import EXCLUDED, MATCHED, SKIPPED, UNMATCHED
 from .filters import apply_filters, compile_filters
+from .functions.columns import multiline_prefix
 from .handlers import HANDLERS, prefix_strings
 from .options import Option
 from .sources.ziparchive import _scan_lines
@@ -81,7 +81,6 @@ ROUTED_SCHEMA = StructType(
         StructField("status", StringType()),
         StructField("pattern_id", IntegerType()),
         StructField("out_line", StringType()),
-        StructField("tsv_header", StringType()),
         StructField("raw", StringType()),
     ]
 )
@@ -234,13 +233,36 @@ class _Router:
         return status, pids, out, headers
 
 
+def _route_arrays(
+    router: _Router,
+    raws: list[str],
+    line_nos: list[int],
+    doc_ids: list[int] | None = None,
+) -> tuple[list[pa.Array], list[str | None]]:
+    """Route one batch and build its (status, pattern_id, out_line, raw)
+    Arrow arrays; ``raw`` is kept only on unmatched rows, for the errors
+    sink (parser_result.go:32-36). Also returns the TSV header rows
+    (:meth:`_Router.route`)."""
+    status, pids, out, headers = router.route(raws, line_nos, doc_ids)
+    arrays = [
+        pa.array(status, pa.string()),
+        pa.array(pids, pa.int32()),
+        pa.array(out, pa.string()),
+        pa.array(
+            [r if s == UNMATCHED else None for r, s in zip(raws, status)],
+            pa.string(),
+        ),
+    ]
+    return arrays, headers
+
+
 def parse_routed(
     lines_df: DataFrame,
     fmt: str | Sequence[str],
     opt: Option | None = None,
-    keep_raw: str = "unmatched",
 ) -> DataFrame:
-    """Full reference pipeline over a lines DataFrame.
+    """Full reference pipeline over a lines DataFrame, in one
+    ``mapInArrow`` stage.
 
     ``lines_df`` must carry (source string, line_no long, raw string);
     line_no is 1-based within its source (the reference's scanner counter).
@@ -250,11 +272,6 @@ def parse_routed(
     produces no output) and unmatched rows keep ``raw`` for the errors
     sink (parser_result.go:32-36).
 
-    ``keep_raw``: which rows carry the raw line back out of the engine —
-    "unmatched" (default: only the errors-sink rows, halving Arrow
-    transfer and sink bytes for mostly-matching corpora), "all", or
-    "none".
-
     Divergence from the reference: lines arrive one by one, not per
     document, so the line handler is always called with
     ``is_first=False``. The reference passes True for the first line of
@@ -263,43 +280,36 @@ def parse_routed(
     ``source`` (one header per source, so two documents sharing a source
     get one between them); a custom callable never sees True. Use
     :func:`parse_documents` for the reference's per-document ``isFirst``.
+
+    ``fast_parse_routed`` is the same function under its old name, kept
+    for callers that still use it (the perfbench workloads).
     """
     opt = opt or Option()
     spec = _RouteSpec.build(fmt, opt)
-    if keep_raw not in ("unmatched", "all", "none"):
-        raise ValueError(f"keep_raw must be unmatched/all/none, got {keep_raw!r}")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        router = spec.compile()
-        for pdf in batches:
-            raws = pdf["raw"].tolist()
-            status, pids, out, headers = router.route(raws, pdf["line_no"].tolist())
-            n = len(raws)
-            if keep_raw == "all":
-                raw_out = pdf["raw"]
-            elif keep_raw == "none":
-                raw_out = pd.Series([None] * n, dtype="object")
-            else:
-                raw_out = pd.Series(
-                    [raws[i] if status[i] == UNMATCHED else None for i in range(n)],
-                    dtype="object",
-                )
-            yield pd.DataFrame(
-                {
-                    "source": pdf["source"],
-                    "line_no": pdf["line_no"],
-                    "status": pd.Series(status, dtype="object"),
-                    "pattern_id": pd.Series(pids, dtype="int32"),
-                    "out_line": pd.Series(out, dtype="object"),
-                    "tsv_header": pd.Series(headers, dtype="object"),
-                    "raw": raw_out,
-                }
-            )
-
-    routed = lines_df.select("source", "line_no", "raw").mapInPandas(
-        run, ROUTED_SCHEMA
+    out_schema = StructType(
+        ROUTED_SCHEMA.fields
+        + ([StructField("tsv_header", StringType())] if spec.is_tsv else [])
     )
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        router = spec.compile()
+        for batch in batches:
+            line_nos = batch.column(1)
+            arrays, headers = _route_arrays(
+                router, batch.column(2).to_pylist(), line_nos.to_pylist()
+            )
+            arrays = [batch.column(0), line_nos, *arrays]
+            if spec.is_tsv:
+                arrays.append(pa.array(headers, pa.string()))
+            yield pa.RecordBatch.from_arrays(arrays, names=out_schema.fieldNames())
+
+    routed = lines_df.select(
+        F.col("source").cast("string"), F.col("line_no").cast("long"), "raw"
+    ).mapInArrow(run, out_schema)
     return _finalize_routed(routed, spec.is_tsv, opt)
+
+
+fast_parse_routed = parse_routed
 
 
 def parse_documents(
@@ -328,10 +338,7 @@ def parse_documents(
     opt = opt or Option()
     spec = _RouteSpec.build(fmt, opt)
     keep = list(keep)
-    out_schema = StructType(
-        [f for f in ROUTED_SCHEMA.fields if f.name != "tsv_header"]
-        + [docs.schema[c] for c in keep]
-    )
+    out_schema = StructType(ROUTED_SCHEMA.fields + [docs.schema[c] for c in keep])
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         router = spec.compile()
@@ -344,18 +351,12 @@ def parse_documents(
                 doc_ids.extend([d] * len(lines))
                 line_nos.extend(range(1, len(lines) + 1))
                 raws.extend(lines)
-            status, pids, out, _ = router.route(raws, line_nos, doc_ids)
+            arrays, _ = _route_arrays(router, raws, line_nos, doc_ids)
             take = pa.array(doc_ids, pa.int32())
             arrays = [
                 batch.column(0).take(take),
                 pa.array(line_nos, pa.int64()),
-                pa.array(status, pa.string()),
-                pa.array(pids, pa.int32()),
-                pa.array(out, pa.string()),
-                pa.array(
-                    [r if s == UNMATCHED else None for r, s in zip(raws, status)],
-                    pa.string(),
-                ),
+                *arrays,
             ]
             arrays.extend(batch.column(2 + k).take(take) for k in range(len(keep)))
             yield pa.RecordBatch.from_arrays(arrays, names=out_schema.fieldNames())
@@ -370,10 +371,9 @@ def parse_documents(
 
 
 def _finalize_routed(routed: DataFrame, is_tsv: bool, opt: Option) -> DataFrame:
-    """Catalyst-side finalization shared byte-for-byte by the compat and
-    fast paths (their row-identity is a pinned invariant — one home for
-    this block means a header/prefix change cannot drift between them):
-    TSV first-matched-per-source header, then prefix decoration."""
+    """Catalyst-side finalization shared by both routed entries: the TSV
+    first-matched-per-source header (lines-in only, from the hop's
+    ``tsv_header`` column), then prefix decoration."""
     if is_tsv:
         # isFirst = first matched line per source (parser_core.go:182,245);
         # a single partition-window min, no global sort.
@@ -387,8 +387,7 @@ def _finalize_routed(routed: DataFrame, is_tsv: bool, opt: Option) -> DataFrame:
                 (F.col("status") == MATCHED) & (F.col("line_no") == first_line),
                 F.concat_ws("\n", F.col("tsv_header"), F.col("out_line")),
             ).otherwise(F.col("out_line")),
-        )
-    routed = routed.drop("tsv_header")
+        ).drop("tsv_header")
 
     if opt.prefix:
         # applyPrefix (parser_core.go:323-334), multi-line aware for matched
@@ -396,16 +395,11 @@ def _finalize_routed(routed: DataFrame, is_tsv: bool, opt: Option) -> DataFrame:
         # (parser_core.go:203-205). ANSI-colored pair on a tty
         # (parser_core.go:186-189) or when Option(color=True).
         mpref, upref = prefix_strings(opt.resolve_color())
-        prefixed = F.array_join(
-            F.transform(
-                F.split(F.col("out_line"), "\n"),
-                lambda x: F.concat(F.lit(mpref), x),
-            ),
-            "\n",
-        )
         routed = routed.withColumn(
             "out_line",
-            F.when(F.col("status") == MATCHED, prefixed)
+            F.when(
+                F.col("status") == MATCHED, multiline_prefix(F.col("out_line"), mpref)
+            )
             .when(
                 (F.col("status") == UNMATCHED) & F.col("out_line").isNotNull(),
                 F.concat(F.lit(upref), F.col("out_line")),
@@ -479,110 +473,6 @@ def extract_fields(
             yield pa.RecordBatch.from_arrays(arrays, names=out_schema.fieldNames())
 
     return lines_df.select(*passthrough, line_col).mapInArrow(run, out_schema)
-
-
-def fast_parse_routed(
-    lines_df: DataFrame,
-    fmt: str | Sequence[str],
-    opt: Option | None = None,
-    decoder: str = "python",
-    passthrough: Sequence[str] = (),
-) -> DataFrame:
-    """JVM-serialization fast path: same routed output contract as
-    :func:`parse_routed`, ~2x throughput on mostly-matching corpora.
-
-    ``passthrough`` columns of ``lines_df`` (document attributes carried
-    by ``explode_lines(keep=...)``) ride through the decode hop and are
-    appended to the output unchanged.
-
-    Python does ONLY the regex decode (struct columns out); status
-    derivation, DSL filtering, label projection, line numbers and the
-    five output encodings are Catalyst expressions (whole-stage codegen)
-    via :mod:`..functions.serialize_expr`.
-
-    Semantics differences vs the compat path (both documented reference
-    divergences, not result divergences on well-formed data):
-
-    - filter DSL errors are not abort-exact: a numeric comparison against
-      a non-numeric field value EXCLUDES the row (NULL predicate) instead
-      of aborting the job (parser_core.go:220-223);
-    - custom Python ``LineHandler`` callables are not supported (use the
-      compat path);
-    - LTSV input is not supported (dynamic per-line schema cannot be a
-      static Catalyst expression).
-    """
-    from .filters import filters_to_column
-    from .functions.serialize_expr import serialize_expr
-
-    opt = opt or Option()
-    if callable(opt.line_handler):
-        raise ValueError("fast path requires a named handler; use parse_routed")
-    handler = opt.line_handler
-    if isinstance(fmt, str) and fmt == "ltsv":
-        raise ValueError("fast path is regex-presets only; use parse_routed")
-
-    if decoder not in ("python", "jvm"):
-        raise ValueError(f"decoder must be python/jvm, got {decoder!r}")
-    # carried columns travel under private names, so they can neither
-    # shadow a capture group nor answer a filter label
-    carried = [(c, f"_carry{k}") for k, c in enumerate(passthrough)]
-    if carried:
-        lines_df = lines_df.select(
-            "source", "line_no", "raw", *[F.col(c).alias(a) for c, a in carried]
-        )
-    decode_pass = ["source", "line_no", *[a for _, a in carried]]
-    if decoder == "jvm":
-        # zero-Python plan: regexp_replace group rewrite (see
-        # functions/jvm_decode.py for semantics caveats)
-        from .functions.jvm_decode import extract_fields_jvm
-
-        fields = extract_fields_jvm(
-            lines_df, fmt, passthrough=decode_pass, raw_when_unmatched=True,
-        )
-    else:
-        fields = extract_fields(
-            lines_df, fmt, passthrough=decode_pass, raw_when_unmatched=True,
-        )
-
-    skip = [int(s) for s in opt.skip_lines]
-    status = F.when(F.col("line_no").isin(skip), F.lit(SKIPPED)) if skip else None
-    unmatched_c = F.col("pattern_id") < 0
-    if opt.filters:
-        pred = filters_to_column(list(opt.filters), fields.columns)
-        excluded_c = ~F.coalesce(pred, F.lit(False))
-    else:
-        excluded_c = F.lit(False)
-    chain = (status.when(unmatched_c, F.lit(UNMATCHED)) if status is not None
-             else F.when(unmatched_c, F.lit(UNMATCHED)))
-    chain = chain.when(excluded_c, F.lit(EXCLUDED)).otherwise(F.lit(MATCHED))
-    fields = fields.withColumn("status", chain)
-
-    out_expr, header_expr = serialize_expr(
-        fmt, handler=handler, labels=list(opt.labels) or None,
-        line_number=opt.line_number,
-    )
-    out_line = F.when(F.col("status") == MATCHED, out_expr)
-    if opt.unmatch_lines:
-        out_line = out_line.when(F.col("status") == UNMATCHED, F.col("raw"))
-    routed = fields.select(
-        "source",
-        "line_no",
-        "status",
-        # skipped lines are never decoded in the reference
-        # (parser_core.go:197-200): pattern_id stays -1
-        F.when(F.col("status") == SKIPPED, F.lit(-1))
-        .otherwise(F.col("pattern_id"))
-        .cast("int")
-        .alias("pattern_id"),
-        out_line.alias("out_line"),
-        (header_expr if handler == "tsv" else F.lit(None).cast("string")).alias(
-            "tsv_header"
-        ),
-        F.when(F.col("status") == UNMATCHED, F.col("raw")).alias("raw"),
-        *[F.col(a).alias(c) for c, a in carried],
-    )
-
-    return _finalize_routed(routed, handler == "tsv", opt)
 
 
 def extract_ltsv(

@@ -19,9 +19,11 @@ Two compilation targets:
 - :func:`compile_filters` -> Python predicate used inside the vectorized
   engine pass (exact error semantics, including per-line unknown-label and
   non-numeric aborts);
-- :func:`filters_to_column` -> a Catalyst ``Column`` predicate for the
-  Spark-native structured surface (compiled ONCE on the driver — unlike the
-  reference, which re-parses the DSL per line, parser_core.go:220).
+- :func:`filters_to_column` -> a Catalyst ``Column`` predicate over
+  :func:`..engine.extract_fields` columns, for the Spark-native structured
+  surface only, compiled once per query (the reference re-parses the DSL
+  per line, parser_core.go:220). The routed entries never use it: they
+  abort exactly as the reference does.
 """
 
 from __future__ import annotations
@@ -134,11 +136,12 @@ def apply_filters(
 def filters_to_column(filters: Sequence[str], columns: Sequence[str]) -> Column:
     """Compile the DSL to a single Catalyst predicate over named columns.
 
-    This is the JVM fast path for the structured surface: string/regex ops
-    map to ``==``/``rlike``/``lower``; numeric ops to ``cast('double')``
-    comparisons (rows whose value does not cast are excluded rather than
-    aborting — driver-side validation should be used where abort parity
-    matters). Duplicate labels keep last-wins semantics.
+    Serves the structured surface only (``extract_fields`` columns; the
+    routed entries run :func:`compile_filters`): string/regex ops map to
+    ``==``/``rlike``/``lower``; numeric ops to ``try_cast('double')``
+    comparisons, NULL for a value that does not cast, so wrap the predicate
+    in ``coalesce(pred, false)`` to exclude such rows (the reference
+    aborts instead). Duplicate labels keep last-wins semantics.
     """
     by_label: dict[str, tuple[str, str]] = {}
     for expr in filters:
@@ -169,9 +172,8 @@ def filters_to_column(filters: Sequence[str], columns: Sequence[str]) -> Column:
             # try_cast, not cast: under Spark 4 ANSI mode (on by
             # default) a plain cast ABORTS the job with
             # CAST_INVALID_INPUT on the first non-numeric field value;
-            # try_cast yields NULL and the coalesce(pred, false) wrapper
-            # in the engine excludes the row — the documented fast-path
-            # divergence from the reference's abort.
+            # try_cast yields NULL, which the caller's coalesce(pred,
+            # false) turns into an excluded row.
             d = c.try_cast("double")
             f = F.lit(float(value))
             if op == ">":

@@ -1,13 +1,9 @@
 from .columns import (
-    empty_to_dash,
-    escape_json_col,
     host_of_url,
     multiline_prefix,
 )
 
 __all__ = [
-    "empty_to_dash",
-    "escape_json_col",
     "host_of_url",
     "multiline_prefix",
 ]

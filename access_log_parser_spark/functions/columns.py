@@ -1,31 +1,14 @@
 """Column-level scalar functions (JVM-side, codegen-friendly).
 
 These mirror the reference's scalar helpers (SURVEY.md §2.6) as Catalyst
-expressions for use on the structured surface, where staying inside
-whole-stage codegen beats a Python hop.
+expressions, where staying inside whole-stage codegen beats a Python hop.
+The output encodings themselves live only in :mod:`..handlers`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def empty_to_dash(c: Column) -> Column:
-    """Empty string -> "-" (handler.go:88-90,115-117)."""
-    return F.when(c == "", F.lit("-")).otherwise(c)
-
-
-def escape_json_col(c: Column) -> Column:
-    """writeEscapedString (handler.go:127-144) as chained replacements:
-    ONLY backslash, quote, newline, CR, tab; everything else raw.
-    Backslash first so later escapes aren't double-escaped."""
-    c = F.replace(c, F.lit("\\"), F.lit("\\\\"))
-    c = F.replace(c, F.lit('"'), F.lit('\\"'))
-    c = F.replace(c, F.lit("\n"), F.lit("\\n"))
-    c = F.replace(c, F.lit("\r"), F.lit("\\r"))
-    c = F.replace(c, F.lit("\t"), F.lit("\\t"))
-    return c
 
 
 def host_of_url(c: Column) -> Column:

@@ -6,7 +6,7 @@ API:
 
 Semantics match the engine exactly (first-match-wins cascade, pattern_id
 = -1 + NULL fields for unmatched — parser_core.go:259-270). The UDTF is
-the row-at-a-time cousin of the vectorized mapInPandas path: convenient
+the row-at-a-time cousin of the vectorized mapInArrow path: convenient
 for SQL exploration, NOT the 100 TB hot path (use extract_fields /
 parse_routed for bulk work).
 """

@@ -2,14 +2,16 @@
 
 Byte-compatible re-implementations of the reference's five output encoders
 (`/root/reference/handler.go:15-144`). These are plain-Python functions on
-(labels, values) lists so they can run vectorized inside the engine's single
-``mapInPandas`` pass (and be unit-tested directly). ``json.dumps`` /
-``F.to_json`` are NOT used: the reference escapes only ``\\ " \\n \\r \\t``
-and passes every other byte through raw (`handler.go:127-144`), which differs
-from standard JSON encoders.
+(labels, values) lists so they can run inside the engine's single
+``mapInArrow`` pass (and be unit-tested directly); they are the engine's
+only serializers. ``json.dumps`` / ``F.to_json`` are NOT used: the
+reference escapes only ``\\ " \\n \\r \\t`` and passes every other byte
+through raw (`handler.go:127-144`), which differs from standard JSON
+encoders.
 
 Semantics shared by all handlers (`handler.go` loops): iterate values, guard
 ``i < len(labels)`` — extra values are dropped, missing values truncate.
+``zip(labels, values)`` is that loop.
 """
 
 from __future__ import annotations
@@ -18,67 +20,55 @@ from collections.abc import Callable, Sequence
 
 LineHandler = Callable[[Sequence[str], Sequence[str], bool], str]
 
-_ESCAPES = {"\\": "\\\\", '"': '\\"', "\n": "\\n", "\r": "\\r", "\t": "\\t"}
-_ESCAPE_TRANS = str.maketrans(_ESCAPES)
-
 
 def escape_string(s: str) -> str:
-    """writeEscapedString (handler.go:127-144): only 5 escapes, rest raw."""
-    return s.translate(_ESCAPE_TRANS)
+    """writeEscapedString (handler.go:127-144): only 5 escapes, rest raw.
+
+    Guarded ``str.replace`` calls, backslash first so no escape is escaped
+    twice: most values contain none of the five characters and cost five
+    substring scans, several times cheaper than ``str.translate``."""
+    if "\\" in s:
+        s = s.replace("\\", "\\\\")
+    if '"' in s:
+        s = s.replace('"', '\\"')
+    if "\n" in s:
+        s = s.replace("\n", "\\n")
+    if "\r" in s:
+        s = s.replace("\r", "\\r")
+    if "\t" in s:
+        s = s.replace("\t", "\\t")
+    return s
 
 
 def json_line_handler(labels: Sequence[str], values: Sequence[str], _is_first: bool = False) -> str:
     """NDJSON object, insertion-ordered keys, all values quoted strings
     (handler.go:15-34)."""
-    n = len(labels)
-    parts = [
-        f'"{labels[i]}":"{escape_string(v)}"'
-        for i, v in enumerate(values)
-        if i < n
-    ]
-    return "{" + ",".join(parts) + "}"
+    return "{" + ",".join(
+        [f'"{k}":"{escape_string(v)}"' for k, v in zip(labels, values)]
+    ) + "}"
 
 
 def pretty_json_line_handler(labels: Sequence[str], values: Sequence[str], _is_first: bool = False) -> str:
     """Indented multi-line JSON (handler.go:37-56)."""
-    n = len(labels)
-    parts = [
-        f'  "{labels[i]}": "{escape_string(v)}"'
-        for i, v in enumerate(values)
-        if i < n
-    ]
-    return "{\n" + ",\n".join(parts) + "\n}"
+    return "{\n" + ",\n".join(
+        [f'  "{k}": "{escape_string(v)}"' for k, v in zip(labels, values)]
+    ) + "\n}"
 
 
 def kv_pair_line_handler(labels: Sequence[str], values: Sequence[str], _is_first: bool = False) -> str:
     """Space-joined k="v" pairs (handler.go:59-75)."""
-    n = len(labels)
-    parts = [
-        f'{labels[i]}="{escape_string(v)}"'
-        for i, v in enumerate(values)
-        if i < n
-    ]
-    return " ".join(parts)
+    return " ".join([f'{k}="{escape_string(v)}"' for k, v in zip(labels, values)])
 
 
 def ltsv_line_handler(labels: Sequence[str], values: Sequence[str], _is_first: bool = False) -> str:
     """Tab-joined k:v, empty value -> "-" (handler.go:78-96)."""
-    n = len(labels)
-    parts = [
-        f"{labels[i]}:{v if v else '-'}"
-        for i, v in enumerate(values)
-        if i < n
-    ]
-    return "\t".join(parts)
+    return "\t".join([f"{k}:{v if v else '-'}" for k, v in zip(labels, values)])
 
 
 def tsv_line_handler(labels: Sequence[str], values: Sequence[str], is_first: bool = False) -> str:
     """Tab-joined values, empty -> "-", header row prepended when is_first
     (handler.go:99-123). No ANSI color (non-tty path)."""
-    n = len(labels)
-    body = "\t".join(
-        (v if v else "-") for i, v in enumerate(values) if i < n
-    )
+    body = "\t".join([v if v else "-" for _, v in zip(labels, values)])
     if is_first:
         return "\t".join(labels) + "\n" + body
     return body

@@ -8,13 +8,11 @@ One batch run over a pages table is ONE job with ONE Python stage:
    ~20 lines, and nothing has to re-scan the pages to join them back
    afterwards. Each lookup is materialized once per run (a persisted
    derived frame, released when the run ends), not re-computed per batch;
-2. **parse**: the compat engine parses whole documents in one
-   ``mapInArrow`` stage (:func:`.engine.parse_documents`: split, decode,
-   filter, serialize, with the reference's per-document ``isFirst`` for
-   the TSV header), carrying the lookup columns through as Arrow arrays;
-   the fast engine explodes lines in Catalyst and decodes with
-   ``fast_parse_routed``, carrying them as passthrough columns. Neither
-   needs a shuffle;
+2. **parse**: every format, LTSV and regex presets alike, parses whole
+   documents in one ``mapInArrow`` stage (:func:`.engine.parse_documents`:
+   split, decode, filter, serialize, with the reference's per-document
+   ``isFirst`` for the TSV header), carrying the lookup columns through as
+   Arrow arrays. No shuffle;
 3. **route**: one dynamic-partitioned write fans rows out to
    ``(status, pattern_id)`` sinks;
 4. **aggregate**: lineage counters ride the SAME action via
@@ -35,11 +33,10 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .engine import fast_parse_routed, parse_documents
+from .engine import parse_documents
 from .metrics import Result, observe_routed, result_from_observation
 from .options import Option
 from .sinks import processed_batches, write_manifest, write_routed
-from .sources.text import explode_lines
 
 
 @dataclass
@@ -67,7 +64,6 @@ def run_pipeline(
     text_col: str = "text",
     n_batches: int = 1,
     resume: bool = False,
-    engine: str = "auto",
     partition_lineage: bool = False,
 ) -> PipelineReport:
     """Run the pipeline; ``lookups`` maps name -> (lookup_df, join_key)
@@ -75,25 +71,11 @@ def run_pipeline(
     which must be a column of both sides. The joined columns (key and
     lookup values) are carried onto every routed row of the page.
 
-    ``engine``: "fast" (JVM serialization, regex presets only), "compat"
-    (reference-exact Python path), or "auto" (fast when eligible).
-    The fast path keeps the PYTHON decoder deliberately: the zero-Python
-    JVM decoder (decoder="jvm", byte-verified row-identical on the
-    presets) measured 2.5x SLOWER on the S3 cascade at 6M lines —
-    75-78 s vs 29-33 s at local[8] — because each fallback pattern costs
-    a full regexp_replace pass per row in Java's backtracking engine,
-    while the Arrow-batched Python loop runs one compiled first-match
-    cascade; codegen-resident is not automatically faster than a
-    vectorized Python stage when the regex work dominates.
-
     ``partition_lineage=True`` additionally records per-PARTITION counters
     in each batch manifest (north_rule: per-partition lineage): the routed
     frame is persisted so the breakdown rides the same parse, at the cost
     of caching one batch of routed rows."""
     opt = opt or Option()
-    use_fast = engine == "fast" or (
-        engine == "auto" and fmt != "ltsv" and not callable(opt.line_handler)
-    )
     start = time.monotonic()
 
     pages = _with_batch_id(pages, url_col, n_batches)
@@ -131,16 +113,10 @@ def run_pipeline(
             # any left join would
             for lk, key in cached:
                 batch_pages = batch_pages.join(F.broadcast(lk), on=key, how="left")
-            if use_fast:
-                lines = explode_lines(
-                    batch_pages, text_col=text_col, source_col=url_col, keep=tuple(carry)
-                )
-                routed = fast_parse_routed(lines, fmt, opt, passthrough=carry)
-            else:
-                routed = parse_documents(
-                    batch_pages, fmt, opt, source_col=url_col, text_col=text_col,
-                    keep=carry,
-                )
+            routed = parse_documents(
+                batch_pages, fmt, opt, source_col=url_col, text_col=text_col,
+                keep=carry,
+            )
 
             if partition_lineage:
                 routed = routed.persist()

@@ -5,7 +5,7 @@ correct on local[N]:
 
 - AQE on (runtime coalesce, skew-join splitting) — skewed url-host
   partitions are the expected hazard for web-crawl corpora;
-- Arrow enabled with a bounded batch size so the mapInPandas parse stage
+- Arrow enabled with a bounded batch size so the mapInArrow parse stage
   streams fixed-size batches instead of whole partitions;
 - shuffle partitions sized for the local harness; on a real cluster this is
   overridden by --conf / AQE coalescing.

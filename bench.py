@@ -65,13 +65,13 @@ def _n_pages(spark) -> int:
 def parse_route_job(spark, n_pages: int, out_dir: str) -> dict:
     """The headline job: synth pages -> explode -> decode -> fan-out write."""
     from access_log_parser_spark.metrics import observe_routed
-    from access_log_parser_spark.engine import fast_parse_routed
+    from access_log_parser_spark.engine import parse_routed
     from access_log_parser_spark.pages import pages_to_lines, synth_pages
     from access_log_parser_spark.sinks import write_routed
 
     pages = synth_pages(spark, n_pages, LINES_PER_PAGE, 5)
     lines = pages_to_lines(pages)
-    routed = fast_parse_routed(lines, "s3")
+    routed = parse_routed(lines, "s3")
     observed, obs = observe_routed(routed)
     t0 = time.monotonic()
     write_routed(observed, out_dir, mode="overwrite")

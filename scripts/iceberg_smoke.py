@@ -39,7 +39,7 @@ def main() -> int:
     table = sys.argv[1] if len(sys.argv) > 1 else "smoke.db.routed_smoke"
     spark = SparkSession.builder.appName("alp-iceberg-smoke").getOrCreate()
 
-    from access_log_parser_spark.engine import fast_parse_routed
+    from access_log_parser_spark.engine import parse_routed
     from access_log_parser_spark.pages import pages_to_lines, synth_pages
     from access_log_parser_spark.sinks import iceberg_available, write_routed
 
@@ -49,7 +49,7 @@ def main() -> int:
 
     def routed_batch(n_pages: int, batch_id: str):
         lines = pages_to_lines(synth_pages(spark, n_pages, 10, 5))
-        return fast_parse_routed(lines, "s3").withColumn(
+        return parse_routed(lines, "s3").withColumn(
             "batch_id", F.lit(batch_id)
         )
 

@@ -1,109 +1,66 @@
-"""Fast-path (JVM serialization) vs compat-path equivalence: both engines
-must produce identical routed rows for every supported Option combination
-on the golden corpus."""
+"""One routed core: ``parse_routed``, its old name ``fast_parse_routed``
+and ``run_pipeline`` (``parse_documents``) all run ``_Router.route``, so
+every routed entry aborts on a filter exactly as the reference's
+``applyFilter`` does (parser_core.go:220-223, 338-355, 427-432)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 import golden_s3 as g
-from access_log_parser_spark import Option
-from access_log_parser_spark.engine import fast_parse_routed, parse_routed
-from access_log_parser_spark.pages import pages_to_lines, synth_pages
+from access_log_parser_spark import Option, engine
+from access_log_parser_spark.pages import synth_pages
+from access_log_parser_spark.pipeline import run_pipeline
 from access_log_parser_spark.sources import lines_from_string
 
 
-def collect(routed):
-    return sorted(
-        (r["source"], r["line_no"], r["status"], r["pattern_id"], r["out_line"], r["raw"])
-        for r in routed.collect()
-    )
-
-
-OPTIONS = [
-    Option(),
-    Option(line_number=True),
-    Option(skip_lines=[2, 4], line_number=True),
-    Option(filters=["error_code == NoSuchBucketPolicy"]),
-    Option(filters=["bytes_sent >= 200", "http_status == 200"]),
-    Option(labels=["bucket", "method", "http_status"]),
-    Option(unmatch_lines=True, prefix=True),
-    Option(line_handler="kv", labels=["bucket"]),
-    Option(line_handler="ltsv"),
-    Option(line_handler="tsv", labels=["bucket", "method"]),
-    Option(line_handler="pretty_json", labels=["bucket"], prefix=True),
-]
-
-
-@pytest.mark.parametrize("opt", OPTIONS, ids=[str(i) for i in range(len(OPTIONS))])
-def test_fast_matches_compat_golden(spark, opt):
-    lines = lines_from_string(spark, g.CONTAINS_UNMATCH_INPUT)
-    assert collect(fast_parse_routed(lines, "s3", opt)) == collect(
-        parse_routed(lines, "s3", opt)
-    )
-
-
-@pytest.mark.parametrize("opt", OPTIONS[:7], ids=[str(i) for i in range(7)])
-def test_jvm_decoder_matches_compat(spark, opt):
-    lines = lines_from_string(spark, g.CONTAINS_UNMATCH_INPUT)
-    assert collect(fast_parse_routed(lines, "s3", opt, decoder="jvm")) == collect(
-        parse_routed(lines, "s3", opt)
-    )
-
-
-def test_jvm_decoder_fallback_patterns(spark):
-    # fallback pattern ids survive the zero-Python plan
-    from access_log_parser_spark.functions.jvm_decode import extract_fields_jvm
-    from access_log_parser_spark.engine import extract_fields
-
-    pages = synth_pages(spark, 20, 10, 5)
-    lines = pages_to_lines(pages)
-    a = extract_fields(lines, "s3", passthrough=["source", "line_no"])
-    b = extract_fields_jvm(lines, "s3", passthrough=["source", "line_no"])
-    key = lambda r: (r["source"], r["line_no"])
-    ra = sorted(map(tuple, a.collect()), key=lambda t: (t[0], t[1]))
-    rb = sorted(map(tuple, b.collect()), key=lambda t: (t[0], t[1]))
-    assert ra == rb
-
-
-def test_fast_matches_compat_synth_corpus(spark):
-    lines = pages_to_lines(synth_pages(spark, 30, 10, 5))
-    opt = Option(line_number=True)
-    assert collect(fast_parse_routed(lines, "s3", opt)) == collect(
-        parse_routed(lines, "s3", opt)
-    )
-
-
-def test_fast_rejects_ltsv_and_custom_handlers(spark):
-    lines = lines_from_string(spark, g.ALL_MATCH_INPUT)
-    with pytest.raises(ValueError):
-        fast_parse_routed(lines, "ltsv")
-    with pytest.raises(ValueError):
-        fast_parse_routed(lines, "s3", Option(line_handler=lambda a, b, c: ""))
+def test_fast_parse_routed_is_parse_routed():
+    assert engine.fast_parse_routed is engine.parse_routed
 
 
 def test_pipeline_auto_uses_fast(spark, tmp_path):
-    from access_log_parser_spark.pipeline import run_pipeline
+    """A regex-preset run_pipeline run keeps the closed-form counters."""
     from access_log_parser_spark.sinks import read_sink
 
     pages = synth_pages(spark, 20, 10, 5)
-    rep = run_pipeline(spark, pages, str(tmp_path / "o"), fmt="s3", engine="auto")
+    rep = run_pipeline(spark, pages, str(tmp_path / "o"), fmt="s3")
     assert rep.result.counters() == (200, 160, 40, 0, 0)
     assert read_sink(spark, str(tmp_path / "o")).count() == 200
 
 
-def test_jvm_cloudfront_twin_equivalence_adversarial(spark):
-    """JVM decoder's guarded tab-twin must agree with the Python decoder
-    on adversarial CloudFront lines (extra/missing tabs, quotes, spaces)."""
-    from access_log_parser_spark import extract_fields
-    from access_log_parser_spark.functions.jvm_decode import extract_fields_jvm
-    from tests.test_fast_twin import ADVERSARIAL
+ABORTS = {
+    # L1 decodes with fallback pattern 1 and L5 with pattern 4; neither
+    # has the acl_required group, which only pattern 0 captures
+    "unknown_label": ("acl_required != zzz", "invalid field name"),
+    # turn_around_time is "-" on both lines
+    "non_numeric": ("turn_around_time > 1", "could not convert"),
+}
 
-    lines = spark.createDataFrame(
-        [(str(i), i + 1, s) for i, s in enumerate(ADVERSARIAL)],
-        ["source", "line_no", "raw"],
+
+def _lines(spark):
+    return lines_from_string(spark, "\n".join([g.L1, g.L5]))
+
+
+def _pages(spark):
+    return spark.createDataFrame(
+        [("https://a/1", "\n".join([g.L1, g.L5]))], "url string, text string"
     )
-    py = extract_fields(lines, "cloudfront", passthrough=["source"])
-    jvm = extract_fields_jvm(lines, "cloudfront", passthrough=["source"])
-    a = sorted(map(tuple, py.collect()))
-    b = sorted(map(tuple, jvm.collect()))
-    assert a == b
+
+
+ENTRIES = {
+    "parse_routed": lambda spark, opt, out: engine.parse_routed(
+        _lines(spark), "s3", opt
+    ).collect(),
+    "fast_parse_routed": lambda spark, opt, out: engine.fast_parse_routed(
+        _lines(spark), "s3", opt
+    ).collect(),
+    "run_pipeline": lambda spark, opt, out: run_pipeline(
+        spark, _pages(spark), out, fmt="s3", opt=opt
+    ),
+}
+
+
+@pytest.mark.parametrize("entry", sorted(ENTRIES))
+@pytest.mark.parametrize("case", sorted(ABORTS))
+def test_routed_entries_abort_like_reference(spark, tmp_path, entry, case):
+    expr, reason = ABORTS[case]
+    with pytest.raises(Exception, match=f"FilterError: cannot evaluate filter expressions.*{reason}"):
+        ENTRIES[entry](spark, Option(filters=[expr]), str(tmp_path / "o"))

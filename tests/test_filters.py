@@ -86,9 +86,9 @@ def test_invalid_regex_errors():
 
 def test_catalyst_numeric_filter_excludes_non_numeric_under_ansi(spark):
     """Spark 4 ANSI mode (on by default) makes a plain cast('double')
-    ABORT on non-numeric input; the fast path's documented semantics are
-    exclude-not-abort, so filters_to_column must try_cast. Apache's '-'
-    for zero-byte responses is the canonical non-numeric value."""
+    ABORT on non-numeric input; the structured surface excludes instead
+    of aborting, so filters_to_column must try_cast. Apache's '-' for
+    zero-byte responses is the canonical non-numeric value."""
     from pyspark.sql import functions as F
 
     from access_log_parser_spark.filters import filters_to_column

@@ -157,10 +157,9 @@ def test_partition_lineage_sums_to_global(spark, tmp_path):
         assert sum(p[key] for p in lineage) == m["counters"][key]
 
     # operator-level invariant on a fresh routed frame
-    from access_log_parser_spark.engine import fast_parse_routed
     from access_log_parser_spark.pages import pages_to_lines
 
-    routed = fast_parse_routed(pages_to_lines(pages), "s3")
+    routed = parse_routed(pages_to_lines(pages), "s3")
     rows = counters_by_partition(routed).collect()
     assert sum(r["total"] for r in rows) == 400
     assert all(r["total"] == r["matched"] + r["unmatched"] + r["excluded"] + r["skipped"] for r in rows)
@@ -169,13 +168,12 @@ def test_partition_lineage_sums_to_global(spark, tmp_path):
 def test_compact_sink_atomic_rewrite(spark, tmp_path):
     """Small-file compaction: many per-batch files collapse to one, rows
     and values unchanged, old directory gone."""
-    from access_log_parser_spark.engine import fast_parse_routed
     from access_log_parser_spark.pages import pages_to_lines, synth_pages
     from access_log_parser_spark.sinks import compact_sink, read_sink, write_routed
 
     out = str(tmp_path / "compact_out")
     pages = synth_pages(spark, 20, 10, 5)
-    routed = fast_parse_routed(pages_to_lines(pages), "s3")
+    routed = parse_routed(pages_to_lines(pages), "s3")
     for _ in range(3):  # three appends -> many small files
         write_routed(routed, out)
     before_rows = read_sink(spark, out, status="matched", pattern_id=1).count()
@@ -230,10 +228,9 @@ def test_iceberg_writer_seam_dispatch(spark, tmp_path, monkeypatch):
     parquet layout is written regardless of iceberg_table. The real
     probe must be False in this jar-less sandbox."""
     from access_log_parser_spark import sinks
-    from access_log_parser_spark.engine import fast_parse_routed
     from access_log_parser_spark.pages import pages_to_lines, synth_pages
 
-    routed = fast_parse_routed(pages_to_lines(synth_pages(spark, 5, 4, 2)), "s3")
+    routed = parse_routed(pages_to_lines(synth_pages(spark, 5, 4, 2)), "s3")
     assert sinks.iceberg_available(spark) is False
 
     calls = {}
@@ -410,17 +407,68 @@ def test_ltsv_pipeline_golden_tsv_headers_and_lookup(spark, tmp_path):
     assert written() == want
 
 
-def test_pipeline_batch_plan_one_python_stage(spark, tmp_path, monkeypatch):
-    """One compat batch (LTSV, tsv handler, a filter, one lookup) is one
-    Python operator over one pages scan: no window, no shuffle, no second
-    scan of the pages to join page attributes back. The lookup, a Python
-    RDD, is computed by its own Python tasks once per run, not per batch."""
+def _s3_tsv(line: str, header: bool) -> str:
+    """The tsv handler's output for a golden S3 line."""
+    from access_log_parser_spark import patterns as pat
+    from access_log_parser_spark.decoders import compile_plan
+    from access_log_parser_spark.handlers import tsv_line_handler
+
+    plan = compile_plan(pat.compile_patterns(list(pat.PRESETS["s3"])))
+    pids, vals = plan.decode([line])
+    return tsv_line_handler(plan.names[pids[0]], vals[0], header)
+
+
+def test_s3_pipeline_tsv_header_per_page(spark, tmp_path):
+    """S3 through run_pipeline with the tsv handler: the header row sits on
+    each PAGE's first matched line, so two pages that share a url each get
+    their own (parser_core.go:182,245)."""
+    import golden_s3 as g
+
+    pages = spark.createDataFrame(
+        [
+            ("https://s/dup", "\n".join([g.L4_TRUNC, g.L1, g.L2])),
+            ("https://s/dup", "\n".join([g.L5, g.L3])),
+            ("https://s/1", g.L2),
+        ],
+        "url string, text string",
+    )
+    out = str(tmp_path / "s3_tsv")
+    rep = run_pipeline(spark, pages, out, fmt="s3", opt=Option(line_handler="tsv"))
+    assert rep.result.counters() == (6, 5, 1, 0, 0)
+    got = sorted(
+        (r.source, r.line_no, r.status, r.out_line)
+        for r in read_sink(spark, out).collect()
+    )
+    assert got == sorted([
+        ("https://s/1", 1, "matched", _s3_tsv(g.L2, True)),
+        ("https://s/dup", 1, "unmatched", None),
+        ("https://s/dup", 2, "matched", _s3_tsv(g.L1, True)),
+        ("https://s/dup", 3, "matched", _s3_tsv(g.L2, False)),
+        ("https://s/dup", 1, "matched", _s3_tsv(g.L5, True)),
+        ("https://s/dup", 2, "matched", _s3_tsv(g.L3, False)),
+    ], key=repr)
+
+
+@pytest.mark.parametrize("fmt", ["ltsv", "s3"])
+def test_pipeline_batch_plan_one_python_stage(spark, tmp_path, monkeypatch, fmt):
+    """One batch (tsv handler, a filter, one lookup) is one Python
+    operator over one pages scan, for LTSV and for a regex preset alike: no
+    window, no shuffle, no second scan of the pages to join page attributes
+    back. The lookup, a Python RDD, is computed by its own Python tasks once
+    per run, not per batch."""
+    import golden_s3 as g
+
     from access_log_parser_spark import pipeline
 
+    if fmt == "ltsv":
+        text, filt = "status:200\tsize:1\nstatus:404\tsize:2\nbad", "status == 200"
+    else:
+        # L3 is a 404; L4_TRUNC matches no pattern
+        text, filt = "\n".join([g.L1, g.L3, g.L4_TRUNC]), "http_status == 200"
     pages = spark.range(0, 40, 1, 4).select(
         F.concat(F.lit("https://p/"), F.col("id").cast("string")).alias("url"),
         F.when(F.col("id") % 2 == 0, "en").otherwise("de").alias("lang"),
-        F.lit("status:200\tsize:1\nstatus:404\tsize:2\nbad").alias("text"),
+        F.lit(text).alias("text"),
     )
     lang = spark.createDataFrame(
         [("en", "English"), ("de", "German")], "lang string, lang_name string"
@@ -443,8 +491,8 @@ def test_pipeline_batch_plan_one_python_stage(spark, tmp_path, monkeypatch):
         lang.rdd.mapPartitions(count_scans), lang.schema
     )
     rep = run_pipeline(
-        spark, pages, str(tmp_path / "plan_out"), fmt="ltsv",
-        opt=Option(filters=["status == 200"], line_handler="tsv"),
+        spark, pages, str(tmp_path / "plan_out"), fmt=fmt,
+        opt=Option(filters=[filt], line_handler="tsv"),
         lookups={"lang": (counted, "lang")}, n_batches=3,
     )
     assert rep.result.counters() == (120, 40, 40, 40, 0)
