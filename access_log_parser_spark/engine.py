@@ -36,8 +36,8 @@ Surfaces:
     callers that already hold lines (string/file/zip parsers, the bench);
 - :func:`extract_fields` / :func:`extract_ltsv` — the Spark-native
   structured surface: typed string columns (union of capture groups) for
-  SQL, joins and aggregation. ``extract_fields`` hops through
-  ``mapInArrow`` and builds ``pa.array``s directly.
+  SQL, joins and aggregation. Both hop through ``mapInArrow`` and build
+  ``pa.array``s directly.
 """
 
 from __future__ import annotations
@@ -45,7 +45,6 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator, Sequence
 from dataclasses import dataclass
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -483,7 +482,9 @@ def extract_ltsv(
     """LTSV structured surface: per-line dynamic schema kept as ordered
     parallel arrays (labels, values) — NOT a MapType, because Spark maps do
     not preserve insertion order and serialization order matters
-    (SURVEY.md §1.3). ``labels`` is NULL for invalid lines."""
+    (SURVEY.md §1.3). ``labels`` and ``values`` are NULL for invalid
+    lines. Like :func:`extract_fields`, the Python hop is ``mapInArrow``:
+    passthrough columns go back as the Arrow arrays they arrived as."""
     passthrough = list(passthrough)
     out_schema = StructType(
         [lines_df.schema[c] for c in passthrough]
@@ -492,13 +493,15 @@ def extract_ltsv(
             StructField("values", ArrayType(StringType())),
         ]
     )
+    n_pass = len(passthrough)
+    list_type = pa.list_(pa.string())
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ls, vs = decoders.ltsv_decode_batch(pdf[line_col].tolist())
-            data = {c: pdf[c] for c in passthrough}
-            data["labels"] = pd.Series(ls, dtype="object")
-            data["values"] = pd.Series(vs, dtype="object")
-            yield pd.DataFrame(data)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            # columns by position: line_col may also be a passthrough column
+            ls, vs = decoders.ltsv_decode_batch(batch.column(n_pass).to_pylist())
+            arrays = [batch.column(k) for k in range(n_pass)]
+            arrays += [pa.array(ls, list_type), pa.array(vs, list_type)]
+            yield pa.RecordBatch.from_arrays(arrays, names=out_schema.fieldNames())
 
-    return lines_df.select(*passthrough, line_col).mapInPandas(run, out_schema)
+    return lines_df.select(*passthrough, line_col).mapInArrow(run, out_schema)

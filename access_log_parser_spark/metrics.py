@@ -26,6 +26,9 @@ from .decoders import EXCLUDED, MATCHED, SKIPPED, UNMATCHED
 
 _STATUSES = (MATCHED, UNMATCHED, EXCLUDED, SKIPPED)
 
+# default bound on the unmatched lines collect_result brings to the driver
+MAX_ERRORS = 10_000
+
 
 @dataclass
 class ParseError:
@@ -165,16 +168,19 @@ def collect_result(
     routed: DataFrame,
     source: str = "",
     elapsed: float = 0.0,
-    max_errors: int | None = None,
+    max_errors: int | None = MAX_ERRORS,
+    tag_entries: bool = False,
 ) -> Result:
     """Aggregate counters + errors list into a Result (test/driver path).
 
-    ``max_errors`` bounds the driver-side error collect: the reference
-    accumulates every unmatched line in memory (parser_result.go:32-36),
-    which is fine for its single-file corpora but unbounded at 10^12
-    docs — pass a cap (the report only prints top-10 anyway) and read
-    the full set from the unmatched sink instead. Default None keeps
-    reference parity."""
+    ``max_errors`` bounds the driver-side error collect to the first
+    unmatched lines in (source, line_no) order; the counters stay exact.
+    The reference accumulates every unmatched line in memory
+    (parser_result.go:32-36), which is fine for its single-file corpora
+    but unbounded at 10^12 docs, so the default is ``MAX_ERRORS`` and the
+    full set belongs in the unmatched sink. The reference-parity Parser
+    verbs pass ``None`` (no bound). ``tag_entries`` sets each error's
+    ``entry`` to its ``source`` (the zip-entry name, parser_core.go:152-163)."""
     row = routed.agg(*_counter_aggs()).collect()[0]
     err_df = (
         routed.filter(F.col("status") == UNMATCHED)
@@ -184,7 +190,11 @@ def collect_result(
     if max_errors is not None:
         err_df = err_df.limit(max_errors)
     errors = [
-        ParseError(entry="", line_number=r["line_no"], line=r["raw"])
+        ParseError(
+            entry=r["source"] if tag_entries else "",
+            line_number=r["line_no"],
+            line=r["raw"],
+        )
         for r in err_df.collect()
     ]
     return Result(

@@ -15,14 +15,15 @@ from __future__ import annotations
 import os
 import time
 from collections.abc import Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import patterns as pat
-from .decoders import NoPatternError, UNMATCHED
+from .decoders import NoPatternError
 from .engine import parse_routed
-from .metrics import ParseError, Result, collect_result
+from .metrics import Result, collect_result
 from .options import Option
 from .sources import (
     lines_from_files,
@@ -98,25 +99,15 @@ class BaseParser:
         context-cancellation surface). Safe to call when idle."""
         self.spark.sparkContext.cancelJobGroup(self._job_group)
 
-    def _run(self, lines_df: DataFrame, source: str = "") -> tuple[list[str], Result]:
-        start = time.monotonic()
+    @contextmanager
+    def _in_job_group(self):
+        """Run the enclosed actions under this parser's job group."""
         sc = self.spark.sparkContext
         sc.setJobGroup(
             self._job_group, "access-log-parser parse", interruptOnCancel=True
         )
         try:
-            routed = self.parse_lines(lines_df)
-            # Input order for golden parity: distributed execution loses
-            # arrival order, so order by (source, line_no) explicitly
-            # (SURVEY.md §2.5).
-            out = [
-                r["out_line"]
-                for r in routed.filter(F.col("out_line").isNotNull())
-                .select("source", "line_no", "out_line")
-                .orderBy("source", "line_no")
-                .collect()
-            ]
-            result = collect_result(routed, source=source)
+            yield
         finally:
             # The job group is thread-local driver state: without clearing
             # it, unrelated actions the caller runs later on this thread
@@ -125,6 +116,26 @@ class BaseParser:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
             sc.setLocalProperty("spark.job.interruptOnCancel", None)
+
+    @staticmethod
+    def _ordered_output(routed: DataFrame) -> list[str]:
+        # Input order for golden parity: distributed execution loses
+        # arrival order, so order by (source, line_no) explicitly
+        # (SURVEY.md §2.5).
+        return [
+            r["out_line"]
+            for r in routed.filter(F.col("out_line").isNotNull())
+            .select("source", "line_no", "out_line")
+            .orderBy("source", "line_no")
+            .collect()
+        ]
+
+    def _run(self, lines_df: DataFrame, source: str = "") -> tuple[list[str], Result]:
+        start = time.monotonic()
+        with self._in_job_group():
+            routed = self.parse_lines(lines_df)
+            out = self._ordered_output(routed)
+            result = collect_result(routed, source=source, max_errors=None)
         result.elapsed_time = time.monotonic() - start
         return out, result
 
@@ -173,28 +184,19 @@ class BaseParser:
         tagged with entry name, entry list appended (parser_core.go:140-171)."""
         _check_path(zip_path)
         start = time.monotonic()
-        lines = lines_from_zip_entries(self.spark, zip_path, glob_pattern)
-        routed = self.parse_lines(lines.select("source", "line_no", "raw"))
-        ordered = (
-            routed.filter(F.col("out_line").isNotNull())
-            .select("source", "line_no", "out_line")
-            .orderBy("source", "line_no")
-            .collect()
-        )
-        out = [r["out_line"] for r in ordered]
-        agg = collect_result(routed, source=basename(zip_path))
+        with self._in_job_group():
+            lines = lines_from_zip_entries(self.spark, zip_path, glob_pattern)
+            routed = self.parse_lines(lines.select("source", "line_no", "raw"))
+            out = self._ordered_output(routed)
+            agg = collect_result(
+                routed, source=basename(zip_path), max_errors=None, tag_entries=True
+            )
+            agg.zip_entries = [
+                r["source"]
+                for r in lines.select("source").distinct().orderBy("source").collect()
+            ]
         agg.elapsed_time = time.monotonic() - start
-        agg.errors = [
-            ParseError(entry=r["source"], line_number=r["line_no"], line=r["raw"])
-            for r in routed.filter(F.col("status") == UNMATCHED)
-            .select("source", "line_no", "raw")
-            .orderBy("source", "line_no")
-            .collect()
-        ]
         agg.input_type = "zip"
-        agg.zip_entries = [
-            r["source"] for r in lines.select("source").distinct().orderBy("source").collect()
-        ]
         return out, agg
 
 

@@ -4,9 +4,18 @@ Headline metric (BASELINE.json): docs/sec parse+route throughput — a
 synthesized Common-Crawl-style pages corpus (20 log lines per page,
 1-in-5 unmatched) is exploded, decoded through the vectorized engine and
 fanned out to (status, pattern_id) parquet sinks; counters ride the write
-via Observation. The scaling protocol (sandbox stand-in for N vs 4N
-executors) runs the SAME job at local[N] and local[4N] on the same input
-and reports efficiency = (T_N / T_4N) / 4.
+via Observation.
+
+Scaling protocol (sandbox stand-in for N vs 4N executors): N = cores // 4
+and 4N, from the host (1->4 on 4 cores, 8->32 on 32; skipped below 4), so
+no level oversubscribes. The SAME job on the SAME sf-tier input runs in a
+fresh subprocess per run, for a fixed ``SCALE_TRIALS`` trials of both
+levels back to back in alternating order, each run after a cooldown and
+a loadavg quiesce. ``efficiency`` = (min T_N / min T_4N) / 4, capped at
+1.0, with the paired median, a ``regime_warning`` and every raw trial.
+The trial count never depends on the timings (adding samples until a
+ratio of minima reads well is optional stopping); a dead run is retried
+once.
 
 Artifact discipline (r04 lesson: the driver archives only the TAIL of
 stdout, and the r04 headline was lost to a >2 KB result line): the FULL
@@ -23,11 +32,10 @@ Compact final line:
    "volume_check": {...}, "full": "bench_full_last.json"}
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
+     SPARK_GRAFT_CPUS (headline parallelism, default: the host's cores),
      ALP_BENCH_QUERIES=0 to skip per-query timings,
-     ALP_BENCH_SCALING=0 to skip the two-parallelism run,
-     ALP_BENCH_VOLUME=0 to skip the 500k-doc counters check
-     (ALP_BENCH_VOLUME_DOCS overrides the doc count).
+     ALP_BENCH_SCALING=0 to skip the N->4N pair,
+     ALP_BENCH_VOLUME=0 to skip the 500k-doc counters check.
 """
 
 from __future__ import annotations
@@ -35,6 +43,8 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
+import subprocess
 import sys
 import tempfile
 import time
@@ -42,8 +52,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+HOST_CORES = len(os.sched_getaffinity(0))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", HOST_CORES))
 LINES_PER_PAGE = 20
+VOLUME_DOCS = 500_000
+HEADLINE_RUNS = 3
+SPREAD_LIMIT = 0.30
+SCALE_TRIALS = 4
+COOLDOWN_S = 8.0
 
 
 def _session(cores: int):
@@ -90,34 +106,28 @@ def parse_route_job(spark, n_pages: int, out_dir: str) -> dict:
     }
 
 
-def _best_of(
-    spark, n_pages: int, runs: int = 2, max_extra: int = 2,
-    spread_limit: float = 0.30, quiesce_load: float | None = None,
-) -> dict:
-    """min-of-N to damp the sandbox VM's load-dependent throttling.
+def _quiesce() -> float:
+    """Wait (at most 120 s) for the 1-min loadavg to fall to half the
+    host's cores, so a run measures the engine and not the tail of
+    whatever ran before it. Returns the loadavg when measurement starts."""
+    deadline = time.monotonic() + 120.0
+    load = os.getloadavg()[0]
+    while load > HOST_CORES / 2 and time.monotonic() < deadline:
+        time.sleep(5)
+        load = os.getloadavg()[0]
+    return round(load, 2)
 
-    Quiet-regime discipline (r03 verdict item #4): when the base runs
-    disagree by more than ``spread_limit`` (relative spread of elapsed
-    times), the host regime drifted mid-measurement — extend with up to
-    ``max_extra`` more runs (min-of-N is monotone: extra samples can
-    only move the minimum toward the true quiet-state time). The
-    returned dict carries a machine-readable ``regime`` block — runs
-    taken, final spread, loadavg, and a ``throttled`` flag when the
-    spread never settled — so a low headline number is auditable as a
-    host artifact rather than a code regression."""
+
+def _best_of(spark, n_pages: int) -> dict:
+    """Min of ``HEADLINE_RUNS`` timed runs, each after a loadavg quiesce
+    (back-to-back full-size runs otherwise build load past the VM's
+    sustained-load throttle). The ``regime`` block records the spread of
+    the runs and flags ``throttled`` when it exceeds ``SPREAD_LIMIT``, so
+    a low headline is auditable as a host artifact."""
     best = None
     times: list[float] = []
-    for i in range(runs + max_extra):
-        if i >= runs:
-            spread = (max(times) - min(times)) / min(times)
-            if spread <= spread_limit:
-                break
-        if quiesce_load is not None:
-            # per-RUN loadavg gate (same discipline the scaling block got
-            # in r05e): back-to-back full-size runs build loadavg past the
-            # VM's sustained-load throttle threshold, slowing later runs
-            # and tripping the spread flag on an otherwise quiet box.
-            _quiesce(target_load=quiesce_load, max_wait=120.0)
+    for i in range(HEADLINE_RUNS):
+        _quiesce()
         tmp = tempfile.mkdtemp(prefix="alp_bench_")
         try:
             r = parse_route_job(spark, n_pages, os.path.join(tmp, f"run{i}"))
@@ -131,7 +141,7 @@ def _best_of(
         "runs": len(times),
         "spread": round(spread, 3),
         "loadavg": round(os.getloadavg()[0], 2),
-        "throttled": spread > spread_limit,
+        "throttled": spread > SPREAD_LIMIT,
     }
     return best
 
@@ -148,7 +158,7 @@ def run_headline(spark) -> dict:
         parse_route_job(spark, n_pages, os.path.join(tmp, "warm"))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return _best_of(spark, n_pages, runs=3, max_extra=2, quiesce_load=4.0)
+    return _best_of(spark, n_pages)
 
 
 def run_query_sweep(spark) -> dict[str, float]:
@@ -200,13 +210,11 @@ def run_volume_check(spark, n_docs: int) -> dict:
     }
 
 
-def _scale_one(cores: int, mult: float) -> None:
-    """Subprocess entry: warm up, run the headline job once at ``cores``,
-    print one JSON result line. ``mult`` scales the input size relative
-    to the sf tier (the primary scaling pair runs at mult=3 — see
-    run_scaling for the fixed-overhead amortization argument)."""
+def _scale_one(cores: int) -> None:
+    """Subprocess entry: warm up, run the headline job once at ``cores``
+    on the sf-tier input, print one JSON result line."""
     spark = _session(cores)
-    n_pages = int(_n_pages(spark) * mult)
+    n_pages = _n_pages(spark)
     tmp = tempfile.mkdtemp(prefix=f"alp_scale_{cores}_")
     try:
         parse_route_job(spark, max(n_pages // 20, 100), os.path.join(tmp, "warm"))
@@ -217,128 +225,80 @@ def _scale_one(cores: int, mult: float) -> None:
     print("SCALE_RESULT " + json.dumps(r))
 
 
-def _quiesce(target_load: float, max_wait: float = 120.0) -> float:
-    """Wait (bounded) for the 1-min loadavg to fall below ``target_load``
-    so the scaling pair measures the engine, not whatever the harness ran
-    just before bench.py. Returns the loadavg when measurement starts."""
-    deadline = time.monotonic() + max_wait
-    load = os.getloadavg()[0]
-    while load > target_load and time.monotonic() < deadline:
-        time.sleep(5)
-        load = os.getloadavg()[0]
-    return round(load, 2)
+def _run_one(cores: int) -> dict:
+    """The default scaling runner: one fresh subprocess per run (one
+    SparkContext per process)."""
+    out = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), "--scale-one", str(cores)],
+        capture_output=True, text=True, timeout=1800,
+    )
+    line = next(
+        (ln for ln in out.stdout.splitlines() if ln.startswith("SCALE_RESULT ")),
+        None,
+    )
+    if line is None:
+        raise RuntimeError(f"scale subprocess failed: {out.stderr[-2000:]}")
+    return json.loads(line[len("SCALE_RESULT "):])
 
 
-def _scale_pair(
-    n: int, big: int, mult: float = 1.0, trials: int = 4, runner=None,
-    cooldown: float = 8.0, max_extra_trials: int = 4,
-    extra_budget_s: float = 600.0, gate: float | None = 0.8,
-    gate_margin: float = 0.06,
-    quiesce_load: float = 5.0, quiesce_wait: float = 120.0,
-) -> dict:
-    """Same job, same input, local[N] vs local[4N].
+def _settle() -> None:
+    """Before every scaling run: let the previous subprocess finish its
+    teardown, then wait out its loadavg tail (r05d: back-to-back trials
+    accumulated heat until the VM's sustained-load throttle measured
+    itself instead of the engine)."""
+    time.sleep(COOLDOWN_S)
+    _quiesce()
 
-    The sandbox VM throttles ~40% under sustained load, so raw times
-    drift with whatever regime a run happens to land in. Defenses:
 
-    - each run is its own subprocess (one SparkContext per process);
-    - the two levels of a TRIAL run back-to-back (adjacent in time), so
-      the PAIRED per-trial ratio t_small/t_big cancels slow drift;
-    - trial order alternates (small-first / big-first), so a time-decaying
-      throttle cannot systematically penalize one level;
-    - a bounded loadavg quiesce runs before the block (see run_scaling)
-      AND before every run within it (``quiesce_load``/``quiesce_wait``,
-      skipped when ``cooldown`` is 0 for injected-runner tests): each
-      sample then starts from the same quiet regime instead of the
-      previous run's loadavg tail, which is what fed the sustained-load
-      throttle in the r05d block.
+def host_pair(cores: int) -> tuple[int, int] | None:
+    """The N->4N pair that fits on ``cores``: N = cores // 4. None when
+    the host has fewer than 4 cores (a 4N level would oversubscribe)."""
+    n = cores // 4
+    return (n, 4 * n) if n else None
 
-    The reported ``efficiency`` is min-of-levels — the standard
-    min-of-N estimator applied per level (each level's minimum elapsed
-    is its best quiet-window sample; the ratio estimates QUIET-state
-    scaling, which is the quantity the criterion describes) — capped at
-    the theoretical 1.0. The median of the paired per-trial efficiencies
-    rides along as a drift diagnostic: it is robust to regime drift but
-    averages throttled trials into the estimate, so it under-reports the
-    quiet-state number when most trials land hot. A ``regime_warning``
-    is emitted when the minima are UNCONFIRMED or cross-regime: a
-    level's minimum was sampled only once (never reproduced within
-    20%), the ratio reads super-linear, or the big level measured
-    slower than the small one — re-run on a quiet VM rather than
-    trusting the number. Raw trials ride in ``trials`` so any regime
-    artifact is auditable in the archived JSON.
 
-    When the minima DO look cross-regime (warning condition, or the
-    physically absurd big-level-slower-than-small), a bounded ADAPTIVE
-    EXTENSION keeps sampling — up to ``max_extra_trials`` more
-    alternating trials within ``extra_budget_s`` wall seconds. This is
-    statistically safe for a min estimator: each added sample can only
-    move a level's minimum toward (never past) its true quiet-state
-    time, so the extension rescues starved levels without ever
-    inflating the estimate beyond the engine's real scaling."""
-    import statistics
-    import subprocess
+def _scale_pair(n: int, big: int, runner=None) -> dict:
+    """Same job, same input, ``runner(n)`` vs ``runner(big)``, for a fixed
+    ``SCALE_TRIALS`` trials. ``runner(cores)`` returns a dict with
+    ``elapsed``, ``docs`` and ``docs_per_sec``; the default runs one
+    ``--scale-one`` subprocess.
 
-    def run_one(cores: int) -> dict:
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--scale-one",
-             str(cores), str(mult)],
-            capture_output=True, text=True, timeout=1800,
-            env={**os.environ, "ALP_BENCH_QUERIES": "0",
-                 "ALP_BENCH_SCALING": "0"},
-        )
-        line = next(
-            (ln for ln in out.stdout.splitlines()
-             if ln.startswith("SCALE_RESULT ")), None,
-        )
-        if line is None:
-            raise RuntimeError(f"scale subprocess failed: {out.stderr[-2000:]}")
-        return json.loads(line[len("SCALE_RESULT "):])
-
-    if runner is None:
-        runner = run_one
-    results: dict[int, dict | None] = {n: None, big: None}
+    The two levels of a trial run back to back, so the PAIRED ratio
+    t_small/t_big cancels slow drift, and the order alternates so a
+    time-decaying throttle cannot favour one level. ``efficiency`` is
+    min-of-levels (each level's quietest sample), capped at 1.0;
+    ``efficiency_paired_median`` is the drift-robust diagnostic. A
+    ``regime_warning`` marks minima that are unconfirmed or cross-regime:
+    a level's minimum was not reproduced within 20%, the ratio reads
+    super-linear, or the big level measured slower than the small one.
+    A run that dies (``RuntimeError``, ``SubprocessError``) is retried
+    once, then recorded in ``failed_runs``; any other exception from the
+    runner propagates."""
+    runner = runner or _run_one
+    results: dict[int, dict] = {}
     trial_rows: list[dict] = []
     failed_runs: list[str] = []
-
-    def do_trial(trial: int) -> None:
+    for trial in range(SCALE_TRIALS):
         order = (n, big) if trial % 2 == 0 else (big, n)
         by_cores: dict[int, dict] = {}
         loads: list[float] = []
-        for pos, cores in enumerate(order):
-            if (pos or trial) and cooldown:
-                # floor sleep lets the previous subprocess finish teardown,
-                # then a bounded quiesce waits out its loadavg tail: r05d
-                # showed back-to-back trials accumulate heat (later trials
-                # start at loadavg 7-10) until the VM's sustained-load
-                # throttle kicks in and the block measures the throttle,
-                # not the engine (its two extension trials read 206 s for
-                # a quiet-regime ~110 s small level)
-                time.sleep(cooldown)
-                _quiesce(target_load=quiesce_load, max_wait=quiesce_wait)
+        for cores in order:
+            _settle()
             loads.append(round(os.getloadavg()[0], 2))
             try:
                 r = runner(cores)
-            except Exception as exc:
-                # a transient subprocess death (python worker OOM,
-                # connection reset) must not abort the whole protocol —
-                # one retry after a fresh quiesce, then record and move
-                # on; min-of-levels over the SURVIVING runs stays sound
-                if cooldown:
-                    time.sleep(cooldown)
-                    _quiesce(target_load=quiesce_load, max_wait=quiesce_wait)
+            except (RuntimeError, subprocess.SubprocessError):
+                _settle()
                 try:
                     r = runner(cores)
-                except Exception as exc2:
-                    failed_runs.append(
-                        f"trial {trial} cores {cores}: {str(exc2)[-300:]}"
-                    )
+                except (RuntimeError, subprocess.SubprocessError) as exc:
+                    failed_runs.append(f"trial {trial} cores {cores}: {str(exc)[-300:]}")
                     continue
             by_cores[cores] = r
-            if results[cores] is None or r["elapsed"] < results[cores]["elapsed"]:
+            if cores not in results or r["elapsed"] < results[cores]["elapsed"]:
                 results[cores] = r
         if len(by_cores) < 2:
-            return  # paired row needs both levels; minima already kept
+            continue  # paired row needs both levels; minima already kept
         eff = (by_cores[n]["elapsed"] / by_cores[big]["elapsed"]) / (big / n)
         trial_rows.append({
             "order": f"{order[0]}->{order[1]}",
@@ -349,94 +309,40 @@ def _scale_pair(
             "loadavg_runs": loads,
         })
 
-    def _min_confirmed(key: str) -> bool:
-        """A level's minimum is trustworthy when it was REPRODUCED: at
-        least two samples within 20% of it. A single lucky (or unlucky)
-        window doesn't establish the quiet-state time."""
-        if not trial_rows:
-            return False
-        els = [t[key] for t in trial_rows]
-        m = min(els)
-        return sum(1 for e in els if e <= 1.2 * m) >= 2
-
-    def regime_suspect() -> bool:
-        if results[n] is None or results[big] is None:
-            return True  # a level has no surviving run yet — keep sampling
-        t_n, t_4n = results[n]["elapsed"], results[big]["elapsed"]
-        eff_levels = (t_n / t_4n) / (big / n)
-        # suspect when: 4x cores measures slower than 1x (physically
-        # absurd for this embarrassingly parallel job), the ratio claims
-        # super-linear scaling, or either level's minimum was seen only
-        # once (never reproduced = likely a cross-regime artifact)
-        return (
-            t_4n >= t_n
-            or eff_levels > 1.0
-            or not _min_confirmed("elapsed_small")
-            or not _min_confirmed("elapsed_big")
-        )
-
-    for trial in range(trials):
-        do_trial(trial)
-
-    # Adaptive extension: while the minima look cross-regime, keep
-    # sampling (alternating order, bounded by count AND wall budget).
-    # min-of-levels is monotone — an extra sample can only move a
-    # level's min TOWARD its true quiet time, never past it — so the
-    # extension cannot inflate the estimate beyond the engine's real
-    # quiet-state scaling; it only rescues runs where a throttled host
-    # starved one level of quiet windows (observed: 8-core full-input
-    # min 130 s in one run vs 18 s capability minutes later).
-    # Gate-proximity extension (r03 verdict item #1): the r03 driver
-    # artifact read 0.768 with NO extension because both level minima
-    # "reproduced within 20%" — yet three local runs of the same
-    # protocol read 0.814-0.821, i.e. the small level had sampled a
-    # lucky window while the big level stayed throttled WITHIN the
-    # reproduction tolerance. Near the 0.8 BASELINE criterion that
-    # tolerance is too coarse, so ALSO keep sampling while the computed
-    # efficiency lands below gate + gate_margin: extra samples are
-    # statistically safe (min-of-levels is monotone — they can only
-    # move the estimate toward the true quiet-state scaling, never
-    # inflate it past it) and near the gate they are decisive.
-    def near_gate() -> bool:
-        if gate is None or results[n] is None or results[big] is None:
-            return False
-        t_n, t_4n = results[n]["elapsed"], results[big]["elapsed"]
-        return (t_n / t_4n) / (big / n) < gate + gate_margin
-
-    extension_t0 = time.monotonic()
-    extra = 0
-    while (
-        extra < max_extra_trials
-        and (regime_suspect() or near_gate())
-        and time.monotonic() - extension_t0 < extra_budget_s
-    ):
-        do_trial(trials + extra)
-        extra += 1
-
-    if results[n] is None or results[big] is None or not trial_rows:
+    if not trial_rows:
         raise RuntimeError(
             f"scaling pair {n}->{big}: no surviving paired trial "
             f"({len(failed_runs)} failed runs: {failed_runs[:3]})"
         )
+
+    def confirmed(key: str) -> bool:
+        els = [t[key] for t in trial_rows]
+        return sum(1 for e in els if e <= 1.2 * min(els)) >= 2
+
     t_n, t_4n = results[n]["elapsed"], results[big]["elapsed"]
     eff_levels = (t_n / t_4n) / (big / n)
-    eff_paired = statistics.median(t["paired_efficiency"] for t in trial_rows)
     out = {
         "cores_small": n,
         "cores_big": big,
+        "host_cores": HOST_CORES,
+        "pages": results[n]["docs"],
         "docs_per_sec_small": results[n]["docs_per_sec"],
         "docs_per_sec_big": results[big]["docs_per_sec"],
         "elapsed_small": round(t_n, 3),
         "elapsed_big": round(t_4n, 3),
         "efficiency": round(min(eff_levels, 1.0), 3),
         "efficiency_min_of_levels": round(eff_levels, 3),
-        "efficiency_paired_median": round(eff_paired, 3),
-        "extension_trials_run": extra,
+        "efficiency_paired_median": round(
+            statistics.median(t["paired_efficiency"] for t in trial_rows), 3
+        ),
         "trials": trial_rows,
     }
     if failed_runs:
         out["failed_runs"] = failed_runs
-    if regime_suspect():
+    if (
+        t_4n >= t_n or eff_levels > 1.0
+        or not confirmed("elapsed_small") or not confirmed("elapsed_big")
+    ):
         out["regime_warning"] = (
             "level minima unconfirmed or cross-regime (a minimum was "
             "sampled only once, reads super-linear, or big-level measured "
@@ -445,57 +351,14 @@ def _scale_pair(
     return out
 
 
-def run_scaling(cpus: int) -> dict:
-    """Two N->4N pairs.
-
-    PRIMARY (the reported ``efficiency``): local[2] -> local[8] at 3x
-    the sf-tier input. This is the pair that measures the ENGINE's
-    parallel scaling: the plan is shuffle-free until the final counter
-    aggregate, so the only non-parallel costs are fixed job overhead
-    and the host's shared memory bus, which 8 cores do not yet
-    saturate. The input multiplier exists because the overhead does
-    NOT amortize at 1x: measured r04, the fixed per-job cost is ~2.0 s
-    at 2 cores and ~3.0 s at 8 cores (planning, task launch, commit),
-    so a 12-second 8-core job spends a quarter of its wall clock in
-    overhead and the RAW efficiency reads 0.744 even though the
-    parallel fraction scales at 0.92 (paired 1x/2x runs: 37.9/12.7 s
-    vs 73.8/22.4 s). At 3x input the same arithmetic bounds the
-    overhead below 8%% and the raw ratio converges toward the parallel
-    fraction — the honest number for the 10^12-row design point the
-    criterion describes, where jobs are minutes, not seconds.
-
-    SECONDARY (``bandwidth_capped_pair``): (cpus/4) -> cpus. On this
-    single box the 8->32 step is capped ~0.5-0.66 by shared memory
-    bandwidth BEFORE Spark is involved (measured with pure-Python
-    multiprocessing decode and a spin-loop control, BENCH.md): a
-    multi-executor cluster adds a memory bus per executor, so the
-    cap does not transfer to the N->4N *executor* deployment the
-    BASELINE criterion describes. Reported for transparency."""
-    # same gate as the headline (4.0 / 300 s): the old max(cpus/4, 4) = 8
-    # target let the block start while the headline's heat was still on
-    # the box (r05d: loadavg_after_quiesce 7.68 at max_wait expiry)
-    quiesce_load = _quiesce(target_load=4.0, max_wait=300.0)
-    # 6 base trials (r03 ran 4) + gate-proximity extension: the primary
-    # pair is the BASELINE criterion artifact, so it gets the sampling
-    # budget; near the 0.8 gate extra minima-samples are decisive.
-    out = _scale_pair(
-        2, 8, mult=3.0, trials=5, max_extra_trials=3, extra_budget_s=900.0,
-    )
-    out["loadavg_after_quiesce"] = quiesce_load
-    if cpus >= 32:
-        # the 8->32 pair is bandwidth-capped on one box (reported for
-        # transparency, not the criterion) — no gate extension for it,
-        # and its failure must never take the criterion pair down with it
-        try:
-            out["bandwidth_capped_pair"] = _scale_pair(
-                max(cpus // 4, 1), cpus, mult=0.5, trials=3,
-                max_extra_trials=2, extra_budget_s=240.0, gate=None,
-                # a 32-core run leaves a longer loadavg tail than the 2/8 pair
-                quiesce_wait=180.0,
-            )
-        except Exception as exc:
-            out["bandwidth_capped_pair"] = {"error": str(exc)[-400:]}
-    return out
+def run_scaling(runner=None) -> dict:
+    """The host's N->4N pair through :func:`_scale_pair`, or a skipped
+    record on a host with fewer than 4 cores."""
+    pair = host_pair(HOST_CORES)
+    if pair is None:
+        return {"skipped": "an N->4N pair needs at least 4 cores",
+                "host_cores": HOST_CORES}
+    return _scale_pair(*pair, runner=runner)
 
 
 def _compact_failed(failed: list, cap: int = 10) -> list:
@@ -513,35 +376,27 @@ def _compact_scaling(scaling: dict) -> dict:
     full archive) — keeps the final stdout line under the driver's ~2 KB
     tail-capture budget."""
     keep = (
-        "cores_small", "cores_big", "docs_per_sec_small", "docs_per_sec_big",
-        "elapsed_small", "elapsed_big", "efficiency",
-        "efficiency_min_of_levels", "efficiency_paired_median",
-        "extension_trials_run", "regime_warning", "loadavg_after_quiesce",
-        "error",
+        "cores_small", "cores_big", "host_cores", "pages",
+        "docs_per_sec_small", "docs_per_sec_big", "elapsed_small",
+        "elapsed_big", "efficiency", "efficiency_min_of_levels",
+        "efficiency_paired_median", "regime_warning", "skipped", "error",
     )
     out = {k: scaling[k] for k in keep if k in scaling}
     out["trials_n"] = len(scaling.get("trials", []))
     if scaling.get("failed_runs"):
         out["failed_runs_n"] = len(scaling["failed_runs"])
-    bc = scaling.get("bandwidth_capped_pair")
-    if bc:
-        out["bandwidth_capped_efficiency"] = bc.get("efficiency_min_of_levels")
     return out
 
 
 def main() -> None:
     if len(sys.argv) >= 2 and sys.argv[1] == "--scale-one":
-        _scale_one(int(sys.argv[2]), float(sys.argv[3]))
+        _scale_one(int(sys.argv[2]))
         return
     # HEADLINE FIRST, after a loadavg gate (r04 lesson: running it after
-    # the 8-trial scaling block left it in the throttled regime even
-    # with a 7-minute cooldown — loadavg was 26.9 when it started). The
-    # headline is the shortest block (3-5 runs of ~10 s), so it gets the
-    # freshest VM; the scaling pair that follows is already
-    # subprocess-isolated + order-interleaved + adaptively extended, so
-    # it tolerates the mild heat the headline leaves behind, and it
-    # re-quiesces on its own before measuring.
-    _quiesce(target_load=4.0, max_wait=300.0)
+    # the scaling block left it in the throttled regime even with a
+    # 7-minute cooldown). The headline is the shortest block, so it gets
+    # the freshest VM; the scaling pair settles before each of its runs.
+    _quiesce()
     spark = _session(CPUS)
     head = run_headline(spark)
     spark.stop()
@@ -549,7 +404,7 @@ def main() -> None:
     scaling = None
     if os.environ.get("ALP_BENCH_SCALING", "1") != "0":
         try:
-            scaling = run_scaling(CPUS)
+            scaling = run_scaling()
         except Exception as exc:
             # r05i lesson: one dead subprocess (python-worker connection
             # reset) aborted the WHOLE bench and the driver artifact got
@@ -564,9 +419,7 @@ def main() -> None:
     if os.environ.get("ALP_BENCH_QUERIES", "1") != "0":
         qtimes = run_query_sweep(spark)
     if os.environ.get("ALP_BENCH_VOLUME", "1") != "0":
-        volume = run_volume_check(
-            spark, int(os.environ.get("ALP_BENCH_VOLUME_DOCS", "500000"))
-        )
+        volume = run_volume_check(spark, VOLUME_DOCS)
     spark.stop()
 
     failed_full = sorted(k for k, v in qtimes.items() if v < 0)

@@ -1,22 +1,18 @@
 """North-rule scaling evidence under the EXACT deployment invocation:
-``spark-submit --py-files alp.zip scripts/run_pipeline.py`` at two
-parallelism levels (the sandbox stand-in for N and 4N executors — see
-BASELINE.md's evidence protocol) on the SAME pre-materialized input.
+``spark-submit --py-files alp.zip scripts/run_pipeline.py`` at the
+host's N and 4N parallelism (the sandbox stand-in for N and 4N
+executors — see BASELINE.md's evidence protocol) on the SAME
+pre-materialized input.
 
-Discipline (mirrors bench.py's fair protocol):
+The protocol is bench.py's, shared rather than copied: the pages corpus
+is synthesized ONCE and written to parquet, and ``bench.run_scaling``
+derives the pair from the host's cores and runs the fixed interleaved
+trials through ``bench._scale_pair``, one fresh spark-submit per run.
+Every run must satisfy the counters invariant and route exactly the same
+counters as every other run, at both levels and in every trial.
 
-- the pages corpus is synthesized ONCE and written to parquet; every
-  trial reads the identical files (no in-run synthesis bias);
-- per-trial fresh spark-submit subprocess (cold session each time, like
-  a real cluster submit);
-- levels INTERLEAVE (small, big, small, big, ...) so the VM's
-  load-dependent throttling hits both levels evenly;
-- efficiency = (min T_small / min T_big) / (big/small), min-of-trials
-  because the quietest sample of each level is the closest to the
-  engine's true cost on this box.
-
-Usage:  python scripts/submit_scaling.py [--pages 100000] [--trials 3]
-            [--small 2] [--big 8] [--out bench_submit_scaling.json]
+Usage:  python scripts/submit_scaling.py [--pages 100000]
+            [--out bench_submit_scaling.json]
 """
 
 from __future__ import annotations
@@ -28,18 +24,19 @@ import shutil
 import subprocess
 import sys
 import tempfile
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
+
+import bench  # noqa: E402
 
 
 def _synth_once(n_pages: int, pages_dir: str) -> None:
-    sys.path.insert(0, str(REPO))
     from access_log_parser_spark.pages import synth_pages
     from access_log_parser_spark.session import get_spark
 
-    spark = get_spark(app_name="alp-synth", master="local[8]")
+    spark = get_spark(app_name="alp-synth", master=f"local[{bench.HOST_CORES}]")
     synth_pages(spark, n_pages).write.mode("overwrite").parquet(pages_dir)
     spark.stop()
 
@@ -67,89 +64,57 @@ def _submit(cores: int, pages_dir: str, zip_path: str, out_dir: str) -> dict:
     raise RuntimeError(f"no JSON result line in spark-submit output:\n{proc.stderr[-2000:]}")
 
 
+def measure(n_pages: int, work: str) -> dict:
+    """Synthesize the input once, then run the host's scaling pair with a
+    runner that submits the pipeline and checks its counters."""
+    pages_dir = os.path.join(work, "pages")
+    zip_path = os.path.join(work, "alp.zip")
+    print(f"synthesizing {n_pages} pages -> {pages_dir}", flush=True)
+    _synth_once(n_pages, pages_dir)
+    subprocess.run(
+        ["zip", "-qr", zip_path, "access_log_parser_spark"], cwd=REPO, check=True,
+    )
+    counters_seen: list[dict] = []
+
+    def runner(cores: int) -> dict:
+        out_dir = os.path.join(work, f"out_{cores}_{len(counters_seen)}")
+        try:
+            r = _submit(cores, pages_dir, zip_path, out_dir)
+        finally:
+            shutil.rmtree(out_dir, ignore_errors=True)
+        if not r["invariant_ok"]:
+            raise ValueError(f"counters invariant broken at local[{cores}]: {r}")
+        if counters_seen and r["counters"] != counters_seen[0]:
+            raise ValueError(
+                f"local[{cores}] routed {r['counters']}, earlier runs {counters_seen[0]}"
+            )
+        counters_seen.append(r["counters"])
+        print(f"local[{cores}]: {r['elapsed_sec']} s", flush=True)
+        return {"elapsed": r["elapsed_sec"], "docs": n_pages,
+                "docs_per_sec": round(n_pages / r["elapsed_sec"], 1)}
+
+    result = bench.run_scaling(runner)
+    result["protocol"] = ("spark-submit --py-files, bench._scale_pair trials, "
+                          "shared pre-materialized input")
+    if counters_seen:
+        result["counters"] = counters_seen[0]
+    return result
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", type=int, default=100000)
-    ap.add_argument("--trials", type=int, default=3)
-    ap.add_argument("--small", type=int, default=2)
-    ap.add_argument("--big", type=int, default=8)
     ap.add_argument("--out", default=str(REPO / "bench_submit_scaling.json"))
     args = ap.parse_args()
 
     work = tempfile.mkdtemp(prefix="alp_submit_scale_")
-    pages_dir = os.path.join(work, "pages")
-    zip_path = os.path.join(work, "alp.zip")
     try:
-        print(f"synthesizing {args.pages} pages -> {pages_dir}", flush=True)
-        _synth_once(args.pages, pages_dir)
-        subprocess.run(
-            ["zip", "-qr", zip_path, "access_log_parser_spark"],
-            cwd=REPO, check=True,
-        )
-        times: dict[int, list[float]] = {args.small: [], args.big: []}
-        counters = None
-
-        def _quiesce(target: float, max_wait: float = 120.0) -> None:
-            # bench.py's discipline: let the 1-min loadavg decay below the
-            # level's core count before measuring, so the trial samples the
-            # engine, not the previous trial's GC/page-cache tail
-            deadline = time.monotonic() + max_wait
-            while os.getloadavg()[0] > target and time.monotonic() < deadline:
-                time.sleep(5)
-
-        def _pair(t: int) -> None:
-            nonlocal counters
-            for cores in (args.small, args.big):
-                _quiesce(max(2.0, cores * 0.75))
-                out_dir = os.path.join(work, f"out_{cores}_{t}")
-                r = _submit(cores, pages_dir, zip_path, out_dir)
-                assert r["invariant_ok"], r
-                if counters is None:
-                    counters = r["counters"]
-                else:
-                    # routed-row equality across levels and trials
-                    assert r["counters"] == counters, (r["counters"], counters)
-                times[cores].append(r["elapsed_sec"])
-                shutil.rmtree(out_dir, ignore_errors=True)
-                print(f"trial {t} local[{cores}]: {r['elapsed_sec']} s", flush=True)
-
-        ratio = args.big / args.small
-
-        def _eff() -> float:
-            return (min(times[args.small]) / min(times[args.big])) / ratio
-
-        for t in range(args.trials):
-            _pair(t)
-        # gate-proximity extension (bench.py `_scale_pair` r04 logic):
-        # min-of-levels is monotone, extra pairs can only move the estimate
-        # toward the quiet-state truth — keep sampling while the efficiency
-        # sits below gate + 0.06, within a bounded budget
-        extra = 0
-        while _eff() < 0.86 and extra < 4:
-            _pair(args.trials + extra)
-            extra += 1
-        t_small, t_big = min(times[args.small]), min(times[args.big])
-        eff = _eff()
-        lines = counters["total"]
-        result = {
-            "protocol": "spark-submit --py-files, interleaved, min-of-trials, "
-                        "shared pre-materialized input",
-            "pages": args.pages,
-            "lines": lines,
-            "levels": {str(args.small): times[args.small],
-                       str(args.big): times[args.big]},
-            "t_small_min": t_small,
-            "t_big_min": t_big,
-            "docs_per_sec_small": round(args.pages / t_small, 1),
-            "docs_per_sec_big": round(args.pages / t_big, 1),
-            "scaling_efficiency": round(eff, 3),
-            "counters": counters,
-        }
-        with open(args.out, "w") as f:
-            json.dump(result, f, indent=1)
-        print(json.dumps(result))
+        result = measure(args.pages, work)
     finally:
         shutil.rmtree(work, ignore_errors=True)
+    with open(args.out, "w") as f:
+        json.dump(result, f, indent=1)
+    print(json.dumps(result))
 
 
 if __name__ == "__main__":

@@ -1,39 +1,81 @@
 """The scaling-pair estimator in bench.py is the number the BASELINE
-criterion (>=0.8 efficiency N->4N) is judged on — pin its math with a
-synthetic runner so a protocol regression can't silently re-open the
-round-2 measurement gap (driver snapshot 0.667 vs local 0.83-0.93).
+criterion (>=0.8 efficiency N->4N) is judged on — pin its math and its
+fixed trial count with a synthetic runner, so a protocol regression can't
+re-open the round-2 measurement gap (0.667 in the archived artifact vs
+0.83-0.93 locally) or bring back a stopping rule that depends on the
+timings.
 
 No Spark involved: `_scale_pair(runner=...)` injects fake per-level
-times.
+times, and `_settle`/`_quiesce` are no-ops here.
 """
 
 from __future__ import annotations
 
+import json
+import sys
+from pathlib import Path
+
+import pytest
+
 import bench
 
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
 
-def _runner_from(times: dict[int, list[float]]):
+import submit_scaling  # noqa: E402
+
+TRIALS = bench.SCALE_TRIALS
+
+
+@pytest.fixture(autouse=True)
+def _no_waits(monkeypatch):
+    monkeypatch.setattr(bench, "_settle", lambda: None)
+    monkeypatch.setattr(bench, "_quiesce", lambda: 0.0)
+
+
+def _runner_from(times: dict[int, list[float]], calls: list | None = None):
     """A fake run_one: pops the next elapsed time for the given level."""
     seq = {k: list(v) for k, v in times.items()}
 
     def run(cores: int) -> dict:
+        if calls is not None:
+            calls.append(cores)
         el = seq[cores].pop(0)
-        return {"elapsed": el, "docs_per_sec": round(1000.0 / el, 1)}
+        return {"elapsed": el, "docs": 1000, "docs_per_sec": round(1000.0 / el, 1)}
 
     return run
+
+
+T2, T8 = 40.0, 40.0 / 3.6  # a true efficiency of 0.9 for 2->8
+
+
+@pytest.mark.parametrize("small,big", [
+    pytest.param([40.0] * 4, [10.0] * 4, id="ideal"),
+    # minima reproduce within 20%, but efficiency reads 0.769, just under
+    # the 0.8 criterion: no extra trials may be taken to move it
+    pytest.param([40.0, 40.0, 44.0, 44.0], [13.0] * 4, id="near_gate"),
+    pytest.param([T2 * 1.5, T2, T2 * 1.5, T2 * 1.5], [T8 * 1.5] * 4,
+                 id="cross_regime"),
+    pytest.param([10.0] * 4, [30.0, 30.0, 8.0, 30.0], id="big_slower"),
+    pytest.param([40.0] * 4, [20.0] * 4, id="sublinear"),
+])
+def test_runner_called_twice_per_trial_for_any_timings(small, big):
+    calls: list[int] = []
+    out = bench._scale_pair(2, 8, runner=_runner_from({2: small, 8: big}, calls))
+    assert len(calls) == 2 * TRIALS
+    assert len(out["trials"]) == TRIALS
+    assert not any("extension" in k for k in out)
 
 
 def test_ideal_scaling_reports_one():
     # 4x cores -> exactly 4x faster, no drift
     out = bench._scale_pair(
-        2, 8, trials=4, cooldown=0,
-        runner=_runner_from({2: [40.0] * 4, 8: [10.0] * 4}),
+        2, 8, runner=_runner_from({2: [40.0] * 4, 8: [10.0] * 4}),
     )
     assert out["efficiency"] == 1.0
     assert out["efficiency_min_of_levels"] == 1.0
     assert out["efficiency_paired_median"] == 1.0
     assert "regime_warning" not in out
-    assert len(out["trials"]) == 4
+    assert out["pages"] == 1000 and out["host_cores"] == bench.HOST_CORES
     # order alternates small-first / big-first so a time-decaying
     # throttle cannot systematically penalize one level
     assert [t["order"] for t in out["trials"]] == [
@@ -46,13 +88,12 @@ def test_paired_median_cancels_monotone_drift():
     # of a trial see the SAME regime (adjacent in time), so the paired
     # ratio still reads the true 0.9 efficiency; min-of-levels compares
     # a quiet small-level sample against a quiet big-level sample and
-    # agrees here. (Times: t2 = 40, t8 = 40/(4*0.9) = 11.11, x1.4 late.)
-    t2, t8 = 40.0, 40.0 / 3.6
+    # agrees here.
     out = bench._scale_pair(
-        2, 8, trials=4, cooldown=0,
+        2, 8,
         runner=_runner_from({
-            2: [t2, t2, t2 * 1.4, t2 * 1.4],
-            8: [t8, t8, t8 * 1.4, t8 * 1.4],
+            2: [T2, T2, T2 * 1.4, T2 * 1.4],
+            8: [T8, T8, T8 * 1.4, T8 * 1.4],
         }),
     )
     assert abs(out["efficiency_paired_median"] - 0.9) < 0.01
@@ -66,14 +107,11 @@ def test_cross_regime_minima_raise_the_regime_warning():
     # The estimator does NOT paper over this (a max() rescue would be
     # upward-biased in the mirrored scenario); instead the paired-median
     # diagnostic disagrees and `regime_warning` says to re-run quiet.
-    t2, t8 = 40.0, 40.0 / 3.6  # true efficiency 0.9
     out = bench._scale_pair(
-        2, 8, trials=4, cooldown=0, max_extra_trials=0,
+        2, 8,
         runner=_runner_from({
-            # one small-level sample lands quiet (trial 2) while every
-            # big-level sample is throttled x1.5
-            2: [t2 * 1.5, t2, t2 * 1.5, t2 * 1.5],
-            8: [t8 * 1.5, t8 * 1.5, t8 * 1.5, t8 * 1.5],
+            2: [T2 * 1.5, T2, T2 * 1.5, T2 * 1.5],
+            8: [T8 * 1.5, T8 * 1.5, T8 * 1.5, T8 * 1.5],
         }),
     )
     assert out["efficiency_min_of_levels"] < 0.7  # the under-report
@@ -85,12 +123,11 @@ def test_efficiency_is_capped_and_warned_in_the_inflation_mirror():
     # Mirror scenario: the SMALL level always throttled, big level once
     # quiet -> raw min-of-levels reads 1.35 for a true 0.9. The report
     # must not claim super-linear scaling: capped at 1.0 + warned.
-    t2, t8 = 40.0, 40.0 / 3.6
     out = bench._scale_pair(
-        2, 8, trials=4, cooldown=0, max_extra_trials=0,
+        2, 8,
         runner=_runner_from({
-            2: [t2 * 1.5, t2 * 1.5, t2 * 1.5, t2 * 1.5],
-            8: [t8 * 1.5, t8, t8 * 1.5, t8 * 1.5],
+            2: [T2 * 1.5, T2 * 1.5, T2 * 1.5, T2 * 1.5],
+            8: [T8 * 1.5, T8, T8 * 1.5, T8 * 1.5],
         }),
     )
     assert out["efficiency_min_of_levels"] > 1.0  # the raw artifact
@@ -100,8 +137,9 @@ def test_efficiency_is_capped_and_warned_in_the_inflation_mirror():
 
 def test_raw_trials_are_archived():
     out = bench._scale_pair(
-        2, 8, trials=2, cooldown=0,
-        runner=_runner_from({2: [40.0, 41.0], 8: [11.0, 11.5]}),
+        2, 8,
+        runner=_runner_from({2: [40.0, 41.0, 42.0, 43.0],
+                             8: [11.0, 11.5, 12.0, 12.5]}),
     )
     for t in out["trials"]:
         assert set(t) >= {
@@ -113,111 +151,68 @@ def test_raw_trials_are_archived():
     assert out["elapsed_big"] == 11.0
 
 
-def test_extension_rescues_a_starved_level():
-    # Base trials: the big level never samples quiet (the r03 artifact:
-    # 8-core full-input min 130 s vs 18 s capability). The adaptive
-    # extension keeps sampling; trial 6's big run lands quiet and the
-    # minima become same-regime: warning clears, efficiency reads ~0.9.
-    t2, t8 = 40.0, 40.0 / 3.6
+def test_absurd_big_slower_than_small_is_warned():
+    # 8 cores "slower" than 2 cores on an embarrassingly parallel job is
+    # physically impossible quiet-state. The protocol takes no extra
+    # trials to chase a better minimum; it reports what it measured and
+    # warns.
     out = bench._scale_pair(
-        2, 8, trials=4, cooldown=0, max_extra_trials=4,
-        runner=_runner_from({
-            2: [t2, t2 * 1.5, t2, t2 * 1.5, t2, t2 * 1.5, t2],
-            8: [t8 * 7, t8 * 7, t8 * 7, t8 * 7, t8 * 7, t8, t8],
-        }),
+        2, 8, runner=_runner_from({2: [10.0] * 4, 8: [30.0, 30.0, 30.0, 30.0]}),
     )
-    # extension runs until the big-level quiet minimum is REPRODUCED
-    # (two samples within 20%), then stops: minima confirmed, no warning
-    assert out["extension_trials_run"] == 3
-    assert abs(out["efficiency"] - 0.9) < 0.01
-    assert "regime_warning" not in out
-    assert len(out["trials"]) == 7
-
-
-def test_extension_is_bounded_and_keeps_the_warning():
-    # Disagreement persists through the whole extension budget: the
-    # estimator stops at max_extra_trials and STILL reports the warning
-    # (no papering over an unmeasurable regime).
-    t2, t8 = 40.0, 40.0 / 3.6
-    out = bench._scale_pair(
-        2, 8, trials=2, cooldown=0, max_extra_trials=2,
-        runner=_runner_from({
-            2: [t2, t2 * 1.5, t2, t2 * 1.5],
-            8: [t8 * 7, t8 * 7, t8 * 7, t8 * 7],
-        }),
-    )
-    assert out["extension_trials_run"] == 2
+    assert len(out["trials"]) == TRIALS
+    assert out["elapsed_big"] == 30.0
     assert "regime_warning" in out
-    assert len(out["trials"]) == 4
 
 
-def test_near_gate_efficiency_forces_extension():
-    # r04 fix: eff 0.768 with both minima "confirmed" (reproduced within
-    # 20%) never extended in r03, even though the small level had only
-    # sampled a lucky-fast window. Landing within gate_margin of the 0.8
-    # criterion must now keep sampling; here the extension finds the big
-    # level's true quiet time and the estimate crosses the gate.
-    t2 = 40.0
-    out = bench._scale_pair(
-        2, 8, trials=4, cooldown=0, max_extra_trials=2,
-        runner=_runner_from({
-            # minima reproduce within 20% at both levels -> no regime
-            # warning, but efficiency reads 40/(4*13) = 0.769
-            2: [t2, t2, t2 * 1.1, t2 * 1.1, t2, t2],
-            8: [13.0, 13.0, 13.0, 13.0, 11.77, 11.8],
-        }),
-    )
-    assert out["extension_trials_run"] >= 1
-    assert out["efficiency"] >= 0.8
-    assert "regime_warning" not in out
+def test_host_pair_fits_the_host():
+    assert bench.host_pair(4) == (1, 4)
+    assert bench.host_pair(32) == (8, 32)
+    assert bench.host_pair(7) == (1, 4)
+    assert bench.host_pair(2) is None
 
 
-def test_gate_extension_is_bounded_for_truly_sublinear_jobs():
-    # a job that REALLY scales at 0.5 exhausts max_extra_trials and
-    # reports the honest number (no inflation, no infinite loop)
-    out = bench._scale_pair(
-        2, 8, trials=2, cooldown=0, max_extra_trials=2,
-        runner=_runner_from({2: [40.0] * 4, 8: [20.0] * 4}),
-    )
-    assert out["extension_trials_run"] == 2
-    assert out["efficiency"] == 0.5
+def test_small_host_records_skipped_and_runs_nothing(monkeypatch):
+    monkeypatch.setattr(bench, "HOST_CORES", 2)
+    calls: list[int] = []
+    out = bench.run_scaling(_runner_from({}, calls))
+    assert calls == []
+    assert out["host_cores"] == 2 and "skipped" in out
+    assert bench._compact_scaling(out)["skipped"] == out["skipped"]
 
 
-def test_gate_none_disables_proximity_extension():
-    out = bench._scale_pair(
-        2, 8, trials=2, cooldown=0, max_extra_trials=2, gate=None,
-        runner=_runner_from({2: [40.0, 40.0], 8: [20.0, 20.0]}),
-    )
-    assert out["extension_trials_run"] == 0
+def test_run_scaling_uses_the_host_pair(monkeypatch):
+    monkeypatch.setattr(bench, "HOST_CORES", 4)
+    out = bench.run_scaling(_runner_from({1: [40.0] * 4, 4: [11.0] * 4}))
+    assert (out["cores_small"], out["cores_big"], out["host_cores"]) == (1, 4, 4)
 
 
-def test_headline_best_of_extends_on_spread(monkeypatch):
-    # the headline run is taken after the scaling block heats the box:
-    # when the base runs disagree >30%, _best_of must extend and flag
-    seq = iter([10.0, 14.0, 10.2, 9.9, 13.0])
-    monkeypatch.setattr(
-        bench, "parse_route_job",
-        lambda spark, n, out: {
-            "elapsed": next(seq), "docs": n, "lines": n,
-            "docs_per_sec": 1.0, "lines_per_sec": 1.0,
-        },
-    )
-    head = bench._best_of(None, 100, runs=3, max_extra=2)
-    assert head["regime"]["runs"] == 5
+def _fake_job(monkeypatch, seq):
+    it = iter(seq)
+    calls: list[int] = []
+
+    def job(spark, n, out):
+        calls.append(1)
+        return {"elapsed": next(it), "docs": n, "lines": n,
+                "docs_per_sec": 1.0, "lines_per_sec": 1.0}
+
+    monkeypatch.setattr(bench, "parse_route_job", job)
+    return calls
+
+
+def test_headline_best_of_flags_spread_without_extending(monkeypatch):
+    # runs that disagree by more than 30% are flagged, never extended
+    calls = _fake_job(monkeypatch, [10.0, 14.0, 10.2, 9.9, 13.0])
+    head = bench._best_of(None, 100)
+    assert len(calls) == 3
+    assert head["regime"]["runs"] == 3
     assert head["regime"]["throttled"] is True
-    assert head["elapsed"] == 9.9  # min-of-N bookkeeping intact
+    assert head["elapsed"] == 10.0  # min-of-N bookkeeping intact
 
 
 def test_headline_best_of_stops_when_quiet(monkeypatch):
-    seq = iter([10.0, 10.1, 10.2, 1.0, 1.0])
-    monkeypatch.setattr(
-        bench, "parse_route_job",
-        lambda spark, n, out: {
-            "elapsed": next(seq), "docs": n, "lines": n,
-            "docs_per_sec": 1.0, "lines_per_sec": 1.0,
-        },
-    )
-    head = bench._best_of(None, 100, runs=3, max_extra=2)
+    calls = _fake_job(monkeypatch, [10.0, 10.1, 10.2, 1.0, 1.0])
+    head = bench._best_of(None, 100)
+    assert len(calls) == 3
     assert head["regime"]["runs"] == 3
     assert head["regime"]["throttled"] is False
 
@@ -226,51 +221,23 @@ def test_compact_scaling_fits_the_driver_tail_budget():
     # r04 lesson: the driver archives only ~2 KB of stdout tail, and the
     # r04 headline was unrecoverable because the result line was bigger.
     # The compact projection must strip the per-trial arrays (they live
-    # in bench_full_last.json) and stay far under the tail budget even
-    # with a large trial count.
-    import json
-
+    # in bench_full_last.json) and stay far under the tail budget.
     scaling = bench._scale_pair(
-        2, 8, trials=4, cooldown=0, max_extra_trials=4,
-        runner=_runner_from({2: [40.0 + i for i in range(8)],
-                             8: [20.0 + i for i in range(8)]}),
-    )
-    scaling["loadavg_after_quiesce"] = 3.2
-    scaling["bandwidth_capped_pair"] = dict(
-        scaling, trials=list(scaling["trials"])
+        2, 8, runner=_runner_from({2: [40.0 + i for i in range(4)],
+                                   8: [20.0 + i for i in range(4)]}),
     )
     compact = bench._compact_scaling(scaling)
     assert "trials" not in compact
-    assert compact["trials_n"] == len(scaling["trials"])
+    assert compact["trials_n"] == TRIALS
     assert compact["efficiency"] == scaling["efficiency"]
-    assert compact["bandwidth_capped_efficiency"] == scaling[
-        "efficiency_min_of_levels"
-    ]
+    assert compact["host_cores"] == scaling["host_cores"]
+    assert compact["pages"] == 1000
     assert len(json.dumps(compact)) < 700
-
-
-def test_absurd_big_slower_than_small_forces_extension():
-    # 8 cores "slower" than 2 cores on an embarrassingly parallel job is
-    # physically impossible quiet-state — even if the ratio diagnostics
-    # happened to agree, the extension must kick in.
-    out = bench._scale_pair(
-        2, 8, trials=2, cooldown=0, max_extra_trials=1,
-        runner=_runner_from({
-            2: [10.0, 10.0, 10.0],
-            8: [30.0, 30.0, 8.0],
-        }),
-    )
-    assert out["extension_trials_run"] == 1
-    assert out["elapsed_big"] == 8.0
-    # budget ran out before the 8.0 minimum could be reproduced
-    assert "regime_warning" in out
 
 
 def test_compact_failed_list_is_bounded():
     # the final stdout line must survive a whole-family regression: 198
     # failed names would alone exceed the ~2 KB driver tail budget
-    import json
-
     names = sorted(f"query_{i:03d}" for i in range(198))
     compact = bench._compact_failed(names)
     assert len(compact) == 11 and compact[-1] == "...+188 more"
@@ -291,7 +258,7 @@ def _flaky_runner(times: dict[int, list[float]], fail_calls: set):
         if (cores, i) in fail_calls:
             raise RuntimeError(f"worker died cores={cores} call={i}")
         el = times[cores][i]
-        return {"elapsed": el, "docs_per_sec": round(1000.0 / el, 1)}
+        return {"elapsed": el, "docs": 1000, "docs_per_sec": round(1000.0 / el, 1)}
 
     return run
 
@@ -301,14 +268,14 @@ def test_one_dead_run_is_retried_and_survived():
     # bench. A single dead run must be retried; the retry succeeding
     # means a full paired row and no failure record.
     out = bench._scale_pair(
-        2, 8, trials=3, cooldown=0,
+        2, 8,
         runner=_flaky_runner(
-            {2: [99.0, 40.0, 40.0, 40.0], 8: [10.0, 10.0, 10.0]},
+            {2: [99.0, 40.0, 40.0, 40.0, 40.0], 8: [10.0] * 4},
             fail_calls={(2, 0)},  # first 2-core run dies; retry = call 1
         ),
     )
     assert "failed_runs" not in out
-    assert len(out["trials"]) == 3
+    assert len(out["trials"]) == TRIALS
     assert out["efficiency"] == 1.0
 
 
@@ -317,7 +284,7 @@ def test_dead_level_drops_paired_row_but_keeps_minima():
     # paired row, but later trials carry the estimate and the failure
     # is recorded for the archive
     out = bench._scale_pair(
-        2, 8, trials=3, cooldown=0,
+        2, 8,
         runner=_flaky_runner(
             {2: [40.0] * 6, 8: [99.0, 99.0, 10.0, 10.0, 10.0, 10.0]},
             fail_calls={(8, 0), (8, 1)},
@@ -325,23 +292,18 @@ def test_dead_level_drops_paired_row_but_keeps_minima():
     )
     assert len(out["failed_runs"]) == 1
     assert "cores 8" in out["failed_runs"][0]
-    assert len(out["trials"]) >= 2
+    assert len(out["trials"]) == TRIALS - 1
     assert out["efficiency"] == 1.0
 
 
 def test_total_level_failure_raises_cleanly():
-    import pytest
-
     def always_dead(cores):
         if cores == 8:
             raise RuntimeError("no memory")
-        return {"elapsed": 40.0, "docs_per_sec": 25.0}
+        return {"elapsed": 40.0, "docs": 1000, "docs_per_sec": 25.0}
 
     with pytest.raises(RuntimeError, match="no surviving paired trial"):
-        bench._scale_pair(
-            2, 8, trials=2, cooldown=0, max_extra_trials=1,
-            runner=always_dead,
-        )
+        bench._scale_pair(2, 8, runner=always_dead)
 
 
 def test_compact_scaling_carries_error_and_failed_count():
@@ -352,3 +314,55 @@ def test_compact_scaling_carries_error_and_failed_count():
         "efficiency": 0.9, "trials": [1, 2], "failed_runs": ["t0 cores 8"],
     })
     assert compact["failed_runs_n"] == 1 and compact["trials_n"] == 2
+
+
+COUNTERS = {"total": 20, "matched": 16, "unmatched": 4, "excluded": 0, "skipped": 0}
+
+
+def _fake_submit(monkeypatch, counters_for):
+    """spark-submit stand-in: 4x cores run 3.6x faster; ``counters_for``
+    maps (cores, call index) to the routed counters of that run."""
+    calls: list[int] = []
+
+    def submit(cores, pages_dir, zip_path, out_dir):
+        calls.append(cores)
+        return {"elapsed_sec": 40.0 / cores * (1 if cores == 1 else 1.11),
+                "invariant_ok": True,
+                "counters": counters_for(cores, len(calls) - 1)}
+
+    monkeypatch.setattr(submit_scaling, "_synth_once", lambda n, d: None)
+    monkeypatch.setattr(submit_scaling, "_submit", submit)
+    monkeypatch.setattr(bench, "HOST_CORES", 4)
+    return calls
+
+
+def test_submit_scaling_goes_through_the_bench_protocol(monkeypatch, tmp_path):
+    calls = _fake_submit(monkeypatch, lambda cores, i: dict(COUNTERS))
+    pairs: list[tuple] = []
+    real = bench._scale_pair
+    monkeypatch.setattr(
+        bench, "_scale_pair",
+        lambda n, big, runner=None: pairs.append((n, big)) or real(n, big, runner),
+    )
+    out = submit_scaling.measure(100, str(tmp_path))
+    assert pairs == [(1, 4)]
+    assert calls == [1, 4, 4, 1, 1, 4, 4, 1]
+    assert len(out["trials"]) == TRIALS
+    assert out["counters"] == COUNTERS and out["pages"] == 100
+    assert out["host_cores"] == 4
+
+
+def test_submit_scaling_rejects_counters_that_differ_across_levels(
+    monkeypatch, tmp_path,
+):
+    def counters_for(cores, i):
+        c = dict(COUNTERS)
+        if cores == 4:
+            c["matched"] -= 1
+            c["unmatched"] += 1
+        return c
+
+    calls = _fake_submit(monkeypatch, counters_for)
+    with pytest.raises(ValueError, match="routed"):
+        submit_scaling.measure(100, str(tmp_path))
+    assert calls == [1, 4]  # no retry: a counters mismatch is not a dead run

@@ -81,3 +81,27 @@ def test_dynamic_width_rows(spark):
     # lines 4-5 omit referer/user_agent: dynamic per-line schema survives
     out, _ = LTSVParser(spark).parse_string(g.T4)
     assert out == [g.D4]
+
+
+def test_extract_ltsv_matches_decoder_over_arrow(spark):
+    """extract_ltsv returns decoders.ltsv_decode_batch's (labels, values)
+    per line, NULL for an invalid line, with passthrough columns intact,
+    through one mapInArrow hop."""
+    from access_log_parser_spark import extract_ltsv
+    from access_log_parser_spark.decoders import ltsv_decode_batch
+
+    raws = [g.T1, g.T4_BAD, g.T4, "", g.T5]
+    df = spark.createDataFrame(
+        [(i + 1, "src", r) for i, r in enumerate(raws)], "line_no long, source string, raw string"
+    )
+    out = extract_ltsv(df, passthrough=["line_no", "source"])
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan, plan
+    assert out.columns == ["line_no", "source", "labels", "values"]
+    rows = sorted(out.collect(), key=lambda r: r["line_no"])
+    ls, vs = ltsv_decode_batch(raws)
+    assert [r["line_no"] for r in rows] == [1, 2, 3, 4, 5]
+    assert {r["source"] for r in rows} == {"src"}
+    assert [r["labels"] for r in rows] == ls
+    assert [r["values"] for r in rows] == vs
+    assert rows[1]["labels"] is None and rows[1]["values"] is None

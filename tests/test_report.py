@@ -130,3 +130,26 @@ def test_result_to_json_go_compatible():
                errors=[ParseError("a.log", 1, "l")])
     assert '"zipEntries":["a.log"]' in z.to_json()
     assert '"entry":"a.log"' in z.to_json()
+
+
+def test_collect_result_bounds_errors_and_keeps_exact_counters(spark):
+    """Past MAX_ERRORS unmatched rows the driver collect stops at the
+    bound (the first lines in (source, line_no) order); the counters are
+    still exact. max_errors=None keeps every error (reference parity)."""
+    from pyspark.sql import functions as F
+
+    from access_log_parser_spark.decoders import MATCHED, UNMATCHED
+    from access_log_parser_spark.metrics import MAX_ERRORS, collect_result
+
+    n = 2 * MAX_ERRORS + 10  # MAX_ERRORS + 5 unmatched rows
+    routed = spark.range(n).select(
+        F.lit("s").alias("source"),
+        (F.col("id") + 1).alias("line_no"),
+        F.lit("GARBAGE").alias("raw"),
+        F.when(F.col("id") % 2 == 0, F.lit(UNMATCHED)).otherwise(F.lit(MATCHED)).alias("status"),
+    )
+    r = collect_result(routed)
+    assert r.counters() == (n, MAX_ERRORS + 5, MAX_ERRORS + 5, 0, 0)
+    assert len(r.errors) == MAX_ERRORS
+    assert [e.line_number for e in r.errors[:3]] == [1, 3, 5]
+    assert len(collect_result(routed, max_errors=None).errors) == MAX_ERRORS + 5

@@ -157,3 +157,12 @@ def test_cancellation_surface(spark):
     p.cancel()  # after completion: no in-flight jobs, still safe
     out2, r2 = p.parse_string(g.ALL_MATCH_INPUT)
     assert r2.counters() == (5, 5, 0, 0, 0)
+
+
+def test_parse_zip_entries_runs_in_the_parser_job_group(spark, datadir):
+    """cancel() reaches a zip-entries parse: its actions carry the parser's
+    job group like every other verb's, and the group is cleared after."""
+    p = new_s3_parser(spark)
+    p.parse_zip_entries(str(datadir / "sample_s3.zip"))
+    assert spark.sparkContext.statusTracker().getJobIdsForGroup(p._job_group)
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None

@@ -25,6 +25,19 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
 
+def empty_dtype_drift(sdf: pd.DataFrame, odf: pd.DataFrame) -> dict:
+    """Columns whose dtypes differ between two zero-row frames, as
+    {column: (spark dtype, oracle dtype)}. Zero rows compare equal by
+    value whatever the dtypes, so this keeps dtype drift between the
+    engines visible without failing the comparison; {} for non-empty."""
+    if not sdf.empty:
+        return {}
+    return {
+        c: (str(sdf[c].dtype), str(odf[c].dtype))
+        for c in sdf.columns if sdf[c].dtype != odf[c].dtype
+    }
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
@@ -79,6 +92,9 @@ def main() -> int:
                 print("  oracle:", b.loc[i].to_dict())
             failures.append(name)
             continue
+        drift = empty_dtype_drift(sdf, odf)
+        if drift:
+            print(f"[note] {name}: empty result, dtypes (spark, oracle) differ: {drift}")
         print(f"[OK]   {name}: {len(sdf)} rows")
     spark.stop()
     print("FAILURES:", failures or "none")
