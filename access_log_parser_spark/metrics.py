@@ -17,6 +17,7 @@ Here the counters are computed two ways:
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation
@@ -118,9 +119,12 @@ def _counter_aggs() -> list:
     return aggs
 
 
-def observe_routed(routed: DataFrame, name: str = "lineage") -> tuple[DataFrame, Observation]:
-    """Attach counter observation; read ``obs.get`` after the first action."""
-    obs = Observation(name)
+def observe_routed(routed: DataFrame, name: str | None = None) -> tuple[DataFrame, Observation]:
+    """Attach counter observation; read ``obs.get`` after the first action.
+    ``name`` defaults to a fresh ``lineage-<uuid>``, so queries observed at
+    the same time (pipeline batches in flight, parses on two threads) never
+    share an observed-metric name."""
+    obs = Observation(name or f"lineage-{uuid.uuid4().hex}")
     return routed.observe(obs, *_counter_aggs()), obs
 
 

@@ -7,7 +7,8 @@ One batch run over a pages table is ONE job with ONE Python stage:
    page grain is the right one: the join sees one row per url instead of
    ~20 lines, and nothing has to re-scan the pages to join them back
    afterwards. Each lookup is materialized once per run (a persisted
-   derived frame, released when the run ends), not re-computed per batch;
+   derived frame, released when every batch has finished), not
+   re-computed per batch;
 2. **parse**: every format, LTSV and regex presets alike, parses whole
    documents in one ``mapInArrow`` stage (:func:`.engine.parse_documents`:
    split, decode, filter, serialize, with the reference's per-document
@@ -19,17 +20,27 @@ One batch run over a pages table is ONE job with ONE Python stage:
    ``pyspark.sql.Observation`` (no second scan); per-sink counts come from
    the (cheap, columnar, partition-pruned) written output.
 
+Batches overlap: batch k+1 is planned and submitted while batch k runs
+(two in flight, never more), each still one job with its own Observation
+and its own manifest. A batch's driver-side planning and commit would
+otherwise leave the cores idle between jobs.
+
 Resume: page batches are identified by a deterministic ``batch_id``
 (bucket of the url hash). A manifest commit marker is written per batch
 after its data lands; re-running skips committed batches — the
-Iceberg-snapshot bookkeeping of the north_rule, expressed portably.
+Iceberg-snapshot bookkeeping of the north_rule, expressed portably. A
+failed batch stops further submission; the batch still in flight
+finishes and commits, so only completed batches have manifests.
 """
 
 from __future__ import annotations
 
 import time
+import uuid
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,6 +48,13 @@ from .engine import parse_documents
 from .metrics import Result, observe_routed, result_from_observation
 from .options import Option
 from .sinks import processed_batches, write_manifest, write_routed
+
+# Batches in flight at once: batch k+1 is planned and submitted while batch
+# k runs, so one batch's driver-side planning and commit overlap the
+# other's tasks instead of leaving the cores idle. A constant, not an
+# option: four in flight measured no better than two, because the run is
+# CPU-bound by then.
+_IN_FLIGHT = 2
 
 
 @dataclass
@@ -51,6 +69,35 @@ def _with_batch_id(pages: DataFrame, url_col: str, n_batches: int) -> DataFrame:
     return pages.withColumn(
         "batch_id", F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_batches)).cast("string")
     )
+
+
+def _run_in_order(spark: SparkSession, todo: list[str], run_batch) -> list[Result]:
+    """``run_batch(batch_id)`` for every id of ``todo``, ``_IN_FLIGHT`` at a
+    time, returning the results in ``todo`` order.
+
+    Each batch runs in a thread wrapped by ``inheritable_thread_target``, so
+    it carries the caller's job group, description and tags, and
+    cancelling the group cancels the batches. A slot is refilled only after
+    a batch has finished cleanly: once any batch fails, no further batch is
+    submitted, the one still in flight is waited for (a batch that finishes
+    writes its manifest, so resume skips it), and the first failure in
+    batch order is raised."""
+    submitted = []
+    with ThreadPoolExecutor(_IN_FLIGHT, thread_name_prefix="alp-batch") as pool:
+        running: set = set()
+        for batch_id in todo:
+            if len(running) == _IN_FLIGHT:
+                done, running = wait(running, return_when=FIRST_COMPLETED)
+                if any(f.exception() is not None for f in done):
+                    break
+            # wrapped per batch: each wrap copies the caller's local
+            # properties, and a running query sets its SQL execution id in
+            # them, so two batches sharing one copy would mix up their
+            # executions
+            future = pool.submit(inheritable_thread_target(spark)(run_batch), batch_id)
+            submitted.append(future)
+            running.add(future)
+    return [f.result() for f in submitted]
 
 
 def run_pipeline(
@@ -83,71 +130,84 @@ def run_pipeline(
     all_ids = [str(i) for i in range(n_batches)]
     todo = [b for b in all_ids if b not in done]
     skipped = [b for b in all_ids if b in done]
+    if not todo:
+        elapsed = time.monotonic() - start
+        return PipelineReport(
+            result=Result(elapsed_time=elapsed), batches_run=[],
+            batches_skipped=skipped, elapsed=elapsed,
+        )
 
     # A lookup built from driver data (createDataFrame of a list) is a
     # Python RDD: joined as is, every batch would re-run its Python tasks.
     # Persist a derived frame, so the caller's DataFrame keeps its own
-    # storage level, and release it when the run ends.
-    cached = [
-        (lk.select("*").persist(), key) for lk, key in (lookups or {}).values() if todo
-    ]
+    # storage level, and release it when every batch has finished. Its
+    # tasks fork from the same worker pool as the parse (get_spark sets the
+    # one Python env both task kinds need), so they reuse patched workers.
+    cached = [(lk.select("*").persist(), key) for lk, key in (lookups or {}).values()]
     carry: list[str] = []
     for lk, _ in cached:
         carry.extend(c for c in lk.columns if c not in carry)
 
-    total = Result()
+    # A compact parquet corpus (one row group / few small files) arrives as
+    # fewer input splits than cores, and the decode — the CPU-heavy stage —
+    # would run at the split count no matter how many executors the cluster
+    # has (measured: local[2] == local[8] wall-clock on a 2M-line corpus
+    # before this spread). Repartition only when the input is under-split;
+    # at 100 TB it arrives as thousands of splits and this never fires. The
+    # batch filter is narrow, so every batch has the pages' split count:
+    # probe it once, not per batch.
     par = spark.sparkContext.defaultParallelism
-    try:
-        for batch_id in todo:
-            batch_pages = pages.filter(F.col("batch_id") == batch_id)
-            # A compact parquet corpus (one row group / few small files)
-            # arrives as fewer input splits than cores, and the decode — the
-            # CPU-heavy stage — would run at the split count no matter how
-            # many executors the cluster has (measured: local[2] == local[8]
-            # wall-clock on a 2M-line corpus before this spread). Repartition
-            # only when the batch is under-split; at 100 TB the input arrives
-            # as thousands of splits and this branch never fires.
-            if batch_pages.rdd.getNumPartitions() < par:
-                batch_pages = batch_pages.repartition(par)
-            # a lookup with duplicate keys duplicates the page's lines, as
-            # any left join would
-            for lk, key in cached:
-                batch_pages = batch_pages.join(F.broadcast(lk), on=key, how="left")
-            routed = parse_documents(
-                batch_pages, fmt, opt, source_col=url_col, text_col=text_col,
-                keep=carry,
-            )
+    spread = pages.rdd.getNumPartitions() < par
+    # distinct observed-metric names for batches of this run in flight at
+    # once, and for other runs or parses in the same session
+    run_tag = uuid.uuid4().hex[:8]
 
-            if partition_lineage:
-                routed = routed.persist()
-            observed, obs = observe_routed(routed)
-            # crash-safe resume: the batch writes its OWN partitions with
-            # dynamic overwrite, so re-running a batch that died mid-write
-            # (partial files, no manifest) replaces — never duplicates — them
-            write_routed(
-                observed.withColumn("batch_id", F.lit(batch_id)),
-                out_dir,
-                mode="overwrite",
-                extra_partition_cols=("batch_id",),
-            )  # the ONLY action for this batch
-            r = result_from_observation(obs)
-            manifest = {
-                "counters": {
-                    "total": r.total,
-                    "matched": r.matched,
-                    "unmatched": r.unmatched,
-                    "excluded": r.excluded,
-                    "skipped": r.skipped,
-                }
+    def run_batch(batch_id: str) -> Result:
+        batch_pages = pages.filter(F.col("batch_id") == batch_id)
+        if spread:
+            batch_pages = batch_pages.repartition(par)
+        # a lookup with duplicate keys duplicates the page's lines, as any
+        # left join would
+        for lk, key in cached:
+            batch_pages = batch_pages.join(F.broadcast(lk), on=key, how="left")
+        routed = parse_documents(
+            batch_pages, fmt, opt, source_col=url_col, text_col=text_col, keep=carry,
+        )
+        if partition_lineage:
+            routed = routed.persist()
+        observed, obs = observe_routed(routed, f"lineage-{batch_id}-{run_tag}")
+        # crash-safe resume: the batch writes its OWN partitions with
+        # dynamic overwrite, so re-running a batch that died mid-write
+        # (partial files, no manifest) replaces — never duplicates — them
+        write_routed(
+            observed.withColumn("batch_id", F.lit(batch_id)),
+            out_dir,
+            mode="overwrite",
+            extra_partition_cols=("batch_id",),
+        )  # the ONLY action for this batch
+        r = result_from_observation(obs)
+        manifest = {
+            "counters": {
+                "total": r.total,
+                "matched": r.matched,
+                "unmatched": r.unmatched,
+                "excluded": r.excluded,
+                "skipped": r.skipped,
             }
-            if partition_lineage:
-                from .metrics import counters_by_partition
+        }
+        if partition_lineage:
+            from .metrics import counters_by_partition
 
-                manifest["partition_lineage"] = [
-                    row.asDict() for row in counters_by_partition(routed).collect()
-                ]
-                routed.unpersist()
-            write_manifest(out_dir, batch_id, manifest)
+            manifest["partition_lineage"] = [
+                row.asDict() for row in counters_by_partition(routed).collect()
+            ]
+            routed.unpersist()
+        write_manifest(out_dir, batch_id, manifest)
+        return r
+
+    total = Result()
+    try:
+        for r in _run_in_order(spark, todo, run_batch):
             total.total += r.total
             total.matched += r.matched
             total.unmatched += r.unmatched

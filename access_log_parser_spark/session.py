@@ -8,7 +8,8 @@ correct on local[N]:
 - Arrow enabled with a bounded batch size so the mapInArrow parse stage
   streams fixed-size batches instead of whole partitions;
 - shuffle partitions sized for the local harness; on a real cluster this is
-  overridden by --conf / AQE coalescing.
+  overridden by --conf / AQE coalescing;
+- one Python worker pool for every task kind (:func:`_one_worker_pool`).
 """
 
 from __future__ import annotations
@@ -16,6 +17,36 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_TRACEBACK_CONF = "spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled"
+
+
+def _one_worker_pool(extra_conf: dict[str, str], launched_by_submit: bool) -> dict[str, str]:
+    """The executor env that puts Python-RDD tasks in the same worker pool
+    as the SQL Python operators.
+
+    Spark keys its Python worker pools (one daemon each) on the workers'
+    env. The SQL runners (``mapInArrow``, UDFs) add
+    ``SPARK_SIMPLIFIED_TRACEBACK=1`` to it while
+    ``spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled`` is true
+    (the default); Python-RDD tasks, such as a ``createDataFrame(list)``
+    lookup, do not. So they forked from a second daemon whose workers never
+    unpickle an engine function, never get the :mod:`.worker_imports`
+    patch, and paid ~0.2 Python CPU-s per task re-reading zip archives.
+    Setting the same key for every task gives both kinds one env and one
+    pool. It is set only while the SQL conf is on at session start, so
+    that turning it off keeps full tracebacks."""
+    value = extra_conf.get(_TRACEBACK_CONF)
+    if value is None and launched_by_submit:
+        from pyspark import SparkConf, SparkContext
+
+        # connects to the launcher's JVM, whose system properties hold its
+        # --conf and spark-defaults; no new JVM is started
+        SparkContext._ensure_initialized()
+        value = SparkConf().get(_TRACEBACK_CONF)
+    if str(value or "true").strip().lower() != "true":
+        return {}
+    return {"spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK": "1"}
 
 
 def get_spark(
@@ -65,6 +96,7 @@ def get_spark(
         b = b.config("spark.sql.shuffle.partitions", shuffle_sql)
     if master is not None:
         b = b.master(master)
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    for k, v in {**_one_worker_pool(extra_conf, launched_by_submit), **extra_conf}.items():
         b = b.config(k, v)
     return b.getOrCreate()

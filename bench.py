@@ -9,9 +9,10 @@ via Observation.
 Scaling protocol (sandbox stand-in for N vs 4N executors): N = cores // 4
 and 4N, from the host (1->4 on 4 cores, 8->32 on 32; skipped below 4), so
 no level oversubscribes. The SAME job on the SAME sf-tier input runs in a
-fresh subprocess per run, for a fixed ``SCALE_TRIALS`` trials of both
-levels back to back in alternating order, each run after a cooldown and
-a loadavg quiesce. ``efficiency`` = (min T_N / min T_4N) / 4, capped at
+fresh subprocess per run, pinned to as many CPUs as its level has cores
+(``pin_to``), for a fixed ``SCALE_TRIALS`` trials of both levels back to
+back in alternating order, each run after a cooldown and a loadavg
+quiesce. ``efficiency`` = (min T_N / min T_4N) / 4, capped at
 1.0, with the paired median, a ``regime_warning`` and every raw trial.
 The trial count never depends on the timings (adding samples until a
 ratio of minima reads well is optional stopping); a dead run is retried
@@ -222,15 +223,27 @@ def _scale_one(cores: int) -> None:
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     spark.stop()
+    r["cpus"] = sorted(os.sched_getaffinity(0))
     print("SCALE_RESULT " + json.dumps(r))
+
+
+def pin_to(cores: int):
+    """A ``preexec_fn`` that pins a scaling run's child, and the JVM and
+    Python workers it starts (they inherit the mask), to the first
+    ``cores`` CPUs this process may use. ``local[N]`` caps task slots, not
+    CPUs: unpinned, ``local[1]`` kept ~1.7 cores busy (task thread and
+    Python worker run pipelined, plus JVM threads), so the small level of
+    the pair was not N cores."""
+    cpus = sorted(os.sched_getaffinity(0))[:cores]
+    return lambda: os.sched_setaffinity(0, cpus)
 
 
 def _run_one(cores: int) -> dict:
     """The default scaling runner: one fresh subprocess per run (one
-    SparkContext per process)."""
+    SparkContext per process), pinned to ``cores`` CPUs."""
     out = subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--scale-one", str(cores)],
-        capture_output=True, text=True, timeout=1800,
+        capture_output=True, text=True, timeout=1800, preexec_fn=pin_to(cores),
     )
     line = next(
         (ln for ln in out.stdout.splitlines() if ln.startswith("SCALE_RESULT ")),
@@ -260,8 +273,9 @@ def host_pair(cores: int) -> tuple[int, int] | None:
 def _scale_pair(n: int, big: int, runner=None) -> dict:
     """Same job, same input, ``runner(n)`` vs ``runner(big)``, for a fixed
     ``SCALE_TRIALS`` trials. ``runner(cores)`` returns a dict with
-    ``elapsed``, ``docs`` and ``docs_per_sec``; the default runs one
-    ``--scale-one`` subprocess.
+    ``elapsed``, ``docs`` and ``docs_per_sec``, and ``cpus``, the CPU set
+    the run was pinned to, which each trial row records; the default runs
+    one ``--scale-one`` subprocess.
 
     The two levels of a trial run back to back, so the PAIRED ratio
     t_small/t_big cancels slow drift, and the order alternates so a
@@ -305,6 +319,8 @@ def _scale_pair(n: int, big: int, runner=None) -> dict:
             "elapsed_small": round(by_cores[n]["elapsed"], 3),
             "elapsed_big": round(by_cores[big]["elapsed"], 3),
             "paired_efficiency": round(eff, 3),
+            "cpus_small": by_cores[n].get("cpus"),
+            "cpus_big": by_cores[big].get("cpus"),
             "loadavg_at_start": loads[0],
             "loadavg_runs": loads,
         })

@@ -2,18 +2,23 @@
 
     python scripts/pytask_cost.py [--jobs N]
 
-Starts a ``local[4]`` session and runs a 4-task identity ``mapInArrow``
-job N times in two phases: first with a function that imports nothing of
-this package, then with one that imports it, as every engine function does
-when a worker unpickles it. For each phase it prints the Python CPU
-milliseconds per task (daemon and workers, reaped ones included, from
-``/proc``) and, per Python worker, its number of zip importers and whether
-``access_log_parser_spark.worker_imports`` has patched
+Starts a ``local[4]`` session and runs a 4-task job N times in three
+phases: an identity ``mapInArrow`` with a function that imports nothing of
+this package, the same with one that imports it, as every engine function
+does when a worker unpickles it, and then a scan of a
+``createDataFrame(list)`` frame, a Python-RDD job like a pipeline lookup.
+For each phase it prints the Python CPU milliseconds per task (daemon and
+workers, reaped ones included, from ``/proc``), the daemon the phase's
+workers fork from and, per Python worker, its number of zip importers and
+whether ``access_log_parser_spark.worker_imports`` has patched
 ``zipimporter.invalidate_caches``. Each task's
 ``importlib.invalidate_caches()`` re-reads every zip importer's archive
 unless the patch is in place, so on CPython < 3.13 the first phase costs
 about the importer count times one archive read per task and the second
-should not. Run from the repository root; Linux only.
+should not. The third phase forks from the same daemon as the other two
+(``get_spark`` gives both task kinds one worker env), so it runs in the
+patched workers and should cost about what the second does. Run from the
+repository root; Linux only.
 """
 
 from __future__ import annotations
@@ -63,23 +68,28 @@ def package_identity(batches):
     yield from batches
 
 
-def probe(batches):
+def worker_state(_=None):
+    """(daemon pid, worker pid, zip importers, patched) of this worker."""
     import os
     import sys
     import zipimport
 
+    patched = zipimport.zipimporter.invalidate_caches.__module__
+    yield (
+        os.getppid(),
+        os.getpid(),
+        sum(isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()),
+        patched == "access_log_parser_spark.worker_imports",
+    )
+
+
+def arrow_probe(batches):
     import pyarrow as pa
 
     for _ in batches:
         pass
-    patched = zipimport.zipimporter.invalidate_caches.__module__
-    yield pa.RecordBatch.from_pylist([{
-        "pid": os.getpid(),
-        "zip_importers": sum(
-            isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
-        ),
-        "patched": patched == "access_log_parser_spark.worker_imports",
-    }])
+    names = ("daemon", "pid", "zip_importers", "patched")
+    yield pa.RecordBatch.from_pylist([dict(zip(names, row)) for row in worker_state()])
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -104,20 +114,30 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     jvm = SparkContext._gateway.proc.pid
     df = spark.range(0, 4 * TASKS, 1, TASKS)
+    lookup = spark.createDataFrame(
+        [(f"k{i}", i) for i in range(4 * TASKS)], "key string, value long"
+    )
+    arrow_workers = df.mapInArrow(
+        arrow_probe, "daemon long, pid long, zip_importers long, patched boolean"
+    )
+    rdd_workers = spark.sparkContext.parallelize(range(TASKS), TASKS).mapPartitions(worker_state)
+    phases = (
+        ("without the package", df.mapInArrow(plain_identity, df.schema), arrow_workers),
+        ("with the package", df.mapInArrow(package_identity, df.schema), arrow_workers),
+        ("createDataFrame(list)", lookup, rdd_workers),
+    )
     print(f"CPython {sys.version.split()[0]}, {args.jobs} jobs x {TASKS} tasks per phase")
     try:
-        for label, fn in (("without the package", plain_identity),
-                          ("with the package", package_identity)):
-            job = df.mapInArrow(fn, df.schema)
+        for label, job, workers in phases:
             job.write.format("noop").mode("overwrite").save()  # warm-up
             cpu0 = _python_cpu_seconds(jvm)
             for _ in range(args.jobs):
                 job.write.format("noop").mode("overwrite").save()
             per_task = (_python_cpu_seconds(jvm) - cpu0) / (args.jobs * TASKS)
-            workers = df.mapInArrow(probe, "pid long, zip_importers long, patched boolean")
             rows = sorted({tuple(r) for r in workers.collect()})
-            print(f"{label}: {1000 * per_task:.1f} Python CPU ms per task")
-            for pid, n, patched in rows:
+            daemons = " ".join(str(d) for d in sorted({r[0] for r in rows}))
+            print(f"{label}: {1000 * per_task:.1f} Python CPU ms per task, daemon {daemons}")
+            for _, pid, n, patched in rows:
                 print(f"  worker {pid}: {n} zip importers, patched={patched}")
     finally:
         spark.stop()

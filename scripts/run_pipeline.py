@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 from pathlib import Path
 
@@ -84,6 +85,7 @@ def main() -> None:
         "batches_skipped": report.batches_skipped,
         "elapsed_sec": round(report.elapsed, 3),
         "invariant_ok": report.result.check_invariant(),
+        "cpus": sorted(os.sched_getaffinity(0)),
     }
     if args.curate:
         from access_log_parser_spark.pipeline import curate_corpus

@@ -7,7 +7,8 @@ pre-materialized input.
 The protocol is bench.py's, shared rather than copied: the pages corpus
 is synthesized ONCE and written to parquet, and ``bench.run_scaling``
 derives the pair from the host's cores and runs the fixed interleaved
-trials through ``bench._scale_pair``, one fresh spark-submit per run.
+trials through ``bench._scale_pair``, one fresh spark-submit per run,
+pinned to as many CPUs as its ``local[N]`` has task slots.
 Every run must satisfy the counters invariant and route exactly the same
 counters as every other run, at both levels and in every trial.
 
@@ -57,7 +58,9 @@ def _submit(cores: int, pages_dir: str, zip_path: str, out_dir: str) -> dict:
         "--out", out_dir,
         "--format", "s3",
     ]
-    proc = subprocess.run(cmd, capture_output=True, text=True, check=True)
+    proc = subprocess.run(
+        cmd, capture_output=True, text=True, check=True, preexec_fn=bench.pin_to(cores),
+    )
     for line in reversed(proc.stdout.strip().splitlines()):
         if line.startswith("{"):
             return json.loads(line)
@@ -91,7 +94,8 @@ def measure(n_pages: int, work: str) -> dict:
         counters_seen.append(r["counters"])
         print(f"local[{cores}]: {r['elapsed_sec']} s", flush=True)
         return {"elapsed": r["elapsed_sec"], "docs": n_pages,
-                "docs_per_sec": round(n_pages / r["elapsed_sec"], 1)}
+                "docs_per_sec": round(n_pages / r["elapsed_sec"], 1),
+                "cpus": r.get("cpus")}
 
     result = bench.run_scaling(runner)
     result["protocol"] = ("spark-submit --py-files, bench._scale_pair trials, "

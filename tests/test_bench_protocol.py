@@ -12,6 +12,8 @@ times, and `_settle`/`_quiesce` are no-ops here.
 from __future__ import annotations
 
 import json
+import os
+import subprocess
 import sys
 from pathlib import Path
 
@@ -40,7 +42,8 @@ def _runner_from(times: dict[int, list[float]], calls: list | None = None):
         if calls is not None:
             calls.append(cores)
         el = seq[cores].pop(0)
-        return {"elapsed": el, "docs": 1000, "docs_per_sec": round(1000.0 / el, 1)}
+        return {"elapsed": el, "docs": 1000, "docs_per_sec": round(1000.0 / el, 1),
+                "cpus": list(range(cores))}
 
     return run
 
@@ -146,6 +149,8 @@ def test_raw_trials_are_archived():
             "order", "elapsed_small", "elapsed_big", "paired_efficiency",
             "loadavg_at_start",
         }
+        # the CPU set each level's run was pinned to
+        assert t["cpus_small"] == [0, 1] and t["cpus_big"] == list(range(8))
     # best-of-levels bookkeeping: min elapsed per level is what's reported
     assert out["elapsed_small"] == 40.0
     assert out["elapsed_big"] == 11.0
@@ -366,3 +371,45 @@ def test_submit_scaling_rejects_counters_that_differ_across_levels(
     with pytest.raises(ValueError, match="routed"):
         submit_scaling.measure(100, str(tmp_path))
     assert calls == [1, 4]  # no retry: a counters mismatch is not a dead run
+
+
+# a child that reports the CPUs it may run on, as ``_scale_one`` and
+# scripts/run_pipeline.py do in their result lines
+_REPORT_CPUS = "import json, os; print({prefix!r} + json.dumps({{'cpus': sorted(os.sched_getaffinity(0)), {extra}}}))"
+
+
+def _levels() -> list[int]:
+    host = len(os.sched_getaffinity(0))
+    return sorted({1, min(2, host), host})
+
+
+def test_runner_child_is_pinned_to_n_cpus(monkeypatch):
+    """``local[N]`` caps task slots, not CPUs: the scaling runner's child
+    (and so its JVM and Python workers) may run on exactly N CPUs."""
+    real_run = subprocess.run
+    code = _REPORT_CPUS.format(prefix="SCALE_RESULT ", extra="'elapsed': 1.0")
+
+    def run(cmd, **kwargs):
+        assert cmd[-2:-1] == ["--scale-one"]
+        return real_run([sys.executable, "-c", code], **kwargs)
+
+    monkeypatch.setattr(bench.subprocess, "run", run)
+    allowed = sorted(os.sched_getaffinity(0))
+    for cores in _levels():
+        assert bench._run_one(cores)["cpus"] == allowed[:cores]
+    assert sorted(os.sched_getaffinity(0)) == allowed  # the parent is not pinned
+
+
+def test_submit_scaling_child_is_pinned_to_n_cpus(monkeypatch, tmp_path):
+    real_run = subprocess.run
+    code = _REPORT_CPUS.format(prefix="", extra="'elapsed_sec': 1.0")
+
+    def run(cmd, **kwargs):
+        assert cmd[0] == "spark-submit"
+        return real_run([sys.executable, "-c", code], **kwargs)
+
+    monkeypatch.setattr(submit_scaling.subprocess, "run", run)
+    allowed = sorted(os.sched_getaffinity(0))
+    for cores in _levels():
+        r = submit_scaling._submit(cores, "pages", "alp.zip", str(tmp_path))
+        assert r["cpus"] == allowed[:cores]

@@ -474,11 +474,16 @@ def test_pipeline_batch_plan_one_python_stage(spark, tmp_path, monkeypatch, fmt)
         [("en", "English"), ("de", "German")], "lang string, lang_name string"
     )
     plans: list[str] = []
+    lookup_cached: list[bool] = []
     write_routed = pipeline.write_routed
 
     def capture(df, *args, **kwargs):
         plans.append(df._jdf.queryExecution().executedPlan().toString())
-        return write_routed(df, *args, **kwargs)
+        try:
+            return write_routed(df, *args, **kwargs)
+        finally:
+            # the run's persisted lookup outlives every batch's write
+            lookup_cached.append(counted.select("*").storageLevel.useMemory)
 
     monkeypatch.setattr(pipeline, "write_routed", capture)
     lookup_scans = spark.sparkContext.accumulator(0)
@@ -506,3 +511,143 @@ def test_pipeline_batch_plan_one_python_stage(spark, tmp_path, monkeypatch, fmt)
     # one lookup materialization (its partitions' tasks) for three batches
     assert lookup_scans.value == counted.rdd.getNumPartitions()
     assert counted.storageLevel == lang.storageLevel  # caller's frame untouched
+    assert lookup_cached == [True] * 3
+    assert not counted.select("*").storageLevel.useMemory  # released on return
+
+
+def _sink_rows(spark, out):
+    """Every written row but its batch_id, and per-sink row counts."""
+    df = read_sink(spark, out).drop("batch_id")
+    rows = sorted(tuple(r) for r in df.collect())
+    sinks = {
+        (r.status, r.pattern_id): r["count"]
+        for r in df.groupBy("status", "pattern_id").count().collect()
+    }
+    return rows, sinks
+
+
+def _gated_writes(monkeypatch, fail_first: bool = False):
+    """Wrap ``pipeline.write_routed`` and record the peak number of calls
+    in flight and the job groups they ran in. The first two calls must
+    meet at a barrier (so they are in flight together, or the run fails);
+    with ``fail_first`` the first call raises instead, and the second
+    writes without waiting."""
+    import threading
+
+    from access_log_parser_spark import pipeline
+
+    write_routed = pipeline.write_routed
+    lock = threading.Lock()
+    barrier = threading.Barrier(2, timeout=120)
+    state = {"calls": 0, "active": 0, "peak": 0, "groups": set()}
+
+    def gated(df, *args, **kwargs):
+        with lock:
+            state["groups"].add(df.sparkSession.sparkContext.getLocalProperty("spark.jobGroup.id"))
+            state["calls"] += 1
+            call = state["calls"]
+            state["active"] += 1
+            state["peak"] = max(state["peak"], state["active"])
+        try:
+            if fail_first and call == 1:
+                raise RuntimeError("batch write failed")
+            if call <= 2 and not fail_first:
+                barrier.wait()
+            return write_routed(df, *args, **kwargs)
+        finally:
+            with lock:
+                state["active"] -= 1
+
+    monkeypatch.setattr(pipeline, "write_routed", gated)
+    return state
+
+
+def test_overlapped_batches_match_one_batch(spark, tmp_path, monkeypatch):
+    """Two batches run at once, never more, and the run writes the same
+    counters and per-sink rows as one batch; each batch's manifest holds
+    its OWN Observation's counters, read back from its own partitions."""
+    import os
+
+    from access_log_parser_spark.sinks import read_manifests
+    from perfbench import sqlmetrics
+
+    pages = synth_pages(spark, N_PAGES, LINES, UNM_EVERY)
+    one = str(tmp_path / "one")
+    ref = run_pipeline(spark, pages, one, fmt="s3", n_batches=1)
+
+    state = _gated_writes(monkeypatch)
+    many = str(tmp_path / "many")
+    store = sqlmetrics.StatusStore(spark)
+    before = store.last_execution_id()
+    spark.sparkContext.setJobGroup("alp-run", "one pipeline run")
+    try:
+        rep = run_pipeline(spark, pages, many, fmt="s3", n_batches=6)
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+    # the caller's job group (what cancelJobGroup acts on) reaches every batch
+    assert state == {"calls": 6, "active": 0, "peak": 2, "groups": {"alp-run"}}
+    # every batch is its own SQL execution, whose metrics count its own
+    # files: batches in flight at once must not share the thread-local
+    # properties that carry the execution id
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    written_files = sqlmetrics.total(store.metrics_since(before), "number of written files")
+    on_disk = sum(
+        f.endswith(".parquet") for _, _, files in os.walk(os.path.join(many, "data"))
+        for f in files
+    )
+    assert written_files == on_disk > 0
+    assert rep.batches_run == ["0", "1", "2", "3", "4", "5"]
+    assert rep.result.counters() == ref.result.counters()
+    assert _sink_rows(spark, many) == _sink_rows(spark, one)
+
+    written: dict[str, dict[str, int]] = {}
+    for r in read_sink(spark, many).groupBy("batch_id", "status").count().collect():
+        # partition discovery reads the batch_id directories back as ints
+        per = written.setdefault(str(r.batch_id), dict.fromkeys(("matched", "unmatched"), 0))
+        per[r.status] = r["count"]
+    manifests = {m["batch_id"]: m["counters"] for m in read_manifests(many)}
+    assert sorted(manifests) == rep.batches_run
+    assert len({c["total"] for c in manifests.values()}) > 1  # batches differ
+    for batch_id, c in manifests.items():
+        assert c["total"] == sum(written[batch_id].values())
+        assert (c["matched"], c["unmatched"]) == (
+            written[batch_id]["matched"], written[batch_id]["unmatched"]
+        )
+
+
+def test_failed_batch_stops_submission_then_resume_finishes(spark, tmp_path, monkeypatch):
+    """A batch that raises stops further submission; the batch in flight
+    with it finishes before the error is raised, and only it has a
+    manifest. ``resume=True`` then runs exactly the rest, with no
+    duplicate rows, and the lookup is released either way."""
+    from access_log_parser_spark.sinks import read_manifests
+
+    pages = synth_pages(spark, N_PAGES, LINES, UNM_EVERY)
+    lang = spark.createDataFrame(
+        [("en", "English"), ("de", "German")], "lang string, lang_name string"
+    )
+    out = str(tmp_path / "failed")
+    state = _gated_writes(monkeypatch, fail_first=True)
+    with pytest.raises(RuntimeError, match="batch write failed"):
+        run_pipeline(
+            spark, pages, out, fmt="s3", n_batches=4, lookups={"lang": (lang, "lang")}
+        )
+    # the failing batch and the one in flight with it, nothing after them;
+    # the in-flight one has finished by the time the error is raised
+    assert state["calls"] == 2 and state["active"] == 0
+    assert not lang.select("*").storageLevel.useMemory
+    committed = [m["batch_id"] for m in read_manifests(out)]
+    assert len(committed) == 1 and committed[0] in ("0", "1")
+
+    monkeypatch.undo()
+    rep = run_pipeline(
+        spark, pages, out, fmt="s3", n_batches=4, lookups={"lang": (lang, "lang")},
+        resume=True,
+    )
+    assert rep.batches_skipped == committed
+    assert rep.batches_run == [b for b in ("0", "1", "2", "3") if b not in committed]
+    total, matched, unmatched = expected_counts()
+    assert sum(m["counters"]["total"] for m in read_manifests(out)) == total
+    rows = read_sink(spark, out).select("source", "line_no", "status").collect()
+    assert len(rows) == total and len(set(rows)) == total
+    assert sum(r.status == "matched" for r in rows) == matched

@@ -127,3 +127,66 @@ def test_patch_reaches_every_spark_worker(spark):
     ).collect()
     assert any(r.imported for r in rows)  # workers are reused across jobs
     assert all(r.patched == (sys.version_info < (3, 13)) for r in rows)
+
+
+def test_one_worker_pool_env_follows_the_traceback_conf():
+    from access_log_parser_spark.session import _TRACEBACK_CONF, _one_worker_pool
+
+    env = {"spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK": "1"}
+    assert _one_worker_pool({}, False) == env
+    assert _one_worker_pool({_TRACEBACK_CONF: "true"}, False) == env
+    assert _one_worker_pool({_TRACEBACK_CONF: "false"}, False) == {}
+
+
+def test_rdd_and_arrow_tasks_share_one_patched_worker_pool(spark):
+    """A Python-RDD task (what a ``createDataFrame(list)`` lookup runs) and
+    a ``mapInArrow`` task fork from the same daemon, so once the engine has
+    run in the pool, RDD tasks run in patched workers too."""
+    from pyspark.sql import functions as F
+
+    from access_log_parser_spark import parse_documents
+
+    assert spark.sparkContext.environment["SPARK_SIMPLIFIED_TRACEBACK"] == "1"
+    # more tasks than slots: idle workers are reused first-in first-out, so
+    # every worker in the pool runs an engine task
+    pages = spark.range(0, 64, 1, 16).select(
+        F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
+        F.lit("status:200\nbad").alias("text"),
+    )
+    assert parse_documents(pages, "ltsv").count() == 128
+
+    def rdd_probe(_):
+        import os
+        import zipimport
+
+        patched = zipimport.zipimporter.invalidate_caches.__module__
+        yield os.getppid(), patched == "access_log_parser_spark.worker_imports"
+
+    def arrow_probe(batches):
+        import os
+
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pylist([{"daemon": os.getppid()}])
+
+    rdd = spark.sparkContext.parallelize(range(4), 4).mapPartitions(rdd_probe).collect()
+    arrow = spark.range(0, 4, 1, 4).mapInArrow(arrow_probe, "daemon long").collect()
+    daemons = {d for d, _ in rdd} | {r.daemon for r in arrow}
+    assert len(daemons) == 1, daemons
+    assert all(patched == (sys.version_info < (3, 13)) for _, patched in rdd)
+
+
+def test_udf_traceback_stays_simplified(spark):
+    """The shared env keeps SQL Python errors free of PySpark's own frames."""
+    from pyspark.sql import functions as F
+
+    @F.udf("int")
+    def boom(x):
+        raise ValueError("alp-boom")
+
+    with pytest.raises(Exception) as err:
+        spark.range(1).select(boom("id")).collect()
+    assert "alp-boom" in str(err.value)
+    assert "pyspark/worker.py" not in str(err.value)
