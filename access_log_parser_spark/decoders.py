@@ -153,18 +153,6 @@ def compile_plan(patterns: Sequence[re.Pattern]) -> DecodePlan:
     return DecodePlan(patterns, names, twins=tuple(fast_twin(p) for p in patterns))
 
 
-def regex_decode_batch(
-    lines: Sequence[str],
-    patterns: Sequence[re.Pattern],
-    names: Sequence[Sequence[str]] = (),
-) -> tuple[list[int], list[list[str] | None]]:
-    """Decode one batch against a pattern list; see :meth:`DecodePlan.decode`.
-    Builds the plan on every call: loops over batches should build it once
-    with :func:`compile_plan`. ``names`` is accepted for compatibility and
-    unused."""
-    return compile_plan(patterns).decode(lines)
-
-
 def ltsv_decode_batch(
     lines: Sequence[str],
 ) -> tuple[list[list[str] | None], list[list[str] | None]]:

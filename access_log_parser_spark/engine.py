@@ -28,12 +28,16 @@ Surfaces:
 
   - :func:`parse_documents` takes whole documents and is one
     ``mapInArrow`` stage: it splits each text with the scanner's exact
-    ``bufio.ScanLines`` model, passes the reference's per-document
-    ``isFirst`` to the handler (so the TSV header needs no window), and
-    hands carried document columns back as Arrow arrays. The pipeline and
-    the streaming surface use it;
+    ``bufio.ScanLines`` model and hands carried document columns back as
+    Arrow arrays. The Parser verbs, the pipeline and the streaming surface
+    use it;
   - :func:`parse_routed` takes exploded lines through ``mapInArrow``, for
-    callers that already hold lines (string/file/zip parsers, the bench);
+    callers that already hold lines (the bench, the registry queries);
+
+  ``isFirst`` has one model, in the router: the handler gets True for the
+  first line of each input that reaches it (parser_core.go:182,245), an
+  input being a document for :func:`parse_documents` and a ``source`` for
+  :func:`parse_routed`. No window over ``source`` fixes it up afterwards.
 - :func:`extract_fields` / :func:`extract_ltsv` — the Spark-native
   structured surface: typed string columns (union of capture groups) for
   SQL, joins and aggregation. Both hop through ``mapInArrow`` and build
@@ -42,11 +46,12 @@ Surfaces:
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Callable, Iterator, Sequence
 from dataclasses import dataclass
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -85,6 +90,15 @@ ROUTED_SCHEMA = StructType(
 )
 
 
+# built-in handlers that never read isFirst (handler.go:15-96)
+_FLAGLESS_HANDLERS = ("json", "pretty_json", "kv", "ltsv")
+
+# the key no input has: the first line to reach a task's handler is first
+_NO_KEY = object()
+
+_BATCH_ROWS_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
 def _resolve_patterns(fmt: str | Sequence[str]) -> list[str] | None:
     """fmt is 'ltsv', a preset name, or an explicit pattern list."""
     if isinstance(fmt, str):
@@ -104,7 +118,7 @@ class _RouteSpec:
     labels_sel: tuple[str, ...]
     add_no: bool
     handler: Callable[[Sequence[str], Sequence[str], bool], str]
-    is_tsv: bool
+    reads_first: bool
     filter_exprs: tuple[str, ...]
     emit_unmatch: bool
 
@@ -122,17 +136,16 @@ class _RouteSpec:
         # value) still abort at execution, matching parser_core.go:220-223.
         compile_filters(opt.filters)
         handler = opt.resolve_handler()
-        # identity check, not just the name: Option(line_handler=
-        # handlers.tsv_line_handler) (the callable spelling of the same
-        # built-in) must get the first-matched-per-source header row too
-        is_tsv = opt.line_handler == "tsv" or handler is HANDLERS.get("tsv")
+        # identity check, not the name: every built-in but tsv ignores
+        # isFirst, while tsv and any user callable may read it
+        reads_first = not any(handler is HANDLERS[n] for n in _FLAGLESS_HANDLERS)
         return cls(
             pattern_strs=pattern_strs,
             skip_set=frozenset(int(s) for s in opt.skip_lines),
             labels_sel=tuple(opt.labels),
             add_no=bool(opt.line_number),
             handler=handler,
-            is_tsv=is_tsv,
+            reads_first=reads_first,
             filter_exprs=tuple(opt.filters),
             emit_unmatch=bool(opt.unmatch_lines),
         )
@@ -152,30 +165,30 @@ class _Router:
     spec: _RouteSpec
     plan: decoders.DecodePlan | None
     filt: list
+    # key of the last line that reached the handler, across the batches
+    # of one task
+    last_key: object = _NO_KEY
 
     def route(
         self,
         raws: list[str],
         line_nos: list[int],
-        doc_ids: list[int] | None = None,
-    ) -> tuple[list[str], list[int], list[str | None], list[str | None]]:
+        keys: Sequence[object],
+    ) -> tuple[list[str], list[int], list[str | None]]:
         """The reference's per-line loop over one batch: skip-check ->
         decode -> unmatched? -> filter -> selectLabels -> addLineNumber ->
         LineHandler (parser_core.go:176-254).
 
-        Returns (status, pattern_id, out_line, tsv_header). With
-        ``doc_ids`` (one per line, lines of a document contiguous) the
-        handler gets the reference's ``isFirst``: True for the first line
-        of each document that reaches it. Without, it always gets False and
-        a TSV run returns each output line's header row for the caller to
-        attach; otherwise ``tsv_header`` is all None."""
+        ``keys`` names each line's input, the lines of one input contiguous
+        and in ``line_no`` order. The handler gets the reference's
+        ``isFirst`` (parser_core.go:182,245): True when the line's key
+        differs from that of the last line that reached the handler.
+        Returns (status, pattern_id, out_line)."""
         spec, plan, filt = self.spec, self.plan, self.filt
         n = len(raws)
         status = [MATCHED] * n
         pids = [-1] * n
         out: list[str | None] = [None] * n
-        headers: list[str | None] = [None] * n
-        want_headers = spec.is_tsv and doc_ids is None
 
         live_idx = []
         for i, ln in enumerate(line_nos):
@@ -205,7 +218,7 @@ class _Router:
                     pids[i] = 0
 
         handler = spec.handler
-        last_doc = None
+        last_key = self.last_key
         for i in live_idx:
             ls = row_ls[i]
             if ls is None:
@@ -222,28 +235,24 @@ class _Router:
             if spec.add_no:
                 ls = ["no", *ls]
                 vs = [str(line_nos[i]), *vs]
-            if doc_ids is None:
-                out[i] = handler(ls, vs, False)
-                if want_headers:
-                    headers[i] = "\t".join(ls)
-            else:
-                out[i] = handler(ls, vs, doc_ids[i] != last_doc)
-                last_doc = doc_ids[i]
-        return status, pids, out, headers
+            key = keys[i]
+            out[i] = handler(ls, vs, key != last_key)
+            last_key = key
+        self.last_key = last_key
+        return status, pids, out
 
 
 def _route_arrays(
     router: _Router,
     raws: list[str],
     line_nos: list[int],
-    doc_ids: list[int] | None = None,
-) -> tuple[list[pa.Array], list[str | None]]:
+    keys: Sequence[object],
+) -> list[pa.Array]:
     """Route one batch and build its (status, pattern_id, out_line, raw)
     Arrow arrays; ``raw`` is kept only on unmatched rows, for the errors
-    sink (parser_result.go:32-36). Also returns the TSV header rows
-    (:meth:`_Router.route`)."""
-    status, pids, out, headers = router.route(raws, line_nos, doc_ids)
-    arrays = [
+    sink (parser_result.go:32-36)."""
+    status, pids, out = router.route(raws, line_nos, keys)
+    return [
         pa.array(status, pa.string()),
         pa.array(pids, pa.int32()),
         pa.array(out, pa.string()),
@@ -252,7 +261,6 @@ def _route_arrays(
             pa.string(),
         ),
     ]
-    return arrays, headers
 
 
 def parse_routed(
@@ -271,44 +279,67 @@ def parse_routed(
     produces no output) and unmatched rows keep ``raw`` for the errors
     sink (parser_result.go:32-36).
 
-    Divergence from the reference: lines arrive one by one, not per
-    document, so the line handler is always called with
-    ``is_first=False``. The reference passes True for the first line of
-    each input that reaches the handler (parser_core.go:182,245). The
-    built-in ``tsv`` handler's header row is restored by a window over
-    ``source`` (one header per source, so two documents sharing a source
-    get one between them); a custom callable never sees True. Use
-    :func:`parse_documents` for the reference's per-document ``isFirst``.
+    Each ``source`` is one input: the handler gets ``is_first=True`` for
+    the first line of each source that reaches it. When the handler can
+    read that flag (``tsv`` or a user callable), the lines are
+    hash-partitioned by ``source`` and sorted by ``(source, line_no)``
+    ahead of the hop, one Exchange; the other built-ins run where the
+    lines already are.
 
     ``fast_parse_routed`` is the same function under its old name, kept
     for callers that still use it (the perfbench workloads).
     """
     opt = opt or Option()
     spec = _RouteSpec.build(fmt, opt)
-    out_schema = StructType(
-        ROUTED_SCHEMA.fields
-        + ([StructField("tsv_header", StringType())] if spec.is_tsv else [])
-    )
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         router = spec.compile()
         for batch in batches:
-            line_nos = batch.column(1)
-            arrays, headers = _route_arrays(
-                router, batch.column(2).to_pylist(), line_nos.to_pylist()
+            sources, line_nos = batch.column(0), batch.column(1)
+            # flagless handlers ignore isFirst: one key for every line
+            keys = sources.to_pylist() if spec.reads_first else [None] * batch.num_rows
+            arrays = _route_arrays(
+                router, batch.column(2).to_pylist(), line_nos.to_pylist(), keys
             )
-            arrays = [batch.column(0), line_nos, *arrays]
-            if spec.is_tsv:
-                arrays.append(pa.array(headers, pa.string()))
-            yield pa.RecordBatch.from_arrays(arrays, names=out_schema.fieldNames())
+            yield pa.RecordBatch.from_arrays(
+                [sources, line_nos, *arrays], names=ROUTED_SCHEMA.fieldNames()
+            )
 
-    routed = lines_df.select(
+    lines = lines_df.select(
         F.col("source").cast("string"), F.col("line_no").cast("long"), "raw"
-    ).mapInArrow(run, out_schema)
-    return _finalize_routed(routed, spec.is_tsv, opt)
+    )
+    if spec.reads_first:
+        lines = lines.repartition("source").sortWithinPartitions("source", "line_no")
+    return _finalize_routed(lines.mapInArrow(run, ROUTED_SCHEMA), opt)
 
 
 fast_parse_routed = parse_routed
+
+
+def _line_chunks(
+    texts: list[str], size: int
+) -> Iterator[tuple[list[int], list[int], list[str]]]:
+    """The lines of ``texts`` in order, split with ``bufio.ScanLines``
+    semantics, as (document index, line_no, raw) lists of at most ``size``
+    lines (no limit when ``size <= 0``); a long document spans several."""
+    size = size if size > 0 else sys.maxsize
+    doc_ids: list[int] = []
+    line_nos: list[int] = []
+    raws: list[str] = []
+    for d, text in enumerate(texts):
+        lines = _scan_lines(text)
+        lo = 0
+        while lo < len(lines):
+            hi = min(len(lines), lo + size - len(raws))
+            doc_ids.extend([d] * (hi - lo))
+            line_nos.extend(range(lo + 1, hi + 1))
+            raws.extend(lines[lo:hi])
+            lo = hi
+            if len(raws) == size:
+                yield doc_ids, line_nos, raws
+                doc_ids, line_nos, raws = [], [], []
+    if raws:
+        yield doc_ids, line_nos, raws
 
 
 def parse_documents(
@@ -326,39 +357,41 @@ def parse_documents(
     :func:`.sources.text.explode_lines` follows) and its lines run the same
     core as :func:`parse_routed`. Returns (source, line_no, status,
     pattern_id, out_line, raw, *keep): ``explode_lines(keep=keep)`` then
-    ``parse_routed`` row for row, except that the line handler gets
-    ``is_first=True`` for the first line of each DOCUMENT that reaches it,
-    as in the reference (parser_core.go:182,245). So the ``tsv`` header
-    row needs no window, a url on two pages gets a header on each, and a
-    custom handler sees ``isFirst``. The ``keep`` columns are the
-    document's own Arrow values repeated per line (``pa.Array.take``),
-    never converted to Python.
+    ``parse_routed`` row for row, except that each DOCUMENT is one input:
+    the line handler gets ``is_first=True`` for the first line of each
+    document that reaches it, as in the reference (parser_core.go:182,245),
+    so a url on two pages gets a ``tsv`` header on each. The ``keep``
+    columns are the document's own Arrow values repeated per line
+    (``pa.Array.take``), never converted to Python. Lines are routed and
+    yielded at most ``spark.sql.execution.arrow.maxRecordsPerBatch`` at a
+    time, so a whole file (``parse_file``) spans several output batches
+    instead of building one that grows with the file.
     """
     opt = opt or Option()
     spec = _RouteSpec.build(fmt, opt)
     keep = list(keep)
     out_schema = StructType(ROUTED_SCHEMA.fields + [docs.schema[c] for c in keep])
 
+    size = int(docs.sparkSession.conf.get(_BATCH_ROWS_CONF, "10000"))
+
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         router = spec.compile()
         for batch in batches:
-            doc_ids: list[int] = []
-            line_nos: list[int] = []
-            raws: list[str] = []
-            for d, text in enumerate(batch.column(1).to_pylist()):
-                lines = _scan_lines(text)
-                doc_ids.extend([d] * len(lines))
-                line_nos.extend(range(1, len(lines) + 1))
-                raws.extend(lines)
-            arrays, _ = _route_arrays(router, raws, line_nos, doc_ids)
-            take = pa.array(doc_ids, pa.int32())
-            arrays = [
-                batch.column(0).take(take),
-                pa.array(line_nos, pa.int64()),
-                *arrays,
-            ]
-            arrays.extend(batch.column(2 + k).take(take) for k in range(len(keep)))
-            yield pa.RecordBatch.from_arrays(arrays, names=out_schema.fieldNames())
+            # a document never spans two Arrow batches: its index in the
+            # batch is the input key
+            router.last_key = _NO_KEY
+            for doc_ids, line_nos, raws in _line_chunks(
+                batch.column(1).to_pylist(), size
+            ):
+                arrays = _route_arrays(router, raws, line_nos, doc_ids)
+                take = pa.array(doc_ids, pa.int32())
+                arrays = [
+                    batch.column(0).take(take),
+                    pa.array(line_nos, pa.int64()),
+                    *arrays,
+                ]
+                arrays.extend(batch.column(2 + k).take(take) for k in range(len(keep)))
+                yield pa.RecordBatch.from_arrays(arrays, names=out_schema.fieldNames())
 
     text = F.col(text_col)
     routed = (
@@ -366,28 +399,11 @@ def parse_documents(
         .select(F.col(source_col).alias("source"), text.alias("text"), *keep)
         .mapInArrow(run, out_schema)
     )
-    return _finalize_routed(routed, False, opt)
+    return _finalize_routed(routed, opt)
 
 
-def _finalize_routed(routed: DataFrame, is_tsv: bool, opt: Option) -> DataFrame:
-    """Catalyst-side finalization shared by both routed entries: the TSV
-    first-matched-per-source header (lines-in only, from the hop's
-    ``tsv_header`` column), then prefix decoration."""
-    if is_tsv:
-        # isFirst = first matched line per source (parser_core.go:182,245);
-        # a single partition-window min, no global sort.
-        w = Window.partitionBy("source")
-        first_line = F.min(
-            F.when(F.col("status") == MATCHED, F.col("line_no"))
-        ).over(w)
-        routed = routed.withColumn(
-            "out_line",
-            F.when(
-                (F.col("status") == MATCHED) & (F.col("line_no") == first_line),
-                F.concat_ws("\n", F.col("tsv_header"), F.col("out_line")),
-            ).otherwise(F.col("out_line")),
-        ).drop("tsv_header")
-
+def _finalize_routed(routed: DataFrame, opt: Option) -> DataFrame:
+    """Catalyst-side prefix decoration, shared by both routed entries."""
     if opt.prefix:
         # applyPrefix (parser_core.go:323-334), multi-line aware for matched
         # output; unmatched raws get the single-line UNMATCHED prefix

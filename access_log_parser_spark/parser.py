@@ -22,15 +22,10 @@ from pyspark.sql import functions as F
 
 from . import patterns as pat
 from .decoders import NoPatternError
-from .engine import parse_routed
+from .engine import parse_documents, parse_routed
 from .metrics import Result, collect_result
 from .options import Option
-from .sources import (
-    lines_from_files,
-    lines_from_gzip,
-    lines_from_string,
-    lines_from_zip_entries,
-)
+from .sources import docs_from_files, docs_from_string, docs_from_zip_entries
 from .sources.text import basename
 
 
@@ -130,12 +125,30 @@ class BaseParser:
             .collect()
         ]
 
-    def _run(self, lines_df: DataFrame, source: str = "") -> tuple[list[str], Result]:
+    def _run(
+        self, docs: DataFrame, source: str = "", zip_entries: bool = False
+    ) -> tuple[list[str], Result]:
+        """Parse (source, text) documents, each one input to the handler,
+        and collect the ordered output and the Result. The routed frame is
+        persisted for the verb's actions, so each line is parsed once."""
         start = time.monotonic()
         with self._in_job_group():
-            routed = self.parse_lines(lines_df)
-            out = self._ordered_output(routed)
-            result = collect_result(routed, source=source, max_errors=None)
+            routed = parse_documents(
+                docs, self._format(), self.opt, source_col="source"
+            ).persist()
+            try:
+                out = self._ordered_output(routed)
+                result = collect_result(
+                    routed, source=source, max_errors=None, tag_entries=zip_entries
+                )
+                if zip_entries:
+                    # the entries that yield at least one line
+                    result.zip_entries = [
+                        r["source"]
+                        for r in routed.select("source").distinct().orderBy("source").collect()
+                    ]
+            finally:
+                routed.unpersist()
         result.elapsed_time = time.monotonic() - start
         return out, result
 
@@ -152,19 +165,19 @@ class BaseParser:
                 s = s.decode("utf-8")
         else:
             s = "\n".join(reader)
-        out, r = self._run(lines_from_string(self.spark, s))
+        out, r = self._run(docs_from_string(self.spark, s))
         r.input_type = "stream"
         return out, r
 
     def parse_string(self, s: str) -> tuple[list[str], Result]:
-        out, r = self._run(lines_from_string(self.spark, s))
+        out, r = self._run(docs_from_string(self.spark, s))
         r.input_type = "string"
         return out, r
 
     def parse_file(self, path: str) -> tuple[list[str], Result]:
         _check_path(path)
         out, r = self._run(
-            lines_from_files(self.spark, _reader_path(path)), source=basename(path)
+            docs_from_files(self.spark, _reader_path(path)), source=basename(path)
         )
         r.input_type = "file"
         return out, r
@@ -172,7 +185,7 @@ class BaseParser:
     def parse_gzip(self, path: str) -> tuple[list[str], Result]:
         _check_path(path)
         out, r = self._run(
-            lines_from_gzip(self.spark, _reader_path(path)), source=basename(path)
+            docs_from_files(self.spark, _reader_path(path)), source=basename(path)
         )
         r.input_type = "gzip"
         return out, r
@@ -183,21 +196,13 @@ class BaseParser:
         """Per-entry parses merged into one Result: counters summed, errors
         tagged with entry name, entry list appended (parser_core.go:140-171)."""
         _check_path(zip_path)
-        start = time.monotonic()
-        with self._in_job_group():
-            lines = lines_from_zip_entries(self.spark, zip_path, glob_pattern)
-            routed = self.parse_lines(lines.select("source", "line_no", "raw"))
-            out = self._ordered_output(routed)
-            agg = collect_result(
-                routed, source=basename(zip_path), max_errors=None, tag_entries=True
-            )
-            agg.zip_entries = [
-                r["source"]
-                for r in lines.select("source").distinct().orderBy("source").collect()
-            ]
-        agg.elapsed_time = time.monotonic() - start
-        agg.input_type = "zip"
-        return out, agg
+        out, r = self._run(
+            docs_from_zip_entries(self.spark, zip_path, glob_pattern),
+            source=basename(zip_path),
+            zip_entries=True,
+        )
+        r.input_type = "zip"
+        return out, r
 
 
 class RegexParser(BaseParser):

@@ -82,19 +82,12 @@ def write_routed(
     routed: DataFrame,
     out_dir: str,
     mode: str = "append",
-    coalesce_output: bool = False,
-    sort_within: tuple[str, ...] = (),
     extra_partition_cols: tuple[str, ...] = (),
     iceberg_table: str | None = None,
 ) -> None:
     """One-pass fan-out: dynamic-partitioned write keyed by (status,
     pattern_id). Every sink table is a partition subtree:
     ``{out_dir}/data/status=matched/pattern_id=0/...``
-
-    ``sort_within`` sorts rows inside each task before writing (no
-    shuffle): clustered (source, line_no) runs compress better under
-    parquet RLE/dictionary and give downstream per-source readers
-    locality — the cheap part of a Z-order story.
 
     ``extra_partition_cols`` are prepended to the partition keys: the
     pipeline passes ``("batch_id",)`` with ``mode="overwrite"`` so that
@@ -107,19 +100,11 @@ def write_routed(
     DataFrameWriterV2 into that Iceberg table instead of the parquet
     directory — a config change, not a code change, on a real cluster.
     Without the runtime the parquet layout below is used regardless."""
-    df = routed
     if iceberg_table is not None and iceberg_available(routed.sparkSession):
-        if sort_within:
-            df = df.sortWithinPartitions(*sort_within)
-        _write_routed_iceberg(df, iceberg_table, mode, extra_partition_cols)
+        _write_routed_iceberg(routed, iceberg_table, mode, extra_partition_cols)
         return
-    if sort_within:
-        df = df.sortWithinPartitions(*sort_within)
-    if coalesce_output:
-        # small local runs: avoid a forest of tiny files
-        df = df.coalesce(1)
     (
-        df.write.mode(mode)
+        routed.write.mode(mode)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*extra_partition_cols, *SINK_PARTITION_KEYS)
         .parquet(os.path.join(out_dir, "data"))

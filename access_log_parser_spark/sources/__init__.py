@@ -1,15 +1,9 @@
-from .text import (
-    explode_lines,
-    lines_from_files,
-    lines_from_gzip,
-    lines_from_string,
-)
-from .ziparchive import lines_from_zip_entries
+from .text import docs_from_files, docs_from_string, explode_lines
+from .ziparchive import docs_from_zip_entries
 
 __all__ = [
+    "docs_from_files",
+    "docs_from_string",
+    "docs_from_zip_entries",
     "explode_lines",
-    "lines_from_files",
-    "lines_from_gzip",
-    "lines_from_string",
-    "lines_from_zip_entries",
 ]

@@ -1,4 +1,4 @@
-"""Line sources: string / file / gzip / document-text scans.
+"""Text sources: string / file / gzip documents and the line scan.
 
 The reference scans lines with ``bufio.Scanner`` and its default split
 function ``bufio.ScanLines`` (reference ``parser_core.go:190-201``).
@@ -9,7 +9,8 @@ input yields no line at all. Line numbers are 1-based per source.
 :func:`explode_lines` reproduces exactly that with pure Catalyst
 expressions and no regex, so document-level predicates still push down to
 the scan and no Python runs. ``ziparchive._scan_lines`` is the same
-semantics in plain Python, used for zip entries and as the test oracle.
+semantics in plain Python: ``engine.parse_documents`` (every Parser verb)
+splits documents with it, and it is the test oracle.
 """
 
 from __future__ import annotations
@@ -62,33 +63,25 @@ def explode_lines(
     )
 
 
-def lines_from_string(spark: SparkSession, s: str, source: str = "") -> DataFrame:
-    """ParseString equivalent (parser_core.go:92-99)."""
-    df = spark.createDataFrame([(source, s)], "source string, text string")
-    return explode_lines(df, text_col="text", source_col="source")
+def docs_from_string(spark: SparkSession, s: str, source: str = "") -> DataFrame:
+    """ParseString equivalent (parser_core.go:92-99): one (source, text)
+    document."""
+    return spark.createDataFrame([(source, s)], "source string, text string")
 
 
-def lines_from_files(spark: SparkSession, path: str) -> DataFrame:
-    """ParseFile equivalent (parser_core.go:104-117); ``source`` is the file
-    basename (parser_core.go:114). ``wholetext`` keeps exact per-file line
-    numbering; Spark distributes across files (one split per file), which is
+def docs_from_files(spark: SparkSession, path: str) -> DataFrame:
+    """ParseFile / ParseGzip equivalent (parser_core.go:104-135): one
+    (source, text) document per file, ``source`` being the file basename
+    (parser_core.go:114). Hadoop's codec layer decompresses ``*.gz``
+    transparently. ``wholetext`` keeps each file whole, so line numbers
+    restart per file; Spark distributes across files (one split per file),
     the right granularity for many-file log corpora."""
     # NB: .option("wholetext", ...) is silently ignored by the Spark 4.1
     # text reader; only the reader kwarg applies the whole-file mode
-    df = (
-        spark.read.text(path, wholetext=True)
-        .select(
-            F.element_at(F.split(F.input_file_name(), "/"), -1).alias("source"),
-            F.col("value").alias("text"),
-        )
+    return spark.read.text(path, wholetext=True).select(
+        F.element_at(F.split(F.input_file_name(), "/"), -1).alias("source"),
+        F.col("value").alias("text"),
     )
-    return explode_lines(df, text_col="text", source_col="source")
-
-
-def lines_from_gzip(spark: SparkSession, path: str) -> DataFrame:
-    """ParseGzip equivalent (parser_core.go:122-135): Hadoop's codec layer
-    decompresses ``*.gz`` transparently, so this is the same scan."""
-    return lines_from_files(spark, path)
 
 
 def basename(path: str) -> str:

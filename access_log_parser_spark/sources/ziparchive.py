@@ -5,11 +5,12 @@ fresh parse per entry so line numbers (and the TSV header) restart per
 entry (`/root/reference/parser_core.go:140-171,525-547`).
 
 Spark has no zip codec, so archives are read with the ``binaryFile``
-source and entries are expanded inside a ``mapInPandas`` stage (one
-archive per task — archives parallelize across the cluster; entries within
-one archive are sequential, matching the reference's model). ``source`` is
-the ENTRY name, so downstream per-source grouping reproduces the per-entry
-partial -> per-archive final merge (parser_core.go:152-163).
+source and expanded inside a ``mapInArrow`` stage into one document per
+entry (one archive per task — archives parallelize across the cluster;
+entries within one archive are sequential, matching the reference's
+model). ``source`` is the ENTRY name, so each entry is one input to
+``engine.parse_documents`` and per-source grouping reproduces the
+per-entry partial -> per-archive final merge (parser_core.go:152-163).
 """
 
 from __future__ import annotations
@@ -18,16 +19,15 @@ import io
 import zipfile
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
-ZIP_LINES_SCHEMA = StructType(
+ZIP_DOCS_SCHEMA = StructType(
     [
         StructField("archive", StringType()),
         StructField("source", StringType()),
-        StructField("line_no", LongType()),
-        StructField("raw", StringType()),
+        StructField("text", StringType()),
     ]
 )
 
@@ -37,8 +37,8 @@ def _scan_lines(text: str) -> list[str]:
     ``\\n``, then drop one trailing ``\\r`` per token (``dropCR``, which
     Go applies to the unterminated last token too). Empty input has no
     lines. ``sources.text.explode_lines`` must agree with this row for row,
-    and ``engine.parse_documents`` splits documents with it
-    (tests/test_scanner.py)."""
+    and ``engine.parse_documents`` splits documents (zip entries included)
+    with it (tests/test_scanner.py)."""
     if text == "":
         return []
     if text.endswith("\n"):
@@ -46,10 +46,10 @@ def _scan_lines(text: str) -> list[str]:
     return [ln[:-1] if ln.endswith("\r") else ln for ln in text.split("\n")]
 
 
-def lines_from_zip_entries(
+def docs_from_zip_entries(
     spark: SparkSession, zip_path: str, glob_pattern: str = "*"
 ) -> DataFrame:
-    """(archive, source=entry, line_no, raw) for glob-matching entries.
+    """(archive, source=entry, text) for glob-matching entries.
 
     Entry names are matched with Go ``filepath.Match`` semantics
     (functions/go_glob.py): ``*``/``?`` do not cross ``/`` and a
@@ -59,23 +59,22 @@ def lines_from_zip_entries(
 
     glob_re = translate(glob_pattern)  # driver-side validation, Go-faithful
     bins = spark.read.format("binaryFile").load(zip_path).select("path", "content")
+    names = ZIP_DOCS_SCHEMA.fieldNames()
 
-    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple[str, str, int, str]] = []
-            for path, content in zip(pdf["path"], pdf["content"]):
+    def expand(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            cols: tuple[list[str], list[str], list[str]] = ([], [], [])
+            paths, contents = batch.column(0).to_pylist(), batch.column(1).to_pylist()
+            for path, content in zip(paths, contents):
                 base = path.rsplit("/", 1)[-1]
-                with zipfile.ZipFile(io.BytesIO(bytes(content))) as zf:
+                with zipfile.ZipFile(io.BytesIO(content)) as zf:
                     for info in zf.infolist():
                         if glob_re.match(info.filename) is None:
                             continue
-                        lines = _scan_lines(
-                            zf.read(info).decode("utf-8", errors="replace")
-                        )
-                        rows.extend(
-                            (base, info.filename, i + 1, ln)
-                            for i, ln in enumerate(lines)
-                        )
-            yield pd.DataFrame(rows, columns=["archive", "source", "line_no", "raw"])
+                        cols[0].append(base)
+                        cols[1].append(info.filename)
+                        cols[2].append(zf.read(info).decode("utf-8", errors="replace"))
+            arrays = [pa.array(c, pa.string()) for c in cols]
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    return bins.mapInPandas(expand, ZIP_LINES_SCHEMA)
+    return bins.mapInArrow(expand, ZIP_DOCS_SCHEMA)

@@ -66,7 +66,7 @@ def test_twin_identical_to_original_on_adversarial_lines(pattern):
         '1.2.3.4\t-\tu\t[12/Mar/2023:10:55:36 +0000]\t"GET / HTTP/1.1"\t200\t1',
         '1.2.3.4\t-\tu\t[tab\tin brackets]\t"GET / HTTP/1.1"\t200\t1\t"-"\t"ua"',
     ]
-    pids, vals = decoders.regex_decode_batch(lines, [orig], [["x"]])
+    pids, vals = decoders.compile_plan([orig]).decode(lines)
     for line, pid, val in zip(lines, pids, vals):
         m = orig.search(line)  # plain engine, no twin
         if m is None:
@@ -88,7 +88,7 @@ def test_non_mandatory_tab_patterns_get_no_twin():
     optional = re.compile('^(?P<a>\\S+)\t(?:x\t)?(?P<b>[^"]*)$')
     assert fast_twin(optional) is None
     line = "hdr\tfoo\tbar"
-    pids, vals = decoders.regex_decode_batch([line], [optional], [["a", "b"]])
+    pids, vals = decoders.compile_plan([optional]).decode([line])
     assert pids[0] == 0 and vals[0] == ["hdr", "foo\tbar"]
 
     # tab inside an alternation branch: skippable via the other branch
@@ -105,7 +105,7 @@ def test_non_mandatory_tab_patterns_get_no_twin():
     # line's tab count equals n_tabs=1)
     bare_opt = re.compile('^(?P<a>[^"]*)q\t?(?P<b>\\S+)$')
     assert fast_twin(bare_opt) is None
-    pids, vals = decoders.regex_decode_batch(["x\tyqz"], [bare_opt], [["a", "b"]])
+    pids, vals = decoders.compile_plan([bare_opt]).decode(["x\tyqz"])
     assert pids[0] == 0 and vals[0] == ["x\ty", "z"]
     assert fast_twin(re.compile('^(?P<a>[^"]*)q\t*(?P<b>\\S+)$')) is None
     assert fast_twin(re.compile('^(?P<a>[^"]*)q\t{0,2}(?P<b>\\S+)$')) is None
@@ -124,7 +124,7 @@ def test_optional_tab_pattern_identical_through_batch_decoder():
     the plain engine and return the original's group values."""
     pat = re.compile('^(?P<a>\\S+)\t(?:x\t)?(?P<b>[^"]*)$')
     lines = ["hdr\tfoo\tbar", "hdr\tx\tval", "hdr\tonly", "no-tabs"]
-    pids, vals = decoders.regex_decode_batch(lines, [pat], [["a", "b"]])
+    pids, vals = decoders.compile_plan([pat]).decode(lines)
     for line, pid, val in zip(lines, pids, vals):
         m = pat.search(line)
         if m is None:
@@ -175,7 +175,7 @@ try:
         pattern = [CLOUDFRONT[0], APACHE_CLF[2], APACHE_CLF[3]][which]
         orig = re.compile(pattern)
         line = "\t".join(parts)
-        pids, vals = decoders.regex_decode_batch([line], [orig], [["x"]])
+        pids, vals = decoders.compile_plan([orig]).decode([line])
         m = orig.search(line)
         if m is None:
             assert pids[0] == -1 and vals[0] is None
@@ -238,7 +238,7 @@ try:
         # guard lets the twin (if any) take over
         n_tabs = "".join(parts).count("\\t")
         probe = lines + ["\t".join(["ab"] * (n_tabs + 1)), "\t" * n_tabs]
-        pids, vals = decoders.regex_decode_batch(probe, [orig], [names])
+        pids, vals = decoders.compile_plan([orig]).decode(probe)
         for line, pid, val in zip(probe, pids, vals):
             m = orig.search(line)
             if m is None:

@@ -17,7 +17,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from access_log_parser_spark import patterns as pat
-from access_log_parser_spark.decoders import ltsv_decode_batch, regex_decode_batch
+from access_log_parser_spark.decoders import compile_plan, ltsv_decode_batch
 from access_log_parser_spark.handlers import (
     json_line_handler,
     ltsv_line_handler,
@@ -68,8 +68,7 @@ def test_ltsv_handler_round_trips_through_decoder(pairs):
 @settings(max_examples=300, deadline=None)
 def test_regex_decode_total(line):
     compiled = [pat.validate_pattern(p) for p in pat.PRESETS["s3"]]
-    names = [pat.group_names(p) for p in compiled]
-    pids, vals = regex_decode_batch([line], compiled, names)
+    pids, vals = compile_plan(compiled).decode([line])
     if pids[0] >= 0:
         assert len(vals[0]) == compiled[pids[0]].groups
     else:

@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from access_log_parser_spark import LTSVParser, Option
-from access_log_parser_spark.sources.text import explode_lines, lines_from_string
+from access_log_parser_spark.sources.text import docs_from_string, explode_lines
 from access_log_parser_spark.sources.ziparchive import _scan_lines
 
 # input -> the reference's tokens
@@ -38,7 +38,8 @@ def test_scan_lines_golden(text, expected):
 
 @pytest.mark.parametrize("text,expected", GOLDEN, ids=[repr(t) for t, _ in GOLDEN])
 def test_lines_from_string_golden(spark, text, expected):
-    rows = lines_from_string(spark, text, source="s").orderBy("line_no").collect()
+    lines = explode_lines(docs_from_string(spark, text, source="s"), source_col="source")
+    rows = lines.orderBy("line_no").collect()
     assert [(r.source, r.line_no, r.raw) for r in rows] == [
         ("s", i + 1, ln) for i, ln in enumerate(expected)
     ]
@@ -155,7 +156,9 @@ ROUTED_COLS = ("source", "line_no", "status", "pattern_id", "out_line", "raw")
 def test_parse_documents_matches_explode_then_parse_routed_fuzz(spark):
     """``parse_documents`` is ``explode_lines`` -> ``parse_routed`` row for
     row, on random texts over the scanner's characters mixed with LTSV and
-    S3 golden lines, for both decoders."""
+    S3 golden lines, for both decoders. Every url is unique, so a document
+    and a source are the same input and the handlers that read ``isFirst``
+    (``tsv`` and one that prints it) must agree too."""
     import golden_ltsv as gl
     import golden_s3 as gs
     from hypothesis import given, settings, strategies as st
@@ -167,7 +170,14 @@ def test_parse_documents_matches_explode_then_parse_routed_fuzz(spark):
          gs.L1, gs.L3, gs.L5, gs.L4_TRUNC]
     )
     texts = st.lists(tokens, max_size=10).map("".join)
-    opt = Option(line_number=True, unmatch_lines=True)
+
+    def flag(labels, values, is_first):
+        return f"{is_first}|" + "|".join(values)
+
+    opts = [
+        Option(line_number=True, unmatch_lines=True, line_handler=h)
+        for h in ("json", "tsv", flag)
+    ]
 
     @given(st.lists(texts, min_size=1, max_size=8))
     @settings(max_examples=25, deadline=None)
@@ -175,9 +185,10 @@ def test_parse_documents_matches_explode_then_parse_routed_fuzz(spark):
         docs = _literal_docs(spark, batch)
         lines = explode_lines(docs)
         for fmt in ("ltsv", "s3"):
-            got = parse_documents(docs, fmt, opt).select(*ROUTED_COLS).collect()
-            want = parse_routed(lines, fmt, opt).select(*ROUTED_COLS).collect()
-            assert sorted(map(tuple, got)) == sorted(map(tuple, want)), fmt
+            for opt in opts:
+                got = parse_documents(docs, fmt, opt).select(*ROUTED_COLS).collect()
+                want = parse_routed(lines, fmt, opt).select(*ROUTED_COLS).collect()
+                assert sorted(map(tuple, got)) == sorted(map(tuple, want)), (fmt, opt)
 
     check()
 
@@ -185,8 +196,8 @@ def test_parse_documents_matches_explode_then_parse_routed_fuzz(spark):
 def test_custom_handler_is_first_once_per_document(spark):
     """The reference passes ``isFirst`` True to the handler for the first
     line of each input that reaches it (parser_core.go:182,245):
-    ``parse_documents`` does, per document even when two share a url;
-    ``parse_routed`` sees lines, not documents, and always passes False."""
+    ``parse_documents`` does per document, even when two share a url;
+    ``parse_routed`` does per source."""
     from access_log_parser_spark import parse_documents, parse_routed
 
     def handler(labels, values, is_first):
@@ -215,7 +226,74 @@ def test_custom_handler_is_first_once_per_document(spark):
         ("u1", 4, "False|3"),
         ("u2", 3, "True|5"),
     ]
+    # the two "dup" pages are one source, so exactly one of their tied
+    # line-2 rows is first
     routed = parse_routed(explode_lines(docs), "ltsv", opt)
-    assert {r.out_line.split("|")[0] for r in routed.filter("status = 'matched'").collect()} == {
-        "False"
-    }
+    got = sorted(
+        (r.source, r.line_no, r.out_line.split("|")[0])
+        for r in routed.filter("status = 'matched'").collect()
+    )
+    assert got == [
+        ("dup", 2, "False"),
+        ("dup", 2, "True"),
+        ("u1", 2, "True"),
+        ("u1", 3, "False"),
+        ("u1", 4, "False"),
+        ("u2", 3, "True"),
+    ]
+
+
+def test_is_first_carries_across_arrow_batches(spark):
+    """One line or document per Arrow batch: the last key that reached the
+    handler carries over, so an input that spans batches is first once,
+    and each one-document batch is first."""
+    from access_log_parser_spark import parse_documents, parse_routed
+
+    def handler(labels, values, is_first):
+        return f"{is_first}|{values[0]}"
+
+    opt = Option(line_handler=handler)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        docs = spark.createDataFrame(
+            [("u", "k:1"), ("u", "k:2"), ("u", "k:3\nk:4\nk:5")],
+            "url string, text string",
+        ).coalesce(1)
+        got = sorted(r.out_line for r in parse_documents(docs, "ltsv", opt).collect())
+        assert got == ["False|4", "False|5", "True|1", "True|2", "True|3"]
+        lines = spark.createDataFrame(
+            [("s", n, f"k:{n}") for n in range(1, 8)],
+            "source string, line_no long, raw string",
+        ).coalesce(1)
+        got = sorted(r.out_line for r in parse_routed(lines, "ltsv", opt).collect())
+        assert got == ["False|2", "False|3", "False|4", "False|5", "False|6", "False|7", "True|1"]
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("size", [1, 2, 3, 7, 0])
+def test_line_chunks_bound_output_batches(size):
+    """``parse_documents`` routes and yields at most ``size`` lines at a
+    time, so a long document never builds one unbounded output batch; the
+    chunks concatenate to the documents' scanned lines in order."""
+    from access_log_parser_spark.engine import _line_chunks
+
+    texts = ["a\nb\nc\nd\ne\n", "", "f", "g\r\nh\n\ni", "\n"]
+    chunks = list(_line_chunks(texts, size))
+    if size > 0:
+        assert all(0 < len(raws) <= size for _, _, raws in chunks)
+        assert all(len(raws) == size for _, _, raws in chunks[:-1])
+    else:
+        assert len(chunks) == 1
+    flat = [
+        (d, n, r)
+        for doc_ids, line_nos, raws in chunks
+        for d, n, r in zip(doc_ids, line_nos, raws, strict=True)
+    ]
+    assert flat == [
+        (d, n, r)
+        for d, text in enumerate(texts)
+        for n, r in enumerate(_scan_lines(text), start=1)
+    ]
