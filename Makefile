@@ -1,7 +1,7 @@
 # Dev ergonomics (the reference ships a Makefile too: /root/reference/Makefile)
 PY := PYTHONPATH=.
 
-.PHONY: test parity dtypes plans bench perfbench perfbench-test pytask-cost validate pipeline-demo submit-check
+.PHONY: test parity dtypes plans bench perfbench perfbench-test pytask-cost parse-file-cost validate pipeline-demo submit-check
 
 # the ROADMAP.md tier-1 command: the whole suite, no early stop
 test:
@@ -37,6 +37,13 @@ perfbench-test:
 JOBS ?= 20
 pytask-cost:
 	python3 scripts/pytask_cost.py --jobs $(JOBS)
+
+# wall time, Spark jobs and driver-tree peak PSS of Parser.parse_file on a
+# seeded CLF file, once cold and 3 times warm (scripts/parse_file_cost.py):
+#   make parse-file-cost LINES=200000
+LINES ?= 200000
+parse-file-cost:
+	python3 scripts/parse_file_cost.py --lines $(LINES)
 
 validate:
 	$(PY) python tools/validate_all.py

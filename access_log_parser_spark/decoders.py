@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import re
 from collections.abc import Sequence
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from operator import itemgetter
 
 from .patterns import FusedCascade, fast_twin, fuse_cascade, group_names
@@ -56,6 +56,9 @@ class DecodePlan:
     names: tuple[list[str], ...]
     twins: tuple[tuple[re.Pattern, int] | None, ...] = ()
     fused: FusedCascade | None = None
+    # per-pattern row getters by requested fields, built on first use: the
+    # SQL UDTF decodes one line per call
+    _getters: dict = field(default_factory=dict, compare=False, repr=False)
 
     def decode(self, lines: Sequence[str]) -> tuple[list[int], list[list[str] | None]]:
         """(pattern_ids, values) for ``lines``; pattern_id is -1 and values
@@ -78,13 +81,17 @@ class DecodePlan:
         None; a group of the winner that did not take part is ""."""
         pids, matches = self._match(lines)
         width = len(fields)
-        getters = []
-        for pid, names in enumerate(self.names):
-            pos = {nm: k for k, nm in enumerate(names)}
-            # a field the pattern lacks reads the None appended to its groups
-            pad = self.fused.regex.groups if self.fused else self.patterns[pid].groups
-            idx = [pos.get(nm, pad) for nm in fields]
-            getters.append(itemgetter(*idx) if width > 1 else lambda g, i=idx: tuple(g[k] for k in i))
+        getters = self._getters.get(tuple(fields))
+        if getters is None:
+            getters = self._getters[tuple(fields)] = []
+            for pid, names in enumerate(self.names):
+                pos = {nm: k for k, nm in enumerate(names)}
+                # a field the pattern lacks reads the None appended to its groups
+                pad = self.fused.regex.groups if self.fused else self.patterns[pid].groups
+                idx = [pos.get(nm, pad) for nm in fields]
+                getters.append(
+                    itemgetter(*idx) if width > 1 else lambda g, i=idx: tuple(g[k] for k in i)
+                )
         empty = (None,) * width
         rows = [
             empty if m is None else getters[pid](m.groups("") + (None,))

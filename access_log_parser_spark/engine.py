@@ -424,6 +424,14 @@ def _finalize_routed(routed: DataFrame, opt: Option) -> DataFrame:
     return routed
 
 
+def _scatter(n: int, live: list[int], values: Sequence, fill: object) -> list:
+    """``n`` values: ``values`` at the positions ``live``, ``fill`` elsewhere."""
+    out = [fill] * n
+    for k, i in enumerate(live):
+        out[i] = values[k]
+    return out
+
+
 def extract_fields(
     lines_df: DataFrame,
     fmt: str | Sequence[str],
@@ -436,8 +444,9 @@ def extract_fields(
 
     Output = passthrough columns + (pattern_id int, one string column per
     capture group in the union schema; groups absent from the winning
-    pattern are NULL; pattern_id = -1 marks unmatched rows). This is the
-    column-oriented equivalent of the reference's (labels, values) slices
+    pattern are NULL; pattern_id = -1 marks unmatched rows, NULL lines
+    among them, as in the SQL UDTF). This is the column-oriented
+    equivalent of the reference's (labels, values) slices
     (parser_core.go:69) and feeds joins/aggregations without further Python.
 
     The Python hop is ``mapInArrow``: passthrough columns go back as the
@@ -474,8 +483,16 @@ def extract_fields(
         plan = decoders.compile_plan(pat.compile_patterns(pattern_strs))
         for batch in batches:
             # columns by position: line_col may also be a passthrough column
-            raws = batch.column(n_pass).to_pylist()
-            pids, cols = plan.columns(raws, union)
+            col = batch.column(n_pass)
+            raws = col.to_pylist()
+            if col.null_count:
+                # a NULL line is unmatched: pattern_id -1, NULL fields
+                live = [i for i, r in enumerate(raws) if r is not None]
+                pids, cols = plan.columns([raws[i] for i in live], union)
+                pids = _scatter(len(raws), live, pids, -1)
+                cols = [_scatter(len(raws), live, c, None) for c in cols]
+            else:
+                pids, cols = plan.columns(raws, union)
             arrays = [batch.column(k) for k in range(n_pass)]
             arrays.append(pa.array(pids, pa.int32()))
             if raw_when_unmatched:
@@ -498,9 +515,10 @@ def extract_ltsv(
     """LTSV structured surface: per-line dynamic schema kept as ordered
     parallel arrays (labels, values) — NOT a MapType, because Spark maps do
     not preserve insertion order and serialization order matters
-    (SURVEY.md §1.3). ``labels`` and ``values`` are NULL for invalid
-    lines. Like :func:`extract_fields`, the Python hop is ``mapInArrow``:
-    passthrough columns go back as the Arrow arrays they arrived as."""
+    (SURVEY.md §1.3). ``labels`` and ``values`` are NULL for invalid and
+    NULL lines. Like :func:`extract_fields`, the Python hop is
+    ``mapInArrow``: passthrough columns go back as the Arrow arrays they
+    arrived as."""
     passthrough = list(passthrough)
     out_schema = StructType(
         [lines_df.schema[c] for c in passthrough]
@@ -515,7 +533,12 @@ def extract_ltsv(
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             # columns by position: line_col may also be a passthrough column
-            ls, vs = decoders.ltsv_decode_batch(batch.column(n_pass).to_pylist())
+            col = batch.column(n_pass)
+            raws = col.to_pylist()
+            if col.null_count:
+                # a NULL line reads as "", which is invalid, as in the UDTF
+                raws = ["" if r is None else r for r in raws]
+            ls, vs = decoders.ltsv_decode_batch(raws)
             arrays = [batch.column(k) for k in range(n_pass)]
             arrays += [pa.array(ls, list_type), pa.array(vs, list_type)]
             yield pa.RecordBatch.from_arrays(arrays, names=out_schema.fieldNames())

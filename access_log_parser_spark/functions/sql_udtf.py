@@ -4,8 +4,11 @@ API:
 
     spark.sql("SELECT t.* FROM logs, LATERAL parse_clf(logs.line) t")
 
-Semantics match the engine exactly (first-match-wins cascade, pattern_id
-= -1 + NULL fields for unmatched — parser_core.go:259-270). The UDTF is
+It answers from the engine's own decoder (:class:`..decoders.DecodePlan`,
+built once per UDTF instance), so its semantics are the engine's row for
+row: first match wins, pattern_id = -1 + NULL fields for unmatched and
+NULL lines (parser_core.go:259-270), "" for a group that did not take
+part, and one search per line for the fused S3/CLB cascades. The UDTF is
 the row-at-a-time cousin of the vectorized mapInArrow path: convenient
 for SQL exploration, NOT the 100 TB hot path (use extract_fields /
 parse_routed for bulk work).
@@ -16,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql.functions import udtf
 
 from .. import patterns as pat
+from ..decoders import compile_plan
 
 
 def make_parse_udtf(fmt: str, fields: list[str] | None = None):
@@ -23,34 +27,24 @@ def make_parse_udtf(fmt: str, fields: list[str] | None = None):
     columns (union order, silent drop — selectLabels semantics);
     default = full union schema plus pattern_id."""
     pattern_strs = list(pat.PRESETS[fmt])
-    compiled0 = [pat.validate_pattern(p) for p in pattern_strs]
-    union = pat.union_schema(compiled0)
+    union = pat.union_schema(pat.compile_patterns(pattern_strs))
     if fields is not None:
         wanted = set(fields)
         union = [n for n in union if n in wanted]
     ret = ", ".join(["pattern_id int"] + [f"{n} string" for n in union])
-    out_names = list(union)
+    unmatched = (-1,) + (None,) * len(union)
 
     @udtf(returnType=ret)
     class ParseUDTF:
         def __init__(self) -> None:
-            self._compiled = [pat.validate_pattern(p) for p in pattern_strs]
+            self._plan = compile_plan(pat.compile_patterns(pattern_strs))
 
         def eval(self, raw: str):
             if raw is None:
-                yield (-1,) + (None,) * len(out_names)
+                yield unmatched
                 return
-            for pid, p in enumerate(self._compiled):
-                m = p.search(raw)
-                if m is not None:
-                    d = m.groupdict()
-                    # Go returns "" for non-participating groups
-                    yield (pid,) + tuple(
-                        (d[n] if d[n] is not None else "") if n in d else None
-                        for n in out_names
-                    )
-                    return
-            yield (-1,) + (None,) * len(out_names)
+            pids, cols = self._plan.columns([raw], union)
+            yield (pids[0], *(c[0] for c in cols))
 
     return ParseUDTF
 

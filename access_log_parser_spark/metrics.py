@@ -11,8 +11,12 @@ Here the counters are computed two ways:
   pass yields the counters for free (no second scan of the data — the
   100 TB path);
 - :func:`collect_result` runs an explicit partial+final hash aggregation
-  (`groupBy` + ``sum(when(...))``) — used by tests and the driver-style
-  Parser API.
+  (`groupBy` + ``sum(when(...))``) for callers that hold a routed frame
+  and no action of their own (tests, the perfbench sidecar check).
+
+The Parser verbs use neither: their one action collects the routed rows,
+and the counters are folded from that table on the driver. Every path
+builds its :class:`Result` with :meth:`Result.from_counters`.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ from pyspark.sql import functions as F
 from .decoders import EXCLUDED, MATCHED, SKIPPED, UNMATCHED
 
 _STATUSES = (MATCHED, UNMATCHED, EXCLUDED, SKIPPED)
+_COUNTERS = ("total", *_STATUSES)
 
 # default bound on the unmatched lines collect_result brings to the driver
 MAX_ERRORS = 10_000
@@ -55,8 +60,20 @@ class Result:
     errors: list[ParseError] = field(default_factory=list)
     input_type: str = "string"  # stream/string/file/gzip/zip
 
+    @classmethod
+    def from_counters(cls, counters, **fields) -> Result:
+        """A Result from a counters mapping keyed ``total``, ``matched``,
+        ``unmatched``, ``excluded``, ``skipped`` (an Observation's values, an
+        aggregate row's ``asDict()``, a dict of sums); a missing or NULL
+        count is 0. ``fields`` sets the other attributes."""
+        return cls(**{k: counters.get(k) or 0 for k in _COUNTERS}, **fields)
+
     def counters(self) -> tuple[int, int, int, int, int]:
         return (self.total, self.matched, self.unmatched, self.excluded, self.skipped)
+
+    def counter_dict(self) -> dict[str, int]:
+        """The counters keyed as :meth:`from_counters` reads them."""
+        return dict(zip(_COUNTERS, self.counters()))
 
     def check_invariant(self) -> bool:
         return self.total == self.matched + self.unmatched + self.excluded + self.skipped
@@ -120,25 +137,13 @@ def _counter_aggs() -> list:
 
 
 def observe_routed(routed: DataFrame, name: str | None = None) -> tuple[DataFrame, Observation]:
-    """Attach counter observation; read ``obs.get`` after the first action.
+    """Attach counter observation; after the first action
+    ``Result.from_counters(obs.get)`` reads it.
     ``name`` defaults to a fresh ``lineage-<uuid>``, so queries observed at
     the same time (pipeline batches in flight, parses on two threads) never
     share an observed-metric name."""
     obs = Observation(name or f"lineage-{uuid.uuid4().hex}")
     return routed.observe(obs, *_counter_aggs()), obs
-
-
-def result_from_observation(obs: Observation, elapsed: float = 0.0, source: str = "") -> Result:
-    m = obs.get
-    return Result(
-        total=m["total"],
-        matched=m[MATCHED] or 0,
-        unmatched=m[UNMATCHED] or 0,
-        excluded=m[EXCLUDED] or 0,
-        skipped=m[SKIPPED] or 0,
-        elapsed_time=elapsed,
-        source=source,
-    )
 
 
 def counters_by_source(routed: DataFrame) -> DataFrame:
@@ -173,18 +178,15 @@ def collect_result(
     source: str = "",
     elapsed: float = 0.0,
     max_errors: int | None = MAX_ERRORS,
-    tag_entries: bool = False,
 ) -> Result:
-    """Aggregate counters + errors list into a Result (test/driver path).
+    """Aggregate counters + errors list into a Result (two actions).
 
     ``max_errors`` bounds the driver-side error collect to the first
     unmatched lines in (source, line_no) order; the counters stay exact.
     The reference accumulates every unmatched line in memory
     (parser_result.go:32-36), which is fine for its single-file corpora
     but unbounded at 10^12 docs, so the default is ``MAX_ERRORS`` and the
-    full set belongs in the unmatched sink. The reference-parity Parser
-    verbs pass ``None`` (no bound). ``tag_entries`` sets each error's
-    ``entry`` to its ``source`` (the zip-entry name, parser_core.go:152-163)."""
+    full set belongs in the unmatched sink; ``None`` lifts the bound."""
     row = routed.agg(*_counter_aggs()).collect()[0]
     err_df = (
         routed.filter(F.col("status") == UNMATCHED)
@@ -193,21 +195,7 @@ def collect_result(
     )
     if max_errors is not None:
         err_df = err_df.limit(max_errors)
-    errors = [
-        ParseError(
-            entry=r["source"] if tag_entries else "",
-            line_number=r["line_no"],
-            line=r["raw"],
-        )
-        for r in err_df.collect()
-    ]
-    return Result(
-        total=row["total"],
-        matched=row[MATCHED] or 0,
-        unmatched=row[UNMATCHED] or 0,
-        excluded=row[EXCLUDED] or 0,
-        skipped=row[SKIPPED] or 0,
-        elapsed_time=elapsed,
-        source=source,
-        errors=errors,
+    errors = [ParseError("", r["line_no"], r["raw"]) for r in err_df.collect()]
+    return Result.from_counters(
+        row.asDict(), elapsed_time=elapsed, source=source, errors=errors
     )

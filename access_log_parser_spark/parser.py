@@ -18,12 +18,11 @@ from collections.abc import Sequence
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from . import patterns as pat
-from .decoders import NoPatternError
+from .decoders import UNMATCHED, NoPatternError
 from .engine import parse_documents, parse_routed
-from .metrics import Result, collect_result
+from .metrics import ParseError, Result
 from .options import Option
 from .sources import docs_from_files, docs_from_string, docs_from_zip_entries
 from .sources.text import basename
@@ -112,43 +111,42 @@ class BaseParser:
             sc.setLocalProperty("spark.job.description", None)
             sc.setLocalProperty("spark.job.interruptOnCancel", None)
 
-    @staticmethod
-    def _ordered_output(routed: DataFrame) -> list[str]:
-        # Input order for golden parity: distributed execution loses
-        # arrival order, so order by (source, line_no) explicitly
-        # (SURVEY.md §2.5).
-        return [
-            r["out_line"]
-            for r in routed.filter(F.col("out_line").isNotNull())
-            .select("source", "line_no", "out_line")
-            .orderBy("source", "line_no")
-            .collect()
-        ]
-
     def _run(
         self, docs: DataFrame, source: str = "", zip_entries: bool = False
     ) -> tuple[list[str], Result]:
         """Parse (source, text) documents, each one input to the handler,
-        and collect the ordered output and the Result. The routed frame is
-        persisted for the verb's actions, so each line is parsed once."""
+        in ONE action: the routed rows come to the driver as one Arrow
+        table, sorted by (source, line_no) for input order (SURVEY.md §2.5;
+        names by UTF-8 bytes, as Spark's ``orderBy``), and the output,
+        counters, errors and zip entries are folded from it, as the
+        reference builds its Result in its output pass (parser_core.go:176-254)."""
+        import pyarrow.compute as pc
+
         start = time.monotonic()
         with self._in_job_group():
-            routed = parse_documents(
-                docs, self._format(), self.opt, source_col="source"
-            ).persist()
-            try:
-                out = self._ordered_output(routed)
-                result = collect_result(
-                    routed, source=source, max_errors=None, tag_entries=zip_entries
+            table = (
+                parse_documents(docs, self._format(), self.opt, source_col="source")
+                .select("source", "line_no", "status", "out_line", "raw")
+                .toArrow()
+                .sort_by([("source", "ascending"), ("line_no", "ascending")])
+            )
+        statuses, counts = pc.value_counts(table["status"]).flatten()
+        errs = table.filter(pc.equal(table["status"], UNMATCHED))
+        result = Result.from_counters(
+            dict(zip(statuses.to_pylist(), counts.to_pylist()), total=table.num_rows),
+            source=source,
+            errors=[
+                # errors carry their zip entry (parser_core.go:152-163)
+                ParseError(entry if zip_entries else "", line_no, raw)
+                for entry, line_no, raw in zip(
+                    *(errs[c].to_pylist() for c in ("source", "line_no", "raw"))
                 )
-                if zip_entries:
-                    # the entries that yield at least one line
-                    result.zip_entries = [
-                        r["source"]
-                        for r in routed.select("source").distinct().orderBy("source").collect()
-                    ]
-            finally:
-                routed.unpersist()
+            ],
+        )
+        if zip_entries:
+            # the entries that yield at least one line, in sorted order
+            result.zip_entries = pc.unique(table["source"]).to_pylist()
+        out = table["out_line"].drop_null().to_pylist()
         result.elapsed_time = time.monotonic() - start
         return out, result
 

@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import time
 import uuid
+from collections import Counter
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass
 
@@ -45,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .engine import parse_documents
-from .metrics import Result, observe_routed, result_from_observation
+from .metrics import Result, observe_routed
 from .options import Option
 from .sinks import processed_batches, write_manifest, write_routed
 
@@ -185,16 +186,8 @@ def run_pipeline(
             mode="overwrite",
             extra_partition_cols=("batch_id",),
         )  # the ONLY action for this batch
-        r = result_from_observation(obs)
-        manifest = {
-            "counters": {
-                "total": r.total,
-                "matched": r.matched,
-                "unmatched": r.unmatched,
-                "excluded": r.excluded,
-                "skipped": r.skipped,
-            }
-        }
+        r = Result.from_counters(obs.get)
+        manifest = {"counters": r.counter_dict()}
         if partition_lineage:
             from .metrics import counters_by_partition
 
@@ -205,19 +198,15 @@ def run_pipeline(
         write_manifest(out_dir, batch_id, manifest)
         return r
 
-    total = Result()
+    sums: Counter[str] = Counter()
     try:
         for r in _run_in_order(spark, todo, run_batch):
-            total.total += r.total
-            total.matched += r.matched
-            total.unmatched += r.unmatched
-            total.excluded += r.excluded
-            total.skipped += r.skipped
+            sums.update(r.counter_dict())
     finally:
         for lk, _ in cached:
             lk.unpersist()
 
-    total.elapsed_time = time.monotonic() - start
+    total = Result.from_counters(sums, elapsed_time=time.monotonic() - start)
     return PipelineReport(
         result=total, batches_run=todo, batches_skipped=skipped,
         elapsed=total.elapsed_time,
