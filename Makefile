@@ -1,7 +1,7 @@
 # Dev ergonomics (the reference ships a Makefile too: /root/reference/Makefile)
 PY := PYTHONPATH=.
 
-.PHONY: test parity dtypes plans bench perfbench perfbench-test pytask-cost parse-file-cost validate pipeline-demo submit-check
+.PHONY: test parity dtypes plans bench perfbench perfbench-test pytask-cost parse-file-cost route-cost validate pipeline-demo submit-check
 
 # the ROADMAP.md tier-1 command: the whole suite, no early stop
 test:
@@ -44,6 +44,14 @@ pytask-cost:
 LINES ?= 200000
 parse-file-cost:
 	python3 scripts/parse_file_cost.py --lines $(LINES)
+
+# seconds and microseconds per line of the routed per-line core
+# (_Router.route) on the golden S3 corpus, no Spark (scripts/route_cost.py):
+#   make route-cost LINES=200000 HANDLERS="json tsv" PREFIX=1
+HANDLERS ?= json tsv
+PREFIX ?=
+route-cost:
+	python3 scripts/route_cost.py --lines $(LINES) $(foreach h,$(HANDLERS),--handler $(h)) $(if $(PREFIX),--prefix)
 
 validate:
 	$(PY) python tools/validate_all.py

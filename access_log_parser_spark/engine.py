@@ -3,28 +3,30 @@
 Everything the reference does per line in its eager loop
 (`/root/reference/parser_core.go:176-254`: skip-check -> decode ->
 unmatched? -> filter -> selectLabels -> addLineNumber -> LineHandler ->
-prefix -> write) runs here as ONE Arrow-batched Python pass followed by
-pure-Catalyst finalization. Design goals at 100 TB:
+applyPrefix -> write) runs here as ONE Arrow-batched Python pass,
+``_Router.route``, whose output arrays go back to the JVM as they are.
+Design goals at 100 TB:
 
-- exactly one Python<->JVM hop on the hot path (regex decode + DSL filter +
-  serialization all happen in the same Arrow batch function);
+- exactly one Python<->JVM hop on the hot path (skip check, regex decode,
+  DSL filter, serialization and prefix all happen in the same Arrow batch
+  function);
 - regexes and filter predicates compile once per task, not per line
   (the reference recompiles filters per line — parser_core.go:220), and a
   prefix-chained pattern list such as the S3 preset compiles into one
   fused regex, so a line costs one search instead of up to five
   (:class:`.decoders.DecodePlan`);
-- prefix decoration is a JVM-side Catalyst ``transform``, and no global
-  ordering is ever collected to the driver;
-- document-level predicates (skip lines, source pruning) stay JVM-side
-  ahead of the Python stage so Catalyst pushes them into the scan.
+- everything the driver can settle (pattern and filter validation, the
+  handler, the prefix pair and its tty color check) is settled once in
+  ``_RouteSpec.build``, never in a task, and no global ordering is ever
+  collected to the driver.
 
 Surfaces:
 
 - reference parity (Option semantics, byte-exact serialized output lines,
   status routing column, error rows): ONE routed implementation. Two
   entries share one per-line core (``_RouteSpec`` built and validated
-  before any task runs, ``_Router.route`` per batch) and one Arrow output
-  builder (:func:`_route_arrays`), so their outputs cannot drift apart:
+  before any task runs, ``_Router.route`` per batch, which also builds the
+  batch's routed Arrow arrays), so their outputs cannot drift apart:
 
   - :func:`parse_documents` takes whole documents and is one
     ``mapInArrow`` stage: it splits each text with the scanner's exact
@@ -65,8 +67,7 @@ from pyspark.sql.types import (
 from . import decoders, patterns as pat
 from .decoders import EXCLUDED, MATCHED, SKIPPED, UNMATCHED
 from .filters import apply_filters, compile_filters
-from .functions.columns import multiline_prefix
-from .handlers import HANDLERS, prefix_strings
+from .handlers import HANDLERS, apply_prefix, prefix_strings
 from .options import Option
 from .sources.ziparchive import _scan_lines
 
@@ -121,6 +122,8 @@ class _RouteSpec:
     reads_first: bool
     filter_exprs: tuple[str, ...]
     emit_unmatch: bool
+    # (matched, unmatched) prefix pair, None without Option(prefix=True)
+    prefixes: tuple[str, str] | None
 
     @classmethod
     def build(cls, fmt: str | Sequence[str], opt: Option) -> _RouteSpec:
@@ -148,6 +151,9 @@ class _RouteSpec:
             reads_first=reads_first,
             filter_exprs=tuple(opt.filters),
             emit_unmatch=bool(opt.unmatch_lines),
+            # ANSI-colored pair on a tty (parser_core.go:186-189) or with
+            # Option(color=True); the tty check runs here, on the driver
+            prefixes=prefix_strings(opt.resolve_color()) if opt.prefix else None,
         )
 
     def compile(self) -> _Router:
@@ -171,62 +177,64 @@ class _Router:
 
     def route(
         self,
-        raws: list[str],
+        raws: list[str | None],
         line_nos: list[int],
         keys: Sequence[object],
-    ) -> tuple[list[str], list[int], list[str | None]]:
+    ) -> list[pa.Array]:
         """The reference's per-line loop over one batch: skip-check ->
         decode -> unmatched? -> filter -> selectLabels -> addLineNumber ->
-        LineHandler (parser_core.go:176-254).
+        LineHandler -> applyPrefix (parser_core.go:176-254, 323-334).
 
         ``keys`` names each line's input, the lines of one input contiguous
         and in ``line_no`` order. The handler gets the reference's
         ``isFirst`` (parser_core.go:182,245): True when the line's key
         differs from that of the last line that reached the handler.
-        Returns (status, pattern_id, out_line)."""
+        Returns the (status, pattern_id, out_line, raw) Arrow arrays;
+        ``raw`` is kept only on unmatched rows, for the errors sink
+        (parser_result.go:32-36). A NULL line that is not skipped is
+        unmatched, with a NULL ``out_line`` and ``raw``."""
         spec, plan, filt = self.spec, self.plan, self.filt
         n = len(raws)
         status = [MATCHED] * n
         pids = [-1] * n
         out: list[str | None] = [None] * n
+        err: list[str | None] = [None] * n
 
-        live_idx = []
+        live = []
         for i, ln in enumerate(line_nos):
             if ln in spec.skip_set:
                 status[i] = SKIPPED
             else:
-                live_idx.append(i)
+                live.append(i)
+        if None in raws:
+            # one check per batch: a NULL-free batch runs the plain loop
+            for i in live:
+                if raws[i] is None:
+                    status[i] = UNMATCHED
+            live = [i for i in live if raws[i] is not None]
 
-        live_raws = [raws[i] for i in live_idx]
+        # pattern_id, labels and values per live line; labels None if unmatched
+        live_raws = [raws[i] for i in live]
         if plan is not None:
-            sub_pids, sub_vals = plan.decode(live_raws)
-            row_ls: list[list[str] | None] = [None] * n
-            row_vs: list[list[str] | None] = [None] * n
-            for k, i in enumerate(live_idx):
-                pids[i] = sub_pids[k]
-                if sub_pids[k] >= 0:
-                    row_ls[i] = plan.names[sub_pids[k]]
-                    row_vs[i] = sub_vals[k]
+            live_pids, live_vs = plan.decode(live_raws)
+            names = plan.names
+            live_ls = [names[pid] if pid >= 0 else None for pid in live_pids]
         else:
-            sub_ls, sub_vs = decoders.ltsv_decode_batch(live_raws)
-            row_ls = [None] * n
-            row_vs = [None] * n
-            for k, i in enumerate(live_idx):
-                row_ls[i] = sub_ls[k]
-                row_vs[i] = sub_vs[k]
-                if sub_ls[k] is not None:
-                    pids[i] = 0
+            live_ls, live_vs = decoders.ltsv_decode_batch(live_raws)
+            live_pids = [-1 if ls is None else 0 for ls in live_ls]
 
         handler = spec.handler
+        mpref, upref = spec.prefixes or (None, "")
         last_key = self.last_key
-        for i in live_idx:
-            ls = row_ls[i]
+        for i, pid, ls, vs in zip(live, live_pids, live_ls, live_vs):
+            pids[i] = pid
             if ls is None:
                 status[i] = UNMATCHED
+                err[i] = raws[i]
                 if spec.emit_unmatch:
-                    out[i] = raws[i]
+                    # the single-line UNMATCHED prefix (parser_core.go:203-205)
+                    out[i] = upref + raws[i]
                 continue
-            vs = row_vs[i]
             if filt and not apply_filters(filt, ls, vs):
                 status[i] = EXCLUDED
                 continue
@@ -236,31 +244,16 @@ class _Router:
                 ls = ["no", *ls]
                 vs = [str(line_nos[i]), *vs]
             key = keys[i]
-            out[i] = handler(ls, vs, key != last_key)
+            line = handler(ls, vs, key != last_key)
             last_key = key
+            out[i] = line if mpref is None else apply_prefix(line, mpref)
         self.last_key = last_key
-        return status, pids, out
-
-
-def _route_arrays(
-    router: _Router,
-    raws: list[str],
-    line_nos: list[int],
-    keys: Sequence[object],
-) -> list[pa.Array]:
-    """Route one batch and build its (status, pattern_id, out_line, raw)
-    Arrow arrays; ``raw`` is kept only on unmatched rows, for the errors
-    sink (parser_result.go:32-36)."""
-    status, pids, out = router.route(raws, line_nos, keys)
-    return [
-        pa.array(status, pa.string()),
-        pa.array(pids, pa.int32()),
-        pa.array(out, pa.string()),
-        pa.array(
-            [r if s == UNMATCHED else None for r, s in zip(raws, status)],
-            pa.string(),
-        ),
-    ]
+        return [
+            pa.array(status, pa.string()),
+            pa.array(pids, pa.int32()),
+            pa.array(out, pa.string()),
+            pa.array(err, pa.string()),
+        ]
 
 
 def parse_routed(
@@ -298,9 +291,7 @@ def parse_routed(
             sources, line_nos = batch.column(0), batch.column(1)
             # flagless handlers ignore isFirst: one key for every line
             keys = sources.to_pylist() if spec.reads_first else [None] * batch.num_rows
-            arrays = _route_arrays(
-                router, batch.column(2).to_pylist(), line_nos.to_pylist(), keys
-            )
+            arrays = router.route(batch.column(2).to_pylist(), line_nos.to_pylist(), keys)
             yield pa.RecordBatch.from_arrays(
                 [sources, line_nos, *arrays], names=ROUTED_SCHEMA.fieldNames()
             )
@@ -310,7 +301,7 @@ def parse_routed(
     )
     if spec.reads_first:
         lines = lines.repartition("source").sortWithinPartitions("source", "line_no")
-    return _finalize_routed(lines.mapInArrow(run, ROUTED_SCHEMA), opt)
+    return lines.mapInArrow(run, ROUTED_SCHEMA)
 
 
 fast_parse_routed = parse_routed
@@ -383,7 +374,7 @@ def parse_documents(
             for doc_ids, line_nos, raws in _line_chunks(
                 batch.column(1).to_pylist(), size
             ):
-                arrays = _route_arrays(router, raws, line_nos, doc_ids)
+                arrays = router.route(raws, line_nos, doc_ids)
                 take = pa.array(doc_ids, pa.int32())
                 arrays = [
                     batch.column(0).take(take),
@@ -394,34 +385,11 @@ def parse_documents(
                 yield pa.RecordBatch.from_arrays(arrays, names=out_schema.fieldNames())
 
     text = F.col(text_col)
-    routed = (
+    return (
         docs.filter(text.isNotNull() & (text != ""))
         .select(F.col(source_col).alias("source"), text.alias("text"), *keep)
         .mapInArrow(run, out_schema)
     )
-    return _finalize_routed(routed, opt)
-
-
-def _finalize_routed(routed: DataFrame, opt: Option) -> DataFrame:
-    """Catalyst-side prefix decoration, shared by both routed entries."""
-    if opt.prefix:
-        # applyPrefix (parser_core.go:323-334), multi-line aware for matched
-        # output; unmatched raws get the single-line UNMATCHED prefix
-        # (parser_core.go:203-205). ANSI-colored pair on a tty
-        # (parser_core.go:186-189) or when Option(color=True).
-        mpref, upref = prefix_strings(opt.resolve_color())
-        routed = routed.withColumn(
-            "out_line",
-            F.when(
-                F.col("status") == MATCHED, multiline_prefix(F.col("out_line"), mpref)
-            )
-            .when(
-                (F.col("status") == UNMATCHED) & F.col("out_line").isNotNull(),
-                F.concat(F.lit(upref), F.col("out_line")),
-            )
-            .otherwise(F.col("out_line")),
-        )
-    return routed
 
 
 def _scatter(n: int, live: list[int], values: Sequence, fill: object) -> list:

@@ -1,9 +1,3 @@
-from .columns import (
-    host_of_url,
-    multiline_prefix,
-)
+from .columns import host_of_url
 
-__all__ = [
-    "host_of_url",
-    "multiline_prefix",
-]
+__all__ = ["host_of_url"]

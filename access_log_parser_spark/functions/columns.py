@@ -15,9 +15,3 @@ def host_of_url(c: Column) -> Column:
     """URL -> host, for skew-aware partitioning of web corpora."""
     return F.parse_url(c, F.lit("HOST"))
 
-
-def multiline_prefix(c: Column, prefix: str) -> Column:
-    """applyPrefix (parser_core.go:323-334) as a Catalyst expression."""
-    return F.array_join(
-        F.transform(F.split(c, "\n"), lambda x: F.concat(F.lit(prefix), x)), "\n"
-    )

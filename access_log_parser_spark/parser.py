@@ -112,7 +112,11 @@ class BaseParser:
             sc.setLocalProperty("spark.job.interruptOnCancel", None)
 
     def _run(
-        self, docs: DataFrame, source: str = "", zip_entries: bool = False
+        self,
+        docs: DataFrame,
+        input_type: str,
+        source: str = "",
+        zip_entries: bool = False,
     ) -> tuple[list[str], Result]:
         """Parse (source, text) documents, each one input to the handler,
         in ONE action: the routed rows come to the driver as one Arrow
@@ -134,6 +138,7 @@ class BaseParser:
         errs = table.filter(pc.equal(table["status"], UNMATCHED))
         result = Result.from_counters(
             dict(zip(statuses.to_pylist(), counts.to_pylist()), total=table.num_rows),
+            input_type=input_type,
             source=source,
             errors=[
                 # errors carry their zip entry (parser_core.go:152-163)
@@ -163,30 +168,25 @@ class BaseParser:
                 s = s.decode("utf-8")
         else:
             s = "\n".join(reader)
-        out, r = self._run(docs_from_string(self.spark, s))
-        r.input_type = "stream"
-        return out, r
+        return self._run(docs_from_string(self.spark, s), "stream")
 
     def parse_string(self, s: str) -> tuple[list[str], Result]:
-        out, r = self._run(docs_from_string(self.spark, s))
-        r.input_type = "string"
-        return out, r
+        return self._run(docs_from_string(self.spark, s), "string")
 
     def parse_file(self, path: str) -> tuple[list[str], Result]:
-        _check_path(path)
-        out, r = self._run(
-            docs_from_files(self.spark, _reader_path(path)), source=basename(path)
-        )
-        r.input_type = "file"
-        return out, r
+        return self._parse_path(path, "file")
 
     def parse_gzip(self, path: str) -> tuple[list[str], Result]:
+        # Spark's text reader decompresses a .gz file by its extension
+        return self._parse_path(path, "gzip")
+
+    def _parse_path(self, path: str, input_type: str) -> tuple[list[str], Result]:
         _check_path(path)
-        out, r = self._run(
-            docs_from_files(self.spark, _reader_path(path)), source=basename(path)
+        return self._run(
+            docs_from_files(self.spark, _reader_path(path)),
+            input_type,
+            source=basename(path),
         )
-        r.input_type = "gzip"
-        return out, r
 
     def parse_zip_entries(
         self, zip_path: str, glob_pattern: str = "*"
@@ -194,13 +194,12 @@ class BaseParser:
         """Per-entry parses merged into one Result: counters summed, errors
         tagged with entry name, entry list appended (parser_core.go:140-171)."""
         _check_path(zip_path)
-        out, r = self._run(
+        return self._run(
             docs_from_zip_entries(self.spark, zip_path, glob_pattern),
+            "zip",
             source=basename(zip_path),
             zip_entries=True,
         )
-        r.input_type = "zip"
-        return out, r
 
 
 class RegexParser(BaseParser):

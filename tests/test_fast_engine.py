@@ -113,3 +113,22 @@ def test_parse_routed_tsv_header_on_first_matched_line_of_scattered_source(spark
     )
     assert out[0] == (3, "k\tv\n3\t-")
     assert out[1:] == [(n, f"{n}\t-") for n in range(4, 41) if n != 7]
+
+
+@pytest.mark.parametrize("fmt", ["s3", "ltsv"])
+def test_parse_routed_null_line_is_unmatched(spark, fmt):
+    """A NULL ``raw`` is unmatched with no output and no raw, as in
+    ``extract_fields`` and the SQL UDTF; the skip check still comes first."""
+    good = g.L1 if fmt == "s3" else "a:1\tb:2"
+    lines = spark.createDataFrame(
+        [("s", 1, good), ("s", 2, None), ("s", 3, None)],
+        "source string, line_no long, raw string",
+    )
+    opt = Option(skip_lines=[3], unmatch_lines=True, prefix=True, color=False)
+    rows = engine.parse_routed(lines, fmt, opt).orderBy("line_no").collect()
+    assert [(r.status, r.pattern_id, r.out_line, r.raw) for r in rows[1:]] == [
+        ("unmatched", -1, None, None),
+        ("skipped", -1, None, None),
+    ]
+    assert rows[0].status == "matched"
+    assert rows[0].out_line.startswith("[ PROCESSED ] {")
