@@ -1,7 +1,7 @@
 # Dev ergonomics (the reference ships a Makefile too: /root/reference/Makefile)
 PY := PYTHONPATH=.
 
-.PHONY: test parity dtypes plans bench perfbench perfbench-test pytask-cost parse-file-cost route-cost validate pipeline-demo submit-check
+.PHONY: test parity dtypes plans bench perfbench perfbench-test pytask-cost parse-file-cost route-cost validate pipeline-demo train-prep-demo submit-check
 
 # the ROADMAP.md tier-1 command: the whole suite, no early stop
 test:

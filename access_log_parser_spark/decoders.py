@@ -9,7 +9,9 @@ the engine's only decoders. Semantics match the reference's
 - regex: ordered pattern list, first match wins, match index = pattern_id;
   no pattern matched -> unmatched; empty pattern list -> hard error;
 - LTSV: tab-split then split each field on the first ``:``; any field
-  without ``:`` invalidates the WHOLE line (unmatched).
+  without ``:`` invalidates the WHOLE line (unmatched);
+- a NULL line is unmatched under both, found by one ``None in lines``
+  check per batch, so a NULL-free batch runs the plain per-line loop.
 
 A pattern list is compiled once per task into a :class:`DecodePlan`. When
 the list is a prefix chain that :func:`.patterns.fuse_cascade` can prove
@@ -60,7 +62,7 @@ class DecodePlan:
     # SQL UDTF decodes one line per call
     _getters: dict = field(default_factory=dict, compare=False, repr=False)
 
-    def decode(self, lines: Sequence[str]) -> tuple[list[int], list[list[str] | None]]:
+    def decode(self, lines: Sequence[str | None]) -> tuple[list[int], list[list[str] | None]]:
         """(pattern_ids, values) for ``lines``; pattern_id is -1 and values
         None for unmatched lines, otherwise values are the positional
         capture-group strings of the winning pattern, with "" for groups
@@ -74,7 +76,7 @@ class DecodePlan:
         return pids, vals
 
     def columns(
-        self, lines: Sequence[str], fields: Sequence[str]
+        self, lines: Sequence[str | None], fields: Sequence[str]
     ) -> tuple[list[int], list[Sequence[str | None]]]:
         """(pattern_ids, one value column per name in ``fields``). A field
         the winning pattern lacks, or any field of an unmatched line, is
@@ -99,9 +101,18 @@ class DecodePlan:
         ]
         return pids, (list(zip(*rows)) if rows else [()] * width)
 
-    def _match(self, lines: Sequence[str]) -> tuple[list[int], list[re.Match | None]]:
-        """Winning pattern_id (-1 if none) and its match, per line. A fused
-        match also holds groups of deeper tails, all unset."""
+    def _match(self, lines: Sequence[str | None]) -> tuple[list[int], list[re.Match | None]]:
+        """Winning pattern_id (-1 if none) and its match, per line; a NULL
+        line is unmatched. A fused match also holds groups of deeper
+        tails, all unset."""
+        if None in lines:
+            live = [i for i, line in enumerate(lines) if line is not None]
+            pids = [-1] * len(lines)
+            matches: list[re.Match | None] = [None] * len(lines)
+            for i, pid, m in zip(live, *self._match([lines[i] for i in live])):
+                pids[i] = pid
+                matches[i] = m
+            return pids, matches
         if self.fused is not None:
             return self._match_fused(lines)
         return self._match_cascade(lines)
@@ -161,9 +172,13 @@ def compile_plan(patterns: Sequence[re.Pattern]) -> DecodePlan:
 
 
 def ltsv_decode_batch(
-    lines: Sequence[str],
+    lines: Sequence[str | None],
 ) -> tuple[list[list[str] | None], list[list[str] | None]]:
-    """Decode LTSV lines; returns (labels, values), None/None when invalid."""
+    """Decode LTSV lines; returns (labels, values), None/None when invalid
+    or NULL."""
+    if None in lines:
+        # a NULL line reads as "", which has no ":" and so is invalid
+        lines = ["" if line is None else line for line in lines]
     out_ls: list[list[str] | None] = []
     out_vs: list[list[str] | None] = []
     for line in lines:

@@ -206,14 +206,9 @@ class _Router:
                 status[i] = SKIPPED
             else:
                 live.append(i)
-        if None in raws:
-            # one check per batch: a NULL-free batch runs the plain loop
-            for i in live:
-                if raws[i] is None:
-                    status[i] = UNMATCHED
-            live = [i for i in live if raws[i] is not None]
 
-        # pattern_id, labels and values per live line; labels None if unmatched
+        # pattern_id, labels and values per live line; labels None if
+        # unmatched, a NULL line among them (the decoders' rule)
         live_raws = [raws[i] for i in live]
         if plan is not None:
             live_pids, live_vs = plan.decode(live_raws)
@@ -231,7 +226,7 @@ class _Router:
             if ls is None:
                 status[i] = UNMATCHED
                 err[i] = raws[i]
-                if spec.emit_unmatch:
+                if spec.emit_unmatch and raws[i] is not None:
                     # the single-line UNMATCHED prefix (parser_core.go:203-205)
                     out[i] = upref + raws[i]
                 continue
@@ -392,14 +387,6 @@ def parse_documents(
     )
 
 
-def _scatter(n: int, live: list[int], values: Sequence, fill: object) -> list:
-    """``n`` values: ``values`` at the positions ``live``, ``fill`` elsewhere."""
-    out = [fill] * n
-    for k, i in enumerate(live):
-        out[i] = values[k]
-    return out
-
-
 def extract_fields(
     lines_df: DataFrame,
     fmt: str | Sequence[str],
@@ -451,16 +438,8 @@ def extract_fields(
         plan = decoders.compile_plan(pat.compile_patterns(pattern_strs))
         for batch in batches:
             # columns by position: line_col may also be a passthrough column
-            col = batch.column(n_pass)
-            raws = col.to_pylist()
-            if col.null_count:
-                # a NULL line is unmatched: pattern_id -1, NULL fields
-                live = [i for i, r in enumerate(raws) if r is not None]
-                pids, cols = plan.columns([raws[i] for i in live], union)
-                pids = _scatter(len(raws), live, pids, -1)
-                cols = [_scatter(len(raws), live, c, None) for c in cols]
-            else:
-                pids, cols = plan.columns(raws, union)
+            raws = batch.column(n_pass).to_pylist()
+            pids, cols = plan.columns(raws, union)
             arrays = [batch.column(k) for k in range(n_pass)]
             arrays.append(pa.array(pids, pa.int32()))
             if raw_when_unmatched:
@@ -501,12 +480,7 @@ def extract_ltsv(
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             # columns by position: line_col may also be a passthrough column
-            col = batch.column(n_pass)
-            raws = col.to_pylist()
-            if col.null_count:
-                # a NULL line reads as "", which is invalid, as in the UDTF
-                raws = ["" if r is None else r for r in raws]
-            ls, vs = decoders.ltsv_decode_batch(raws)
+            ls, vs = decoders.ltsv_decode_batch(batch.column(n_pass).to_pylist())
             arrays = [batch.column(k) for k in range(n_pass)]
             arrays += [pa.array(ls, list_type), pa.array(vs, list_type)]
             yield pa.RecordBatch.from_arrays(arrays, names=out_schema.fieldNames())

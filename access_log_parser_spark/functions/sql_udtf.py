@@ -32,7 +32,6 @@ def make_parse_udtf(fmt: str, fields: list[str] | None = None):
         wanted = set(fields)
         union = [n for n in union if n in wanted]
     ret = ", ".join(["pattern_id int"] + [f"{n} string" for n in union])
-    unmatched = (-1,) + (None,) * len(union)
 
     @udtf(returnType=ret)
     class ParseUDTF:
@@ -40,9 +39,6 @@ def make_parse_udtf(fmt: str, fields: list[str] | None = None):
             self._plan = compile_plan(pat.compile_patterns(pattern_strs))
 
         def eval(self, raw: str):
-            if raw is None:
-                yield unmatched
-                return
             pids, cols = self._plan.columns([raw], union)
             yield (pids[0], *(c[0] for c in cols))
 
@@ -71,7 +67,7 @@ def register_ltsv_udtf(spark, name: str = "parse_ltsv"):
     @udtf(returnType="pos int, label string, value string")
     class ParseLTSV:
         def eval(self, raw: str):
-            labels, values = ltsv_decode_batch([raw if raw is not None else ""])
+            labels, values = ltsv_decode_batch([raw])
             if labels[0] is None:
                 yield -1, None, None
                 return

@@ -20,12 +20,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StructField, StructType
 
 # MinHash parameters (shared with the DuckDB oracle in __spark_entry__)
 MINHASH_K = 16          # default signature length
@@ -79,21 +74,18 @@ def shingles(c, n: int = 3):
     return F.array_distinct(grams)
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame, threshold: float = 0.5, n: int = 3, text_col: str = "text"
-) -> DataFrame:
-    """Candidate pairs by inverted shingle index, verified by exact Jaccard.
-
-    Plan shape: explode distinct shingles -> self-join on shingle (shuffle
-    on shingle, never a cross join) -> per-pair common count -> Jaccard via
-    |A n B| / (|A| + |B| - |A n B|). Returns (id_a, id_b, jaccard)."""
+def _shingle_overlap(df: DataFrame, n: int, text_col: str) -> DataFrame:
+    """(id_a, id_b, na, nb, inter) for every doc pair sharing a shingle:
+    explode distinct shingles -> self-join on shingle (shuffle on
+    shingle, never a cross join) -> per-pair common count. ``na``/``nb``
+    are the pair's distinct-shingle counts, id_a < id_b."""
     sh = df.select(
         F.col("doc_id"), shingles(F.col(text_col), n).alias("sh")
     ).withColumn("n_sh", F.size("sh"))
     ex = sh.select("doc_id", "n_sh", F.explode("sh").alias("g"))
     a = ex.alias("a")
     b = ex.alias("b")
-    common = (
+    return (
         a.join(b, on="g")
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .groupBy(
@@ -104,6 +96,15 @@ def ngram_jaccard_pairs(
         )
         .agg(F.count(F.lit(1)).alias("inter"))
     )
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame, threshold: float = 0.5, n: int = 3, text_col: str = "text"
+) -> DataFrame:
+    """Candidate pairs by inverted shingle index (:func:`_shingle_overlap`),
+    verified by exact Jaccard |A n B| / (|A| + |B| - |A n B|). Returns
+    (id_a, id_b, jaccard 6dp) filtered to >= threshold."""
+    common = _shingle_overlap(df, n, text_col)
     jac = F.round(
         F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
     )
@@ -126,27 +127,10 @@ def containment_pairs(
 
         overlap(A, B) = |A n B| / min(|A|, |B|)
 
-    Same inverted-shingle-index plan shape as :func:`ngram_jaccard_pairs`
-    (explode distinct shingles -> shingle-keyed self-join -> per-pair
-    count; never an all-pairs product). Returns (id_a, id_b, overlap 6dp)
-    with id_a < id_b, filtered to >= threshold."""
-    sh = df.select(
-        F.col("doc_id"), shingles(F.col(text_col), n).alias("sh")
-    ).withColumn("n_sh", F.size("sh"))
-    ex = sh.select("doc_id", "n_sh", F.explode("sh").alias("g"))
-    a = ex.alias("a")
-    b = ex.alias("b")
-    common = (
-        a.join(b, on="g")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.col("a.n_sh").alias("na"),
-            F.col("b.n_sh").alias("nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    Same inverted-shingle-index plan as :func:`ngram_jaccard_pairs`
+    (:func:`_shingle_overlap`; never an all-pairs product). Returns
+    (id_a, id_b, overlap 6dp) with id_a < id_b, filtered to >= threshold."""
+    common = _shingle_overlap(df, n, text_col)
     ov = F.round(F.col("inter") / F.least(F.col("na"), F.col("nb")), 6)
     return (
         common.select("id_a", "id_b", ov.alias("overlap"))
@@ -167,108 +151,26 @@ def _minhash_py(grams: list[str], k: int = MINHASH_K) -> list[int]:
     ]
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str = "text", n: int = 3, k: int = MINHASH_K
-) -> DataFrame:
-    """(doc_id, sig array<long>): shingling JVM-side, hashing in one
-    Arrow-batched pass (md5 per shingle is the only Python work)."""
-    # NULL text is not a dup candidate: without the filter all NULL-text
-    # docs share identical NULL/degenerate signatures and collapse into
-    # one giant spurious duplicate cluster (and the pandas path would
-    # crash on None, diverging from the jvm/hof twins).
-    sh = df.filter(F.col(text_col).isNotNull()).select(
-        F.col("doc_id"), shingles(F.col(text_col), n).alias("sh")
-    )
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("sig", ArrayType(LongType())),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sigs = [_minhash_py(list(g), k) for g in pdf["sh"]]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "sig": sigs})
-
-    return sh.mapInPandas(run, schema)
-
-
-def minhash_signatures_jvm(
-    df: DataFrame, text_col: str = "text", n: int = 3, k: int = MINHASH_K
-) -> DataFrame:
-    """Zero-Python MinHash: explode distinct shingles, hash JVM-side
-    (``conv(substr(md5(g),1,15),16,10)`` == Python ``int(md5[:15],16)``),
-    then ONE hash aggregation computes all k signature minima. The
-    (a*h+b) mod 2^61-1 permutation runs in pure int64 via Mersenne
-    folding (see inline comment) — bit-identical to :func:`_minhash_py`
-    and the DuckDB oracle, no decimal arithmetic. This is the scale
-    path: one shuffle on doc_id with map-side partial mins, no Arrow
-    transfer."""
-    # NULL text is not a dup candidate: without the filter all NULL-text
-    # docs share identical NULL/degenerate signatures and collapse into
-    # one giant spurious duplicate cluster (and the pandas path would
-    # crash on None, diverging from the jvm/hof twins).
-    sh = df.filter(F.col(text_col).isNotNull()).select(
-        F.col("doc_id"), shingles(F.col(text_col), n).alias("sh")
-    )
-    ex = sh.select("doc_id", F.explode("sh").alias("g"))
-    # (a*h + b) mod 2^61-1 in pure int64 (no decimal): h < 2^60, a <= 33,
-    # so a*h overflows; split h = h_hi*2^31 + h_lo and fold with
-    # 2^61 === 1 (mod M):  a*h = t*2^31 + a*h_lo  with t = a*h_hi, and
-    # t*2^31 === (t >> 30) + ((t & (2^30-1)) << 31).  Every term stays
-    # below 2^61, the sum below 2*M, so one conditional subtract finishes
-    # the mod. ~7 int64 ops per permutation, all whole-stage codegen.
-    h = F.conv(F.substring(F.md5(F.col("g")), 1, 15), 16, 10).cast("long")
-    # materialize the split halves ONCE per shingle row: aggregate
-    # expressions don't share subexpressions, so referencing md5() inside
-    # all 16 mins would recompute the digest 16x per row
-    hx = ex.select(
-        "doc_id",
-        F.shiftright(h, 31).alias("h_hi"),
-        h.bitwiseAND(F.lit((1 << 31) - 1)).alias("h_lo"),
-    )
-
-    def perm(a: int, b: int):
-        t = F.lit(a) * F.col("h_hi")
-        s = (
-            F.lit(a) * F.col("h_lo")
-            + F.shiftleft(t.bitwiseAND(F.lit((1 << 30) - 1)), 31)
-            + F.shiftright(t, 30)
-            + F.lit(b)
-        )
-        return F.when(s >= MERSENNE, s - MERSENNE).otherwise(s)
-
-    aggs = [
-        F.min(perm(a, b)).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(_perm_coeffs(k))
-    ]
-    out = hx.groupBy("doc_id").agg(*aggs)
-    return out.select(
-        "doc_id", F.array(*[F.col(f"mh_{i}") for i in range(k)]).alias("sig")
-    )
-
-
 def minhash_signatures_hof(
     df: DataFrame, text_col: str = "text", n: int = 3, k: int = MINHASH_K
 ) -> DataFrame:
-    """MinHash with NO shuffle at all: the k minima are computed within
-    each row by array higher-order functions (``array_min`` over a
-    ``transform`` of the shingle-hash array) instead of explode +
-    groupBy. Bit-identical to :func:`minhash_signatures_jvm` and
-    :func:`_minhash_py` (same md5 base hash, same Mersenne-folded int64
-    permutation); tests pin the equivalence.
+    """(doc_id, sig array<long>): the one Spark MinHash, with NO shuffle
+    and no Python: the k minima are computed within each row by array
+    higher-order functions (``array_min`` over a ``transform`` of the
+    shingle-hash array). Bit-identical to :func:`_minhash_py` and the
+    DuckDB oracle: the base hash ``conv(substr(md5(g),1,15),16,10)`` ==
+    Python ``int(md5[:15],16)``, and the (a*h+b) mod 2^61-1 permutation
+    runs in pure int64 via Mersenne folding (see inline comment); tests
+    pin the equivalence.
 
-    The md5 halves are materialized ONCE per row in an intermediate
+    The shingle hashes are materialized ONCE per row in an intermediate
     projection — CollapseProject does not inline a non-trivial alias
     referenced k times, so the digests are not recomputed per
     permutation. Plan shape: scan -> two projections, one stage,
-    embarrassing parallelism; prefer this whenever downstream banding
-    does not need the exploded form anyway."""
+    embarrassing parallelism."""
     # NULL text is not a dup candidate: without the filter all NULL-text
     # docs share identical NULL/degenerate signatures and collapse into
-    # one giant spurious duplicate cluster (and the pandas path would
-    # crash on None, diverging from the jvm/hof twins).
+    # one giant spurious duplicate cluster.
     sh = df.filter(F.col(text_col).isNotNull()).select(
         F.col("doc_id"), shingles(F.col(text_col), n).alias("sh")
     )
@@ -282,8 +184,12 @@ def minhash_signatures_hof(
 
     def perm_min(a: int, b: int):
         def one(h):
-            # same Mersenne fold as minhash_signatures_jvm, with the
-            # (cheap) half-split inlined per element
+            # (a*h + b) mod 2^61-1 in pure int64 (no decimal): h < 2^60,
+            # a <= 2k+1, so a*h overflows; split h = h_hi*2^31 + h_lo and
+            # fold with 2^61 === 1 (mod M):  a*h = t*2^31 + a*h_lo with
+            # t = a*h_hi, and t*2^31 === (t >> 30) + ((t & (2^30-1)) << 31).
+            # Every term stays below 2^61, the sum below 2*M, so one
+            # conditional subtract finishes the mod.
             t = F.lit(a) * F.shiftright(h, 31)
             s = (
                 F.lit(a) * h.bitwiseAND(F.lit((1 << 31) - 1))
@@ -359,10 +265,6 @@ def lsh_candidate_pairs(
         )
     )
     return out.distinct() if distinct else out
-
-
-def minhash_dedup_pairs(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    return lsh_candidate_pairs(minhash_signatures(df, text_col, n))
 
 
 def lsh_verified_pairs(

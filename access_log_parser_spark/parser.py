@@ -32,38 +32,28 @@ EMPTY_PATH_ERROR = "empty path detected"       # parser_core.go:39
 OPEN_FILE_ERROR = "cannot open file"           # parser_core.go:40
 
 
-def _check_path(path: str) -> None:
-    """Driver-side path validation with the reference's error semantics
-    (parser_core.go:487-531): empty path and unopenable file fail fast
-    with the reference's messages instead of a deferred task error.
-    Remote URIs (scheme://) are left to the DataSource."""
+def _spark_path(path: str) -> str:
+    """Validate ``path`` with the reference's error semantics
+    (parser_core.go:487-531) and return the path the Spark reader loads.
+
+    An empty path and a path that opens nothing fail fast with the
+    reference's messages instead of a deferred task error. A path naming
+    an existing file is returned with Hadoop-glob metachars ``*?[]{}\\``
+    escaped: the reference's os.Open is glob-free, so ``a{1}.log`` or
+    ``z[1].zip`` must open as they are. Any other path passes through as
+    a glob (``logs/*.log``). Remote URIs (scheme://) are left to the
+    DataSource."""
     import glob as _glob
 
     if path == "":
         raise ValueError(EMPTY_PATH_ERROR)
     if "://" in path:
-        return
-    if any(ch in path for ch in "*?["):
-        # a literal name containing a glob metachar (e.g. "access[1].log")
-        # produces an empty glob — accept it if the file itself exists
-        if not _glob.glob(path) and not os.path.exists(path):
-            raise FileNotFoundError(f"{OPEN_FILE_ERROR}: {path}")
-    elif not os.path.exists(path):
+        return path
+    if os.path.exists(path):
+        return "".join("\\" + ch if ch in "*?[]{}\\" else ch for ch in path)
+    if not _glob.glob(path):
         raise FileNotFoundError(f"{OPEN_FILE_ERROR}: {path}")
-
-
-def _reader_path(path: str) -> str:
-    """Escape Hadoop-glob metachars when ``path`` names a literal existing
-    file that the glob layer would otherwise expand to nothing (e.g.
-    ``access[1].log``) — the reference opens such files fine (os.Open is
-    glob-free), so the Spark reader must too."""
-    import glob as _glob
-
-    if "://" in path or not any(ch in path for ch in "*?[{"):
-        return path
-    if _glob.glob(path) or not os.path.exists(path):
-        return path
-    return "".join("\\" + ch if ch in "*?[]{}\\" else ch for ch in path)
+    return path
 
 
 class BaseParser:
@@ -181,9 +171,8 @@ class BaseParser:
         return self._parse_path(path, "gzip")
 
     def _parse_path(self, path: str, input_type: str) -> tuple[list[str], Result]:
-        _check_path(path)
         return self._run(
-            docs_from_files(self.spark, _reader_path(path)),
+            docs_from_files(self.spark, _spark_path(path)),
             input_type,
             source=basename(path),
         )
@@ -193,9 +182,8 @@ class BaseParser:
     ) -> tuple[list[str], Result]:
         """Per-entry parses merged into one Result: counters summed, errors
         tagged with entry name, entry list appended (parser_core.go:140-171)."""
-        _check_path(zip_path)
         return self._run(
-            docs_from_zip_entries(self.spark, zip_path, glob_pattern),
+            docs_from_zip_entries(self.spark, _spark_path(zip_path), glob_pattern),
             "zip",
             source=basename(zip_path),
             zip_entries=True,

@@ -364,12 +364,6 @@ def wat_records(
     )
 
 
-def read_wat(spark, path_glob: str) -> DataFrame:
-    """binaryFile scan + :func:`wat_records` (see read_warc for the gzip
-    caveat)."""
-    return wat_records(spark.read.format("binaryFile").load(path_glob))
-
-
 def warc_to_wet(parsed: DataFrame) -> DataFrame:
     """WARC -> WET conversion — the Common Crawl "conversion" step that
     turns raw response captures into the extracted-text tier: keep

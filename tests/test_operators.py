@@ -96,30 +96,41 @@ def test_ngram_jaccard(spark, docs):
     assert (0, 4) not in pairs
 
 
+def _py_sigs(df, k=dedup.MINHASH_K):
+    """The driver-side reference: ``_minhash_py`` over each non-NULL-text
+    row's collected ``shingles(...)``."""
+    rows = df.filter(F.col("text").isNotNull()).select(
+        "doc_id", dedup.shingles(F.col("text")).alias("sh")
+    )
+    return {r["doc_id"]: dedup._minhash_py(list(r["sh"]), k) for r in rows.collect()}
+
+
+def _hof_sigs(df, k=dedup.MINHASH_K):
+    return {
+        r["doc_id"]: list(r["sig"])
+        for r in dedup.minhash_signatures_hof(df, k=k).collect()
+    }
+
+
 def test_minhash_lsh_pairs(spark, docs):
-    sigs = {r["doc_id"]: r["sig"] for r in dedup.minhash_signatures(docs).collect()}
+    sigs = _hof_sigs(docs)
+    assert sigs == _py_sigs(docs)
     assert sigs[0] == sigs[1] == sigs[5]           # identical shingle sets
     assert sigs[0] != sigs[4]
     pairs = {
         (r["id_a"], r["id_b"])
-        for r in dedup.minhash_dedup_pairs(docs).collect()
+        for r in dedup.lsh_candidate_pairs(dedup.minhash_signatures_hof(docs)).collect()
     }
     assert {(0, 1), (0, 5), (1, 5)} <= pairs       # exact dups always collide
     assert (0, 4) not in pairs
 
 
 def test_minhash_jvm_bit_identical(spark, docs):
-    from access_log_parser_spark.operators.dedup import (
-        minhash_signatures_hof,
-        minhash_signatures_jvm,
-    )
-
-    py = {r["doc_id"]: r["sig"] for r in dedup.minhash_signatures(docs).collect()}
-    jvm = {r["doc_id"]: r["sig"] for r in minhash_signatures_jvm(docs).collect()}
-    hof = {r["doc_id"]: r["sig"] for r in minhash_signatures_hof(docs).collect()}
-    assert py == jvm == hof
+    """The JVM-side (HOF) signature is bit-identical to the Python
+    reference ``_minhash_py``."""
+    assert _hof_sigs(docs) == _py_sigs(docs)
     # the HOF path's whole point: no exchange anywhere in its plan
-    plan = minhash_signatures_hof(docs)._jdf.queryExecution().executedPlan().toString()
+    plan = dedup.minhash_signatures_hof(docs)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
 
 
@@ -328,31 +339,25 @@ def test_connected_components_propagates_against_edge_direction(spark):
 
 def test_minhash_alternate_k_cross_engine(spark):
     """Parametrized signature length: k=8 must stay bit-identical between
-    the Python and JVM engines (fixed coefficient formula a_i=2i+3,
-    b_i=7919(i+1) holds for any k)."""
-    from access_log_parser_spark.operators.dedup import (
-        minhash_signatures,
-        minhash_signatures_jvm,
-    )
-
+    the Python reference and the JVM-side signature (fixed coefficient
+    formula a_i=2i+3, b_i=7919(i+1) holds for any k)."""
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma delta {i} epsilon zeta") for i in range(30)],
         ["doc_id", "text"],
     )
-    py = {r["doc_id"]: list(r["sig"]) for r in minhash_signatures(docs, k=8).collect()}
-    jv = {r["doc_id"]: list(r["sig"]) for r in minhash_signatures_jvm(docs, k=8).collect()}
-    assert py == jv
-    assert all(len(v) == 8 for v in py.values())
+    hof = _hof_sigs(docs, k=8)
+    assert hof == _py_sigs(docs, k=8)
+    assert len(hof) == 30 and all(len(v) == 8 for v in hof.values())
 
 
 def test_lsh_sensitivity_s_curve(spark):
     """LSH s-curve pinned on deterministic docs: a jaccard-0.81 pair MUST
     become a candidate (collides in 2 of 4 bands with the fixed hash
     family), a jaccard-0.12 pair must NOT. End-to-end through the JVM
-    signature path + banded join."""
+    signature path (checked against ``_minhash_py``) + banded join."""
     from access_log_parser_spark.operators.dedup import (
         lsh_candidate_pairs,
-        minhash_signatures_jvm,
+        minhash_signatures_hof,
     )
 
     base = [f"w{i}" for i in range(40)]
@@ -366,18 +371,18 @@ def test_lsh_sensitivity_s_curve(spark):
     )
     pairs = {
         (r["id_a"], r["id_b"])
-        for r in lsh_candidate_pairs(minhash_signatures_jvm(docs)).collect()
+        for r in lsh_candidate_pairs(minhash_signatures_hof(docs)).collect()
     }
     assert (1, 2) in pairs
     assert (1, 3) not in pairs and (2, 3) not in pairs
+    assert _hof_sigs(docs) == _py_sigs(docs)
 
 
 def test_dedup_null_text_rows_are_excluded_consistently(spark):
     """NULL text = missing data, not content: every dedup entry point
-    drops such rows instead of (a) crashing in the pandas path while the
-    jvm/hof twins return (engine-equivalence break), or (b) collapsing
-    all NULL-text docs into one spurious duplicate cluster via
-    md5(NULL)/all-NULL signatures."""
+    drops such rows instead of collapsing all NULL-text docs into one
+    spurious duplicate cluster via md5(NULL)/all-NULL signatures; the
+    kept rows' signatures equal the Python reference's."""
     from pyspark.sql import functions as F
 
     from access_log_parser_spark.operators import dedup as D
@@ -387,11 +392,9 @@ def test_dedup_null_text_rows_are_excluded_consistently(spark):
          (4, "alpha beta gamma delta")],
         "doc_id long, text string",
     )
-    py = {r["doc_id"]: r["sig"] for r in D.minhash_signatures(df).collect()}
-    jvm = {r["doc_id"]: r["sig"] for r in D.minhash_signatures_jvm(df).collect()}
-    hof = {r["doc_id"]: r["sig"] for r in D.minhash_signatures_hof(df).collect()}
-    assert set(py) == set(jvm) == set(hof) == {1, 4}
-    assert py == jvm == hof
+    hof = _hof_sigs(df)
+    assert set(hof) == {1, 4}
+    assert hof == _py_sigs(df)
 
     ex = D.exact_duplicates(df).collect()
     assert len(ex) == 1 and sorted(ex[0]["dup_ids"]) == [1, 4]  # not [2,3]

@@ -34,18 +34,36 @@ def test_parse_file(spark, datadir):
 
 
 def test_parse_file_literal_glob_metachar_name(spark, datadir, tmp_path):
-    """A literal filename containing a glob metachar (e.g. access[1].log)
-    must parse like any other file: _check_path falls back to existence
-    and the Hadoop glob layer gets an escaped path (regression: it raised
-    'cannot open file' for an existing file)."""
+    """A literal file name containing a glob metachar (``[``, ``{``) must
+    parse like any other file through every file verb, as the reference's
+    glob-free os.Open does: the existing path reaches the Hadoop glob
+    layer escaped (regression: 'cannot open file' for ``access[1].log``,
+    PATH_NOT_FOUND for ``a{1}.log`` and for ``z[1].zip``/``z{1}.zip``)."""
     import shutil
 
-    p = tmp_path / "access[1].log"
-    shutil.copy(str(datadir / "sample_s3_all_match.log"), str(p))
-    out, r = new_s3_parser(spark).parse_file(str(p))
-    assert out == g.ALL_MATCH_DATA
-    assert r.counters() == (5, 5, 0, 0, 0)
-    assert r.source == "access[1].log"
+    parser = new_s3_parser(spark)
+    for name in ("access[1].log", "a{1}.log"):
+        p = tmp_path / name
+        shutil.copy(str(datadir / "sample_s3_all_match.log"), str(p))
+        out, r = parser.parse_file(str(p))
+        assert out == g.ALL_MATCH_DATA
+        assert r.counters() == (5, 5, 0, 0, 0)
+        assert r.source == name
+    for name in ("access[1].log.gz", "a{1}.log.gz"):
+        p = tmp_path / name
+        shutil.copy(str(datadir / "sample_s3_all_match.log.gz"), str(p))
+        out, r = parser.parse_gzip(str(p))
+        assert out == g.ALL_MATCH_DATA
+        assert r.counters() == (5, 5, 0, 0, 0)
+        assert r.source == name
+    for name in ("z[1].zip", "z{1}.zip"):
+        p = tmp_path / name
+        shutil.copy(str(datadir / "sample_s3.zip"), str(p))
+        out, r = parser.parse_zip_entries(str(p), "*all_match*")
+        assert out == g.ALL_MATCH_DATA
+        assert r.counters() == (5, 5, 0, 0, 0)
+        assert r.source == name
+        assert r.zip_entries == ["sample_s3_all_match.log"]
 
 
 def test_parse_gzip(spark, datadir):
