@@ -4,7 +4,8 @@ The north_rule calls for "grok/regex parse"; the reference only ships raw
 regex presets, so this layer adds the grok ergonomics on top of the same
 engine: a grok expression expands to a Python named-group regex and feeds
 the standard pattern registry/validation (`patterns.validate_pattern`),
-so every engine path (compat, fast, jvm) accepts grok-authored formats.
+so the one routed core and every other decode surface accept
+grok-authored formats.
 
 Supported macro grammar: ``%{MACRO}`` (match, no capture) and
 ``%{MACRO:name}`` (named capture). Macros are a curated subset of the

@@ -4,12 +4,19 @@ The preset regexes are the public log-format grammars from the reference
 (`/root/reference/parser_regex.go:104-237`): Apache CLF (4 patterns),
 Apache CLF + vhost (4), Amazon S3 access logs (5, trailing-truncation
 fallbacks), CloudFront (1, tab-separated), ALB (1), NLB (1), CLB (2).
-They use only the RE2 subset shared with Python ``re`` (named groups
+They use only syntax shared by RE2 and Python ``re`` (named groups
 ``(?P<x>...)``, char classes, no backrefs), so they compile unchanged.
+They do not always match the same: ``\\d`` and ``\\S`` follow Unicode
+under ``re`` and ASCII under RE2, so here ``\\d`` matches ``٣`` and ``\\S``
+stops at ``\\x0b`` and NBSP where the reference's would not (ROADMAP
+item 3).
 
-Validation mirrors ``AddPattern`` (`/root/reference/parser_regex.go:74-89`):
-the pattern must compile, contain at least one capture group, and every
-group must be named.
+Every analysis here reads a pattern's ``re`` parse tree
+(``re._parser.parse``), never its source text: the RE2 gate, the tab twin
+and cascade fusion. Validation mirrors the reference's ``AddPattern``
+(`parser_regex.go:74-89`): the pattern must compile in
+RE2's dialect, contain at least one capture group, and every group must be
+named.
 """
 
 from __future__ import annotations
@@ -17,6 +24,7 @@ from __future__ import annotations
 import re
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
+from re import _compiler
 from re import _parser as _sre
 
 REGEX_PATTERN_ERROR = "invalid regex pattern"
@@ -139,61 +147,66 @@ class PatternError(ValueError):
     pass
 
 
-# Constructs Go's RE2 cannot compile but Python's `re` accepts: the
-# reference (regexp.Compile, parser_regex.go:75) would reject a pattern
-# using these, so accepting them here would let user patterns silently
-# mean something the reference cannot express. Scanned outside character
-# classes.
-_RE2_UNSUPPORTED = (
-    ("(?=", "lookahead"),
-    ("(?!", "negative lookahead"),
-    ("(?<=", "lookbehind"),
-    ("(?<!", "negative lookbehind"),
-    ("(?P=", "backreference"),
-)
+# Parse-tree opcodes of the constructs Go's RE2 cannot compile but
+# Python's `re` accepts (https://github.com/google/re2/wiki/Syntax). The
+# reference's regexp.Compile (parser_regex.go:75, parser_core.go:466-483)
+# rejects a pattern using any of them, so accepting one here would let a
+# pattern mean something the reference cannot express. Lookaround
+# (ASSERT, ASSERT_NOT) is named by its direction in `_re2_construct`.
+_NOT_RE2 = {
+    _sre.GROUPREF: "backreference",
+    _sre.GROUPREF_EXISTS: "conditional",
+    _sre.ATOMIC_GROUP: "atomic group",
+    _sre.POSSESSIVE_REPEAT: "possessive repeat",
+}
 
 
-def _re2_incompatibility(src: str) -> str | None:
-    """Name of the first RE2-unsupported construct in ``src``, or None."""
-    in_class = [False] * len(src)
-    for m in _CLASS_RE.finditer(src):
-        for i in range(m.start(), m.end()):
-            in_class[i] = True
-    i = 0
-    while i < len(src):
-        if in_class[i]:
-            i += 1
-            continue
-        ch = src[i]
-        if ch == "\\":
-            nxt = src[i + 1] if i + 1 < len(src) else ""
-            if nxt.isdigit() and nxt != "0":
-                return "backreference"
-            i += 2
-            continue
-        for tok, name in _RE2_UNSUPPORTED:
-            if src.startswith(tok, i):
-                return name
-        i += 1
+def _subtrees(op, av) -> list:
+    """The item lists nested in a group, repeat or alternation item."""
+    if op is _sre.SUBPATTERN:
+        return [av[3]]
+    if op is _sre.MAX_REPEAT or op is _sre.MIN_REPEAT:
+        return [av[2]]
+    if op is _sre.BRANCH:
+        return av[1]
+    return []
+
+
+def _re2_construct(items) -> str | None:
+    """Name of the first construct in ``items`` that RE2 cannot compile."""
+    for op, av in items:
+        if op is _sre.ASSERT or op is _sre.ASSERT_NOT:
+            look = "lookahead" if av[0] == 1 else "lookbehind"
+            return f"negative {look}" if op is _sre.ASSERT_NOT else look
+        if op in _NOT_RE2:
+            return _NOT_RE2[op]
+        for sub in _subtrees(op, av):
+            found = _re2_construct(sub)
+            if found is not None:
+                return found
     return None
+
+
+def check_re2(pattern: str) -> None:
+    """Parse ``pattern`` and raise ``re.error`` when ``re`` cannot parse it
+    or when its parse tree holds a construct the reference's RE2 dialect
+    lacks: lookaround, backreference, conditional, atomic group or
+    possessive repeat. Callers report both the way the reference reports a
+    failed ``regexp.Compile``."""
+    construct = _re2_construct(_sre.parse(pattern))
+    if construct is not None:
+        raise re.error(f"{construct} is not supported by the reference's RE2 dialect")
 
 
 def validate_pattern(pattern: str) -> re.Pattern:
     """Compile + validate one pattern (parser_regex.go:74-89 semantics).
 
-    Rejects: non-compiling patterns, patterns with no capture group,
-    patterns with any unnamed capture group, and patterns using regex
-    constructs Go's RE2 cannot compile (lookaround, backreferences) —
-    the reference's ``regexp.Compile`` errors on those, so parity
-    requires rejecting them even though Python's ``re`` would accept.
+    Rejects: non-compiling patterns, patterns using a construct Go's RE2
+    cannot compile (see :func:`check_re2`), patterns with no capture
+    group, and patterns with any unnamed capture group.
     """
-    incompat = _re2_incompatibility(pattern)
-    if incompat is not None:
-        raise PatternError(
-            f"{REGEX_PATTERN_ERROR}: {incompat} is not supported by the "
-            "reference's RE2 dialect"
-        )
     try:
+        check_re2(pattern)
         ptn = re.compile(pattern)
     except re.error as e:
         raise PatternError(f"{REGEX_PATTERN_ERROR}: {e}") from e
@@ -208,132 +221,8 @@ def compile_patterns(patterns: list[str]) -> list[re.Pattern]:
     return [validate_pattern(p) for p in patterns]
 
 
-_CLASS_RE = re.compile(r"\[\^?(?:\\.|[^\]\\])*\]")
-
-
-def _tabs_all_mandatory(src: str, in_class: list[bool]) -> bool:
-    """True iff every literal tab outside a character class is MANDATORY:
-    traversed at least once in every successful match. The tab-count
-    guard's soundness argument needs this — a tab inside an optional /
-    min-0-quantified group, inside any scope with an alternation ``|``, or
-    inside a lookaround may be skipped by a successful match, leaving a
-    line tab for a greedy class to span even when ``line.count('\\t') ==
-    n_tabs`` (the unsound case: twin rejects a line the original accepts).
-
-    Single pass with a scope stack: a frame accumulates the tabs seen in
-    its span; at ``)`` the frame's tabs are discarded as unsafe if the
-    frame had a direct ``|``, is a lookaround, or its quantifier allows
-    zero traversals — otherwise they propagate to the parent (an outer
-    scope may still invalidate them).
-    """
-    frames: list[dict] = [{"tabs": 0, "pipe": False, "look": False}]
-    i, n = 0, len(src)
-    unsafe = False
-    while i < n:
-        if in_class[i]:
-            i += 1
-            continue
-        ch = src[i]
-        if ch == "\\":
-            i += 2
-            continue
-        if ch == "(":
-            look = src.startswith(("(?=", "(?!", "(?<=", "(?<!"), i)
-            frames.append({"tabs": 0, "pipe": False, "look": look})
-            i += 1
-            continue
-        if ch == ")":
-            if len(frames) == 1:  # unbalanced; be conservative
-                return False
-            fr = frames.pop()
-            j = i + 1
-            min0 = False
-            if j < n and src[j] in "?*":
-                min0 = True
-            elif j < n and src[j] == "{":
-                m = re.match(r"\{(\d*)(?:,\d*)?\}", src[j:])
-                min0 = bool(m) and (m.group(1) == "" or int(m.group(1)) == 0)
-            if fr["tabs"]:
-                if fr["pipe"] or fr["look"] or min0:
-                    unsafe = True
-                else:
-                    frames[-1]["tabs"] += fr["tabs"]
-            i += 1
-            continue
-        if ch == "|":
-            frames[-1]["pipe"] = True
-        elif ch == "\t":
-            # A min-0 quantifier directly on the bare tab ("\t?", "\t*",
-            # "\t{0,2}") makes it skippable — same unsoundness as a min-0
-            # group, so mirror the group-close check here.
-            j = i + 1
-            if j < n and src[j] in "?*":
-                unsafe = True
-            elif j < n and src[j] == "{":
-                m = re.match(r"\{(\d*)(?:,\d*)?\}", src[j:])
-                if m and (m.group(1) == "" or int(m.group(1)) == 0):
-                    unsafe = True
-            frames[-1]["tabs"] += 1
-        i += 1
-    if frames[-1]["pipe"] and frames[-1]["tabs"]:
-        unsafe = True
-    return not unsafe
-
-
-def fast_twin(pattern: re.Pattern) -> tuple[re.Pattern, int] | None:
-    """Derive a backtracking-free twin for a tab-separated pattern.
-
-    Greedy negated classes like ``[^\"]*`` may span tab separators and
-    force the Python engine to backtrack across the remaining fields
-    (~150us/line on the 33-field CloudFront preset). If a line contains
-    exactly as many tabs as the pattern has literal ``\\t`` separators,
-    every tab must be consumed by a separator literal in any successful
-    match, so no class can span a tab — narrowing every class to exclude
-    tab then accepts exactly the same lines with identical group values
-    (~2us/line, 67x). Returns ``(twin, n_separator_tabs)``; the caller
-    must apply the twin only to lines where ``line.count('\\t') ==
-    n_separator_tabs`` and fall back to the original otherwise.
-
-    Returns None when the pattern has no tab separators, already excludes
-    tabs everywhere, has a tab inside a character class, or has any
-    NON-MANDATORY literal tab — one inside an optional/min-0 group, an
-    alternation scope, or a lookaround (see :func:`_tabs_all_mandatory`:
-    a skippable pattern tab breaks the "every line tab is consumed by a
-    separator literal" step of the exchangeability argument, so the twin
-    could reject lines the original accepts).
-    """
-    src = pattern.pattern
-    classes = list(_CLASS_RE.finditer(src))
-    if any("\t" in m.group(0) or "\\t" in m.group(0) for m in classes):
-        return None
-    in_class = [False] * len(src)
-    for m in classes:
-        for i in range(m.start(), m.end()):
-            in_class[i] = True
-    n_tabs = sum(1 for i, ch in enumerate(src) if ch == "\t" and not in_class[i])
-    if n_tabs == 0:
-        return None
-    if not _tabs_all_mandatory(src, in_class):
-        return None
-    # widen every negated class to also exclude tab
-    out, changed = [], False
-    pos = 0
-    for m in classes:
-        out.append(src[pos:m.start()])
-        cls = m.group(0)
-        if cls.startswith("[^"):
-            cls = "[^\\t" + cls[2:]
-            changed = True
-        out.append(cls)
-        pos = m.end()
-    out.append(src[pos:])
-    if not changed:
-        return None
-    return re.compile("".join(out)), n_tabs
-
-
 class _Unproven(Exception):
-    """Raised inside the fusion analysis for anything it cannot prove."""
+    """Raised inside a tree analysis for anything it cannot prove."""
 
 
 _CATEGORIES = {
@@ -370,6 +259,96 @@ def _char_test(op, av) -> Callable[[str], bool] | None:
         else:
             raise _Unproven
     return lambda c: any(t(c) for t in tests) != negate
+
+
+_TAB = ord("\t")
+
+
+def _mandatory_tabs(items) -> int:
+    """Tabs that one pass over ``items`` consumes in every match: each tab
+    literal, counted once per minimum iteration of the repeats around it.
+
+    Raises :class:`_Unproven` for a tab that a match may skip (under an
+    alternation or a min-0 repeat), for a set that lists the tab (``[\\t ]``,
+    ``\\s``, ``[^\\t"]``, or ``[^\\t]``, which the parser stores as a negated
+    literal), and for any item other than a literal, set, ``.``, anchor,
+    group, repeat or alternation (lookaround and the like).
+    """
+    n = 0
+    for op, av in items:
+        if op is _sre.LITERAL:
+            if av == _TAB:
+                n += 1
+        elif op is _sre.NOT_LITERAL or op is _sre.IN:
+            # a set lists the tab when, negation undone, it matches the tab
+            negated = op is _sre.NOT_LITERAL or av[0][0] is _sre.NEGATE
+            if _char_test(op, av)("\t") != negated:
+                raise _Unproven
+        elif op is _sre.SUBPATTERN:
+            n += _mandatory_tabs(av[3])
+        elif op is _sre.MAX_REPEAT or op is _sre.MIN_REPEAT:
+            per_pass = _mandatory_tabs(av[2])
+            if per_pass and av[0] == 0:
+                raise _Unproven
+            n += per_pass * av[0]
+        elif op is _sre.BRANCH:
+            if any(_mandatory_tabs(alt) for alt in av[1]):
+                raise _Unproven
+        elif op is not _sre.ANY and op is not _sre.AT:
+            raise _Unproven
+    return n
+
+
+def _widen(items) -> bool:
+    """Add the tab to every negated set in ``items``, in place; True if
+    there was one."""
+    widened = False
+    for k, (op, av) in enumerate(items):
+        if op is _sre.NOT_LITERAL:
+            items[k] = (_sre.IN, [(_sre.NEGATE, None), (_sre.LITERAL, av), (_sre.LITERAL, _TAB)])
+            widened = True
+        elif op is _sre.IN and av[0][0] is _sre.NEGATE:
+            av.append((_sre.LITERAL, _TAB))
+            widened = True
+        else:
+            for sub in _subtrees(op, av):
+                widened |= _widen(sub)
+    return widened
+
+
+def fast_twin(pattern: re.Pattern) -> tuple[re.Pattern, int] | None:
+    """Derive a backtracking-free twin for a tab-separated pattern.
+
+    Greedy negated classes like ``[^\\"]*`` may span tab separators and
+    force the Python engine to backtrack across the remaining fields
+    (~150us/line on the 33-field CloudFront preset). If a line contains
+    exactly as many tabs as every match of the pattern consumes with its
+    tab literals, no other item can consume a tab in a successful match,
+    so adding the tab to every negated set accepts exactly the same lines
+    with identical group values (~2us/line, 67x). Returns ``(twin,
+    n_tabs)``; the caller must apply the twin only to lines where
+    ``line.count('\\t') == n_tabs`` and fall back to the original
+    otherwise.
+
+    Both the count and the widening read the ``re`` parse tree, so every
+    spelling of the tab (the character, ``\\t``, ``\\x09``) counts, and the
+    twin is compiled from the widened tree. It has no source, so it is
+    built where it is used and never pickled.
+
+    Returns None when the pattern has no mandatory tab, has no negated set
+    to widen, or when :func:`_mandatory_tabs` cannot count its tabs: a tab
+    that a match may skip leaves a line tab for a greedy class to span
+    even when the counts agree, so the twin could reject lines the
+    original accepts.
+    """
+    tree = _sre.parse(pattern.pattern, pattern.flags)
+    try:
+        n_tabs = _mandatory_tabs(tree)
+    except _Unproven:
+        return None
+    if n_tabs == 0 or not _widen(tree):
+        return None
+    return _compiler.compile(tree, pattern.flags), n_tabs
 
 
 # A first-character set: a frozenset of literal characters, or a

@@ -7,6 +7,7 @@ the guard forces fallback to the original engine.
 
 from __future__ import annotations
 
+import itertools
 import re
 
 import pytest
@@ -20,6 +21,10 @@ from access_log_parser_spark.patterns import (
     S3,
     fast_twin,
 )
+
+# the same CloudFront regex with every tab written as the two-character
+# escape, the natural raw-string spelling
+CLOUDFRONT_ESCAPED = CLOUDFRONT[0].replace("\t", "\\t")
 
 
 def _cf_line(n_fields: int = 33, inject: str | None = None) -> str:
@@ -51,6 +56,7 @@ ADVERSARIAL = [
 
 def test_cf_twin_exists_and_clf_space_variant_does_not():
     assert fast_twin(re.compile(CLOUDFRONT[0])) is not None
+    assert fast_twin(re.compile(CLOUDFRONT_ESCAPED)) is not None
     assert fast_twin(re.compile(APACHE_CLF[0])) is None  # space-separated
     assert fast_twin(re.compile(APACHE_CLF[2])) is not None  # tab variant
     assert fast_twin(re.compile(ALB[0])) is None
@@ -58,7 +64,9 @@ def test_cf_twin_exists_and_clf_space_variant_does_not():
     assert fast_twin(re.compile(S3[0])) is None
 
 
-@pytest.mark.parametrize("pattern", [CLOUDFRONT[0], APACHE_CLF[2], APACHE_CLF[3]])
+@pytest.mark.parametrize(
+    "pattern", [CLOUDFRONT[0], APACHE_CLF[2], APACHE_CLF[3], CLOUDFRONT_ESCAPED]
+)
 def test_twin_identical_to_original_on_adversarial_lines(pattern):
     orig = re.compile(pattern)
     lines = ADVERSARIAL + [
@@ -82,9 +90,9 @@ def test_non_mandatory_tab_patterns_get_no_twin():
     class to span even when counts agree) — such patterns must not derive
     a twin. Regression for the optional-group case: the original matches
     'hdr\\tfoo\\tbar' with b='foo\\tbar' but a narrowed twin would not."""
-    # NOTE: patterns below embed REAL tab characters ("\t" in a non-raw
-    # string) — fast_twin only counts literal tab chars in the source
-    # (a 2-char "\\t" escape already derives no twin, which is safe).
+    # NOTE: patterns below embed real tab characters ("\t" in a non-raw
+    # string); fast_twin reads the parse tree, so the "\\t" escape and
+    # "\\x09" spell the same tab and derive the same twin, or none.
     optional = re.compile('^(?P<a>\\S+)\t(?:x\t)?(?P<b>[^"]*)$')
     assert fast_twin(optional) is None
     line = "hdr\tfoo\tbar"
@@ -99,6 +107,11 @@ def test_non_mandatory_tab_patterns_get_no_twin():
     assert fast_twin(re.compile('^(?P<a>\\S+)(?:\tq){0,3}(?P<b>[^"]*)$')) is None
     # tab inside a lookahead never consumes
     assert fast_twin(re.compile('^(?=x\t)(?P<a>[^"]*)\t(?P<b>\\S+)$')) is None
+    # a negated class inside a lookahead may look across a separator tab
+    ahead = re.compile('^(?=[^"]*z)(?P<a>[^"]*)\t(?P<b>\\S+)$')
+    assert fast_twin(ahead) is None
+    pids, vals = decoders.compile_plan([ahead]).decode(["a\tz"])
+    assert pids[0] == 0 and vals[0] == ["a", "z"]
     # bare tab with a min-0 quantifier directly on it (round-2 ADVICE
     # repro: '^(?P<a>[^"]*)q\t?(?P<b>\S+)$' matches 'x\tyqz' with the tab
     # inside <a>, but a narrowed twin would reject it even though the
@@ -135,12 +148,13 @@ def test_optional_tab_pattern_identical_through_batch_decoder():
 
 
 def test_twin_group_values_match_on_matched_corpus():
-    orig = re.compile(CLOUDFRONT[0])
-    twin, n_tabs = fast_twin(orig)
-    assert n_tabs == 32
-    line = _cf_line()
-    assert line.count("\t") == n_tabs
-    assert twin.search(line).groupdict() == orig.search(line).groupdict()
+    for pattern in (CLOUDFRONT[0], CLOUDFRONT_ESCAPED):
+        orig = re.compile(pattern)
+        twin, n_tabs = fast_twin(orig)
+        assert n_tabs == 32
+        line = _cf_line()
+        assert line.count("\t") == n_tabs
+        assert twin.search(line).groupdict() == orig.search(line).groupdict()
 
 
 def test_twin_is_fast():
@@ -186,68 +200,85 @@ except ImportError:  # pragma: no cover
     pass
 
 
-# --- property-based soundness over RANDOM PATTERNS ---
+# --- soundness over RANDOM PATTERNS ---
 #
-# Both prior advisory reviews found real unsoundness in the
-# twin-eligibility scanner (_tabs_all_mandatory): optional tabs inside
-# groups (round 1) and a bare min-0-quantified tab (round 2) each made
-# the decoder trust a twin that disagreed with the original. This fuzz
-# generates patterns from a grammar of exactly the risky ingredients —
-# greedy classes that span tabs, tabs under every quantifier shape,
-# optional/alternation scopes containing tabs — and asserts the ONLY
-# property that matters: through the batch decoder (twin + tab-count
-# guard engaged), every line decodes identically to the original
-# pattern's plain search().
+# Two earlier versions of the twin-eligibility analysis were unsound:
+# optional tabs inside groups and a bare min-0-quantified tab each made
+# the decoder trust a twin that disagreed with the original. This grammar
+# holds exactly the risky ingredients — greedy classes that span tabs,
+# tabs under every quantifier shape, optional/alternation scopes
+# containing tabs — and the checks assert the ONLY property that matters:
+# through the batch decoder (twin + tab-count guard engaged), every line
+# decodes identically to the original pattern's plain search().
+
+_GROUP_BODIES = ["[^\\t]*", "\\S+", "[^\"]*", ".*", "[^\\t\"]*"]
+_PLAIN_TOKENS = [
+    "\\t", "\\t?", "\\t*", "\\t{0,2}", "\\t{1,2}", "\\t{2}",
+    "q", "x?", '"',
+    "(?:x\\t)?", "(?:a|b\\t)", "(?:\\t|;)", "(?:q\\t)",
+]
+_TOKENS = [("G", b) for b in _GROUP_BODIES] + [("L", t) for t in _PLAIN_TOKENS]
+
+
+def _grammar_pattern(tokens) -> re.Pattern:
+    """``^...$`` from (kind, text) tokens; kind "G" wraps the text in a
+    named group, and a pattern with none gets one (decoder contract)."""
+    parts, gi = [], 0
+    for kind, val in tokens:
+        if kind == "G":
+            parts.append(f"(?P<g{gi}>{val})")
+            gi += 1
+        else:
+            parts.append(val)
+    if gi == 0:
+        parts.append("(?P<g0>[^\\t]*)")
+    return re.compile("^" + "".join(parts) + "$")
+
+
+def _assert_decodes_like_search(orig: re.Pattern, lines) -> None:
+    # also probe lines with the twin's tab count, where the guard lets the
+    # twin take over
+    twin = fast_twin(orig)
+    n_tabs = twin[1] if twin else 1
+    probe = list(lines) + ["\t".join(["ab"] * (n_tabs + 1)), "\t" * n_tabs]
+    pids, vals = decoders.compile_plan([orig]).decode(probe)
+    for line, pid, val in zip(probe, pids, vals):
+        m = orig.search(line)
+        if m is None:
+            assert pid == -1 and val is None, (orig.pattern, line)
+        else:
+            assert pid == 0, (orig.pattern, line)
+            assert val == ["" if g is None else g for g in m.groups()], (
+                orig.pattern,
+                line,
+            )
+
+
+def test_random_pattern_grammar_builds_twins():
+    """The fuzz below tests the twin only if its grammar yields twins. It
+    spells every tab as the escape, so a twin that counted only tab
+    characters in the source would never be built. Every 3-token pattern,
+    checked on lines with and without the twin's tab count."""
+    pats = [_grammar_pattern(t) for t in itertools.product(_TOKENS, repeat=3)]
+    twinned = [p for p in pats if fast_twin(p) is not None]
+    assert twinned
+    for p in twinned:
+        _assert_decodes_like_search(p, ["ab\tq", 'a"b\tab', "\t\tx\tq\t", "q\t\t"])
+
 
 try:
     from hypothesis import given, settings, strategies as st
 
-    _GROUP_BODIES = ["[^\\t]*", "\\S+", "[^\"]*", ".*", "[^\\t\"]*"]
-    _PLAIN_TOKENS = [
-        "\\t", "\\t?", "\\t*", "\\t{0,2}", "\\t{1,2}", "\\t{2}",
-        "q", "x?", '"',
-        "(?:x\\t)?", "(?:a|b\\t)", "(?:\\t|;)", "(?:q\\t)",
-    ]
-    _token = st.one_of(
-        st.sampled_from(_GROUP_BODIES).map(lambda b: ("G", b)),
-        st.sampled_from(_PLAIN_TOKENS).map(lambda t: ("L", t)),
-    )
     _line_text = st.text(
         alphabet=st.sampled_from(list('abqx;" \t')), min_size=0, max_size=24
     )
 
     @given(
-        st.lists(_token, min_size=1, max_size=8),
+        st.lists(st.sampled_from(_TOKENS), min_size=1, max_size=8),
         st.lists(_line_text, min_size=1, max_size=6),
     )
     @settings(max_examples=400, deadline=None)
     def test_random_pattern_twin_soundness(tokens, lines):
-        parts, names, gi = [], [], 0
-        for kind, val in tokens:
-            if kind == "G":
-                parts.append(f"(?P<g{gi}>{val})")
-                names.append(f"g{gi}")
-                gi += 1
-            else:
-                parts.append(val)
-        if not names:  # decoder contract: >=1 named group
-            parts.append("(?P<g0>[^\\t]*)")
-            names.append("g0")
-        orig = re.compile("^" + "".join(parts) + "$")
-        # also probe lines with the exact separator tab count, where the
-        # guard lets the twin (if any) take over
-        n_tabs = "".join(parts).count("\\t")
-        probe = lines + ["\t".join(["ab"] * (n_tabs + 1)), "\t" * n_tabs]
-        pids, vals = decoders.compile_plan([orig]).decode(probe)
-        for line, pid, val in zip(probe, pids, vals):
-            m = orig.search(line)
-            if m is None:
-                assert pid == -1 and val is None, (orig.pattern, line)
-            else:
-                assert pid == 0, (orig.pattern, line)
-                assert val == ["" if g is None else g for g in m.groups()], (
-                    orig.pattern,
-                    line,
-                )
+        _assert_decodes_like_search(_grammar_pattern(tokens), lines)
 except ImportError:  # pragma: no cover
     pass

@@ -84,6 +84,32 @@ def test_invalid_regex_errors():
         compile_filters(["name =~ ("])
 
 
+RE2_REJECTED = [
+    ("name =~ (?=x)", "lookahead"),
+    ("name =~ x*+", "possessive repeat"),
+    ("name =~ (?>x)", "atomic group"),
+    ("name !~* (?<=y)z", "lookbehind"),
+]
+
+
+@pytest.mark.parametrize("expr,construct", RE2_REJECTED)
+def test_regex_ops_reject_what_re2_cannot_compile(expr, construct):
+    """The reference aborts when regexp.Compile fails on a filter regex
+    (parser_core.go:466-483); Python's re would accept these."""
+    with pytest.raises(FilterError, match=construct):
+        compile_filters([expr])
+
+
+def test_catalyst_regex_ops_pass_the_same_gate(spark):
+    from access_log_parser_spark.filters import filters_to_column
+
+    for expr, construct in RE2_REJECTED:
+        with pytest.raises(FilterError, match=construct):
+            filters_to_column([expr], LS)
+    # no named-group rule for filters: an unnamed group is fine
+    assert filters_to_column(["name =~ (a|b)c"], LS) is not None
+
+
 def test_catalyst_numeric_filter_excludes_non_numeric_under_ansi(spark):
     """Spark 4 ANSI mode (on by default) makes a plain cast('double')
     ABORT on non-numeric input; the structured surface excludes instead

@@ -52,9 +52,10 @@ def test_non_named_group_rejected():
 
 
 def test_re2_unsupported_constructs_rejected():
-    """The reference's regexp.Compile (RE2) cannot express lookaround or
-    backreferences, so user patterns using them must fail fast here too
-    instead of silently meaning something the reference cannot run."""
+    """The reference's regexp.Compile (RE2) cannot express lookaround,
+    backreferences, conditionals, atomic groups or possessive repeats, so
+    user patterns using them must fail fast here too instead of silently
+    meaning something the reference cannot run."""
     for bad, name in [
         (r"(?P<a>x)(?=y)", "lookahead"),
         (r"(?P<a>x)(?!y)", "negative lookahead"),
@@ -62,6 +63,11 @@ def test_re2_unsupported_constructs_rejected():
         (r"(?<!y)(?P<a>x)", "negative lookbehind"),
         (r"(?P<a>x)\1", "backreference"),
         (r"(?P<a>x)(?P=a)", "backreference"),
+        (r"^(?P<a>a*+)", "possessive repeat"),
+        (r"^(?P<a>(?>ab|a)c)", "atomic group"),
+        (r"^(?P<a>x)(?(a)y|z)", "conditional"),
+        # an escaped "[" opens no class, so the lookahead after it counts
+        (r"^(?P<a>\[)(?=x)(?P<b>])", "lookahead"),
     ]:
         with pytest.raises(pat.PatternError, match=name):
             pat.validate_pattern(bad)
