@@ -13,12 +13,17 @@ the engine's only decoders. Semantics match the reference's
 - a NULL line is unmatched under both, found by one ``None in lines``
   check per batch, so a NULL-free batch runs the plain per-line loop.
 
-A pattern list is compiled once per task into a :class:`DecodePlan`. When
-the list is a prefix chain that :func:`.patterns.fuse_cascade` can prove
-(the S3 and CLB presets), each line costs ONE search of the fused regex.
-Any other list runs the cascade per batch: pattern 0 over every line, then
-pattern 1 over its misses, and so on, with each tab-separated pattern's
-guarded :func:`.patterns.fast_twin` derived once in the plan.
+:func:`compile_plan` is the package's one way from pattern strings to a
+decoder, run once per task (and once on the driver, to validate). It parses
+each string once; that tree feeds the RE2 gate, the capture-group checks,
+the group names and :attr:`DecodePlan.union`, cascade fusion and the tab
+twins. When the list is a prefix chain that :func:`.patterns.fuse_cascade`
+can prove (the S3 and CLB presets), each line costs ONE search of the
+fused regex. Any other list runs the cascade per batch: pattern 0 over
+every line, then pattern 1 over its misses, and so on, with each
+tab-separated pattern's guarded :func:`.patterns.fast_twin`. The fused
+regex and the twins are compiled from trees and cannot be pickled, so a
+task captures the pattern strings, never a plan.
 """
 
 from __future__ import annotations
@@ -28,7 +33,7 @@ from collections.abc import Sequence
 from dataclasses import dataclass, field
 from operator import itemgetter
 
-from .patterns import FusedCascade, fast_twin, fuse_cascade, group_names
+from .patterns import FusedCascade, fast_twin, fuse_cascade, group_names, parse_pattern
 
 PARSE_ERROR = "cannot parse input"
 
@@ -61,6 +66,13 @@ class DecodePlan:
     # per-pattern row getters by requested fields, built on first use: the
     # SQL UDTF decodes one line per call
     _getters: dict = field(default_factory=dict, compare=False, repr=False)
+
+    @property
+    def union(self) -> list[str]:
+        """Union of every pattern's group names, in first-seen positional
+        order. The widest preset pattern comes first in every preset, so for
+        presets this is pattern 0's field list."""
+        return list(dict.fromkeys(name for names in self.names for name in names))
 
     def decode(self, lines: Sequence[str | None]) -> tuple[list[int], list[list[str] | None]]:
         """(pattern_ids, values) for ``lines``; pattern_id is -1 and values
@@ -159,16 +171,21 @@ class DecodePlan:
         return pids, matches
 
 
-def compile_plan(patterns: Sequence[re.Pattern]) -> DecodePlan:
-    """Decode plan for a compiled pattern list (first match wins)."""
-    if not patterns:
+def compile_plan(pattern_strs: Sequence[str]) -> DecodePlan:
+    """Decode plan for a pattern list (first match wins).
+
+    Each string is parsed once (:func:`.patterns.parse_pattern`), which
+    raises :class:`.patterns.PatternError` as the reference's
+    ``AddPattern`` fails; an empty list raises :class:`NoPatternError`.
+    """
+    if not pattern_strs:
         raise NoPatternError
-    patterns = tuple(patterns)
-    names = tuple(group_names(p) for p in patterns)
-    fused = fuse_cascade(patterns)
+    patterns, trees = zip(*map(parse_pattern, pattern_strs))
+    names = tuple(group_names(t) for t in trees)
+    fused = fuse_cascade(trees)
     if fused is not None:
         return DecodePlan(patterns, names, fused=fused)
-    return DecodePlan(patterns, names, twins=tuple(fast_twin(p) for p in patterns))
+    return DecodePlan(patterns, names, twins=tuple(fast_twin(t) for t in trees))
 
 
 def ltsv_decode_batch(

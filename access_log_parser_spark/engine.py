@@ -129,11 +129,9 @@ class _RouteSpec:
     def build(cls, fmt: str | Sequence[str], opt: Option) -> _RouteSpec:
         pattern_strs = _resolve_patterns(fmt)
         if pattern_strs is not None:
-            # Driver-side validation, AddPattern semantics (parser_regex.go:74-89).
-            for p in pattern_strs:
-                pat.validate_pattern(p)
-            if not pattern_strs:
-                raise decoders.NoPatternError
+            # the tasks' own compile, run here so that pattern errors
+            # (AddPattern semantics, parser_regex.go:74-89) surface on the driver
+            decoders.compile_plan(pattern_strs)
         # Driver-side DSL validation: syntax + operator errors surface before
         # any task runs; data-dependent errors (unknown label, non-numeric
         # value) still abort at execution, matching parser_core.go:220-223.
@@ -157,11 +155,10 @@ class _RouteSpec:
         )
 
     def compile(self) -> _Router:
-        """Once per task: the decode plan and the filter predicates."""
+        """Once per task: the decode plan, compiled from the pattern strings
+        (a plan cannot be pickled), and the filter predicates."""
         plan = (
-            decoders.compile_plan(pat.compile_patterns(self.pattern_strs))
-            if self.pattern_strs is not None
-            else None
+            decoders.compile_plan(self.pattern_strs) if self.pattern_strs is not None else None
         )
         return _Router(self, plan, compile_filters(self.filter_exprs))
 
@@ -418,9 +415,7 @@ def extract_fields(
     if isinstance(fmt, str) and fmt == "ltsv":
         raise ValueError("extract_fields is regex-only; use extract_ltsv for LTSV")
     pattern_strs = _resolve_patterns(fmt)
-    if not pattern_strs:
-        raise decoders.NoPatternError
-    union = pat.union_schema(pat.compile_patterns(pattern_strs))
+    union = decoders.compile_plan(pattern_strs).union
     if fields is not None:
         wanted = set(fields)
         union = [n for n in union if n in wanted]
@@ -435,7 +430,7 @@ def extract_fields(
     n_pass = len(passthrough)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        plan = decoders.compile_plan(pat.compile_patterns(pattern_strs))
+        plan = decoders.compile_plan(pattern_strs)
         for batch in batches:
             # columns by position: line_col may also be a passthrough column
             raws = batch.column(n_pass).to_pylist()

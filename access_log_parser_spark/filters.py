@@ -13,9 +13,10 @@ Reference semantics (`/root/reference/parser_core.go:338-483`):
   numeric operator (parser_core.go:427-432);
 - filters are evaluated after decode and before projection, so they may
   reference columns later dropped by label selection;
-- a regex operator's value passes the patterns' RE2 gate
-  (:func:`.patterns.check_re2`) on both targets, so a regex Go's
-  ``regexp.Compile`` rejects aborts here too (parser_core.go:466-483).
+- a regex operator's value goes through the patterns' one parse step
+  (:func:`.patterns.compile_re2`: parse once, RE2 gate, compile) on both
+  targets, so a regex Go's ``regexp.Compile`` rejects aborts here too
+  (parser_core.go:466-483).
 
 Two compilation targets:
 
@@ -37,7 +38,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .patterns import check_re2
+from .patterns import compile_re2
 
 FILTER_ERROR = "cannot evaluate filter expressions"
 OPERATOR_ERROR = "unknown operator"
@@ -69,18 +70,16 @@ def _string_fn(op: str, value: str) -> Callable[[str], bool]:
     return lambda v: v.lower() != low  # "!=*"
 
 
-def _regex(op: str, value: str) -> str:
+def _regex(op: str, value: str) -> re.Pattern:
     """The regex a ``=~``-family filter runs, once it passes the RE2 gate."""
-    pat = ("(?i)" + value) if op.endswith("*") else value
     try:
-        check_re2(pat)
+        return compile_re2(("(?i)" + value) if op.endswith("*") else value)[0]
     except re.error as e:
         raise FilterError(f"{FILTER_ERROR}: {e}") from e
-    return pat
 
 
 def _regex_fn(op: str, value: str) -> Callable[[str], bool]:
-    rx = re.compile(_regex(op, value))
+    rx = _regex(op, value)
     if op.startswith("=~"):
         return lambda v: rx.search(v) is not None
     return lambda v: rx.search(v) is None
@@ -175,7 +174,7 @@ def filters_to_column(filters: Sequence[str], columns: Sequence[str]) -> Column:
         elif op == "!=*":
             p = F.lower(c) != F.lit(value.lower())
         elif op in REGEX_OPS:
-            p = c.rlike(_regex(op, value))
+            p = c.rlike(_regex(op, value).pattern)
             if op.startswith("!~"):
                 p = ~p
         else:  # numeric

@@ -5,8 +5,9 @@ API:
     spark.sql("SELECT t.* FROM logs, LATERAL parse_clf(logs.line) t")
 
 It answers from the engine's own decoder (:class:`..decoders.DecodePlan`,
-built once per UDTF instance), so its semantics are the engine's row for
-row: first match wins, pattern_id = -1 + NULL fields for unmatched and
+compiled from the preset's pattern strings once per UDTF instance, and
+once on the driver for the schema), so its semantics are the engine's row
+for row: first match wins, pattern_id = -1 + NULL fields for unmatched and
 NULL lines (parser_core.go:259-270), "" for a group that did not take
 part, and one search per line for the fused S3/CLB cascades. The UDTF is
 the row-at-a-time cousin of the vectorized mapInArrow path: convenient
@@ -19,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql.functions import udtf
 
 from .. import patterns as pat
-from ..decoders import compile_plan
+from ..decoders import compile_plan, ltsv_decode_batch
 
 
 def make_parse_udtf(fmt: str, fields: list[str] | None = None):
@@ -27,7 +28,7 @@ def make_parse_udtf(fmt: str, fields: list[str] | None = None):
     columns (union order, silent drop — selectLabels semantics);
     default = full union schema plus pattern_id."""
     pattern_strs = list(pat.PRESETS[fmt])
-    union = pat.union_schema(pat.compile_patterns(pattern_strs))
+    union = compile_plan(pattern_strs).union
     if fields is not None:
         wanted = set(fields)
         union = [n for n in union if n in wanted]
@@ -36,7 +37,7 @@ def make_parse_udtf(fmt: str, fields: list[str] | None = None):
     @udtf(returnType=ret)
     class ParseUDTF:
         def __init__(self) -> None:
-            self._plan = compile_plan(pat.compile_patterns(pattern_strs))
+            self._plan = compile_plan(pattern_strs)
 
         def eval(self, raw: str):
             pids, cols = self._plan.columns([raw], union)
@@ -60,9 +61,6 @@ def register_ltsv_udtf(spark, name: str = "parse_ltsv"):
     per-line dynamic schema — SURVEY.md §1.2). Whole-line rejection on
     any field without ``:`` (parser_core.go:275-288) yields a single
     (-1, NULL, NULL) row."""
-    from pyspark.sql.functions import udtf
-
-    from ..decoders import ltsv_decode_batch
 
     @udtf(returnType="pos int, label string, value string")
     class ParseLTSV:

@@ -11,12 +11,14 @@ under ``re`` and ASCII under RE2, so here ``\\d`` matches ``٣`` and ``\\S``
 stops at ``\\x0b`` and NBSP where the reference's would not (ROADMAP
 item 3).
 
-Every analysis here reads a pattern's ``re`` parse tree
-(``re._parser.parse``), never its source text: the RE2 gate, the tab twin
-and cascade fusion. Validation mirrors the reference's ``AddPattern``
-(`parser_regex.go:74-89`): the pattern must compile in
-RE2's dialect, contain at least one capture group, and every group must be
-named.
+A regex string is parsed in one place, :func:`compile_re2`, and every
+analysis reads that ``re`` parse tree, never the source text: the RE2
+gate, the capture-group checks (:func:`parse_pattern`), group names, the
+tab twin and cascade fusion. :func:`.decoders.compile_plan` is the compile
+point that hands one tree per pattern to all of them. Validation mirrors
+the reference's ``AddPattern`` (`parser_regex.go:74-89`): the pattern must
+compile in RE2's dialect, contain at least one capture group, and every
+group must be named.
 """
 
 from __future__ import annotations
@@ -187,38 +189,42 @@ def _re2_construct(items) -> str | None:
     return None
 
 
-def check_re2(pattern: str) -> None:
-    """Parse ``pattern`` and raise ``re.error`` when ``re`` cannot parse it
-    or when its parse tree holds a construct the reference's RE2 dialect
-    lacks: lookaround, backreference, conditional, atomic group or
-    possessive repeat. Callers report both the way the reference reports a
-    failed ``regexp.Compile``."""
-    construct = _re2_construct(_sre.parse(pattern))
+def compile_re2(src: str) -> tuple[re.Pattern, _sre.SubPattern]:
+    """The one parse of a regex string: parse ``src``, gate that tree for
+    the reference's RE2 dialect, and compile ``src``.
+
+    Returns ``(re.compile(src), tree)``; once a process has seen ``src``
+    the compile is a hit in ``re``'s module cache. Raises ``re.error`` when
+    ``re`` cannot parse or compile ``src``, or when the tree holds a
+    construct the RE2 dialect lacks: lookaround, backreference,
+    conditional, atomic group or possessive repeat. Callers report both
+    the way the reference reports a failed ``regexp.Compile``.
+    """
+    tree = _sre.parse(src)
+    construct = _re2_construct(tree)
     if construct is not None:
         raise re.error(f"{construct} is not supported by the reference's RE2 dialect")
+    return re.compile(src), tree
 
 
-def validate_pattern(pattern: str) -> re.Pattern:
-    """Compile + validate one pattern (parser_regex.go:74-89 semantics).
-
-    Rejects: non-compiling patterns, patterns using a construct Go's RE2
-    cannot compile (see :func:`check_re2`), patterns with no capture
-    group, and patterns with any unnamed capture group.
-    """
+def parse_pattern(src: str) -> tuple[re.Pattern, _sre.SubPattern]:
+    """:func:`compile_re2` plus the reference's ``AddPattern`` checks
+    (parser_regex.go:74-89): at least one capture group, and every group
+    named. Raises :class:`PatternError`."""
     try:
-        check_re2(pattern)
-        ptn = re.compile(pattern)
+        ptn, tree = compile_re2(src)
     except re.error as e:
         raise PatternError(f"{REGEX_PATTERN_ERROR}: {e}") from e
     if ptn.groups < 1:
         raise PatternError(f"{REGEX_PATTERN_ERROR}: capture group not found")
     if len(ptn.groupindex) != ptn.groups:
         raise PatternError(f"{REGEX_PATTERN_ERROR}: non-named capture group detected")
-    return ptn
+    return ptn, tree
 
 
-def compile_patterns(patterns: list[str]) -> list[re.Pattern]:
-    return [validate_pattern(p) for p in patterns]
+def validate_pattern(pattern: str) -> re.Pattern:
+    """Compile + validate one pattern (:func:`parse_pattern`)."""
+    return parse_pattern(pattern)[0]
 
 
 class _Unproven(Exception):
@@ -299,24 +305,30 @@ def _mandatory_tabs(items) -> int:
     return n
 
 
-def _widen(items) -> bool:
-    """Add the tab to every negated set in ``items``, in place; True if
-    there was one."""
-    widened = False
-    for k, (op, av) in enumerate(items):
+def _widen(p: _sre.SubPattern) -> tuple[_sre.SubPattern, bool]:
+    """A copy of ``p`` with the tab added to every negated set, and True if
+    there was one. ``p`` is a shared tree and is left as it is."""
+    items, widened = [], False
+    for op, av in p.data:
         if op is _sre.NOT_LITERAL:
-            items[k] = (_sre.IN, [(_sre.NEGATE, None), (_sre.LITERAL, av), (_sre.LITERAL, _TAB)])
+            op, av = _sre.IN, [(_sre.NEGATE, None), (_sre.LITERAL, av), (_sre.LITERAL, _TAB)]
             widened = True
         elif op is _sre.IN and av[0][0] is _sre.NEGATE:
-            av.append((_sre.LITERAL, _TAB))
+            av = [*av, (_sre.LITERAL, _TAB)]
             widened = True
-        else:
-            for sub in _subtrees(op, av):
-                widened |= _widen(sub)
-    return widened
+        elif op is _sre.SUBPATTERN or op is _sre.MAX_REPEAT or op is _sre.MIN_REPEAT:
+            # the nested tree is the last field of the argument
+            sub, w = _widen(av[-1])
+            av, widened = (*av[:-1], sub), widened or w
+        elif op is _sre.BRANCH:
+            alts = [_widen(alt) for alt in av[1]]
+            av = (av[0], [alt for alt, _ in alts])
+            widened = widened or any(w for _, w in alts)
+        items.append((op, av))
+    return _sre.SubPattern(p.state, items), widened
 
 
-def fast_twin(pattern: re.Pattern) -> tuple[re.Pattern, int] | None:
+def fast_twin(tree: _sre.SubPattern) -> tuple[re.Pattern, int] | None:
     """Derive a backtracking-free twin for a tab-separated pattern.
 
     Greedy negated classes like ``[^\\"]*`` may span tab separators and
@@ -330,10 +342,10 @@ def fast_twin(pattern: re.Pattern) -> tuple[re.Pattern, int] | None:
     ``line.count('\\t') == n_tabs`` and fall back to the original
     otherwise.
 
-    Both the count and the widening read the ``re`` parse tree, so every
-    spelling of the tab (the character, ``\\t``, ``\\x09``) counts, and the
-    twin is compiled from the widened tree. It has no source, so it is
-    built where it is used and never pickled.
+    ``tree`` is the pattern's ``re`` parse tree, so every spelling of the
+    tab (the character, ``\\t``, ``\\x09``) counts. The twin is compiled
+    from a widened copy of it; it has no source, so it is built where it is
+    used and never pickled.
 
     Returns None when the pattern has no mandatory tab, has no negated set
     to widen, or when :func:`_mandatory_tabs` cannot count its tabs: a tab
@@ -341,14 +353,14 @@ def fast_twin(pattern: re.Pattern) -> tuple[re.Pattern, int] | None:
     even when the counts agree, so the twin could reject lines the
     original accepts.
     """
-    tree = _sre.parse(pattern.pattern, pattern.flags)
     try:
         n_tabs = _mandatory_tabs(tree)
     except _Unproven:
         return None
-    if n_tabs == 0 or not _widen(tree):
+    if n_tabs == 0:
         return None
-    return _compiler.compile(tree, pattern.flags), n_tabs
+    twin, widened = _widen(tree)
+    return (_compiler.compile(twin), n_tabs) if widened else None
 
 
 # A first-character set: a frozenset of literal characters, or a
@@ -439,7 +451,7 @@ class FusedCascade:
     levels: tuple[tuple[int, int], ...]
 
 
-def fuse_cascade(patterns: Sequence[re.Pattern]) -> FusedCascade | None:
+def fuse_cascade(trees: Sequence[_sre.SubPattern]) -> FusedCascade | None:
     """Fuse a prefix-chained pattern list into ONE regex, or return None.
 
     The reference tries an ordered list until one pattern matches. The S3
@@ -449,9 +461,11 @@ def fuse_cascade(patterns: Sequence[re.Pattern]) -> FusedCascade | None:
     ``H(?:T1(?:T2(?:..Tk)?)?)?`` gives the same answer, and the deepest tail
     that took part names the winner. Three conditions make that exact:
 
-    1. Every pattern is the next one's source plus a suffix, and its parse
-       tree is the next one's tree plus the suffix's items, so group
-       numbers and names agree across the list and the fused regex.
+    1. Every pattern's parse tree is the next one's items plus more (its
+       tail), and the two agree on the names of their shared groups, so
+       group numbers and names agree across the list and the fused regex.
+       The trees are compared, not the sources: ``[a-z]+`` and
+       ``[a-z]{1,}`` are the same item.
     2. The first item is ``^`` (or ``\\A``) and no other anchor appears, so
        every search starts at offset 0 only. Without it ``search`` takes
        the leftmost start: the head alone could match at 0 while a longer
@@ -481,92 +495,55 @@ def fuse_cascade(patterns: Sequence[re.Pattern]) -> FusedCascade | None:
 
     Each tail must also hold a capture group directly, not inside a repeat
     or alternative: the marker that shows the tail took part.
+
+    ``trees`` are the patterns' ``re`` parse trees. They are shared and
+    left as they are: the fused tree is built from the first tree's items,
+    under its parse state, and compiled from the tree.
     """
-    if len(patterns) < 2:
+    if len(trees) < 2 or any(t.state.flags != re.UNICODE for t in trees):
         return None
-    srcs = [p.pattern for p in patterns]
-    if any(p.flags != re.UNICODE for p in patterns) or any(
-        not longer.startswith(shorter) or longer == shorter
-        for longer, shorter in zip(srcs, srcs[1:])
+    full = trees[0].data
+    cuts = [len(t.data) for t in reversed(trees)]  # from the head outwards
+    if any(shorter >= longer for shorter, longer in zip(cuts, cuts[1:])):
+        return None
+    full_reprs = [repr(item) for item in full]
+    if any(
+        any(repr(item) != r for item, r in zip(t.data, full_reprs)) for t in trees[1:]
     ):
         return None
-    trees = [_sre.parse(s).data for s in srcs]
-    full = [repr(item) for item in trees[0]]
-    if any([repr(item) for item in t] != full[: len(t)] for t in trees[1:]):
-        return None
-    names = patterns[0].groupindex
-    for p in patterns[1:]:
-        if dict(p.groupindex) != {k: v for k, v in names.items() if v <= p.groups}:
+    names = trees[0].state.groupdict
+    for t in trees[1:]:
+        if t.state.groupdict != {k: v for k, v in names.items() if v < t.state.groups}:
             return None
-    first = trees[0][0] if trees[0] else None
-    if first is None or first[0] is not _sre.AT or first[1] not in (
-        _sre.AT_BEGINNING,
-        _sre.AT_BEGINNING_STRING,
-    ):
+    # the lengths rise strictly, so the full tree has a first item
+    op, av = full[0]
+    if op is not _sre.AT or av not in (_sre.AT_BEGINNING, _sre.AT_BEGINNING_STRING):
         return None
     try:
-        _check_forced(trees[0][1:], lambda: None)
+        _check_forced(full[1:], lambda: None)
     except _Unproven:
         return None
 
-    # tree lengths from the head outwards; tail d is full[cuts[d-1]:cuts[d]]
-    cuts = [len(t) for t in reversed(trees)]
-    levels = [(-1, len(patterns) - 1)]
-    for depth in range(1, len(patterns)):
-        tail = trees[0][cuts[depth - 1]: cuts[depth]]
+    # tail d is full[cuts[d-1]:cuts[d]]
+    levels = [(-1, len(trees) - 1)]
+    for depth in range(1, len(trees)):
+        tail = full[cuts[depth - 1]: cuts[depth]]
         marker = next((av[0] for op, av in tail if op is _sre.SUBPATTERN and av[0]), None)
         if marker is None:
             return None
-        levels.append((marker - 1, len(patterns) - 1 - depth))
+        levels.append((marker - 1, len(trees) - 1 - depth))
 
-    shortest_first = srcs[::-1]
-    fused_src = (
-        shortest_first[0]
-        + "".join(
-            "(?:" + longer[len(shorter):]
-            for shorter, longer in zip(shortest_first, shortest_first[1:])
-        )
-        + ")?" * (len(srcs) - 1)
-    )
-    # the fused tree must be the head's items, then each tail's items
-    # nested in an optional group, exactly as they parse in the full pattern
-    items, start = list(_sre.parse(fused_src).data), 0
-    for depth, cut in enumerate(cuts):
-        own, rest = items[: cut - start], items[cut - start:]
-        if [repr(i) for i in own] != full[start:cut]:
-            return None
-        if depth == len(cuts) - 1:
-            if rest:
-                return None
-        elif (
-            len(rest) != 1
-            or rest[0][0] is not _sre.MAX_REPEAT
-            or rest[0][1][:2] != (0, 1)
-        ):
-            return None
-        else:
-            items = list(rest[0][1][2])
-        start = cut
-    fused = re.compile(fused_src)
-    if fused.groups != patterns[0].groups or fused.groupindex != names:
-        return None
-    return FusedCascade(fused, tuple(reversed(levels)))
+    # H(?:T1(?:T2(?:..Tk)?)?)?: the head's items, then each tail's items
+    # nested in an optional group, as the parser builds that source
+    state, items = trees[0].state, []
+    for lo, hi in reversed(list(zip([0, *cuts], cuts))):
+        opt = [(_sre.MAX_REPEAT, (0, 1, _sre.SubPattern(state, items)))] if items else []
+        items = full[lo:hi] + opt
+    return FusedCascade(_compiler.compile(_sre.SubPattern(state, items)), tuple(reversed(levels)))
 
 
-def group_names(pattern: re.Pattern) -> list[str]:
+def group_names(tree: _sre.SubPattern) -> list[str]:
     """Capture group names in positional order (SubexpNames()[1:] analogue)."""
-    inv = {v: k for k, v in pattern.groupindex.items()}
-    return [inv[i] for i in range(1, pattern.groups + 1)]
+    inv = {v: k for k, v in tree.state.groupdict.items()}
+    return [inv[i] for i in range(1, tree.state.groups)]
 
-
-def union_schema(patterns: list[re.Pattern]) -> list[str]:
-    """Union of all group names, preserving first-seen positional order.
-
-    The widest preset pattern comes first in every preset, so for presets
-    this equals pattern 0's field list.
-    """
-    seen: dict[str, None] = {}
-    for p in patterns:
-        for name in group_names(p):
-            seen.setdefault(name)
-    return list(seen)

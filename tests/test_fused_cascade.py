@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import dataclasses
 import re
+from re import _parser
 
 import golden_s3 as g
 import pytest
@@ -50,7 +51,7 @@ def naive_fusion(shorter: str, longer: str) -> re.Pattern:
 
 
 def plan_for(preset: str) -> decoders.DecodePlan:
-    return decoders.compile_plan([re.compile(p) for p in PRESETS[preset]])
+    return decoders.compile_plan(PRESETS[preset])
 
 
 def assert_same_as_cascade(plan: decoders.DecodePlan, lines: list[str]) -> None:
@@ -153,8 +154,8 @@ def test_apache_counterexample_is_not_fused():
     """Apache CLF passes the prefix and anchor conditions but not the
     forced-match one: remote_user's class [\\S ] holds the space after it."""
     pair = [re.compile(APACHE_CLF[0]), re.compile(APACHE_CLF[1])]
-    assert fuse_cascade(pair) is None
-    assert fuse_cascade([re.compile(p) for p in APACHE_CLF_VHOST[:2]]) is None
+    assert fuse_cascade([_parser.parse(p.pattern) for p in pair]) is None
+    assert fuse_cascade([_parser.parse(p) for p in APACHE_CLF_VHOST[:2]]) is None
 
     pid, vals = cascade(pair, APACHE_COUNTEREXAMPLE)
     assert pid == 0 and vals[2] == "u"
@@ -162,7 +163,7 @@ def test_apache_counterexample_is_not_fused():
     assert m["referer"] is None  # the unsound fusion picks pattern 1 ...
     assert m["remote_user"].startswith("u [10/Oct") and m["remote_user"].endswith('"a"')
 
-    plan = decoders.compile_plan(pair)
+    plan = decoders.compile_plan([p.pattern for p in pair])
     assert plan.decode([APACHE_COUNTEREXAMPLE]) == ([0], [vals])  # ... the plan does not
 
 
@@ -171,18 +172,18 @@ def test_unanchored_list_is_not_fused():
     while the longer pattern matches further right, so the cascade and a
     fused regex disagree."""
     pats = [re.compile(r"(?P<a>[a-z]+)(?P<b>[0-9]+)"), re.compile(r"(?P<a>[a-z]+)")]
-    assert fuse_cascade(pats) is None
+    assert fuse_cascade([_parser.parse(p.pattern) for p in pats]) is None
     line = "ab-cd5"
     assert cascade(pats, line) == (0, ["cd", "5"])
     m = naive_fusion(pats[1].pattern, pats[0].pattern).search(line)
     assert (m["a"], m["b"]) == ("ab", None)
-    assert decoders.compile_plan(pats).decode([line]) == ([0], [["cd", "5"]])
+    assert decoders.compile_plan([p.pattern for p in pats]).decode([line]) == ([0], [["cd", "5"]])
 
 
 @pytest.mark.parametrize(
     "pats",
     [
-        # not a source prefix chain
+        # not a prefix chain
         [S3[0], S3[2]][::-1],
         [S3[4], S3[0]],
         # the suffix changes an item of the shorter pattern
@@ -202,7 +203,7 @@ def test_unanchored_list_is_not_fused():
     ],
 )
 def test_unprovable_lists_keep_the_cascade(pats):
-    assert fuse_cascade([re.compile(p) for p in pats]) is None
+    assert fuse_cascade([_parser.parse(p) for p in pats]) is None
 
 
 def test_forced_user_list_is_fused_and_exact():
@@ -211,12 +212,26 @@ def test_forced_user_list_is_fused_and_exact():
         re.compile(r"^(?P<a>[a-z]+)=(?P<b>\d{1,3}|-);(?P<c>[^;]*)"),
         re.compile(r"^(?P<a>[a-z]+)=(?P<b>\d{1,3}|-)"),
     ]
-    plan = decoders.compile_plan(pats)
+    plan = decoders.compile_plan([p.pattern for p in pats])
     assert plan.fused is not None
     lines = ["k=12;v w;x", "k=12;;", "k=1234;v", "k=-;v", "k=12;v;", "k=12", "K=1", "k=12;v; x"]
     pids, vals = plan.decode(lines)
     assert list(zip(pids, vals)) == [cascade(pats, line) for line in lines]
     assert pids == [0, 1, 2, 1, 1, 2, -1, 1]
+
+
+def test_tree_prefix_chain_is_fused_though_sources_differ():
+    """Fusion compares parse trees, not spellings: ``[a-z]+`` and
+    ``[a-z]{1,}`` parse to the same item, so the list is a prefix chain
+    although neither source starts with the other."""
+    srcs = [r"^(?P<a>[a-z]+) (?P<b>\d+)", r"^(?P<a>[a-z]{1,})"]
+    assert not srcs[0].startswith(srcs[1])
+    plan = decoders.compile_plan(srcs)
+    assert plan.fused is not None
+    pats = [re.compile(p) for p in srcs]
+    lines = ["ab 12", "ab", "ab ", "AB 1", "ab 1x", "x 9 9"]
+    pids, vals = plan.decode(lines)
+    assert list(zip(pids, vals)) == [cascade(pats, line) for line in lines]
 
 
 @pytest.mark.parametrize("preset, lines", [("s3", S3_LINES), ("clb", CLB_LINES)])
@@ -337,7 +352,7 @@ try:
         for tail in tails:
             chain.append(chain[-1] + src(tail))
         pats = [re.compile(p) for p in reversed(chain)]
-        plan = decoders.compile_plan(pats)
+        plan = decoders.compile_plan(chain[::-1])
         if not anchored:
             assert plan.fused is None
         probe = lines + [line + ";" + line for line in lines]

@@ -6,6 +6,7 @@ import re
 import pytest
 
 from access_log_parser_spark import patterns as pat
+from access_log_parser_spark.decoders import compile_plan
 
 
 def test_presets_compile_and_are_all_named():
@@ -76,8 +77,33 @@ def test_re2_unsupported_constructs_rejected():
 
 
 def test_union_schema_order():
-    compiled = [pat.validate_pattern(p) for p in pat.PRESETS["s3"]]
-    union = pat.union_schema(compiled)
+    union = compile_plan(pat.PRESETS["s3"]).union
     assert union[0] == "bucket_owner"
     assert union[-1] == "acl_required"
     assert len(union) == 28
+
+
+@pytest.mark.parametrize("preset", ["s3", "clb", "cloudfront", "apache_clf", "alb"])
+def test_compile_plan_parses_each_pattern_once(preset, monkeypatch):
+    """One compile point: with ``re``'s cache warm, the gate, the group
+    checks, fusion and the twin all read one parse per pattern string."""
+    compile_plan(pat.PRESETS[preset])
+    calls = []
+    parse = re._parser.parse
+    monkeypatch.setattr(re._parser, "parse", lambda *a, **k: calls.append(a) or parse(*a, **k))
+    compile_plan(pat.PRESETS[preset])
+    assert len(calls) == len(pat.PRESETS[preset])
+
+
+def test_twin_and_fusion_leave_the_shared_trees_as_they_are():
+    """A plan's trees are shared by the gate, fusion and the twin, so
+    deriving a twin widens a copy and fusion builds a new tree."""
+    for srcs in (pat.CLOUDFRONT, pat.APACHE_CLF[2:]):
+        trees = [pat.parse_pattern(s)[1] for s in srcs]
+        before = [repr(t) for t in trees]
+        assert all(pat.fast_twin(t) is not None for t in trees)
+        assert [repr(t) for t in trees] == before
+    trees = [pat.parse_pattern(s)[1] for s in pat.S3]
+    before = [repr(t) for t in trees]
+    assert pat.fuse_cascade(trees) is not None
+    assert [repr(t) for t in trees] == before

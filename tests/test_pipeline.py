@@ -413,7 +413,7 @@ def _s3_tsv(line: str, header: bool) -> str:
     from access_log_parser_spark.decoders import compile_plan
     from access_log_parser_spark.handlers import tsv_line_handler
 
-    plan = compile_plan(pat.compile_patterns(list(pat.PRESETS["s3"])))
+    plan = compile_plan(pat.PRESETS["s3"])
     pids, vals = plan.decode([line])
     return tsv_line_handler(plan.names[pids[0]], vals[0], header)
 
