@@ -18,8 +18,10 @@ decoder, run once per task (and once on the driver, to validate). It parses
 each string once; that tree feeds the RE2 gate, the capture-group checks,
 the group names and :attr:`DecodePlan.union`, cascade fusion and the tab
 twins. When the list is a prefix chain that :func:`.patterns.fuse_cascade`
-can prove (the S3 and CLB presets), each line costs ONE search of the
-fused regex. Any other list runs the cascade per batch: pattern 0 over
+can prove (the S3 and CLB presets), the plan holds one regex compiled from
+the trees and no member pattern: each line costs ONE search, and the
+match's ``lastindex`` looks up the winning pattern_id. Any other list is
+compiled pattern by pattern and runs the cascade per batch: pattern 0 over
 every line, then pattern 1 over its misses, and so on, with each
 tab-separated pattern's guarded :func:`.patterns.fast_twin`. The fused
 regex and the twins are compiled from trees and cannot be pickled, so a
@@ -55,8 +57,9 @@ class DecodePlan:
 
     ``fused`` is set when :func:`.patterns.fuse_cascade` proves the list
     can be decoded with one search per line (its docstring has the
-    soundness argument); otherwise ``twins`` holds each pattern's guarded
-    :func:`.patterns.fast_twin` (or None) and lines run the cascade.
+    soundness argument), and ``patterns`` is then empty; otherwise
+    ``patterns`` holds the compiled list, ``twins`` each pattern's guarded
+    :func:`.patterns.fast_twin` (or None), and lines run the cascade.
     """
 
     patterns: tuple[re.Pattern, ...]
@@ -80,7 +83,7 @@ class DecodePlan:
         capture-group strings of the winning pattern, with "" for groups
         that did not take part (Go's ``matches[1:]``)."""
         pids, matches = self._match(lines)
-        widths = [p.groups for p in self.patterns]
+        widths = [len(names) for names in self.names]
         vals = [
             None if m is None else list(m.groups("")[: widths[pid]])
             for pid, m in zip(pids, matches)
@@ -101,8 +104,7 @@ class DecodePlan:
             for pid, names in enumerate(self.names):
                 pos = {nm: k for k, nm in enumerate(names)}
                 # a field the pattern lacks reads the None appended to its groups
-                pad = self.fused.regex.groups if self.fused else self.patterns[pid].groups
-                idx = [pos.get(nm, pad) for nm in fields]
+                idx = [pos.get(nm, -1) for nm in fields]
                 getters.append(
                     itemgetter(*idx) if width > 1 else lambda g, i=idx: tuple(g[k] for k in i)
                 )
@@ -130,18 +132,9 @@ class DecodePlan:
         return self._match_cascade(lines)
 
     def _match_fused(self, lines: Sequence[str]) -> tuple[list[int], list[re.Match | None]]:
-        search, levels = self.fused.regex.search, self.fused.levels
+        search, winner = self.fused.regex.search, self.fused.pids
         matches = [search(line) for line in lines]
-        pids = [-1] * len(lines)
-        for i, m in enumerate(matches):
-            if m is None:
-                continue
-            g = m.groups()
-            for marker, pid in levels:
-                if marker < 0 or g[marker] is not None:
-                    break
-            pids[i] = pid
-        return pids, matches
+        return [-1 if m is None else winner[m.lastindex or 0] for m in matches], matches
 
     def _match_cascade(self, lines: Sequence[str]) -> tuple[list[int], list[re.Match | None]]:
         n = len(lines)
@@ -177,14 +170,17 @@ def compile_plan(pattern_strs: Sequence[str]) -> DecodePlan:
     Each string is parsed once (:func:`.patterns.parse_pattern`), which
     raises :class:`.patterns.PatternError` as the reference's
     ``AddPattern`` fails; an empty list raises :class:`NoPatternError`.
+    Cascade sources are compiled with ``re.compile``, which a reused worker
+    finds in ``re``'s cache; a fused list compiles no member pattern.
     """
     if not pattern_strs:
         raise NoPatternError
-    patterns, trees = zip(*map(parse_pattern, pattern_strs))
+    trees = [parse_pattern(src) for src in pattern_strs]
     names = tuple(group_names(t) for t in trees)
     fused = fuse_cascade(trees)
     if fused is not None:
-        return DecodePlan(patterns, names, fused=fused)
+        return DecodePlan((), names, fused=fused)
+    patterns = tuple(re.compile(src) for src in pattern_strs)
     return DecodePlan(patterns, names, twins=tuple(fast_twin(t) for t in trees))
 
 

@@ -14,9 +14,9 @@ Reference semantics (`/root/reference/parser_core.go:338-483`):
 - filters are evaluated after decode and before projection, so they may
   reference columns later dropped by label selection;
 - a regex operator's value goes through the patterns' one parse step
-  (:func:`.patterns.compile_re2`: parse once, RE2 gate, compile) on both
-  targets, so a regex Go's ``regexp.Compile`` rejects aborts here too
-  (parser_core.go:466-483).
+  (:func:`.patterns.parse_re2`: parse once, RE2 gate) before it compiles,
+  on both targets, so a regex Go's ``regexp.Compile`` rejects aborts here
+  too (parser_core.go:466-483).
 
 Two compilation targets:
 
@@ -38,7 +38,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .patterns import compile_re2
+from .patterns import parse_re2
 
 FILTER_ERROR = "cannot evaluate filter expressions"
 OPERATOR_ERROR = "unknown operator"
@@ -72,10 +72,12 @@ def _string_fn(op: str, value: str) -> Callable[[str], bool]:
 
 def _regex(op: str, value: str) -> re.Pattern:
     """The regex a ``=~``-family filter runs, once it passes the RE2 gate."""
+    src = ("(?i)" + value) if op.endswith("*") else value
     try:
-        return compile_re2(("(?i)" + value) if op.endswith("*") else value)[0]
+        parse_re2(src)
     except re.error as e:
         raise FilterError(f"{FILTER_ERROR}: {e}") from e
+    return re.compile(src)
 
 
 def _regex_fn(op: str, value: str) -> Callable[[str], bool]:

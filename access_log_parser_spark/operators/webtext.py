@@ -1240,6 +1240,59 @@ def extract_links(
              F.col("_l.anchor").alias("anchor"))
 
 
+def _robots_group_lines(
+    df: DataFrame, robots_col: str, host_col: str, agent: str
+) -> DataFrame:
+    """(host, k, v) for every directive of a robots.txt body that sits in
+    a User-agent group applying to ``agent``: a group names ``agent``
+    (case-insensitive) or ``*``. Keys are lower-cased; values trimmed.
+
+    Groups are numbered over every ``key:`` line, whatever its key: a
+    group starts at a ``User-agent`` line whose previous key line is not
+    ``User-agent``, so any other directive ends a run of agents and the
+    next ``User-agent`` opens a new group. A directive belongs to the
+    nearest preceding group.
+
+    Plan: posexplode lines -> two window passes keyed on the host (group
+    id = running count of group starts) -> semi-join on the groups that
+    apply. Robots files are KB-sized, so the per-host window sort is
+    bounded; ONE host-keyed exchange. Windows instead of a HOF fold keep
+    the logic replayable in the oracle's SQL dialect."""
+    lines = df.select(
+        F.col(host_col).alias("host"),
+        F.posexplode(
+            F.split(F.coalesce(F.col(robots_col), F.lit("")), r"\r?\n")
+        ).alias("ln", "line"),
+    )
+    key = F.lower(F.trim(F.regexp_extract("line", r"^([^:#]+):", 1)))
+    val = F.trim(F.regexp_extract("line", r"^[^:#]+:\s*([^#]*)", 1))
+    typed = lines.select(
+        "host", "ln", key.alias("k"), val.alias("v")
+    ).filter(F.col("k") != "")
+    w = Window.partitionBy("host").orderBy("ln")
+    is_ua = (F.col("k") == "user-agent").cast("int")
+    prev_ua = F.coalesce(F.lag(is_ua).over(w), F.lit(0))
+    typed = typed.withColumn("_start", ((is_ua == 1) & (prev_ua == 0)).cast("int"))
+    typed = typed.withColumn("grp", F.sum("_start").over(w))
+    applies = (
+        typed.filter(F.col("k") == "user-agent")
+        .groupBy("host", "grp")
+        .agg(
+            F.max(
+                (F.lower(F.col("v")) == agent.lower())
+                | (F.col("v") == "*")
+            ).alias("_ok")
+        )
+        .filter("_ok")
+        .drop("_ok")
+    )
+    return (
+        typed.filter(F.col("k") != "user-agent")
+        .join(applies, ["host", "grp"], "left_semi")
+        .select("host", "k", "v")
+    )
+
+
 def robots_txt_rules(
     df: DataFrame,
     robots_col: str = "robots_txt",
@@ -1253,54 +1306,22 @@ def robots_txt_rules(
     manual :func:`host_suffix_filter`.
 
     Grammar handled (robots.txt de-facto core): a GROUP is one or more
-    consecutive ``User-agent:`` lines followed by its rule lines; a rule
-    belongs to the nearest preceding group; a group applies when any of
-    its agents is ``*`` or equals ``agent`` (case-insensitive keys and
-    agent match); empty-path ``Disallow:`` means allow-all and yields no
-    rule; unknown directives are ignored.
+    consecutive ``User-agent:`` lines followed by its rule lines; any
+    other ``key:`` line (Crawl-delay, Sitemap, an unknown directive)
+    ends a run of agents, so a ``User-agent:`` after it opens a new group
+    (:func:`_robots_group_lines`). A rule belongs to the nearest preceding
+    group; a group applies when any of its agents is ``*`` or equals
+    ``agent`` (case-insensitive keys and agent match); empty-path
+    ``Disallow:`` means allow-all and yields no rule; unknown directives
+    yield no rule.
 
     Returns (host, allow boolean, path, path_len) for applicable rules.
-    Pair with :func:`robots_allowed` to gate URLs.
-
-    Plan at 100 TB: posexplode lines -> two window passes keyed on the
-    host (group id = running count of group starts; governing group =
-    running max over UA lines) — robots files are KB-sized, so the
-    per-host window sort is bounded; ONE host-keyed exchange. Windows
-    instead of a HOF fold keep the logic replayable in the oracle's
-    SQL dialect."""
-    lines = df.select(
-        F.col(host_col).alias("host"),
-        F.posexplode(
-            F.split(F.coalesce(F.col(robots_col), F.lit("")), r"\r?\n")
-        ).alias("ln", "line"),
-    )
-    key = F.lower(F.trim(F.regexp_extract("line", r"^([^:#]+):", 1)))
-    val = F.trim(F.regexp_extract("line", r"^[^:#]+:\s*([^#]*)", 1))
-    typed = lines.select(
-        "host", "ln", key.alias("k"), val.alias("v")
-    ).filter(F.col("k").isin("user-agent", "allow", "disallow"))
-    w = Window.partitionBy("host").orderBy("ln")
-    is_ua = (F.col("k") == "user-agent").cast("int")
-    prev_ua = F.coalesce(F.lag(is_ua).over(w), F.lit(0))
-    typed = typed.withColumn("_start", ((is_ua == 1) & (prev_ua == 0)).cast("int"))
-    typed = typed.withColumn("grp", F.sum("_start").over(w))
-    # groups that apply to our agent
-    applies = (
-        typed.filter(F.col("k") == "user-agent")
-        .groupBy("host", "grp")
-        .agg(
-            F.max(
-                (F.lower(F.col("v")) == agent.lower())
-                | (F.col("v") == "*")
-            ).alias("_ok")
-        )
-        .filter("_ok")
-        .drop("_ok")
-    )
-    rules = (
-        typed.filter(F.col("k") != "user-agent")
+    Pair with :func:`robots_allowed` to gate URLs. Plan: that of
+    :func:`_robots_group_lines`, ONE host-keyed exchange."""
+    return (
+        _robots_group_lines(df, robots_col, host_col, agent)
+        .filter(F.col("k").isin("allow", "disallow"))
         .filter(F.length("v") > 0)  # empty Disallow: = allow-all, no rule
-        .join(applies, ["host", "grp"], "left_semi")
         .select(
             "host",
             (F.col("k") == "allow").alias("allow"),
@@ -1308,7 +1329,6 @@ def robots_txt_rules(
             F.length("v").cast("long").alias("path_len"),
         )
     )
-    return rules
 
 
 def robots_allowed(
@@ -1450,50 +1470,22 @@ def robots_crawl_delay(
     extension most large crawlers honor for politeness budgeting. Like
     Allow/Disallow (and unlike Sitemap) it is GROUP-SCOPED: a directive
     belongs to the nearest preceding User-agent group and applies when
-    that group names ``agent`` or ``*``. When several applicable groups
-    set it, the MINIMUM wins (the conservative politeness choice).
-    Non-numeric values are ignored. Returns (host, crawl_delay:double);
-    hosts with no applicable directive are absent — join 'left' and
-    coalesce to the crawler's default.
+    that group names ``agent`` or ``*``. Groups are those of
+    :func:`robots_txt_rules`: any other ``key:`` line ends a run of
+    agents, so ``User-agent: a`` / ``Disallow: /x`` / ``User-agent: b``
+    / ``Crawl-delay: 9`` gives agent ``a`` no delay. When several
+    applicable groups set it, the MINIMUM wins (the conservative
+    politeness choice). Non-numeric values are ignored. Returns (host,
+    crawl_delay:double); hosts with no applicable directive are absent —
+    join 'left' and coalesce to the crawler's default.
 
-    Plan shape: identical to :func:`robots_txt_rules` (posexplode ->
-    two window passes -> group semi-join), ONE host-keyed exchange; the
-    final min() rides the same key."""
-    lines = df.select(
-        F.col(host_col).alias("host"),
-        F.posexplode(
-            F.split(F.coalesce(F.col(robots_col), F.lit("")), r"\r?\n")
-        ).alias("ln", "line"),
-    )
-    key = F.lower(F.trim(F.regexp_extract("line", r"^([^:#]+):", 1)))
-    val = F.trim(F.regexp_extract("line", r"^[^:#]+:\s*([^#]*)", 1))
-    typed = lines.select(
-        "host", "ln", key.alias("k"), val.alias("v")
-    ).filter(F.col("k").isin("user-agent", "crawl-delay"))
-    w = Window.partitionBy("host").orderBy("ln")
-    is_ua = (F.col("k") == "user-agent").cast("int")
-    prev_ua = F.coalesce(F.lag(is_ua).over(w), F.lit(0))
-    typed = typed.withColumn(
-        "_start", ((is_ua == 1) & (prev_ua == 0)).cast("int")
-    )
-    typed = typed.withColumn("grp", F.sum("_start").over(w))
-    applies = (
-        typed.filter(F.col("k") == "user-agent")
-        .groupBy("host", "grp")
-        .agg(
-            F.max(
-                (F.lower(F.col("v")) == agent.lower())
-                | (F.col("v") == "*")
-            ).alias("_ok")
-        )
-        .filter("_ok")
-        .drop("_ok")
-    )
+    Plan shape: that of :func:`robots_txt_rules`, ONE host-keyed
+    exchange; the final min() rides the same key."""
     return (
-        typed.filter(F.col("k") == "crawl-delay")
+        _robots_group_lines(df, robots_col, host_col, agent)
+        .filter(F.col("k") == "crawl-delay")
         .withColumn("_delay", F.col("v").try_cast("double"))  # ANSI-safe
         .filter(F.col("_delay").isNotNull())
-        .join(applies, ["host", "grp"], "left_semi")
         .groupBy("host")
         .agg(F.min("_delay").alias("crawl_delay"))
     )

@@ -11,7 +11,7 @@ under ``re`` and ASCII under RE2, so here ``\\d`` matches ``٣`` and ``\\S``
 stops at ``\\x0b`` and NBSP where the reference's would not (ROADMAP
 item 3).
 
-A regex string is parsed in one place, :func:`compile_re2`, and every
+A regex string is parsed in one place, :func:`parse_re2`, and every
 analysis reads that ``re`` parse tree, never the source text: the RE2
 gate, the capture-group checks (:func:`parse_pattern`), group names, the
 tab twin and cascade fusion. :func:`.decoders.compile_plan` is the compile
@@ -189,14 +189,12 @@ def _re2_construct(items) -> str | None:
     return None
 
 
-def compile_re2(src: str) -> tuple[re.Pattern, _sre.SubPattern]:
-    """The one parse of a regex string: parse ``src``, gate that tree for
-    the reference's RE2 dialect, and compile ``src``.
+def parse_re2(src: str) -> _sre.SubPattern:
+    """The one parse of a regex string: ``src``'s ``re`` parse tree, gated
+    for the reference's RE2 dialect.
 
-    Returns ``(re.compile(src), tree)``; once a process has seen ``src``
-    the compile is a hit in ``re``'s module cache. Raises ``re.error`` when
-    ``re`` cannot parse or compile ``src``, or when the tree holds a
-    construct the RE2 dialect lacks: lookaround, backreference,
+    Raises ``re.error`` when ``re`` cannot parse ``src``, or when the tree
+    holds a construct the RE2 dialect lacks: lookaround, backreference,
     conditional, atomic group or possessive repeat. Callers report both
     the way the reference reports a failed ``regexp.Compile``.
     """
@@ -204,27 +202,29 @@ def compile_re2(src: str) -> tuple[re.Pattern, _sre.SubPattern]:
     construct = _re2_construct(tree)
     if construct is not None:
         raise re.error(f"{construct} is not supported by the reference's RE2 dialect")
-    return re.compile(src), tree
+    return tree
 
 
-def parse_pattern(src: str) -> tuple[re.Pattern, _sre.SubPattern]:
-    """:func:`compile_re2` plus the reference's ``AddPattern`` checks
-    (parser_regex.go:74-89): at least one capture group, and every group
-    named. Raises :class:`PatternError`."""
+def parse_pattern(src: str) -> _sre.SubPattern:
+    """:func:`parse_re2` plus the reference's ``AddPattern`` checks
+    (parser_regex.go:74-89), read off the tree: at least one capture
+    group, and every group named. Raises :class:`PatternError`."""
     try:
-        ptn, tree = compile_re2(src)
+        tree = parse_re2(src)
     except re.error as e:
         raise PatternError(f"{REGEX_PATTERN_ERROR}: {e}") from e
-    if ptn.groups < 1:
+    groups = tree.state.groups - 1
+    if groups < 1:
         raise PatternError(f"{REGEX_PATTERN_ERROR}: capture group not found")
-    if len(ptn.groupindex) != ptn.groups:
+    if len(tree.state.groupdict) != groups:
         raise PatternError(f"{REGEX_PATTERN_ERROR}: non-named capture group detected")
-    return ptn, tree
+    return tree
 
 
 def validate_pattern(pattern: str) -> re.Pattern:
     """Compile + validate one pattern (:func:`parse_pattern`)."""
-    return parse_pattern(pattern)[0]
+    parse_pattern(pattern)
+    return re.compile(pattern)
 
 
 class _Unproven(Exception):
@@ -438,17 +438,12 @@ def _check_forced(items, follow: Callable[[], _First | None]) -> None:
 
 @dataclass(frozen=True)
 class FusedCascade:
-    """One regex standing in for a whole first-match-wins pattern list.
-
-    ``levels`` maps a match of ``regex`` back to the list, deepest tail
-    first: ``(marker, pattern_id)`` says that when 0-based group ``marker``
-    took part, the cascade's winner is ``pattern_id``, whose values are the
-    match's first ``patterns[pattern_id].groups`` groups. The last level is
-    the head and has ``marker = -1``.
-    """
+    """One regex standing in for a whole first-match-wins pattern list:
+    ``pids[m.lastindex or 0]`` is the winner of a match ``m`` of ``regex``,
+    whose values are the match's first ``len(names[pid])`` groups."""
 
     regex: re.Pattern
-    levels: tuple[tuple[int, int], ...]
+    pids: tuple[int, ...]
 
 
 def fuse_cascade(trees: Sequence[_sre.SubPattern]) -> FusedCascade | None:
@@ -493,8 +488,15 @@ def fuse_cascade(trees: Sequence[_sre.SubPattern]) -> FusedCascade | None:
     ``[\\S ]+`` followed by a space, so the fused regex can let it run on
     into the next fields of a line the first pattern matches.
 
-    Each tail must also hold a capture group directly, not inside a repeat
-    or alternative: the marker that shows the tail took part.
+    The winner is ``pids[m.lastindex or 0]``. ``lastindex``, the last
+    group to close, falls in the groups of the deepest tail that took
+    part when each tail holds a capture group directly, not inside a
+    repeat or alternative: such a tail sets that group, after every group
+    of the head and of earlier tails, and no group of a deeper tail is
+    set; an optional tail that fails part way has ``lastindex`` restored
+    with the marks (sre's ``LASTMARK_RESTORE``); and a head match that
+    sets no group (``(?:(?P<a>x)|y)`` on ``y``) has ``lastindex`` None,
+    which index 0 maps to the head.
 
     ``trees`` are the patterns' ``re`` parse trees. They are shared and
     left as they are: the fused tree is built from the first tree's items,
@@ -524,14 +526,15 @@ def fuse_cascade(trees: Sequence[_sre.SubPattern]) -> FusedCascade | None:
     except _Unproven:
         return None
 
-    # tail d is full[cuts[d-1]:cuts[d]]
-    levels = [(-1, len(trees) - 1)]
-    for depth in range(1, len(trees)):
-        tail = full[cuts[depth - 1]: cuts[depth]]
-        marker = next((av[0] for op, av in tail if op is _sre.SUBPATTERN and av[0]), None)
-        if marker is None:
+    # tail d is full[cuts[d-1]:cuts[d]]; each holds a group directly
+    for lo, hi in zip(cuts, cuts[1:]):
+        if not any(op is _sre.SUBPATTERN and av[0] for op, av in full[lo:hi]):
             return None
-        levels.append((marker - 1, len(trees) - 1 - depth))
+
+    # pattern pid owns the group numbers no shorter pattern holds
+    pids: list[int] = []
+    for pid in reversed(range(len(trees))):
+        pids += [pid] * (trees[pid].state.groups - len(pids))
 
     # H(?:T1(?:T2(?:..Tk)?)?)?: the head's items, then each tail's items
     # nested in an optional group, as the parser builds that source
@@ -539,7 +542,7 @@ def fuse_cascade(trees: Sequence[_sre.SubPattern]) -> FusedCascade | None:
     for lo, hi in reversed(list(zip([0, *cuts], cuts))):
         opt = [(_sre.MAX_REPEAT, (0, 1, _sre.SubPattern(state, items)))] if items else []
         items = full[lo:hi] + opt
-    return FusedCascade(_compiler.compile(_sre.SubPattern(state, items)), tuple(reversed(levels)))
+    return FusedCascade(_compiler.compile(_sre.SubPattern(state, items)), tuple(pids))
 
 
 def group_names(tree: _sre.SubPattern) -> list[str]:

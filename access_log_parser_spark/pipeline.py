@@ -30,7 +30,8 @@ Resume: page batches are identified by a deterministic ``batch_id``
 after its data lands; re-running skips committed batches — the
 Iceberg-snapshot bookkeeping of the north_rule, expressed portably. A
 failed batch stops further submission; the batch still in flight
-finishes and commits, so only completed batches have manifests.
+finishes and commits, so only completed batches have manifests. Each
+manifest records ``n_batches``, and a run refuses another split's output.
 """
 
 from __future__ import annotations
@@ -48,7 +49,7 @@ from pyspark.sql import functions as F
 from .engine import parse_documents
 from .metrics import Result, observe_routed
 from .options import Option
-from .sinks import processed_batches, write_manifest, write_routed
+from .sinks import read_manifests, write_manifest, write_routed
 
 # Batches in flight at once: batch k+1 is planned and submitted while batch
 # k runs, so one batch's driver-side planning and commit overlap the
@@ -122,12 +123,24 @@ def run_pipeline(
     ``partition_lineage=True`` additionally records per-PARTITION counters
     in each batch manifest (north_rule: per-partition lineage): the routed
     frame is persisted so the breakdown rides the same parse, at the cost
-    of caching one batch of routed rows."""
+    of caching one batch of routed rows.
+
+    Raises ``ValueError`` before any batch runs when ``out_dir`` holds a
+    manifest of another ``n_batches`` (or of none recorded): its rows sit
+    under the other split's batch ids, and neither resume nor overwrite
+    would replace them."""
     opt = opt or Option()
     start = time.monotonic()
 
+    manifests = read_manifests(out_dir)
+    for m in manifests:
+        if m.get("n_batches") != n_batches:
+            raise ValueError(
+                f"{out_dir} holds batch {m['batch_id']} of a split into "
+                f"n_batches={m.get('n_batches')}; this run asks for n_batches={n_batches}"
+            )
     pages = _with_batch_id(pages, url_col, n_batches)
-    done = processed_batches(out_dir) if resume else set()
+    done = {m["batch_id"] for m in manifests} if resume else set()
     all_ids = [str(i) for i in range(n_batches)]
     todo = [b for b in all_ids if b not in done]
     skipped = [b for b in all_ids if b in done]
@@ -187,7 +200,7 @@ def run_pipeline(
             extra_partition_cols=("batch_id",),
         )  # the ONLY action for this batch
         r = Result.from_counters(obs.get)
-        manifest = {"counters": r.counter_dict()}
+        manifest = {"n_batches": n_batches, "counters": r.counter_dict()}
         if partition_lineage:
             from .metrics import counters_by_partition
 

@@ -180,10 +180,6 @@ def read_manifests(out_dir: str) -> list[dict]:
     return out
 
 
-def processed_batches(out_dir: str) -> set[str]:
-    return {m["batch_id"] for m in read_manifests(out_dir)}
-
-
 def write_training_shards(
     df, out_dir: str, key_col: str, n_shards: int, mode: str = "overwrite"
 ):

@@ -54,8 +54,8 @@ def plan_for(preset: str) -> decoders.DecodePlan:
     return decoders.compile_plan(PRESETS[preset])
 
 
-def assert_same_as_cascade(plan: decoders.DecodePlan, lines: list[str]) -> None:
-    pats = list(plan.patterns)
+def assert_same_as_cascade(plan: decoders.DecodePlan, srcs: list[str], lines: list[str]) -> None:
+    pats = [re.compile(p) for p in srcs]
     want = [cascade(pats, line) for line in lines]
     pids, vals = plan.decode(lines)
     assert list(zip(pids, vals)) == want
@@ -73,7 +73,6 @@ class CountingRegex:
 
     def __init__(self, regex: re.Pattern) -> None:
         self.regex = regex
-        self.groups = regex.groups
         self.calls = 0
 
     def search(self, line: str):
@@ -89,7 +88,7 @@ def counted(plan: decoders.DecodePlan) -> tuple[decoders.DecodePlan, list[Counti
     if fused is not None:
         wrapped = CountingRegex(fused.regex)
         counters.append(wrapped)
-        fused = FusedCascade(wrapped, fused.levels)
+        fused = FusedCascade(wrapped, fused.pids)
     twins = []
     for twin in plan.twins:
         if twin is not None:
@@ -106,14 +105,21 @@ def counted(plan: decoders.DecodePlan) -> tuple[decoders.DecodePlan, list[Counti
 # --- the plan each preset gets ---
 
 
-@pytest.mark.parametrize("preset, n", [("s3", 5), ("clb", 2)])
-def test_prefix_chained_presets_get_a_fused_plan(preset, n):
+@pytest.mark.parametrize(
+    "preset, pids",
+    [
+        ("s3", [4] * 21 + [3] * 5 + [2, 1, 0]),
+        ("clb", [1] * 15 + [0] * 3),
+    ],
+    ids=["s3-5", "clb-2"],  # preset and list length
+)
+def test_prefix_chained_presets_get_a_fused_plan(preset, pids):
     plan = plan_for(preset)
     assert plan.fused is not None
-    # deepest tail first, ending with the head (pattern n-1, no marker)
-    assert [pid for _, pid in plan.fused.levels] == list(range(n))
-    assert plan.fused.levels[-1][0] == -1
-    assert plan.twins == ()
+    # Match.lastindex -> winner: 0 and the head's groups map to the head
+    assert plan.fused.pids == tuple(pids)
+    assert len(pids) == plan.fused.regex.groups + 1
+    assert plan.patterns == () and plan.twins == ()
 
 
 @pytest.mark.parametrize("preset, lines", [("s3", S3_LINES), ("clb", CLB_LINES)])
@@ -130,7 +136,9 @@ def test_fused_plan_runs_one_search_per_line(preset, lines):
 def test_cascade_counts_more_than_one_search_per_line():
     """The counter sees the cascade too: unmatched S3 lines try all five."""
     plan = plan_for("s3")
-    cascade_plan = dataclasses.replace(plan, fused=None, twins=(None,) * len(plan.patterns))
+    cascade_plan = dataclasses.replace(
+        plan, patterns=tuple(map(re.compile, S3)), fused=None, twins=(None,) * len(S3)
+    )
     wrapped, counters = counted(cascade_plan)
     wrapped.decode([g.AU1, g.L5])
     assert sum(c.calls for c in counters) == 5 + 5
@@ -234,11 +242,35 @@ def test_tree_prefix_chain_is_fused_though_sources_differ():
     assert list(zip(pids, vals)) == [cascade(pats, line) for line in lines]
 
 
+def test_head_match_that_sets_no_group_maps_to_the_head():
+    """A head that matches through a branch holding no group leaves
+    ``lastindex`` None, and index 0 of the lookup names the head."""
+    srcs = [r"^(?:(?P<a>x)|y);(?P<b>[a-z]+)", r"^(?:(?P<a>x)|y)"]
+    plan = decoders.compile_plan(srcs)
+    assert plan.fused is not None and plan.fused.pids == (1, 1, 0)
+    assert plan.fused.regex.search("y").lastindex is None
+    lines = ["y", "x", "y;ab", "z"]
+    assert_same_as_cascade(plan, srcs, lines)
+    assert plan.decode(lines)[0] == [1, 1, 0, -1]
+
+
+def test_tail_with_a_nested_group():
+    """The tail's outer group closes last, so ``lastindex`` names it; a
+    tail that fails after its inner group closed leaves ``lastindex`` at
+    the head's."""
+    srcs = [r"^(?P<a>[a-z]+);(?P<b>(?P<c>\d{2})[a-z]+)", r"^(?P<a>[a-z]+)"]
+    plan = decoders.compile_plan(srcs)
+    assert plan.fused is not None and plan.fused.pids == (1, 1, 0, 0)
+    lines = ["ab;12x", "ab;12", "ab;1x", "ab", "ab;", "1", "ab;123x"]
+    assert_same_as_cascade(plan, srcs, lines)
+    assert plan.decode(lines)[0] == [0, 1, 1, 1, 1, -1, 1]
+
+
 @pytest.mark.parametrize("preset, lines", [("s3", S3_LINES), ("clb", CLB_LINES)])
 def test_truncation_after_every_field(preset, lines):
     plan = plan_for(preset)
     cut = [line[:i] for line in lines for i in range(len(line) + 1) if i == len(line) or line[i] == " "]
-    assert_same_as_cascade(plan, cut)
+    assert_same_as_cascade(plan, PRESETS[preset], cut)
 
 
 # --- property-based equivalence: fused plan vs cascade oracle ---
@@ -287,7 +319,7 @@ try:
     def test_fused_equals_cascade_on_mutated_golden_lines(preset, seeds, data):
         plan = plan_for(preset)
         lines = data.draw(st.lists(mutated_lines(seeds), min_size=1, max_size=8))
-        assert_same_as_cascade(plan, lines)
+        assert_same_as_cascade(plan, PRESETS[preset], lines)
 
 except ImportError:  # pragma: no cover
     pass
@@ -298,8 +330,10 @@ except ImportError:  # pragma: no cover
 # The fusion analysis itself is what can be wrong, so this fuzz builds
 # pattern lists from the risky ingredients: classes that hold the next
 # literal, nullable repeats, overlapping alternatives, bounded repeats,
-# missing anchors. Whenever fuse_cascade accepts a list, the fused plan
-# must decode every line exactly as the cascade does.
+# missing anchors, and a group held by one branch only, so a match's
+# lastindex can be None or point before an unset group. Whenever
+# fuse_cascade accepts a list, the fused plan must decode every line
+# exactly as the cascade does.
 
 try:
     from hypothesis import given, settings, strategies as st
@@ -318,6 +352,7 @@ try:
                 st.one_of(
                     st.sampled_from(_BODIES).map(lambda b: ("G", b)),
                     st.sampled_from(_LITERALS).map(lambda t: ("L", t)),
+                    st.just(("B", "(?:(?P<g{}>x)|y)")),
                 ),
                 min_size=1,
                 max_size=4,
@@ -343,7 +378,9 @@ try:
 
         def src(items):
             return "".join(
-                f"(?P<g{next(counter)}>{val})" if kind == "G" else val
+                f"(?P<g{next(counter)}>{val})" if kind == "G"
+                else val.format(next(counter)) if kind == "B"
+                else val
                 for kind, val in items
             )
 

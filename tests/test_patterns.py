@@ -95,15 +95,30 @@ def test_compile_plan_parses_each_pattern_once(preset, monkeypatch):
     assert len(calls) == len(pat.PRESETS[preset])
 
 
+@pytest.mark.parametrize(
+    "preset, parses", [("s3", 5), ("clb", 2), ("apache_clf", 8), ("cloudfront", 2), ("alb", 2)]
+)
+def test_compile_plan_first_sight_parses(preset, parses, monkeypatch):
+    """With ``re``'s cache empty, a fused list is parsed once per pattern
+    and compiles no member; a cascade list's ``re.compile`` of each source
+    parses it a second time."""
+    re.purge()
+    calls = []
+    parse = re._parser.parse
+    monkeypatch.setattr(re._parser, "parse", lambda *a, **k: calls.append(a) or parse(*a, **k))
+    compile_plan(pat.PRESETS[preset])
+    assert len(calls) == parses
+
+
 def test_twin_and_fusion_leave_the_shared_trees_as_they_are():
     """A plan's trees are shared by the gate, fusion and the twin, so
     deriving a twin widens a copy and fusion builds a new tree."""
     for srcs in (pat.CLOUDFRONT, pat.APACHE_CLF[2:]):
-        trees = [pat.parse_pattern(s)[1] for s in srcs]
+        trees = [pat.parse_pattern(s) for s in srcs]
         before = [repr(t) for t in trees]
         assert all(pat.fast_twin(t) is not None for t in trees)
         assert [repr(t) for t in trees] == before
-    trees = [pat.parse_pattern(s)[1] for s in pat.S3]
+    trees = [pat.parse_pattern(s) for s in pat.S3]
     before = [repr(t) for t in trees]
     assert pat.fuse_cascade(trees) is not None
     assert [repr(t) for t in trees] == before

@@ -70,6 +70,35 @@ def test_pipeline_write_observe_resume(spark, tmp_path):
     assert read_sink(spark, out).count() == total
 
 
+def test_pipeline_refuses_another_batch_split(spark, tmp_path):
+    """A batch id names a bucket of one split only, so a run into a
+    directory committed under another ``n_batches`` raises before any
+    batch runs, with or without resume; the same split still resumes."""
+    from access_log_parser_spark.sinks import read_manifests, write_manifest
+
+    out = str(tmp_path / "split")
+    pages = synth_pages(spark, N_PAGES, LINES, UNM_EVERY)
+    total, _, _ = expected_counts()
+    run_pipeline(spark, pages, out, fmt="s3", n_batches=2)
+    assert {m["n_batches"] for m in read_manifests(out)} == {2}
+
+    for resume in (True, False):
+        with pytest.raises(ValueError, match="n_batches=2.*n_batches=4"):
+            run_pipeline(spark, pages, out, fmt="s3", n_batches=4, resume=resume)
+        assert read_sink(spark, out).count() == total
+        assert sorted(m["batch_id"] for m in read_manifests(out)) == ["0", "1"]
+
+    rep = run_pipeline(spark, pages, out, fmt="s3", n_batches=2, resume=True)
+    assert rep.batches_run == [] and rep.batches_skipped == ["0", "1"]
+    assert read_sink(spark, out).count() == total
+
+    # a manifest that records no split counts as another split
+    unrecorded = str(tmp_path / "unrecorded")
+    write_manifest(unrecorded, "0", {"counters": {}})
+    with pytest.raises(ValueError, match="n_batches=None"):
+        run_pipeline(spark, pages, unrecorded, fmt="s3", n_batches=1)
+
+
 def test_pipeline_enrich_broadcast(spark, tmp_path):
     out = str(tmp_path / "sink2")
     pages = synth_pages(spark, 10, 5, 5)

@@ -212,6 +212,31 @@ def test_robots_crawl_delay_group_scope_and_min(spark):
     assert robots_crawl_delay(only, agent="slowbot").count() == 0
 
 
+def test_robots_other_directives_end_an_agent_run(spark):
+    """Any ``key:`` line ends a run of User-agent lines, whichever
+    operator reads the body: a directive the operator ignores still
+    closes the group before it, so the next User-agent opens a new one."""
+    from access_log_parser_spark.operators.webtext import (
+        robots_crawl_delay,
+        robots_txt_rules,
+    )
+
+    delay_after_rule = spark.createDataFrame([Row(
+        host="h.example",
+        robots_txt="User-agent: slowbot\nDisallow: /x\nUser-agent: fastbot\nCrawl-delay: 9\n",
+    )])
+    assert robots_crawl_delay(delay_after_rule, agent="slowbot").count() == 0
+    assert robots_crawl_delay(delay_after_rule, agent="fastbot").collect()[0]["crawl_delay"] == 9.0
+
+    rule_after_delay = spark.createDataFrame([Row(
+        host="h.example",
+        robots_txt="User-agent: a\nCrawl-delay: 3\nUser-agent: b\nDisallow: /x\n",
+    )])
+    assert robots_txt_rules(rule_after_delay, agent="a").count() == 0
+    got = [(r["allow"], r["path"]) for r in robots_txt_rules(rule_after_delay, agent="b").collect()]
+    assert got == [(False, "/x")]
+
+
 def test_fetch_schedule_spacing_and_default(spark):
     from access_log_parser_spark.operators.webtext import fetch_schedule
 
