@@ -1,7 +1,7 @@
 # Dev ergonomics (the reference ships a Makefile too: /root/reference/Makefile)
 PY := PYTHONPATH=.
 
-.PHONY: test parity dtypes plans bench perfbench perfbench-test pytask-cost parse-file-cost route-cost validate pipeline-demo train-prep-demo submit-check
+.PHONY: test parity dtypes plans bench perfbench perfbench-test pytask-cost parse-file-cost pipeline-cost route-cost validate pipeline-demo train-prep-demo submit-check
 
 # the ROADMAP.md tier-1 command: the whole suite, no early stop
 test:
@@ -52,6 +52,16 @@ HANDLERS ?= json tsv
 PREFIX ?=
 route-cost:
 	python3 scripts/route_cost.py --lines $(LINES) $(foreach h,$(HANDLERS),--handler $(h)) $(if $(PREFIX),--prefix)
+
+# wall s, process-tree CPU s, /proc/stat process creations and files
+# written per run_pipeline run on seeded LTSV pages, in one local[4]
+# session (scripts/pipeline_cost.py):
+#   make pipeline-cost PAGES=2000 BATCHES=4 RUNS=6
+PAGES ?= 2000
+BATCHES ?= 4
+RUNS ?= 6
+pipeline-cost:
+	python3 scripts/pipeline_cost.py --pages $(PAGES) --batches $(BATCHES) --runs $(RUNS)
 
 validate:
 	$(PY) python tools/validate_all.py

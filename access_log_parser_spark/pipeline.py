@@ -14,8 +14,11 @@ One batch run over a pages table is ONE job with ONE Python stage:
    split, decode, filter, serialize, with the reference's per-document
    ``isFirst`` for the TSV header), carrying the lookup columns through as
    Arrow arrays. No shuffle;
-3. **route**: one dynamic-partitioned write fans rows out to
-   ``(status, pattern_id)`` sinks;
+3. **route**: one write fans rows out to ``(status, pattern_id)`` sinks
+   under the batch's own ``data/batch_id=<id>`` directory, replacing it.
+   With two batches in flight each batch runs on half the cores' tasks
+   (``coalesce``, no shuffle), so a run writes half as many part files,
+   and none has a ``.crc`` file beside it;
 4. **aggregate**: lineage counters ride the SAME action via
    ``pyspark.sql.Observation`` (no second scan); per-sink counts come from
    the (cheap, columnar, partition-pruned) written output.
@@ -55,7 +58,9 @@ from .sinks import read_manifests, write_manifest, write_routed
 # k runs, so one batch's driver-side planning and commit overlap the
 # other's tasks instead of leaving the cores idle. A constant, not an
 # option: four in flight measured no better than two, because the run is
-# CPU-bound by then.
+# CPU-bound by then. Each batch runs on defaultParallelism // _IN_FLIGHT
+# tasks, so the batches in flight fill the cores between them and every
+# task writes one part file per sink it reaches.
 _IN_FLIGHT = 2
 
 
@@ -162,24 +167,28 @@ def run_pipeline(
     for lk, _ in cached:
         carry.extend(c for c in lk.columns if c not in carry)
 
-    # A compact parquet corpus (one row group / few small files) arrives as
-    # fewer input splits than cores, and the decode — the CPU-heavy stage —
-    # would run at the split count no matter how many executors the cluster
-    # has (measured: local[2] == local[8] wall-clock on a 2M-line corpus
-    # before this spread). Repartition only when the input is under-split;
-    # at 100 TB it arrives as thousands of splits and this never fires. The
-    # batch filter is narrow, so every batch has the pages' split count:
-    # probe it once, not per batch.
-    par = spark.sparkContext.defaultParallelism
-    spread = pages.rdd.getNumPartitions() < par
+    # The batches in flight share the cores, and a one-batch run keeps
+    # full width. Narrower batches write fewer part files, and without
+    # native Hadoop IO each file costs a forked chmod. More splits than
+    # `width` are coalesced (narrow, no shuffle); a compact corpus (one row
+    # group / few small files) arrives as fewer splits, and the decode —
+    # the CPU-heavy stage — would run at the split count no matter how many
+    # executors the cluster has (measured: local[2] == local[8] wall-clock
+    # on a 2M-line corpus before this spread), so it is repartitioned up.
+    # The batch filter is narrow, so every batch has the pages' split
+    # count: probe it once, not per batch.
+    width = max(1, spark.sparkContext.defaultParallelism // min(_IN_FLIGHT, len(todo)))
+    splits = pages.rdd.getNumPartitions()
     # distinct observed-metric names for batches of this run in flight at
     # once, and for other runs or parses in the same session
     run_tag = uuid.uuid4().hex[:8]
 
     def run_batch(batch_id: str) -> Result:
         batch_pages = pages.filter(F.col("batch_id") == batch_id)
-        if spread:
-            batch_pages = batch_pages.repartition(par)
+        if splits > width:
+            batch_pages = batch_pages.coalesce(width)
+        elif splits < width:
+            batch_pages = batch_pages.repartition(width)
         # a lookup with duplicate keys duplicates the page's lines, as any
         # left join would
         for lk, key in cached:
@@ -190,14 +199,11 @@ def run_pipeline(
         if partition_lineage:
             routed = routed.persist()
         observed, obs = observe_routed(routed, f"lineage-{batch_id}-{run_tag}")
-        # crash-safe resume: the batch writes its OWN partitions with
-        # dynamic overwrite, so re-running a batch that died mid-write
-        # (partial files, no manifest) replaces — never duplicates — them
+        # crash-safe resume: the batch overwrites its OWN directory, so
+        # re-running a batch that died mid-write (partial files, no
+        # manifest) replaces — never duplicates — its rows
         write_routed(
-            observed.withColumn("batch_id", F.lit(batch_id)),
-            out_dir,
-            mode="overwrite",
-            extra_partition_cols=("batch_id",),
+            observed, out_dir, mode="overwrite", batch_id=batch_id
         )  # the ONLY action for this batch
         r = Result.from_counters(obs.get)
         manifest = {"n_batches": n_batches, "counters": r.counter_dict()}

@@ -4,8 +4,11 @@ The reference writes matched lines to one ``io.Writer`` and collects
 unmatched rows in an in-memory Errors slice (`parser_core.go:241-243`,
 `:216`). At 100 TB the equivalent is table sinks keyed by
 ``(status, pattern_id)``. A SINGLE write pass with
-``partitionBy(status, pattern_id)`` performs the whole fan-out — dynamic
-partition insert, one scan, no per-sink jobs.
+``partitionBy(status, pattern_id)`` performs the whole fan-out — one
+scan, no per-sink jobs. A pipeline batch writes its own
+``data/batch_id=<id>`` directory. The write creates no file the table
+does not need: on a host without native Hadoop IO each file and
+directory costs a forked ``chmod``.
 
 Iceberg is the design target (snapshot-based resume per north_rule); this
 sandbox has no Iceberg runtime jars, so the writer transparently falls
@@ -28,6 +31,16 @@ from pyspark.sql import functions as F
 
 SINK_PARTITION_KEYS = ("status", "pattern_id")
 
+# Writer options of every sink write: Hadoop's local filesystem without
+# its checksum layer, so no ``.crc`` file is written beside each part
+# file. Hadoop picks the class by scheme, so only ``file:`` paths change;
+# the cache switch keeps the session's cached checksummed instance for
+# ``file:`` out of the write.
+_NO_CHECKSUMS = {
+    "fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
+    "fs.file.impl.disable.cache": "true",
+}
+
 
 def iceberg_available(spark) -> bool:
     """Probe for the Iceberg runtime: True iff the Iceberg Spark
@@ -49,20 +62,26 @@ def _write_routed_iceberg(
     df: DataFrame,
     table: str,
     mode: str,
-    extra_partition_cols: tuple[str, ...],
+    batch_id: str | None,
 ) -> None:
-    """DataFrameWriterV2 fan-out into an Iceberg table: partitioned by
-    the same (…extra, status, pattern_id) keys; ``overwrite`` maps to
-    dynamic-partition replacement (overwritePartitions), matching the
-    parquet path's partitionOverwriteMode=dynamic resume semantics —
-    Iceberg's snapshot commit additionally makes it atomic.
+    """DataFrameWriterV2 fan-out into an Iceberg table, partitioned by the
+    same (status, pattern_id) keys, with ``batch_id`` as a leading
+    partition column when given; ``overwrite`` maps to dynamic-partition
+    replacement (overwritePartitions), so re-writing a batch replaces
+    exactly that batch's partitions, as the parquet path's per-batch
+    directory overwrite does — Iceberg's snapshot commit additionally
+    makes it atomic.
 
     Runtime validation: this branch cannot execute in the sandbox (no
     Iceberg jars); ``scripts/iceberg_smoke.py`` is the first-deploy
     smoke test — run it via spark-submit with the documented --packages
     line to prove create / snapshot-commit / dynamic-overwrite resume /
     time travel end-to-end on a real cluster."""
-    cols = [F.col(c) for c in (*extra_partition_cols, *SINK_PARTITION_KEYS)]
+    keys = SINK_PARTITION_KEYS
+    if batch_id is not None:
+        df = df.withColumn("batch_id", F.lit(batch_id))
+        keys = ("batch_id", *keys)
+    cols = [F.col(c) for c in keys]
     writer = df.writeTo(table).using("iceberg").partitionedBy(cols[0], *cols[1:])
     # Existence decides create-vs-write EXPLICITLY. Catching the write
     # error and falling back to createOrReplace() would turn any
@@ -82,18 +101,27 @@ def write_routed(
     routed: DataFrame,
     out_dir: str,
     mode: str = "append",
-    extra_partition_cols: tuple[str, ...] = (),
+    batch_id: str | None = None,
     iceberg_table: str | None = None,
 ) -> None:
-    """One-pass fan-out: dynamic-partitioned write keyed by (status,
-    pattern_id). Every sink table is a partition subtree:
+    """One-pass fan-out: a write partitioned by (status, pattern_id).
+    Every sink table is a partition subtree:
     ``{out_dir}/data/status=matched/pattern_id=0/...``
 
-    ``extra_partition_cols`` are prepended to the partition keys: the
-    pipeline passes ``("batch_id",)`` with ``mode="overwrite"`` so that
-    re-running a crashed batch (partial files, no manifest) REPLACES
-    exactly that batch's partitions via dynamic partition overwrite —
-    append-mode resume would silently duplicate the partial rows.
+    With ``batch_id`` the write goes to ``{out_dir}/data/batch_id=<id>``
+    alone, as a static write of that one directory: the pipeline passes
+    ``mode="overwrite"``, so re-running a crashed batch (partial files, no
+    manifest) REPLACES that batch's whole directory, stray partitions
+    included — append-mode resume would silently duplicate the partial
+    rows. Reading ``data`` back discovers ``batch_id`` as a partition
+    column. Without it the write keeps dynamic partition overwrite, which
+    replaces only the (status, pattern_id) partitions it writes.
+
+    Without native Hadoop IO every file and directory the writer creates
+    costs a forked ``chmod``, so the write creates only what the table
+    needs: no ``.crc`` checksum file beside each part file (parquet holds
+    its own page checksums), and, per batch, no ``.spark-staging-*`` tree
+    of a dynamic overwrite.
 
     ``iceberg_table``: when given AND the Iceberg runtime is present
     (see :func:`iceberg_available`), the fan-out goes through
@@ -101,13 +129,20 @@ def write_routed(
     directory — a config change, not a code change, on a real cluster.
     Without the runtime the parquet layout below is used regardless."""
     if iceberg_table is not None and iceberg_available(routed.sparkSession):
-        _write_routed_iceberg(routed, iceberg_table, mode, extra_partition_cols)
+        _write_routed_iceberg(routed, iceberg_table, mode, batch_id)
         return
+    path = os.path.join(out_dir, "data")
+    if batch_id is None:
+        overwrite = "dynamic"
+    else:
+        overwrite = "static"
+        path = os.path.join(path, f"batch_id={batch_id}")
     (
         routed.write.mode(mode)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*extra_partition_cols, *SINK_PARTITION_KEYS)
-        .parquet(os.path.join(out_dir, "data"))
+        .options(**_NO_CHECKSUMS)
+        .option("partitionOverwriteMode", overwrite)
+        .partitionBy(*SINK_PARTITION_KEYS)
+        .parquet(path)
     )
 
 
@@ -220,9 +255,10 @@ def compact_sink(
     sink (one per task per batch); at 10^12 rows the file count itself
     becomes the bottleneck for downstream scans. Handles both sink
     layouts: the plain ``data/status=…/pattern_id=…`` tree and the
-    pipeline's ``data/batch_id=…/status=…/pattern_id=…`` tree
-    (``extra_partition_cols``) — every matching partition directory is
-    rewritten to ``target_files`` files.
+    pipeline's ``data/batch_id=…/status=…/pattern_id=…`` tree (one
+    ``batch_id`` directory per batch, at most one part file per batch
+    task) — every matching partition directory is rewritten to
+    ``target_files`` files, with no ``.crc`` files, as every sink write.
 
     Swap semantics (local filesystem only — ``os.rename``): compacted
     output is written to a sibling temp dir, the old dir renamed away,
@@ -253,7 +289,11 @@ def compact_sink(
         df = spark.read.parquet(part_dir)
         n_rows += df.count()
         tmp_new = part_dir + f".compact-{uuid.uuid4().hex[:8]}"
-        df.coalesce(target_files).write.mode("overwrite").parquet(tmp_new)
+        (
+            df.coalesce(target_files).write.mode("overwrite")
+            .options(**_NO_CHECKSUMS)
+            .parquet(tmp_new)
+        )
         tmp_old = part_dir + f".old-{uuid.uuid4().hex[:8]}"
         os.rename(part_dir, tmp_old)
         os.rename(tmp_new, part_dir)

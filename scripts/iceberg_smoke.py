@@ -47,18 +47,15 @@ def main() -> int:
         print("FAIL: Iceberg runtime not on the classpath — see --packages above")
         return 2
 
-    def routed_batch(n_pages: int, batch_id: str):
-        lines = pages_to_lines(synth_pages(spark, n_pages, 10, 5))
-        return parse_routed(lines, "s3").withColumn(
-            "batch_id", F.lit(batch_id)
-        )
+    def routed_batch(n_pages: int):
+        return parse_routed(pages_to_lines(synth_pages(spark, n_pages, 10, 5)), "s3")
 
     spark.sql(f"DROP TABLE IF EXISTS {table}")
 
     # 1) first write creates the table with the fan-out partition spec
     write_routed(
-        routed_batch(100, "0"), out_dir="", mode="overwrite",
-        extra_partition_cols=("batch_id",), iceberg_table=table,
+        routed_batch(100), out_dir="", mode="overwrite",
+        batch_id="0", iceberg_table=table,
     )
     n0 = spark.table(table).count()
     assert n0 == 100 * 10, f"create wrote {n0} rows"
@@ -69,8 +66,8 @@ def main() -> int:
 
     # 2) append a second batch -> new snapshot, counts additive
     write_routed(
-        routed_batch(50, "1"), out_dir="", mode="overwrite",
-        extra_partition_cols=("batch_id",), iceberg_table=table,
+        routed_batch(50), out_dir="", mode="overwrite",
+        batch_id="1", iceberg_table=table,
     )
     assert spark.table(table).count() == 150 * 10
 
@@ -80,8 +77,8 @@ def main() -> int:
     # 3) crash-resume: re-write batch 1 (same batch_id) — dynamic
     # partition overwrite must REPLACE, not duplicate
     write_routed(
-        routed_batch(50, "1"), out_dir="", mode="overwrite",
-        extra_partition_cols=("batch_id",), iceberg_table=table,
+        routed_batch(50), out_dir="", mode="overwrite",
+        batch_id="1", iceberg_table=table,
     )
     n_after = spark.table(table).count()
     assert n_after == 150 * 10, f"resume duplicated rows: {n_after}"

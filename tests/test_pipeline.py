@@ -2,6 +2,8 @@
 closed-form expected per-sink counts (FIXTURES.md §6), enrichment joins,
 and idempotent resume."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -267,11 +269,15 @@ def test_iceberg_writer_seam_dispatch(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         sinks,
         "_write_routed_iceberg",
-        lambda df, table, mode, extra: calls.update(table=table, mode=mode, extra=extra),
+        lambda df, table, mode, batch_id: calls.update(table=table, mode=mode, batch_id=batch_id),
     )
     out = tmp_path / "ice"
     sinks.write_routed(routed, str(out), mode="overwrite", iceberg_table="cat.db.logs")
-    assert calls == {"table": "cat.db.logs", "mode": "overwrite", "extra": ()}
+    assert calls == {"table": "cat.db.logs", "mode": "overwrite", "batch_id": None}
+    sinks.write_routed(
+        routed, str(out), mode="overwrite", batch_id="3", iceberg_table="cat.db.logs"
+    )
+    assert calls["batch_id"] == "3"
     assert not out.exists()  # nothing written to the parquet layout
 
     monkeypatch.setattr(sinks, "iceberg_available", lambda s: False)
@@ -302,14 +308,16 @@ def test_compact_sink_handles_pipeline_batch_layout(spark, tmp_path):
 
 def test_resume_after_mid_batch_crash_no_duplicates(spark, tmp_path):
     """A batch that crashed mid-write leaves partial sink files and NO
-    manifest. Resume must re-run it and REPLACE its partitions (dynamic
-    partition overwrite), not append duplicates."""
-    from pyspark.sql import functions as F
+    manifest. Resume must re-run it and REPLACE its whole ``batch_id``
+    directory (a static overwrite of that one directory), not append
+    duplicates. The crashed batch may also have written a partition its
+    re-run does not write again (here a stray part file under
+    ``status=excluded``, which an S3 run without filters never produces):
+    those rows go too, where a dynamic overwrite would replace only the
+    partitions the re-run writes and keep them."""
+    import shutil
 
-    from access_log_parser_spark.pages import synth_pages
-    from access_log_parser_spark.pipeline import run_pipeline
-    from access_log_parser_spark.sinks import manifest_dir, read_sink
-    import os
+    from access_log_parser_spark.sinks import manifest_dir
 
     pages = synth_pages(spark, 40, 10, 5)
     out = str(tmp_path / "crash_out")
@@ -317,13 +325,96 @@ def test_resume_after_mid_batch_crash_no_duplicates(spark, tmp_path):
     full = read_sink(spark, out).count()
     assert full == 400
 
-    # simulate a crash of batch 2: its data exists (partially or fully)
-    # but its manifest commit marker is gone
+    # simulate a crash of batch 2: its data exists (partially or fully),
+    # with a stray partition, but its manifest commit marker is gone
+    batch = os.path.join(out, "data", "batch_id=2")
+    part = next(
+        os.path.join(d, f) for d, _, files in sorted(os.walk(batch))
+        for f in sorted(files) if f.endswith(".parquet")
+    )
+    stray = os.path.join(batch, "status=excluded", "pattern_id=0")
+    os.makedirs(stray)
+    shutil.copy(part, os.path.join(stray, "part-stray.parquet"))
+    assert read_sink(spark, out).count() > full
     os.remove(os.path.join(manifest_dir(out), "2.json"))
+
     report = run_pipeline(spark, pages, out, fmt="s3", n_batches=4, resume=True)
     assert report.batches_run == ["2"]
     assert sorted(report.batches_skipped) == ["0", "1", "3"]
-    assert read_sink(spark, out).count() == full  # no duplicates
+    assert not os.path.exists(os.path.join(batch, "status=excluded"))
+    assert read_sink(spark, out).count() == full  # no duplicates, no stray rows
+
+
+def _written(out):
+    """Part files per (batch directory, sink) under ``out/data``, and
+    every other name written there (directories included) that is not a
+    partition directory."""
+    from collections import Counter
+
+    data = os.path.join(out, "data")
+    parts: Counter = Counter()
+    other = []
+    for d, dirs, files in os.walk(data):
+        other += [n for n in dirs if "=" not in n]
+        for f in files:
+            if f.endswith(".parquet") and not f.startswith("."):
+                parts[os.path.relpath(d, data)] += 1
+            else:
+                other.append(f)
+    return parts, other
+
+
+def test_pipeline_writes_only_the_files_the_table_needs(spark, tmp_path):
+    """With two batches in flight each batch runs at half width (two tasks
+    on local[4]), so it writes at most two part files per sink; a one-batch
+    run keeps all four. No ``.crc``, ``.spark-staging-*`` or
+    ``_temporary`` is left behind, and a plain ``write_routed`` writes no
+    ``.crc`` either."""
+    from access_log_parser_spark.sinks import write_routed
+
+    pages = synth_pages(spark, N_PAGES, LINES, UNM_EVERY)
+    two = str(tmp_path / "two")
+    run_pipeline(spark, pages, two, fmt="s3", n_batches=2)
+    parts, other = _written(two)
+    assert {p.split(os.sep)[0] for p in parts} == {"batch_id=0", "batch_id=1"}
+    assert max(parts.values()) <= 2 and other == []
+
+    one = str(tmp_path / "one")
+    run_pipeline(spark, pages, one, fmt="s3", n_batches=1)
+    parts, other = _written(one)
+    assert len(parts) > 1 and set(parts.values()) == {4} and other == []
+
+    plain = str(tmp_path / "plain")
+    write_routed(parse_routed(pages_to_lines(pages), "s3"), plain)
+    parts, other = _written(plain)
+    assert parts and not any(p.startswith("batch_id=") for p in parts)
+    assert other == []
+
+
+def test_pipeline_empty_batch(spark, tmp_path):
+    """More batches than pages: an empty batch counts zeros, commits its
+    manifest and writes no part file (its ``batch_id`` directory is left
+    empty), and the sinks hold the same rows as a one-batch run."""
+    from access_log_parser_spark.sinks import read_manifests
+
+    pages = synth_pages(spark, 3, 10, 5)
+    one = str(tmp_path / "one")
+    ref = run_pipeline(spark, pages, one, fmt="s3", n_batches=1)
+    many = str(tmp_path / "many")
+    rep = run_pipeline(spark, pages, many, fmt="s3", n_batches=8)
+    assert rep.result.counters() == ref.result.counters()
+
+    manifests = {m["batch_id"]: m["counters"] for m in read_manifests(many)}
+    assert sorted(manifests) == rep.batches_run == [str(i) for i in range(8)]
+    empty = [b for b, c in manifests.items() if c["total"] == 0]
+    assert len(empty) >= 5
+    assert all(set(manifests[b].values()) == {0} for b in empty)
+    parts, other = _written(many)
+    assert not any(p.split(os.sep)[0] == f"batch_id={b}" for p in parts for b in empty)
+    assert other == []
+    for b in empty:
+        assert os.listdir(os.path.join(many, "data", f"batch_id={b}")) == []
+    assert _sink_rows(spark, many) == _sink_rows(spark, one)
 
 
 def test_curate_corpus_gopher_and_c4_gates(spark):
