@@ -16,9 +16,10 @@ One batch run over a pages table is ONE job with ONE Python stage:
    Arrow arrays. No shuffle;
 3. **route**: one write fans rows out to ``(status, pattern_id)`` sinks
    under the batch's own ``data/batch_id=<id>`` directory, replacing it.
-   With two batches in flight each batch runs on half the cores' tasks
-   (``coalesce``, no shuffle), so a run writes half as many part files,
-   and none has a ``.crc`` file beside it;
+   With two batches in flight, pages of at most as many splits as cores
+   run each batch on half the cores' tasks (``coalesce``, no shuffle), so
+   a run writes half as many part files, and none has a ``.crc`` file
+   beside it;
 4. **aggregate**: lineage counters ride the SAME action via
    ``pyspark.sql.Observation`` (no second scan); per-sink counts come from
    the (cheap, columnar, partition-pruned) written output.
@@ -30,7 +31,8 @@ otherwise leave the cores idle between jobs.
 
 Resume: page batches are identified by a deterministic ``batch_id``
 (bucket of the url hash). A manifest commit marker is written per batch
-after its data lands; re-running skips committed batches — the
+after its data lands, and dropped before a re-run rewrites that data;
+re-running with ``resume`` skips committed batches — the
 Iceberg-snapshot bookkeeping of the north_rule, expressed portably. A
 failed batch stops further submission; the batch still in flight
 finishes and commits, so only completed batches have manifests. Each
@@ -52,15 +54,16 @@ from pyspark.sql import functions as F
 from .engine import parse_documents
 from .metrics import Result, observe_routed
 from .options import Option
-from .sinks import read_manifests, write_manifest, write_routed
+from .sinks import drop_manifest, read_manifests, write_manifest, write_routed
 
 # Batches in flight at once: batch k+1 is planned and submitted while batch
 # k runs, so one batch's driver-side planning and commit overlap the
 # other's tasks instead of leaving the cores idle. A constant, not an
 # option: four in flight measured no better than two, because the run is
-# CPU-bound by then. Each batch runs on defaultParallelism // _IN_FLIGHT
-# tasks, so the batches in flight fill the cores between them and every
-# task writes one part file per sink it reaches.
+# CPU-bound by then. Pages of at most as many splits as cores run each
+# batch on defaultParallelism // _IN_FLIGHT tasks, so the batches in
+# flight fill the cores between them and every task writes one part file
+# per sink it reaches.
 _IN_FLIGHT = 2
 
 
@@ -168,16 +171,20 @@ def run_pipeline(
         carry.extend(c for c in lk.columns if c not in carry)
 
     # The batches in flight share the cores, and a one-batch run keeps
-    # full width. Narrower batches write fewer part files, and without
-    # native Hadoop IO each file costs a forked chmod. More splits than
-    # `width` are coalesced (narrow, no shuffle); a compact corpus (one row
-    # group / few small files) arrives as fewer splits, and the decode —
-    # the CPU-heavy stage — would run at the split count no matter how many
-    # executors the cluster has (measured: local[2] == local[8] wall-clock
-    # on a 2M-line corpus before this spread), so it is repartitioned up.
-    # The batch filter is narrow, so every batch has the pages' split
-    # count: probe it once, not per batch.
-    width = max(1, spark.sparkContext.defaultParallelism // min(_IN_FLIGHT, len(todo)))
+    # full width. A compact corpus (one row group / few small files)
+    # arrives as fewer splits than `width`, and the decode — the CPU-heavy
+    # stage — would run at the split count no matter how many executors
+    # the cluster has (measured: local[2] == local[8] wall-clock on a
+    # 2M-line corpus), so it is repartitioned up. Between `width` and the
+    # cores it is coalesced (narrow, no shuffle): narrower batches write
+    # fewer part files, and without native Hadoop IO each file costs a
+    # forked chmod. An input split wider than the cores (thousands of
+    # splits at 100 TB) keeps its split count, so tasks stay small to
+    # retry and balance, and pending tasks still ask for executors. The
+    # batch filter is narrow, so every batch has the pages' split count:
+    # probe it once, not per batch.
+    par = spark.sparkContext.defaultParallelism
+    width = max(1, par // min(_IN_FLIGHT, len(todo)))
     splits = pages.rdd.getNumPartitions()
     # distinct observed-metric names for batches of this run in flight at
     # once, and for other runs or parses in the same session
@@ -185,10 +192,10 @@ def run_pipeline(
 
     def run_batch(batch_id: str) -> Result:
         batch_pages = pages.filter(F.col("batch_id") == batch_id)
-        if splits > width:
-            batch_pages = batch_pages.coalesce(width)
-        elif splits < width:
+        if splits < width:
             batch_pages = batch_pages.repartition(width)
+        elif width < splits <= par:
+            batch_pages = batch_pages.coalesce(width)
         # a lookup with duplicate keys duplicates the page's lines, as any
         # left join would
         for lk, key in cached:
@@ -201,7 +208,11 @@ def run_pipeline(
         observed, obs = observe_routed(routed, f"lineage-{batch_id}-{run_tag}")
         # crash-safe resume: the batch overwrites its OWN directory, so
         # re-running a batch that died mid-write (partial files, no
-        # manifest) replaces — never duplicates — its rows
+        # manifest) replaces — never duplicates — its rows. The overwrite
+        # clears the directory when the job starts, so an earlier run's
+        # manifest goes first: a write that then fails leaves no marker
+        # of rows that are gone, and resume re-runs the batch.
+        drop_manifest(out_dir, batch_id)
         write_routed(
             observed, out_dir, mode="overwrite", batch_id=batch_id
         )  # the ONLY action for this batch

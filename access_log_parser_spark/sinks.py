@@ -108,20 +108,19 @@ def write_routed(
     Every sink table is a partition subtree:
     ``{out_dir}/data/status=matched/pattern_id=0/...``
 
-    With ``batch_id`` the write goes to ``{out_dir}/data/batch_id=<id>``
-    alone, as a static write of that one directory: the pipeline passes
-    ``mode="overwrite"``, so re-running a crashed batch (partial files, no
-    manifest) REPLACES that batch's whole directory, stray partitions
-    included — append-mode resume would silently duplicate the partial
-    rows. Reading ``data`` back discovers ``batch_id`` as a partition
-    column. Without it the write keeps dynamic partition overwrite, which
-    replaces only the (status, pattern_id) partitions it writes.
+    ``mode="overwrite"`` is a static overwrite: the write replaces the
+    whole directory it targets, deleting it when the job starts. With
+    ``batch_id`` that directory is ``{out_dir}/data/batch_id=<id>`` alone,
+    so re-running a crashed batch (partial files, no manifest) REPLACES
+    that batch's whole directory, stray partitions included — append-mode
+    resume would silently duplicate the partial rows. Reading ``data``
+    back discovers ``batch_id`` as a partition column.
 
     Without native Hadoop IO every file and directory the writer creates
     costs a forked ``chmod``, so the write creates only what the table
     needs: no ``.crc`` checksum file beside each part file (parquet holds
-    its own page checksums), and, per batch, no ``.spark-staging-*`` tree
-    of a dynamic overwrite.
+    its own page checksums), and no ``.spark-staging-*`` tree of a dynamic
+    overwrite.
 
     ``iceberg_table``: when given AND the Iceberg runtime is present
     (see :func:`iceberg_available`), the fan-out goes through
@@ -132,15 +131,12 @@ def write_routed(
         _write_routed_iceberg(routed, iceberg_table, mode, batch_id)
         return
     path = os.path.join(out_dir, "data")
-    if batch_id is None:
-        overwrite = "dynamic"
-    else:
-        overwrite = "static"
+    if batch_id is not None:
         path = os.path.join(path, f"batch_id={batch_id}")
     (
         routed.write.mode(mode)
         .options(**_NO_CHECKSUMS)
-        .option("partitionOverwriteMode", overwrite)
+        .option("partitionOverwriteMode", "static")
         .partitionBy(*SINK_PARTITION_KEYS)
         .parquet(path)
     )
@@ -201,6 +197,15 @@ def write_manifest(out_dir: str, batch_id: str, payload: dict) -> str:
         json.dump({"batch_id": batch_id, "committed_at": time.time(), **payload}, f)
     os.replace(tmp, path)  # atomic commit marker
     return path
+
+
+def drop_manifest(out_dir: str, batch_id: str) -> None:
+    """Remove a batch's commit marker, if any, before its data is
+    rewritten: no marker may outlive the rows it describes."""
+    try:
+        os.remove(os.path.join(manifest_dir(out_dir), f"{batch_id}.json"))
+    except FileNotFoundError:
+        pass
 
 
 def read_manifests(out_dir: str) -> list[dict]:

@@ -367,9 +367,9 @@ def _written(out):
 def test_pipeline_writes_only_the_files_the_table_needs(spark, tmp_path):
     """With two batches in flight each batch runs at half width (two tasks
     on local[4]), so it writes at most two part files per sink; a one-batch
-    run keeps all four. No ``.crc``, ``.spark-staging-*`` or
-    ``_temporary`` is left behind, and a plain ``write_routed`` writes no
-    ``.crc`` either."""
+    run keeps all four, and pages split wider than the cores keep their
+    split count. No ``.crc``, ``.spark-staging-*`` or ``_temporary`` is
+    left behind, and a plain ``write_routed`` writes no ``.crc`` either."""
     from access_log_parser_spark.sinks import write_routed
 
     pages = synth_pages(spark, N_PAGES, LINES, UNM_EVERY)
@@ -383,6 +383,11 @@ def test_pipeline_writes_only_the_files_the_table_needs(spark, tmp_path):
     run_pipeline(spark, pages, one, fmt="s3", n_batches=1)
     parts, other = _written(one)
     assert len(parts) > 1 and set(parts.values()) == {4} and other == []
+
+    wide = str(tmp_path / "wide")
+    run_pipeline(spark, pages.repartition(8), wide, fmt="s3", n_batches=2)
+    parts, other = _written(wide)
+    assert 2 < max(parts.values()) <= 8 and other == []
 
     plain = str(tmp_path / "plain")
     write_routed(parse_routed(pages_to_lines(pages), "s3"), plain)
@@ -771,3 +776,44 @@ def test_failed_batch_stops_submission_then_resume_finishes(spark, tmp_path, mon
     rows = read_sink(spark, out).select("source", "line_no", "status").collect()
     assert len(rows) == total and len(set(rows)) == total
     assert sum(r.status == "matched" for r in rows) == matched
+
+
+def test_rerun_with_failed_batch_then_resume_loses_no_rows(spark, tmp_path, monkeypatch):
+    """Re-running without ``resume`` into a completed ``out_dir``: a batch's
+    static overwrite clears its directory when the write starts, so a
+    batch whose write then fails has lost its rows. It must have lost its
+    old manifest too, or ``resume=True`` would skip it and the manifests'
+    counters would no longer match the sinks."""
+    from access_log_parser_spark import pipeline
+    from access_log_parser_spark.sinks import manifest_dir, read_manifests
+
+    pages = synth_pages(spark, N_PAGES, LINES, UNM_EVERY)
+    out = str(tmp_path / "rerun")
+    run_pipeline(spark, pages, out, fmt="s3", n_batches=4)
+
+    write_routed = pipeline.write_routed
+    calls: list[str] = []
+
+    def fail_first_mid_write(df, out_dir, **kwargs):
+        calls.append(kwargs["batch_id"])
+        if len(calls) == 1:
+            # every task raises, after the job has cleared the directory
+            failing = F.raise_error(F.lit("batch write failed")).cast("string")
+            df = df.withColumn("raw", F.coalesce(failing, F.col("raw")))
+        return write_routed(df, out_dir, **kwargs)
+
+    monkeypatch.setattr(pipeline, "write_routed", fail_first_mid_write)
+    with pytest.raises(Exception, match="batch write failed"):
+        run_pipeline(spark, pages, out, fmt="s3", n_batches=4)
+    failed = calls[0]
+    assert not os.path.exists(os.path.join(manifest_dir(out), f"{failed}.json"))
+
+    monkeypatch.undo()
+    rep = run_pipeline(spark, pages, out, fmt="s3", n_batches=4, resume=True)
+    assert failed in rep.batches_run
+    total, _, _ = expected_counts()
+    rows = read_sink(spark, out).select("source", "line_no", "status").collect()
+    assert len(rows) == total and len(set(rows)) == total
+    manifests = read_manifests(out)
+    assert sorted(m["batch_id"] for m in manifests) == ["0", "1", "2", "3"]
+    assert sum(m["counters"]["total"] for m in manifests) == total
