@@ -5,18 +5,20 @@ Unmatched/Excluded/Skipped plus an errors side-list
 (`/root/reference/parser_result.go:16-36`), with the invariant
 ``Total = Matched + Unmatched + Excluded + Skipped``.
 
-Here the counters are computed two ways:
+Here the counters are computed two ways, for callers outside the
+pipeline and the Parser verbs:
 
-- :func:`observe_routed` attaches a ``pyspark.sql.Observation`` so a write
-  pass yields the counters for free (no second scan of the data — the
-  100 TB path);
+- :func:`observe_routed` attaches a ``pyspark.sql.Observation`` so a
+  caller's write pass (``bench.py``, perfbench) yields the counters with
+  no second scan of the data;
 - :func:`collect_result` runs an explicit partial+final hash aggregation
-  (`groupBy` + ``sum(when(...))``) for callers that hold a routed frame
-  and no action of their own (tests, the perfbench sidecar check).
+  for callers that hold a routed frame and no action of their own (tests,
+  the perfbench sidecar check).
 
-The Parser verbs use neither: their one action collects the routed rows,
-and the counters are folded from that table on the driver. Every path
-builds its :class:`Result` with :meth:`Result.from_counters`.
+A Parser verb folds them from the rows its one action collects; a
+pipeline batch reads them from the footers of the part files it committed
+(:func:`.sinks.batch_lineage`). Every path builds its :class:`Result`
+with :meth:`Result.from_counters`.
 """
 
 from __future__ import annotations
@@ -136,13 +138,11 @@ def _counter_aggs() -> list:
     return aggs
 
 
-def observe_routed(routed: DataFrame, name: str | None = None) -> tuple[DataFrame, Observation]:
+def observe_routed(routed: DataFrame) -> tuple[DataFrame, Observation]:
     """Attach counter observation; after the first action
-    ``Result.from_counters(obs.get)`` reads it.
-    ``name`` defaults to a fresh ``lineage-<uuid>``, so queries observed at
-    the same time (pipeline batches in flight, parses on two threads) never
-    share an observed-metric name."""
-    obs = Observation(name or f"lineage-{uuid.uuid4().hex}")
+    ``Result.from_counters(obs.get)`` reads it. A fresh name per call
+    keeps queries observed at the same time apart."""
+    obs = Observation(f"lineage-{uuid.uuid4().hex}")
     return routed.observe(obs, *_counter_aggs()), obs
 
 
@@ -156,20 +156,6 @@ def counters_by_sink(routed: DataFrame) -> DataFrame:
     """Per-sink aggregate counts: sinks are keyed by (status, pattern_id)."""
     return routed.groupBy("status", "pattern_id").agg(
         F.count(F.lit(1)).alias("rows")
-    )
-
-
-def counters_by_partition(routed: DataFrame) -> DataFrame:
-    """Per-PARTITION lineage counters (north_rule: "per-partition lineage
-    + metrics"): which task processed how many rows with which outcomes.
-    ``spark_partition_id()`` is evaluated map-side before the aggregation
-    shuffle, so the breakdown reflects the physical input partitions of
-    the routed stage; the partial/final agg keeps it one tiny shuffle.
-    Invariant: summing over partitions reproduces the global Result."""
-    return (
-        routed.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
-        .agg(*_counter_aggs())
     )
 
 

@@ -20,14 +20,15 @@ One batch run over a pages table is ONE job with ONE Python stage:
    run each batch on half the cores' tasks (``coalesce``, no shuffle), so
    a run writes half as many part files, and none has a ``.crc`` file
    beside it;
-4. **aggregate**: lineage counters ride the SAME action via
-   ``pyspark.sql.Observation`` (no second scan); per-sink counts come from
-   the (cheap, columnar, partition-pruned) written output.
+4. **aggregate**: the batch's counters and per-partition lineage are read
+   from the footers of the part files it committed (no second scan, no
+   further job); per-sink counts come from the (cheap, columnar,
+   partition-pruned) written output.
 
 Batches overlap: batch k+1 is planned and submitted while batch k runs
-(two in flight, never more), each still one job with its own Observation
-and its own manifest. A batch's driver-side planning and commit would
-otherwise leave the cores idle between jobs.
+(two in flight, never more), each still one job with its own manifest.
+A batch's driver-side planning and commit would otherwise leave the
+cores idle between jobs.
 
 Resume: page batches are identified by a deterministic ``batch_id``
 (bucket of the url hash). A manifest commit marker is written per batch
@@ -42,7 +43,6 @@ manifest records ``n_batches``, and a run refuses another split's output.
 from __future__ import annotations
 
 import time
-import uuid
 from collections import Counter
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass
@@ -52,9 +52,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .engine import parse_documents
-from .metrics import Result, observe_routed
+from .metrics import Result
 from .options import Option
-from .sinks import drop_manifest, read_manifests, write_manifest, write_routed
+from .sinks import (
+    batch_lineage, drop_manifest, local_out_dir, read_manifests, write_manifest, write_routed,
+)
 
 # Batches in flight at once: batch k+1 is planned and submitted while batch
 # k runs, so one batch's driver-side planning and commit overlap the
@@ -121,25 +123,25 @@ def run_pipeline(
     text_col: str = "text",
     n_batches: int = 1,
     resume: bool = False,
-    partition_lineage: bool = False,
 ) -> PipelineReport:
     """Run the pipeline; ``lookups`` maps name -> (lookup_df, join_key)
     and each lookup is broadcast-joined onto the pages on ``join_key``,
     which must be a column of both sides. The joined columns (key and
     lookup values) are carried onto every routed row of the page.
 
-    ``partition_lineage=True`` additionally records per-PARTITION counters
-    in each batch manifest (north_rule: per-partition lineage): the routed
-    frame is persisted so the breakdown rides the same parse, at the cost
-    of caching one batch of routed rows.
+    Each batch is one Spark job, its write; its manifest records its
+    ``counters`` and per-PARTITION ``partition_lineage`` (north_rule),
+    read from the footers of the part files it committed.
 
-    Raises ``ValueError`` before any batch runs when ``out_dir`` holds a
+    Raises ``ValueError`` before any batch runs when ``out_dir`` does not
+    resolve to a ``file:`` path (:func:`.sinks.local_out_dir`), or holds a
     manifest of another ``n_batches`` (or of none recorded): its rows sit
     under the other split's batch ids, and neither resume nor overwrite
     would replace them."""
     opt = opt or Option()
     start = time.monotonic()
 
+    out_dir = local_out_dir(spark, out_dir)
     manifests = read_manifests(out_dir)
     for m in manifests:
         if m.get("n_batches") != n_batches:
@@ -186,9 +188,6 @@ def run_pipeline(
     par = spark.sparkContext.defaultParallelism
     width = max(1, par // min(_IN_FLIGHT, len(todo)))
     splits = pages.rdd.getNumPartitions()
-    # distinct observed-metric names for batches of this run in flight at
-    # once, and for other runs or parses in the same session
-    run_tag = uuid.uuid4().hex[:8]
 
     def run_batch(batch_id: str) -> Result:
         batch_pages = pages.filter(F.col("batch_id") == batch_id)
@@ -203,29 +202,20 @@ def run_pipeline(
         routed = parse_documents(
             batch_pages, fmt, opt, source_col=url_col, text_col=text_col, keep=carry,
         )
-        if partition_lineage:
-            routed = routed.persist()
-        observed, obs = observe_routed(routed, f"lineage-{batch_id}-{run_tag}")
         # crash-safe resume: the batch overwrites its OWN directory, so
         # re-running a batch that died mid-write (partial files, no
         # manifest) replaces — never duplicates — its rows. The overwrite
         # clears the directory when the job starts, so an earlier run's
         # manifest goes first: a write that then fails leaves no marker
-        # of rows that are gone, and resume re-runs the batch.
+        # of rows that are gone, and resume re-runs the batch. The write
+        # is the batch's ONLY action.
         drop_manifest(out_dir, batch_id)
-        write_routed(
-            observed, out_dir, mode="overwrite", batch_id=batch_id
-        )  # the ONLY action for this batch
-        r = Result.from_counters(obs.get)
-        manifest = {"n_batches": n_batches, "counters": r.counter_dict()}
-        if partition_lineage:
-            from .metrics import counters_by_partition
-
-            manifest["partition_lineage"] = [
-                row.asDict() for row in counters_by_partition(routed).collect()
-            ]
-            routed.unpersist()
-        write_manifest(out_dir, batch_id, manifest)
+        write_routed(routed, out_dir, mode="overwrite", batch_id=batch_id)
+        lineage = batch_lineage(out_dir, batch_id)
+        r = Result.from_counters(sum(map(Counter, lineage), Counter()))
+        write_manifest(out_dir, batch_id, {
+            "n_batches": n_batches, "counters": r.counter_dict(), "partition_lineage": lineage,
+        })
         return r
 
     sums: Counter[str] = Counter()

@@ -29,7 +29,12 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .decoders import EXCLUDED, MATCHED, SKIPPED, UNMATCHED
+
 SINK_PARTITION_KEYS = ("status", "pattern_id")
+
+# a batch partition's counters before its first part file is read
+_NO_ROWS = dict.fromkeys(("total", MATCHED, UNMATCHED, EXCLUDED, SKIPPED), 0)
 
 # Writer options of every sink write: Hadoop's local filesystem without
 # its checksum layer, so no ``.crc`` file is written beside each part
@@ -206,6 +211,48 @@ def drop_manifest(out_dir: str, batch_id: str) -> None:
         os.remove(os.path.join(manifest_dir(out_dir), f"{batch_id}.json"))
     except FileNotFoundError:
         pass
+
+
+def local_out_dir(spark, out_dir: str) -> str:
+    """``out_dir`` as the local path Spark's writer resolves it to: a bare
+    path lands on ``fs.defaultFS`` (HDFS on a YARN cluster), a relative one
+    on the JVM's working directory. The driver keeps the manifests and reads
+    the footers on its own filesystem, where a part file on any other would
+    go unseen and count as no rows, so a non-``file:`` path raises
+    ``ValueError``."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(out_dir)
+    uri = path.getFileSystem(spark._jsc.hadoopConfiguration()).makeQualified(path).toUri()
+    if uri.getScheme() != "file":
+        raise ValueError(f"{out_dir} resolves to {uri.toString()}; out_dir must be a file: path")
+    return uri.getPath()
+
+
+def batch_lineage(out_dir: str, batch_id: str) -> list[dict]:
+    """Per-partition counters of a batch ``write_routed`` has committed,
+    read from the footers of its part files: no data page is read and no
+    Spark job runs. ``partition_id`` is the write task's ``part-NNNNN``
+    index, and each part file adds its footer's row count to ``total``
+    and to the counter its ``status=`` directory names. The committer
+    keeps one task attempt per partition, so the counters describe the
+    rows on disk; their sum is the batch's counters."""
+    import glob
+
+    # imported here, not at module level: every Python worker imports this
+    # package, and none needs pyarrow.parquet
+    import pyarrow.parquet as pq
+
+    batch_dir = os.path.join(out_dir, "data", f"batch_id={batch_id}")
+    pattern = os.path.join(glob.escape(batch_dir), "status=*", "pattern_id=*", "part-*.parquet")
+    lineage: dict[int, dict] = {}
+    for path in glob.glob(pattern):
+        status_dir, _, name = os.path.relpath(path, batch_dir).split(os.sep)
+        status = status_dir.removeprefix("status=")
+        partition_id = int(name.split("-")[1])
+        rec = lineage.setdefault(partition_id, {"partition_id": partition_id, **_NO_ROWS})
+        rows = pq.read_metadata(path).num_rows
+        rec["total"] += rows
+        rec[status] += rows
+    return [lineage[p] for p in sorted(lineage)]
 
 
 def read_manifests(out_dir: str) -> list[dict]:

@@ -81,10 +81,9 @@ def dedup_replays_within_watermark(
     shipper contract). Batch twin for oracle checks: a plain
     ``dropDuplicates(key_cols)``.
     """
-    wm = lines_with_ts.withWatermark(ts_col, watermark)
-    if hasattr(wm, "dropDuplicatesWithinWatermark"):
-        return wm.dropDuplicatesWithinWatermark(list(key_cols))
-    return wm.dropDuplicates(list(key_cols))  # pragma: no cover
+    return lines_with_ts.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+        list(key_cols)
+    )
 
 
 def windowed_status_counts(
@@ -238,9 +237,7 @@ def stream_paragraph_dedup(
         F.col(watermark_col),
         F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "para"),
     ).withColumn("digest", F.md5(F.col("para")))
-    wm = paras.withWatermark(watermark_col, watermark)
-    if hasattr(wm, "dropDuplicatesWithinWatermark"):
-        deduped = wm.dropDuplicatesWithinWatermark(["digest"])
-    else:  # pragma: no cover
-        deduped = wm.dropDuplicates(["digest"])
+    deduped = paras.withWatermark(watermark_col, watermark).dropDuplicatesWithinWatermark(
+        ["digest"]
+    )
     return deduped.select("url", "pos", "para", "digest")

@@ -9,8 +9,9 @@ on it once cold and K times warm (default 3), each with a fresh parser.
 For each run it prints the wall seconds, the number of Spark jobs in the
 parser's job group, and the peak proportional set size (PSS) of the
 driver's process tree: this Python process, the JVM and the Python
-workers, sampled every 50 ms from ``/proc/<pid>/smaps_rollup``. PSS splits
-a page shared by several processes between them, so forked workers are
+workers, sampled every 100 ms from ``/proc/<pid>/smaps_rollup`` by
+perfbench's meter, plus one sample when the call returns. PSS splits a
+page shared by several processes between them, so forked workers are
 not counted once each. The last line is a JSON summary with the warm
 median. Run from the repository root; Linux only.
 """
@@ -24,13 +25,11 @@ import random
 import statistics
 import sys
 import tempfile
-import threading
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CORES = 4
 GARBAGE = 0.02
-INTERVAL = 0.05
 
 
 def write_log(path: str, n: int, seed: int) -> None:
@@ -52,60 +51,6 @@ def write_log(path: str, n: int, seed: int) -> None:
             )
 
 
-def _tree(root: int) -> list[int]:
-    """``root`` and all its descendants."""
-    children: dict[int, list[int]] = {}
-    for entry in os.listdir("/proc"):
-        if not entry.isdigit():
-            continue
-        try:
-            with open(f"/proc/{entry}/stat") as fh:
-                ppid = int(fh.read().rsplit(")", 1)[1].split()[1])
-        except (OSError, IndexError, ValueError):
-            continue
-        children.setdefault(ppid, []).append(int(entry))
-    out, todo = [], [root]
-    while todo:
-        pid = todo.pop()
-        out.append(pid)
-        todo.extend(children.get(pid, ()))
-    return out
-
-
-def tree_pss_mb(root: int) -> float:
-    total_kb = 0
-    for pid in _tree(root):
-        try:
-            with open(f"/proc/{pid}/smaps_rollup") as fh:
-                for line in fh:
-                    if line.startswith("Pss:"):
-                        total_kb += int(line.split()[1])
-                        break
-        except (OSError, IndexError, ValueError):
-            continue
-    return total_kb / 1024
-
-
-class PeakPss:
-    """Peak PSS of this process's tree while the ``with`` block runs."""
-
-    def __enter__(self) -> PeakPss:
-        self.peak = tree_pss_mb(os.getpid())
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._loop, daemon=True)
-        self._thread.start()
-        return self
-
-    def _loop(self) -> None:
-        while not self._stop.wait(INTERVAL):
-            self.peak = max(self.peak, tree_pss_mb(os.getpid()))
-
-    def __exit__(self, *exc) -> None:
-        self._stop.set()
-        self._thread.join()
-        self.peak = max(self.peak, tree_pss_mb(os.getpid()))
-
-
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--lines", type=int, default=200_000, help="lines in the log file")
@@ -118,6 +63,7 @@ def main(argv: list[str] | None = None) -> int:
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
     )
     import access_log_parser_spark as alp
+    from perfbench.run import RssSampler, _tree_pss_bytes
 
     with tempfile.TemporaryDirectory(prefix="parse-file-cost-") as tmp:
         path = os.path.join(tmp, "access.log")
@@ -133,27 +79,29 @@ def main(argv: list[str] | None = None) -> int:
         print(f"{args.lines} lines ({size_mb:.1f} MiB), local[{CORES}], seed {args.seed}")
         runs = []
         try:
-            for k in range(1 + args.warm):
-                p = alp.new_apache_clf_parser(spark)
-                with PeakPss() as mem:
+            with RssSampler(os.getpid()) as mem:
+                for k in range(1 + args.warm):
+                    p = alp.new_apache_clf_parser(spark)
+                    mem.reset()
                     t0 = time.perf_counter()
                     out, r = p.parse_file(path)
                     wall = time.perf_counter() - t0
-                jobs = len(spark.sparkContext.statusTracker().getJobIdsForGroup(p._job_group))
-                run = {
-                    "run": "cold" if k == 0 else f"warm{k}",
-                    "wall_s": round(wall, 3),
-                    "jobs": jobs,
-                    "peak_pss_mb": round(mem.peak),
-                    "counters": list(r.counters()),
-                    "out_lines": len(out),
-                }
-                runs.append(run)
-                print(
-                    f"{run['run']}: {wall:.2f} s, {jobs} jobs, tree peak PSS "
-                    f"{mem.peak:.0f} MiB, counters {r.counters()}"
-                )
-                del out, r
+                    peak_mb = max(mem.peak, _tree_pss_bytes(os.getpid())) / 2**20
+                    jobs = len(spark.sparkContext.statusTracker().getJobIdsForGroup(p._job_group))
+                    run = {
+                        "run": "cold" if k == 0 else f"warm{k}",
+                        "wall_s": round(wall, 3),
+                        "jobs": jobs,
+                        "peak_pss_mb": round(peak_mb),
+                        "counters": list(r.counters()),
+                        "out_lines": len(out),
+                    }
+                    runs.append(run)
+                    print(
+                        f"{run['run']}: {wall:.2f} s, {jobs} jobs, tree peak PSS "
+                        f"{peak_mb:.0f} MiB, counters {r.counters()}"
+                    )
+                    del out, r
         finally:
             spark.stop()
     warm = runs[1:] or runs

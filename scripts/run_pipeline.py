@@ -3,8 +3,11 @@
 Cluster usage (north_rule: multi-executor, resumable, salted/AQE):
 
     spark-submit --py-files alp.zip scripts/run_pipeline.py \
-        --pages /data/pages_parquet --out /data/sinks \
+        --pages /data/pages_parquet --out file:///shared/sinks \
         --format s3 --batches 64 --resume
+
+``--out`` must be a ``file:`` path every executor and the driver share:
+the driver keeps the manifests and reads the part-file footers there.
 
 Local demo (synthesizes a deterministic pages corpus first):
 

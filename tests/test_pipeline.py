@@ -162,38 +162,113 @@ def test_two_phase_count_matches_plain(spark):
     assert plain == salted
 
 
-def test_partition_lineage_sums_to_global(spark, tmp_path):
-    """counters_by_partition: summing the per-partition lineage reproduces
-    the global Result; recorded in the batch manifest when enabled."""
-    import json
-    import os
+@pytest.mark.parametrize(
+    "n_batches, reshape, width",
+    [
+        (1, lambda p: p, 4),  # one batch at full width
+        (2, lambda p: p, 2),  # two batches, coalesced to half width
+        (2, lambda p: p.repartition(8), 8),  # splits wider than the cores kept
+        (1, lambda p: p.coalesce(2), 4),  # two splits repartitioned up
+    ],
+    ids=["full_width", "coalesced", "wider_than_cores", "repartitioned_up"],
+)
+def test_partition_lineage_sums_to_global(spark, tmp_path, n_batches, reshape, width):
+    """Every batch manifest records per-partition lineage, read from the
+    footers of the part files the batch committed: each entry holds the
+    five counters and meets the invariant, the entries sum to the batch's
+    counters, and at full width they equal a ``spark_partition_id()``
+    breakdown of the same parse (Spark names a task's part files by its
+    partition id)."""
+    from access_log_parser_spark import parse_documents
+    from access_log_parser_spark.sinks import read_manifests
 
-    from access_log_parser_spark.metrics import counters_by_partition
-    from access_log_parser_spark.pages import synth_pages
-    from access_log_parser_spark.pipeline import run_pipeline
-    from access_log_parser_spark.sinks import manifest_dir
-
-    pages = synth_pages(spark, 40, 10, 5)
+    pages = reshape(synth_pages(spark, N_PAGES, 10, UNM_EVERY))
+    # every status occurs: L3 is a 404, line 1 of each page is skipped
+    opt = Option(filters=["http_status == 200"], skip_lines=[1])
     out = str(tmp_path / "lineage_out")
-    report = run_pipeline(spark, pages, out, fmt="s3", partition_lineage=True)
-    assert report.result.total == 400
+    report = run_pipeline(spark, pages, out, fmt="s3", opt=opt, n_batches=n_batches)
+    assert report.result.total == N_PAGES * 10
+    assert all(report.result.counters())
 
-    manifests = sorted(os.listdir(manifest_dir(out)))
-    assert manifests
-    with open(os.path.join(manifest_dir(out), manifests[0])) as f:
-        m = json.load(f)
-    lineage = m["partition_lineage"]
-    assert len(lineage) >= 1
-    for key in ("total", "matched", "unmatched"):
-        assert sum(p[key] for p in lineage) == m["counters"][key]
+    manifests = read_manifests(out)
+    assert sorted(m["batch_id"] for m in manifests) == report.batches_run
+    keys = ("total", "matched", "unmatched", "excluded", "skipped")
+    for m in manifests:
+        lineage = m["partition_lineage"]
+        assert lineage
+        for p in lineage:
+            assert list(p) == ["partition_id", *keys]
+            assert 0 <= p["partition_id"] < width
+            assert p["total"] == p["matched"] + p["unmatched"] + p["excluded"] + p["skipped"]
+        assert {k: sum(p[k] for p in lineage) for k in keys} == m["counters"]
 
-    # operator-level invariant on a fresh routed frame
-    from access_log_parser_spark.pages import pages_to_lines
+    if n_batches == 1 and width == pages.rdd.getNumPartitions():
+        status = F.col("status")
+        ref = (
+            parse_documents(pages, "s3", opt, source_col="url", text_col="text")
+            .withColumn("partition_id", F.spark_partition_id())
+            .groupBy("partition_id")
+            .agg(
+                F.count(F.lit(1)).alias("total"),
+                *(F.sum(F.when(status == k, 1).otherwise(0)).alias(k) for k in keys[1:]),
+            )
+            .orderBy("partition_id")
+        )
+        assert manifests[0]["partition_lineage"] == [r.asDict() for r in ref.collect()]
 
-    routed = parse_routed(pages_to_lines(pages), "s3")
-    rows = counters_by_partition(routed).collect()
-    assert sum(r["total"] for r in rows) == 400
-    assert all(r["total"] == r["matched"] + r["unmatched"] + r["excluded"] + r["skipped"] for r in rows)
+
+def test_pipeline_batch_is_one_job(spark, tmp_path):
+    """A two-batch run is two Spark jobs, the batches' writes: the
+    manifests' counters and lineage cost no further job, and no routed
+    rows are persisted. The footers are found under an ``out_dir`` whose
+    name is a glob pattern."""
+    from access_log_parser_spark.sinks import read_manifests
+
+    sc = spark.sparkContext
+    pages = synth_pages(spark, N_PAGES, LINES, UNM_EVERY)
+    assert pages.rdd.getNumPartitions() == 4
+    persisted = sc._jsc.getPersistentRDDs().size()
+    out = str(tmp_path / "jobs_out[1]")
+    sc.setJobGroup("alp-one-job-per-batch", "job count")
+    try:
+        rep = run_pipeline(spark, pages, out, fmt="s3", n_batches=2)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup("alp-one-job-per-batch")) == 2
+    assert sc._jsc.getPersistentRDDs().size() == persisted
+    manifests = read_manifests(out)
+    assert [m["batch_id"] for m in manifests] == rep.batches_run == ["0", "1"]
+    assert all(m["partition_lineage"] for m in manifests)
+    assert rep.result.counters() == (*expected_counts(), 0, 0)
+
+
+def test_pipeline_out_dir_resolved_as_spark_writes_it(spark, tmp_path, monkeypatch):
+    """``out_dir`` is resolved the way Spark's writer resolves it: a
+    ``file://`` URI gets the counters, lineage and manifests of the plain
+    path, with nothing written under a ``file:`` directory beside the
+    caller, and a path on another filesystem, where the driver could not
+    read the footers, is refused before any batch runs."""
+    from access_log_parser_spark.sinks import read_manifests
+
+    monkeypatch.chdir(tmp_path)
+    pages = synth_pages(spark, N_PAGES, LINES, UNM_EVERY)
+    out = tmp_path / "uri_out"
+    rep = run_pipeline(spark, pages, out.as_uri(), fmt="s3", n_batches=2)
+    assert rep.result.counters() == (*expected_counts(), 0, 0)
+    manifests = read_manifests(str(out))
+    assert [m["batch_id"] for m in manifests] == ["0", "1"]
+    assert sum(m["counters"]["total"] for m in manifests) == expected_counts()[0]
+    assert all(m["partition_lineage"] for m in manifests)
+    assert os.listdir(tmp_path) == ["uri_out"]
+
+    sc = spark.sparkContext
+    sc.setJobGroup("alp-refused-out-dir", "refused out_dir")
+    try:
+        with pytest.raises(ValueError, match="must be a file: path"):
+            run_pipeline(spark, pages, "hdfs://localhost:1/alp_out", fmt="s3")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert not sc.statusTracker().getJobIdsForGroup("alp-refused-out-dir")
 
 
 def test_compact_sink_atomic_rewrite(spark, tmp_path):
@@ -690,7 +765,8 @@ def _gated_writes(monkeypatch, fail_first: bool = False):
 def test_overlapped_batches_match_one_batch(spark, tmp_path, monkeypatch):
     """Two batches run at once, never more, and the run writes the same
     counters and per-sink rows as one batch; each batch's manifest holds
-    its OWN Observation's counters, read back from its own partitions."""
+    its OWN counters, read from the footers of its own part files, which
+    match its rows read back from its own partitions."""
     import os
 
     from access_log_parser_spark.sinks import read_manifests
