@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql.functions import udtf
 
 from .. import patterns as pat
-from ..decoders import compile_plan, ltsv_decode_batch
+from ..decoders import compile_plan
 
 
 def make_parse_udtf(fmt: str, fields: list[str] | None = None):
@@ -53,24 +53,3 @@ def register_parse_udtf(
     cls = make_parse_udtf(fmt, fields)
     spark.udtf.register(name, cls)
     return cls
-
-
-def register_ltsv_udtf(spark, name: str = "parse_ltsv"):
-    """LTSV SQL table function: one row per field, preserving input label
-    order as ``pos`` (the ordered array-of-struct answer to LTSV's
-    per-line dynamic schema — SURVEY.md §1.2). Whole-line rejection on
-    any field without ``:`` (parser_core.go:275-288) yields a single
-    (-1, NULL, NULL) row."""
-
-    @udtf(returnType="pos int, label string, value string")
-    class ParseLTSV:
-        def eval(self, raw: str):
-            labels, values = ltsv_decode_batch([raw])
-            if labels[0] is None:
-                yield -1, None, None
-                return
-            for i, (lab, val) in enumerate(zip(labels[0], values[0])):
-                yield i, lab, val
-
-    spark.udtf.register(name, ParseLTSV)
-    return ParseLTSV

@@ -5,20 +5,18 @@ Unmatched/Excluded/Skipped plus an errors side-list
 (`/root/reference/parser_result.go:16-36`), with the invariant
 ``Total = Matched + Unmatched + Excluded + Skipped``.
 
-Here the counters are computed two ways, for callers outside the
-pipeline and the Parser verbs:
+A routed write is counted one way: from the footers of the part files it
+committed (:func:`.sinks.committed_lineage`), in ``run_pipeline`` and in
+``bench.py``'s headline, with no second scan and no extra job. A Parser
+verb folds the counters from the rows its one action collects. Two
+helpers count a frame as it is computed, not what a write committed:
 
-- :func:`observe_routed` attaches a ``pyspark.sql.Observation`` so a
-  caller's write pass (``bench.py``, perfbench) yields the counters with
-  no second scan of the data;
 - :func:`collect_result` runs an explicit partial+final hash aggregation
-  for callers that hold a routed frame and no action of their own (tests,
-  the perfbench sidecar check).
+  (tests, the perfbench sidecar check);
+- :func:`observe_routed` attaches a ``pyspark.sql.Observation``; only
+  perfbench still uses it.
 
-A Parser verb folds them from the rows its one action collects; a
-pipeline batch reads them from the footers of the part files it committed
-(:func:`.sinks.batch_lineage`). Every path builds its :class:`Result`
-with :meth:`Result.from_counters`.
+Every path builds its :class:`Result` with :meth:`Result.from_counters`.
 """
 
 from __future__ import annotations
@@ -141,7 +139,9 @@ def _counter_aggs() -> list:
 def observe_routed(routed: DataFrame) -> tuple[DataFrame, Observation]:
     """Attach counter observation; after the first action
     ``Result.from_counters(obs.get)`` reads it. A fresh name per call
-    keeps queries observed at the same time apart."""
+    keeps queries observed at the same time apart. Only perfbench's
+    workloads call it; the package counts a write from its footers
+    (:func:`.sinks.committed_lineage`)."""
     obs = Observation(f"lineage-{uuid.uuid4().hex}")
     return routed.observe(obs, *_counter_aggs()), obs
 

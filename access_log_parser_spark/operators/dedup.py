@@ -486,42 +486,6 @@ def simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
     return toks.mapInPandas(run, schema)
 
 
-def simhash_near_pairs(df: DataFrame, max_hamming: int = 3, text_col: str = "text") -> DataFrame:
-    """Near-dup pairs with hamming(simhash) <= max_hamming. Candidates via
-    the pigeonhole trick: split 32 bits into 4 chunks; distance<=3 implies
-    at least one identical chunk -> join per chunk, verify with bit_count."""
-    s = simhash(df, text_col)
-    chunks = s.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("simhash"), 8 * c).bitwiseAND(F.lit(255))
-                    for c in range(4)
-                ]
-            )
-        ).alias("chunk_idx", "chunk_val"),
-    )
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    cand = (
-        a.join(b, on=["chunk_idx", "chunk_val"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return cand.select("id_a", "id_b", ham.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
-    )
-
-
 # --- embedding-cosine near-dup ---
 
 def embedding_near_dup(

@@ -285,16 +285,6 @@ def extract_features(df: DataFrame, id_col: str, bin_col: str) -> DataFrame:
     return df.select(F.col(id_col), F.col(bin_col)).mapInPandas(run, FEATURE_SCHEMA)
 
 
-def frame_sample_plan(df: DataFrame, id_col: str, bin_col: str, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing: emits (media_id, frame_idx) rows for
-    frames 0, n, 2n... of a fake 100-frame clip. Real decoders replace the
-    frame count with container metadata; the explode shape is the point."""
-    frames = F.sequence(F.lit(0), F.lit(99), F.lit(every_n))
-    return df.select(
-        F.col(id_col).alias("media_id"), F.explode(frames).alias("frame_idx")
-    )
-
-
 # ---------------------------------------------------------------- dHash
 # 9x8 grayscale grid -> 64-bit difference hash (dHash, the standard
 # cheap perceptual image fingerprint: bit (r, c) = grid[r][c+1] >

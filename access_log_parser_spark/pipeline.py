@@ -55,7 +55,7 @@ from .engine import parse_documents
 from .metrics import Result
 from .options import Option
 from .sinks import (
-    batch_lineage, drop_manifest, local_out_dir, read_manifests, write_manifest, write_routed,
+    committed_lineage, drop_manifest, local_out_dir, read_manifests, write_manifest, write_routed,
 )
 
 # Batches in flight at once: batch k+1 is planned and submitted while batch
@@ -210,8 +210,8 @@ def run_pipeline(
         # of rows that are gone, and resume re-runs the batch. The write
         # is the batch's ONLY action.
         drop_manifest(out_dir, batch_id)
-        write_routed(routed, out_dir, mode="overwrite", batch_id=batch_id)
-        lineage = batch_lineage(out_dir, batch_id)
+        write_routed(routed, out_dir, batch_id=batch_id)
+        lineage = committed_lineage(out_dir, batch_id)
         r = Result.from_counters(sum(map(Counter, lineage), Counter()))
         write_manifest(out_dir, batch_id, {
             "n_batches": n_batches, "counters": r.counter_dict(), "partition_lineage": lineage,

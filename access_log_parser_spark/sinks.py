@@ -5,10 +5,14 @@ unmatched rows in an in-memory Errors slice (`parser_core.go:241-243`,
 `:216`). At 100 TB the equivalent is table sinks keyed by
 ``(status, pattern_id)``. A SINGLE write pass with
 ``partitionBy(status, pattern_id)`` performs the whole fan-out — one
-scan, no per-sink jobs. A pipeline batch writes its own
-``data/batch_id=<id>`` directory. The write creates no file the table
-does not need: on a host without native Hadoop IO each file and
-directory costs a forked ``chmod``.
+scan, no per-sink jobs. There is one write policy: a write replaces a
+directory it owns, ``data`` or, for a pipeline batch or a streaming
+micro-batch, ``data/batch_id=<id>``, so a re-run replaces its rows and
+never duplicates them. There is one count: the counters of a write are
+read from the footers of the part files it committed
+(:func:`committed_lineage`). The write creates no file the table does
+not need: on a host without native Hadoop IO each file and directory
+costs a forked ``chmod``.
 
 Iceberg is the design target (snapshot-based resume per north_rule); this
 sandbox has no Iceberg runtime jars, so the writer transparently falls
@@ -63,19 +67,14 @@ def iceberg_available(spark) -> bool:
         return False
 
 
-def _write_routed_iceberg(
-    df: DataFrame,
-    table: str,
-    mode: str,
-    batch_id: str | None,
-) -> None:
+def _write_routed_iceberg(df: DataFrame, table: str, batch_id: str | None) -> None:
     """DataFrameWriterV2 fan-out into an Iceberg table, partitioned by the
     same (status, pattern_id) keys, with ``batch_id`` as a leading
-    partition column when given; ``overwrite`` maps to dynamic-partition
-    replacement (overwritePartitions), so re-writing a batch replaces
-    exactly that batch's partitions, as the parquet path's per-batch
-    directory overwrite does — Iceberg's snapshot commit additionally
-    makes it atomic.
+    partition column when given. An existing table takes a dynamic
+    partition replacement (overwritePartitions), so re-writing a batch
+    replaces exactly that batch's partitions, as the parquet path's
+    per-batch directory overwrite does — Iceberg's snapshot commit
+    additionally makes it atomic.
 
     Runtime validation: this branch cannot execute in the sandbox (no
     Iceberg jars); ``scripts/iceberg_smoke.py`` is the first-deploy
@@ -93,19 +92,16 @@ def _write_routed_iceberg(
     # transient failure (commit conflict, permissions, schema drift)
     # into a silent full-table truncation down to this batch's rows;
     # real write errors must propagate to the caller/retry layer.
-    exists = df.sparkSession.catalog.tableExists(table)
-    if not exists:
-        writer.create()
-    elif mode == "overwrite":
+    if df.sparkSession.catalog.tableExists(table):
         writer.overwritePartitions()
     else:
-        writer.append()
+        writer.create()
 
 
 def write_routed(
     routed: DataFrame,
     out_dir: str,
-    mode: str = "append",
+    mode: str = "overwrite",
     batch_id: str | None = None,
     iceberg_table: str | None = None,
 ) -> None:
@@ -113,13 +109,14 @@ def write_routed(
     Every sink table is a partition subtree:
     ``{out_dir}/data/status=matched/pattern_id=0/...``
 
-    ``mode="overwrite"`` is a static overwrite: the write replaces the
-    whole directory it targets, deleting it when the job starts. With
-    ``batch_id`` that directory is ``{out_dir}/data/batch_id=<id>`` alone,
-    so re-running a crashed batch (partial files, no manifest) REPLACES
-    that batch's whole directory, stray partitions included — append-mode
-    resume would silently duplicate the partial rows. Reading ``data``
-    back discovers ``batch_id`` as a partition column.
+    Every write is a static overwrite of a directory the caller owns:
+    ``{out_dir}/data``, or ``{out_dir}/data/batch_id=<id>`` alone with
+    ``batch_id``. The job deletes that directory when it starts, so
+    re-running a batch that died mid-write (partial files, no manifest)
+    REPLACES its rows, stray partitions included, and never adds to them.
+    :func:`committed_lineage` counts what the write committed. Reading
+    ``data`` back discovers ``batch_id`` as a partition column. ``mode``
+    accepts ``"overwrite"`` only; any other value raises ``ValueError``.
 
     Without native Hadoop IO every file and directory the writer creates
     costs a forked ``chmod``, so the write creates only what the table
@@ -132,19 +129,24 @@ def write_routed(
     DataFrameWriterV2 into that Iceberg table instead of the parquet
     directory — a config change, not a code change, on a real cluster.
     Without the runtime the parquet layout below is used regardless."""
+    if mode != "overwrite":
+        raise ValueError(f"write_routed only replaces the directory it owns, got mode={mode!r}")
     if iceberg_table is not None and iceberg_available(routed.sparkSession):
-        _write_routed_iceberg(routed, iceberg_table, mode, batch_id)
+        _write_routed_iceberg(routed, iceberg_table, batch_id)
         return
-    path = os.path.join(out_dir, "data")
-    if batch_id is not None:
-        path = os.path.join(path, f"batch_id={batch_id}")
     (
-        routed.write.mode(mode)
+        routed.write.mode("overwrite")
         .options(**_NO_CHECKSUMS)
         .option("partitionOverwriteMode", "static")
         .partitionBy(*SINK_PARTITION_KEYS)
-        .parquet(path)
+        .parquet(_routed_dir(out_dir, batch_id))
     )
+
+
+def _routed_dir(out_dir: str, batch_id: str | None) -> str:
+    """The directory :func:`write_routed` replaces."""
+    path = os.path.join(out_dir, "data")
+    return path if batch_id is None else os.path.join(path, f"batch_id={batch_id}")
 
 
 def read_sink(spark, out_dir: str, status: str | None = None, pattern_id: int | None = None) -> DataFrame:
@@ -227,29 +229,37 @@ def local_out_dir(spark, out_dir: str) -> str:
     return uri.getPath()
 
 
-def batch_lineage(out_dir: str, batch_id: str) -> list[dict]:
-    """Per-partition counters of a batch ``write_routed`` has committed,
-    read from the footers of its part files: no data page is read and no
-    Spark job runs. ``partition_id`` is the write task's ``part-NNNNN``
-    index, and each part file adds its footer's row count to ``total``
-    and to the counter its ``status=`` directory names. The committer
-    keeps one task attempt per partition, so the counters describe the
-    rows on disk; their sum is the batch's counters."""
-    import glob
-
+def _footer_rows(path: str) -> int:
+    """Row count of one parquet file, from its footer: no data page is read."""
     # imported here, not at module level: every Python worker imports this
     # package, and none needs pyarrow.parquet
     import pyarrow.parquet as pq
 
-    batch_dir = os.path.join(out_dir, "data", f"batch_id={batch_id}")
-    pattern = os.path.join(glob.escape(batch_dir), "status=*", "pattern_id=*", "part-*.parquet")
+    return pq.read_metadata(path).num_rows
+
+
+def committed_lineage(out_dir: str, batch_id: str | None = None) -> list[dict]:
+    """Per-partition counters of what a :func:`write_routed` call with the
+    same ``out_dir`` and ``batch_id`` committed, read from the footers of
+    its part files: no data page is read and no Spark job runs. It walks
+    ``data/status=*/pattern_id=*`` without ``batch_id`` and
+    ``data/batch_id=<id>/status=*/pattern_id=*`` with it. ``partition_id``
+    is the write task's ``part-NNNNN`` index, and each part file adds its
+    footer's row count to ``total`` and to the counter its ``status=``
+    directory names. The committer keeps one task attempt per partition,
+    so the counters describe the rows on disk; their sum is the write's
+    counters."""
+    import glob
+
+    root = _routed_dir(out_dir, batch_id)
+    pattern = os.path.join(glob.escape(root), "status=*", "pattern_id=*", "part-*.parquet")
     lineage: dict[int, dict] = {}
     for path in glob.glob(pattern):
-        status_dir, _, name = os.path.relpath(path, batch_dir).split(os.sep)
+        status_dir, _, name = os.path.relpath(path, root).split(os.sep)
         status = status_dir.removeprefix("status=")
         partition_id = int(name.split("-")[1])
         rec = lineage.setdefault(partition_id, {"partition_id": partition_id, **_NO_ROWS})
-        rows = pq.read_metadata(path).num_rows
+        rows = _footer_rows(path)
         rec["total"] += rows
         rec[status] += rows
     return [lineage[p] for p in sorted(lineage)]
@@ -307,9 +317,9 @@ def compact_sink(
     sink (one per task per batch); at 10^12 rows the file count itself
     becomes the bottleneck for downstream scans. Handles both sink
     layouts: the plain ``data/status=…/pattern_id=…`` tree and the
-    pipeline's ``data/batch_id=…/status=…/pattern_id=…`` tree (one
-    ``batch_id`` directory per batch, at most one part file per batch
-    task) — every matching partition directory is rewritten to
+    ``data/batch_id=…/status=…/pattern_id=…`` tree of a pipeline or a
+    stream (one ``batch_id`` directory per batch, at most one part file
+    per batch task) — every matching partition directory is rewritten to
     ``target_files`` files, with no ``.crc`` files, as every sink write.
 
     Swap semantics (local filesystem only — ``os.rename``): compacted
@@ -320,7 +330,8 @@ def compact_sink(
     run compaction in a maintenance window, or use the Iceberg writer
     path on a real deployment where the table format gives atomic
     snapshot swaps. Returns (n_rows, n_files_before, n_files_after)
-    summed over the matched partitions.
+    summed over the matched partitions; ``n_rows`` is read from the part
+    files' footers, with no counting job.
     """
     import glob as _glob
 
@@ -337,9 +348,10 @@ def compact_sink(
         raise FileNotFoundError(candidates[0])
     n_rows = before = after = 0
     for part_dir in part_dirs:
-        before += len(_glob.glob(os.path.join(part_dir, "*.parquet")))
+        parts = _glob.glob(os.path.join(part_dir, "*.parquet"))
+        before += len(parts)
+        n_rows += sum(map(_footer_rows, parts))
         df = spark.read.parquet(part_dir)
-        n_rows += df.count()
         tmp_new = part_dir + f".compact-{uuid.uuid4().hex[:8]}"
         (
             df.coalesce(target_files).write.mode("overwrite")

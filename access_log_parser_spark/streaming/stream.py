@@ -7,7 +7,8 @@ pages table with ``trigger(availableNow=True)`` for resumable batch-like
 runs, checkpointed to disk; the SAME engine stage
 (:func:`..engine.parse_documents`, one ``mapInArrow`` over whole pages)
 parses each micro-batch, and fan-out happens in
-``foreachBatch`` with the batch writer.
+``foreachBatch`` with the batch writer: micro-batch ``n`` replaces its
+own ``data/batch_id=<n>`` directory, as a pipeline batch does.
 
 Event-time analytics the reference lacks: watermarked windowed counts over
 ``warc_ts`` demonstrate late-data handling for the telemetry use case.
@@ -49,12 +50,21 @@ def run_stream_once(
     """availableNow incremental run: processes exactly the files not yet in
     the checkpoint, fans out per (status, pattern_id) via foreachBatch, and
     stops. Re-invoking resumes from the checkpoint — the streaming twin of
-    pipeline.run_pipeline's manifest resume."""
+    pipeline.run_pipeline's manifest resume.
+
+    Micro-batch ``n`` replaces ``{out_dir}/data/batch_id=<n>`` (a static
+    overwrite, :func:`..sinks.write_routed`). A batch the checkpoint
+    planned but did not commit is re-run with the same id and the same
+    input after a crash, so it replaces its own rows and never adds to
+    them: exactly-once output, the use of ``batch_id`` Spark's
+    ``foreachBatch`` documents. An ``out_dir`` therefore belongs to one
+    checkpoint: a second checkpoint numbers its batches from 0 again and
+    would replace the first one's."""
     pages = spark.readStream.schema(schema).parquet(pages_dir)
     routed = parse_documents(pages, fmt, opt)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        write_routed(batch_df, out_dir)
+        write_routed(batch_df, out_dir, batch_id=str(batch_id))
 
     (
         routed.writeStream.foreachBatch(sink)

@@ -64,7 +64,7 @@ def main() -> int:
     }
     assert {"batch_id", "status", "pattern_id"} <= parts
 
-    # 2) append a second batch -> new snapshot, counts additive
+    # 2) write a second batch -> new snapshot, counts additive
     write_routed(
         routed_batch(50), out_dir="", mode="overwrite",
         batch_id="1", iceberg_table=table,

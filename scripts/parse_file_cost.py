@@ -12,8 +12,11 @@ driver's process tree: this Python process, the JVM and the Python
 workers, sampled every 100 ms from ``/proc/<pid>/smaps_rollup`` by
 perfbench's meter, plus one sample when the call returns. PSS splits a
 page shared by several processes between them, so forked workers are
-not counted once each. The last line is a JSON summary with the warm
-median. Run from the repository root; Linux only.
+not counted once each. The driver heap is fixed as perfbench fixes it
+(``DRIVER_MEM``, committed and touched at JVM start with ``-Xms`` and
+``-XX:+AlwaysPreTouch``), so the peak moves with the memory the program
+controls, not with heap growth over the runs. The last line is a JSON
+summary with the warm median. Run from the repository root; Linux only.
 """
 
 from __future__ import annotations
@@ -29,6 +32,7 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CORES = 4
+DRIVER_MEM = "1g"
 GARBAGE = 0.02
 
 
@@ -73,7 +77,11 @@ def main(argv: list[str] | None = None) -> int:
             app_name="parse-file-cost",
             master=f"local[{CORES}]",
             shuffle_partitions=CORES,
-            extra_conf={"spark.ui.showConsoleProgress": "false"},
+            extra_conf={
+                "spark.ui.showConsoleProgress": "false",
+                "spark.driver.memory": DRIVER_MEM,
+                "spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEM} -XX:+AlwaysPreTouch",
+            },
         )
         spark.sparkContext.setLogLevel("ERROR")
         print(f"{args.lines} lines ({size_mb:.1f} MiB), local[{CORES}], seed {args.seed}")

@@ -149,17 +149,6 @@ def test_minhash_python_matches_duckdb_formula():
     assert py == got
 
 
-def test_simhash_near_pairs(spark, docs):
-    sh = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs).collect()}
-    assert sh[0] == sh[1] == sh[5]
-    pairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in dedup.simhash_near_pairs(docs, max_hamming=8).collect()
-    }
-    assert pairs[(0, 1)] == 0
-    assert (0, 4) not in pairs or pairs[(0, 4)] > 8
-
-
 @pytest.fixture(scope="module")
 def emb(spark):
     rng = np.random.RandomState(7)
@@ -230,8 +219,6 @@ def test_multimodal_metadata_and_stub(spark):
     assert dec[1]["digest"] == meta[1]["digest"]
     with pytest.raises(Exception, match="NotImplementedError|media decode"):
         multimodal.decode_media(df, "media_id", "payload", strict=True).collect()
-    frames = multimodal.frame_sample_plan(df, "media_id", "payload", every_n=25)
-    assert frames.count() == 2 * 4
 
 
 def test_embedding_near_dup_cross_bucket_miss(spark, emb):

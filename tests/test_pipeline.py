@@ -272,7 +272,7 @@ def test_pipeline_out_dir_resolved_as_spark_writes_it(spark, tmp_path, monkeypat
 
 
 def test_compact_sink_atomic_rewrite(spark, tmp_path):
-    """Small-file compaction: many per-batch files collapse to one, rows
+    """Small-file compaction: each batch's files collapse to one, rows
     and values unchanged, old directory gone."""
     from access_log_parser_spark.pages import pages_to_lines, synth_pages
     from access_log_parser_spark.sinks import compact_sink, read_sink, write_routed
@@ -280,12 +280,12 @@ def test_compact_sink_atomic_rewrite(spark, tmp_path):
     out = str(tmp_path / "compact_out")
     pages = synth_pages(spark, 20, 10, 5)
     routed = parse_routed(pages_to_lines(pages), "s3")
-    for _ in range(3):  # three appends -> many small files
-        write_routed(routed, out)
+    for b in range(3):  # three batches -> many small files
+        write_routed(routed, out, batch_id=str(b))
     before_rows = read_sink(spark, out, status="matched", pattern_id=1).count()
     n_rows, n_before, n_after = compact_sink(spark, out, "matched", 1)
     assert n_rows == before_rows
-    assert n_after == 1 and n_before > 1
+    assert n_after == 3 and n_before > 3
     after = read_sink(spark, out, status="matched", pattern_id=1)
     assert after.count() == before_rows
 
@@ -344,11 +344,11 @@ def test_iceberg_writer_seam_dispatch(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         sinks,
         "_write_routed_iceberg",
-        lambda df, table, mode, batch_id: calls.update(table=table, mode=mode, batch_id=batch_id),
+        lambda df, table, batch_id: calls.update(table=table, batch_id=batch_id),
     )
     out = tmp_path / "ice"
     sinks.write_routed(routed, str(out), mode="overwrite", iceberg_table="cat.db.logs")
-    assert calls == {"table": "cat.db.logs", "mode": "overwrite", "batch_id": None}
+    assert calls == {"table": "cat.db.logs", "batch_id": None}
     sinks.write_routed(
         routed, str(out), mode="overwrite", batch_id="3", iceberg_table="cat.db.logs"
     )
@@ -359,6 +359,26 @@ def test_iceberg_writer_seam_dispatch(spark, tmp_path, monkeypatch):
     out2 = tmp_path / "pq"
     sinks.write_routed(routed, str(out2), mode="overwrite", iceberg_table="cat.db.logs")
     assert (out2 / "data").exists()
+
+
+def test_write_routed_only_replaces(spark, tmp_path):
+    """Every routed write replaces the directory it owns: writing the same
+    frame twice leaves one copy, counted from the footers, and an append,
+    which a re-run would duplicate, is refused before anything is written."""
+    from access_log_parser_spark import sinks
+
+    routed = parse_routed(pages_to_lines(synth_pages(spark, 5, 4, 2)), "s3")
+    out = str(tmp_path / "twice")
+    for _ in range(2):
+        sinks.write_routed(routed, out)
+    lineage = sinks.committed_lineage(out)
+    assert sum(p["total"] for p in lineage) == 5 * 4
+    assert sum(p["unmatched"] for p in lineage) == 5 * 2
+    assert read_sink(spark, out).count() == 5 * 4
+
+    with pytest.raises(ValueError, match="append"):
+        sinks.write_routed(routed, str(tmp_path / "append"), mode="append")
+    assert not (tmp_path / "append").exists()
 
 
 def test_compact_sink_handles_pipeline_batch_layout(spark, tmp_path):

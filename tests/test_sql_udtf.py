@@ -93,16 +93,3 @@ def test_structured_surfaces_treat_null_lines_as_unmatched(spark):
         for r in extract_ltsv(ltsv, passthrough=["id"], line_col="line").collect()
     }
     assert rows == {1: (["a", "b"], ["1", "2"]), 2: (None, None), 3: (None, None)}
-
-
-def test_ltsv_udtf(spark):
-    from access_log_parser_spark.functions.sql_udtf import register_ltsv_udtf
-
-    register_ltsv_udtf(spark, "parse_ltsv_t")
-    rows = spark.sql(
-        "SELECT t.* FROM VALUES ('a:1\tb:2'), ('bad field') AS v(l), "
-        "LATERAL parse_ltsv_t(v.l) t ORDER BY t.pos"
-    ).collect()
-    assert [(r["pos"], r["label"], r["value"]) for r in rows] == [
-        (-1, None, None), (0, "a", "1"), (1, "b", "2"),
-    ]

@@ -33,6 +33,36 @@ def test_available_now_resume(spark, tmp_path):
     assert read_sink(spark, out_dir).count() == first + 10 * 10
 
 
+def test_replayed_batch_replaces_its_rows(spark, tmp_path):
+    """A micro-batch the checkpoint planned but never committed runs again
+    on the next invocation, with the same id and input: it replaces its own
+    ``batch_id`` directory, so the sink keeps one copy of every line."""
+    import glob
+    import os
+
+    pages_dir = str(tmp_path / "pages")
+    out_dir = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+
+    pages = synth_pages(spark, 20, 10, 5)
+    pages.write.mode("overwrite").parquet(pages_dir)
+    run_stream_once(spark, pages_dir, pages.schema, out_dir, ckpt, fmt="s3")
+    first = read_sink(spark, out_dir).count()
+    assert first == 20 * 10
+
+    # a crash after the batch's write and before its commit entry
+    last = max(
+        (p for p in glob.glob(os.path.join(ckpt, "commits", "*")) if os.path.basename(p).isdigit()),
+        key=lambda p: int(os.path.basename(p)),
+    )
+    os.remove(last)
+    crc = os.path.join(ckpt, "commits", f".{os.path.basename(last)}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    run_stream_once(spark, pages_dir, pages.schema, out_dir, ckpt, fmt="s3")
+    assert read_sink(spark, out_dir).count() == first
+
+
 def test_windowed_counts_batch_semantics(spark):
     # run the windowed agg in batch mode to pin its semantics
     pages = synth_pages(spark, 10, 5, 5)
