@@ -71,14 +71,6 @@ from .handlers import HANDLERS, apply_prefix, prefix_strings
 from .options import Option
 from .sources.ziparchive import _scan_lines
 
-LINE_SCHEMA = StructType(
-    [
-        StructField("source", StringType()),
-        StructField("line_no", LongType()),
-        StructField("raw", StringType()),
-    ]
-)
-
 ROUTED_SCHEMA = StructType(
     [
         StructField("source", StringType()),

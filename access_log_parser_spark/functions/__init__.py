@@ -1,3 +1,2 @@
-from .columns import host_of_url
-
-__all__ = ["host_of_url"]
+"""Helpers imported by module name: the golden S3 corpus, Go glob
+matching, the SQL table functions, report rendering and z-order."""

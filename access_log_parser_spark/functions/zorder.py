@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sinks import _replace
+
 
 def zorder_key(cols: list[Column | str], bits: int = 16) -> Column:
     """Morton-interleave ``bits`` low bits of each column into one long.
@@ -68,13 +70,12 @@ def write_zordered(
     zcols: list[str],
     bits: int = 16,
     num_files: int = 16,
-    fmt: str = "parquet",
 ) -> None:
-    """Write ``df`` laid out along the z-curve of ``zcols``: range
-    partition on the interleaved key (contiguous curve segment per
-    output file) and sort within partitions, then drop the key. Each
-    file's footer min/max is then bounded in EVERY z-dimension, so
-    point/range predicates on any of them prune files before I/O.
+    """Replace ``path`` with ``df`` as parquet laid out along the z-curve
+    of ``zcols``: range partition on the interleaved key (contiguous curve
+    segment per output file) and sort within partitions, then drop the
+    key. Each file's footer min/max is then bounded in EVERY z-dimension,
+    so point/range predicates on any of them prune files before I/O.
 
     Scale notes: repartitionByRange samples the key distribution (one
     extra pass over a sample, standard for sorted writes); the sort is
@@ -82,11 +83,7 @@ def write_zordered(
     key feeds ``sort_order`` metadata instead.
     """
     keyed = df.withColumn("_zkey", zorder_key(list(zcols), bits))
-    (
-        keyed.repartitionByRange(num_files, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.format(fmt)
-        .mode("overwrite")
-        .save(path)
+    _replace(
+        keyed.repartitionByRange(num_files, "_zkey").sortWithinPartitions("_zkey").drop("_zkey"),
+        path,
     )

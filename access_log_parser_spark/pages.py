@@ -84,12 +84,3 @@ def synth_pages(
         ).alias("lang"),
         F.col("page_id"),
     )
-
-
-def pages_to_lines(pages: DataFrame) -> DataFrame:
-    """(url, text) -> (source=url, line_no, raw); column pruning means the
-    ``html`` binary is never read when only ``text`` is parsed
-    (SURVEY.md §4 column-pruning requirement)."""
-    from .sources.text import explode_lines
-
-    return explode_lines(pages, text_col="text", source_col="url")

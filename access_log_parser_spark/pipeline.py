@@ -74,7 +74,6 @@ class PipelineReport:
     result: Result
     batches_run: list[str]
     batches_skipped: list[str]
-    elapsed: float
 
 
 def _with_batch_id(pages: DataFrame, url_col: str, n_batches: int) -> DataFrame:
@@ -155,10 +154,9 @@ def run_pipeline(
     todo = [b for b in all_ids if b not in done]
     skipped = [b for b in all_ids if b in done]
     if not todo:
-        elapsed = time.monotonic() - start
         return PipelineReport(
-            result=Result(elapsed_time=elapsed), batches_run=[],
-            batches_skipped=skipped, elapsed=elapsed,
+            result=Result(elapsed_time=time.monotonic() - start), batches_run=[],
+            batches_skipped=skipped,
         )
 
     # A lookup built from driver data (createDataFrame of a list) is a
@@ -227,10 +225,7 @@ def run_pipeline(
             lk.unpersist()
 
     total = Result.from_counters(sums, elapsed_time=time.monotonic() - start)
-    return PipelineReport(
-        result=total, batches_run=todo, batches_skipped=skipped,
-        elapsed=total.elapsed_time,
-    )
+    return PipelineReport(result=total, batches_run=todo, batches_skipped=skipped)
 
 
 def curate_corpus(

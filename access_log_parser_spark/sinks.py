@@ -8,18 +8,20 @@ unmatched rows in an in-memory Errors slice (`parser_core.go:241-243`,
 scan, no per-sink jobs. There is one write policy: a write replaces a
 directory it owns, ``data`` or, for a pipeline batch or a streaming
 micro-batch, ``data/batch_id=<id>``, so a re-run replaces its rows and
-never duplicates them. There is one count: the counters of a write are
-read from the footers of the part files it committed
+never duplicates them. Every directory the package writes goes through
+one writer, :func:`_replace`. There is one count: the counters of a
+write are read from the footers of the part files it committed
 (:func:`committed_lineage`). The write creates no file the table does
 not need: on a host without native Hadoop IO each file and directory
 costs a forked ``chmod``.
 
 Iceberg is the design target (snapshot-based resume per north_rule); this
-sandbox has no Iceberg runtime jars, so the writer transparently falls
-back to a partitioned-parquet table layout with the same directory
-contract plus a JSON manifest standing in for snapshot metadata. The
-``format`` hook is kept so a real cluster flips to
-``.writeTo(...).using('iceberg')`` with no caller change.
+sandbox has no Iceberg runtime jars, so the sinks are a partitioned-parquet
+table layout plus a JSON manifest standing in for snapshot metadata.
+:func:`write_routed` has an ``iceberg_table`` branch, but the pipeline
+does not reach it: neither ``run_pipeline`` nor ``run_stream_once``
+passes ``iceberg_table``, and :func:`committed_lineage` reads parquet
+footers, so it would count an Iceberg write as zero rows.
 """
 
 from __future__ import annotations
@@ -56,8 +58,7 @@ def iceberg_available(spark) -> bool:
     extension classes are on the JVM classpath (jars shipped via
     ``--packages org.apache.iceberg:iceberg-spark-runtime-…`` plus a
     configured catalog). This sandbox has no Iceberg jars, so the probe
-    is False here and the writer falls back to partitioned parquet; on a
-    real cluster the Iceberg branch activates with NO code change."""
+    is False here and the writer falls back to partitioned parquet."""
     try:
         spark._jvm.java.lang.Class.forName(
             "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions"
@@ -127,19 +128,31 @@ def write_routed(
     ``iceberg_table``: when given AND the Iceberg runtime is present
     (see :func:`iceberg_available`), the fan-out goes through
     DataFrameWriterV2 into that Iceberg table instead of the parquet
-    directory — a config change, not a code change, on a real cluster.
-    Without the runtime the parquet layout below is used regardless."""
+    directory. Without the runtime the parquet layout is used regardless.
+    The pipeline does not use this branch: ``run_pipeline`` and
+    ``run_stream_once`` pass no ``iceberg_table``, and
+    :func:`committed_lineage` would count an Iceberg write as zero rows,
+    so moving them to Iceberg is a code change, not a config change."""
     if mode != "overwrite":
         raise ValueError(f"write_routed only replaces the directory it owns, got mode={mode!r}")
     if iceberg_table is not None and iceberg_available(routed.sparkSession):
         _write_routed_iceberg(routed, iceberg_table, batch_id)
         return
+    _replace(routed, _routed_dir(out_dir, batch_id), SINK_PARTITION_KEYS)
+
+
+def _replace(df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) -> None:
+    """The package's one directory write: a static overwrite of ``path``,
+    which the caller owns. The job deletes ``path`` when it starts and
+    writes parquet part files under it, in ``partition_by`` directories,
+    with no ``.crc`` file beside each part file and no
+    ``.spark-staging-*`` tree of a dynamic overwrite."""
     (
-        routed.write.mode("overwrite")
+        df.write.mode("overwrite")
         .options(**_NO_CHECKSUMS)
         .option("partitionOverwriteMode", "static")
-        .partitionBy(*SINK_PARTITION_KEYS)
-        .parquet(_routed_dir(out_dir, batch_id))
+        .partitionBy(*partition_by)
+        .parquet(path)
     )
 
 
@@ -177,14 +190,14 @@ def write_bucketed(
     bucket_col: str,
     n_buckets: int = 16,
     sort_col: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Persist a table bucketed (and optionally sorted) on a join key so
     repeated joins/aggregations on that key are co-located: Spark reads
     matching buckets on both sides and skips the shuffle entirely — the
     pre-partitioning strategy for dimension/fact tables that are joined
-    every run at 100 TB. Requires a catalog table (``saveAsTable``)."""
-    w = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
+    every run at 100 TB. Requires a catalog table (``saveAsTable``), which
+    it replaces."""
+    w = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
     if sort_col:
         w = w.sortBy(sort_col)
     w.saveAsTable(table)
@@ -277,30 +290,22 @@ def read_manifests(out_dir: str) -> list[dict]:
     return out
 
 
-def write_training_shards(
-    df, out_dir: str, key_col: str, n_shards: int, mode: str = "overwrite"
-):
+def write_training_shards(df, out_dir: str, key_col: str, n_shards: int):
     """Write size-balanced training shards: rows are assigned to shards by
     a content-addressed md5 bucket of ``key_col`` (engine-portable, stable
     under repartitioning — the same guarantee as operators/sampling.py)
-    and written as one partition directory per shard.
+    and written as one partition directory per shard; the write replaces
+    ``out_dir``.
 
     The repartition ON the shard column co-locates each shard into one
     task before the write, so every shard is a contiguous file set a
     trainer can stream independently. Returns the sharded DataFrame for
     inspection/counting.
     """
-    from pyspark.sql import functions as F
-
     from .operators.sampling import hash_bucket
 
     sharded = df.withColumn("shard", hash_bucket(F.col(key_col), n_shards))
-    (
-        sharded.repartition(n_shards, "shard")
-        .write.partitionBy("shard")
-        .mode(mode)
-        .parquet(out_dir)
-    )
+    _replace(sharded.repartition(n_shards, "shard"), out_dir, ("shard",))
     return sharded
 
 
@@ -353,11 +358,7 @@ def compact_sink(
         n_rows += sum(map(_footer_rows, parts))
         df = spark.read.parquet(part_dir)
         tmp_new = part_dir + f".compact-{uuid.uuid4().hex[:8]}"
-        (
-            df.coalesce(target_files).write.mode("overwrite")
-            .options(**_NO_CHECKSUMS)
-            .parquet(tmp_new)
-        )
+        _replace(df.coalesce(target_files), tmp_new)
         tmp_old = part_dir + f".old-{uuid.uuid4().hex[:8]}"
         os.rename(part_dir, tmp_old)
         os.rename(tmp_new, part_dir)

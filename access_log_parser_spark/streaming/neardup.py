@@ -15,12 +15,14 @@ per micro-batch
      earlier document of the same batch (window min over the band key)
      or appears in the index from earlier batches (broadcast-able
      left-semi join).
-  3. Kept documents append to ``out_dir``; ALL the batch's band keys
-     (kept or dropped — so transitively-chained near-dups keep
-     dropping) append to ``index_dir``. Both writes are partitioned by
-     ``batch_id`` with dynamic partition overwrite, and the index read
-     EXCLUDES the current batch_id — so a replayed batch (failure
-     recovery) is idempotent: it cannot see its own half-written keys.
+  3. Kept documents go to ``out_dir/batch_id=<n>``; ALL the batch's
+     band keys (kept or dropped — so transitively-chained near-dups keep
+     dropping) go to ``index_dir/batch_id=<n>/kb=<k>``. Each write is a
+     static overwrite of the batch's own directory (``sinks._replace``,
+     the package's one directory writer), and the index read EXCLUDES
+     the current batch_id — so a replayed batch (failure recovery) is
+     idempotent: it cannot see its own half-written keys, and its write
+     replaces them.
 
 Determinism: when micro-batches arrive in ascending doc_id order, the
 greedy stream decision equals the closed-form global rule
@@ -35,8 +37,9 @@ closed form in SQL over the same signature formula — a TRUE streaming
 query with a hash-checked oracle.
 
 State story at 100 TB: the index is an append-only columnar table
-PARTITIONED BY a hash bucket of the band key (``kb``, plus
-``batch_id``), so the per-batch probe never re-scans the whole history:
+PARTITIONED BY ``batch_id`` and a hash bucket of the band key (``kb``),
+``index_dir/batch_id=<n>/kb=<k>``, so the per-batch probe never re-scans
+the whole history:
 the processor collects the batch's distinct ``kb`` values (bounded by
 ``n_key_buckets``) and pushes them as a PARTITION FILTER into the index
 read — only directories that can possibly hold a colliding band key
@@ -46,13 +49,14 @@ dimension-sized and degrades to a shuffle hash join when it is not; a
 real deployment points ``index_dir`` at an Iceberg table bucketed the
 same way, compacts it, and optionally fronts it with a bloom filter
 (dedup.build_bloom). State size is ``n_bands`` rows per ingested doc,
-independent of text length. Per-batch metrics count the batch's KEPT
-frame directly (one count over a localCheckpointed batch-sized frame) —
-they never re-read the accumulated output.
+independent of text length. Per-batch metrics count the batch's kept
+rows from the footers of the part files its write committed to
+``out_dir/batch_id=<n>`` — no data is read back and no Spark job runs.
 """
 
 from __future__ import annotations
 
+import glob
 import math
 import os
 
@@ -65,6 +69,7 @@ from ..operators.dedup import (
     band_keys,
     minhash_signatures_hof,
 )
+from ..sinks import _footer_rows, _replace
 
 
 def write_ordered_batches(
@@ -176,10 +181,10 @@ def probe_index(
 ) -> DataFrame:
     """The pruned cross-batch probe: read ONLY the index partitions whose
     key bucket appears in this batch (``kb IN kbs`` — a partition
-    filter, the index is partitioned by kb/batch_id) and that belong to
-    OTHER batches (replay idempotence: a re-run batch cannot see its own
-    half-written keys). Exposed so tests can assert the partition
-    filters actually reach the scan."""
+    filter, the index is laid out as ``batch_id=<n>/kb=<k>``) and that
+    belong to OTHER batches (replay idempotence: a re-run batch cannot
+    see its own half-written keys). Exposed so tests can assert the
+    partition filters actually reach the scan."""
     return (
         spark.read.parquet(index_dir)
         .filter(F.col("batch_id") != batch_id)
@@ -201,8 +206,10 @@ def make_batch_processor(
 ):
     """The foreachBatch function (exposed for direct testing of replay
     idempotence). Drops a doc iff a band key has an earlier owner in
-    this batch or exists in the index from OTHER batch_ids. The index
-    is partitioned by ``kb = pmod(hash(band_key), n_key_buckets)`` so
+    this batch or exists in the index from OTHER batch_ids. Each batch
+    replaces ``out_dir/batch_id=<n>`` and ``index_dir/batch_id=<n>``; the
+    index is partitioned within a batch by
+    ``kb = pmod(hash(band_key), n_key_buckets)`` so
     the probe reads only the buckets this batch can collide with —
     never the full history (see module docstring). ``kb`` is a physical
     layout detail only: it never changes which documents are kept."""
@@ -224,9 +231,7 @@ def make_batch_processor(
         )
         # local-path probe; an object-store index_dir would use the
         # Hadoop FS API (or just an Iceberg table, which reads empty)
-        if os.path.isdir(index_dir) and any(
-            f.startswith("kb=") for f in os.listdir(index_dir)
-        ):
+        if glob.glob(os.path.join(glob.escape(index_dir), "batch_id=*", "kb=*")):
             # the batch's distinct key buckets: bounded by n_key_buckets,
             # tiny driver collect, becomes a PARTITION filter on the read
             kbs = [r["kb"] for r in bands.select("kb").distinct().collect()]
@@ -239,34 +244,21 @@ def make_batch_processor(
             drops = within_drops.distinct()
         kept = batch_df.join(drops, "doc_id", "left_anti")
         n_in = batch_df.count()
-        (
-            kept.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(out_dir)
-        )
-        (
-            # one file per key bucket: without the repartition every
-            # upstream partition writes into every kb dir (shuffle
-            # partitions x n_key_buckets tiny files per batch)
-            bands.repartition("kb")
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("kb", "batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(index_dir)
+        kept_dir = os.path.join(out_dir, f"batch_id={batch_id}")
+        _replace(kept, kept_dir)
+        # one file per key bucket: without the repartition every upstream
+        # partition writes into every kb dir (shuffle partitions x
+        # n_key_buckets tiny files per batch)
+        _replace(
+            bands.repartition("kb"),
+            os.path.join(index_dir, f"batch_id={batch_id}"),
+            ("kb",),
         )
         if metrics is not None:
-            # count ONLY this batch's output partition — a parquet
-            # metadata-only read, never a rescan of the accumulated dir
-            # (an all-dropped batch writes no partition dir: count 0)
-            try:
-                n_kept = spark.read.parquet(
-                    f"{out_dir}/batch_id={batch_id}"
-                ).count()
-            except Exception:
-                n_kept = 0
+            # the footers of what the write committed: no read-back job;
+            # an all-dropped batch's directory holds 0 rows
+            parts = glob.glob(os.path.join(glob.escape(kept_dir), "*.parquet"))
+            n_kept = sum(map(_footer_rows, parts))
             metrics.append(
                 {"batch_id": int(batch_id), "n_in": n_in, "n_kept": n_kept}
             )
@@ -290,9 +282,9 @@ def run_streaming_minhash_dedup(
 ) -> list[dict]:
     """availableNow run of the incremental near-dup dedup over a parquet
     file stream; returns per-batch {batch_id, n_in, n_kept} metrics.
-    Kept docs land in ``out_dir`` (partitioned by batch_id), the band
-    index accumulates in ``index_dir`` (partitioned by key bucket +
-    batch_id so later probes prune — see make_batch_processor).
+    Kept docs land in ``out_dir/batch_id=<n>``, the band index
+    accumulates in ``index_dir/batch_id=<n>/kb=<k>`` (partitioned by key
+    bucket so later probes prune — see make_batch_processor).
 
     ``n_key_buckets=None`` (default) auto-sizes the index bucket count
     once at FIRST stream start from the bounded input directory's row

@@ -84,11 +84,12 @@ def parse_route_job(spark, n_pages: int, out_dir: str) -> dict:
     from collections import Counter
 
     from access_log_parser_spark.engine import parse_routed
-    from access_log_parser_spark.pages import pages_to_lines, synth_pages
+    from access_log_parser_spark.pages import synth_pages
     from access_log_parser_spark.sinks import committed_lineage, write_routed
+    from access_log_parser_spark.sources import explode_lines
 
     pages = synth_pages(spark, n_pages, LINES_PER_PAGE, 5)
-    routed = parse_routed(pages_to_lines(pages), "s3")
+    routed = parse_routed(explode_lines(pages), "s3")
     t0 = time.monotonic()
     write_routed(routed, out_dir)
     m = sum(map(Counter, committed_lineage(out_dir)), Counter())

@@ -40,15 +40,16 @@ def main() -> int:
     spark = SparkSession.builder.appName("alp-iceberg-smoke").getOrCreate()
 
     from access_log_parser_spark.engine import parse_routed
-    from access_log_parser_spark.pages import pages_to_lines, synth_pages
+    from access_log_parser_spark.pages import synth_pages
     from access_log_parser_spark.sinks import iceberg_available, write_routed
+    from access_log_parser_spark.sources import explode_lines
 
     if not iceberg_available(spark):
         print("FAIL: Iceberg runtime not on the classpath — see --packages above")
         return 2
 
     def routed_batch(n_pages: int):
-        return parse_routed(pages_to_lines(synth_pages(spark, n_pages, 10, 5)), "s3")
+        return parse_routed(explode_lines(synth_pages(spark, n_pages, 10, 5)), "s3")
 
     spark.sql(f"DROP TABLE IF EXISTS {table}")
 

@@ -86,7 +86,7 @@ def main() -> None:
         ),
         "batches_run": report.batches_run,
         "batches_skipped": report.batches_skipped,
-        "elapsed_sec": round(report.elapsed, 3),
+        "elapsed_sec": round(report.result.elapsed_time, 3),
         "invariant_ok": report.result.check_invariant(),
         "cpus": sorted(os.sched_getaffinity(0)),
     }

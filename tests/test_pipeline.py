@@ -9,10 +9,11 @@ from pyspark.sql import functions as F
 
 from access_log_parser_spark import Option, counters_by_sink, parse_routed
 from access_log_parser_spark.enrich import broadcast_enrich, two_phase_count
-from access_log_parser_spark.pages import HOT_HOST, pages_to_lines, synth_pages
+from access_log_parser_spark.pages import HOT_HOST, synth_pages
 from access_log_parser_spark.pipeline import run_pipeline
 from access_log_parser_spark.plans import default_rules, route
 from access_log_parser_spark.sinks import errors_table, read_sink
+from access_log_parser_spark.sources import explode_lines
 
 N_PAGES = 40
 LINES = 20
@@ -37,7 +38,7 @@ def test_synth_pages_shape(spark):
 
 def test_routed_counts_closed_form(spark):
     pages = synth_pages(spark, N_PAGES, LINES, UNM_EVERY)
-    routed = parse_routed(pages_to_lines(pages), "s3")
+    routed = parse_routed(explode_lines(pages), "s3")
     total, matched, unmatched = expected_counts()
     counts = {
         (r["status"], r["pattern_id"]): r["rows"]
@@ -128,7 +129,7 @@ def test_broadcast_join_in_plan(spark):
 
 def test_route_rules(spark):
     pages = synth_pages(spark, 10, 10, 5)
-    routed = parse_routed(pages_to_lines(pages), "s3")
+    routed = parse_routed(explode_lines(pages), "s3")
     sinks = route(routed, default_rules())
     assert set(sinks) == {"sink_matched", "sink_unmatched", "sink_excluded", "sink_skipped"}
     assert sinks["sink_excluded"].count() == 0
@@ -139,7 +140,7 @@ def test_text_extraction_byte_identical_per_url(spark):
     # input_hint invariant: byte-identical extracted text per url —
     # reassembling exploded lines must reproduce the original text payload
     pages = synth_pages(spark, 15, 7, 5)
-    lines = pages_to_lines(pages)
+    lines = explode_lines(pages)
     # collect_list order is not shuffle-stable: sort structs by line_no
     rebuilt = lines.groupBy("source").agg(
         F.array_join(
@@ -156,7 +157,7 @@ def test_text_extraction_byte_identical_per_url(spark):
 
 def test_two_phase_count_matches_plain(spark):
     pages = synth_pages(spark, 30, 4, 5)
-    lines = pages_to_lines(pages)
+    lines = explode_lines(pages)
     plain = {r["source"]: r["count"] for r in lines.groupBy("source").count().collect()}
     salted = {r["source"]: r["count"] for r in two_phase_count(lines, "source").collect()}
     assert plain == salted
@@ -274,12 +275,12 @@ def test_pipeline_out_dir_resolved_as_spark_writes_it(spark, tmp_path, monkeypat
 def test_compact_sink_atomic_rewrite(spark, tmp_path):
     """Small-file compaction: each batch's files collapse to one, rows
     and values unchanged, old directory gone."""
-    from access_log_parser_spark.pages import pages_to_lines, synth_pages
+    from access_log_parser_spark.pages import synth_pages
     from access_log_parser_spark.sinks import compact_sink, read_sink, write_routed
 
     out = str(tmp_path / "compact_out")
     pages = synth_pages(spark, 20, 10, 5)
-    routed = parse_routed(pages_to_lines(pages), "s3")
+    routed = parse_routed(explode_lines(pages), "s3")
     for b in range(3):  # three batches -> many small files
         write_routed(routed, out, batch_id=str(b))
     before_rows = read_sink(spark, out, status="matched", pattern_id=1).count()
@@ -334,9 +335,9 @@ def test_iceberg_writer_seam_dispatch(spark, tmp_path, monkeypatch):
     parquet layout is written regardless of iceberg_table. The real
     probe must be False in this jar-less sandbox."""
     from access_log_parser_spark import sinks
-    from access_log_parser_spark.pages import pages_to_lines, synth_pages
+    from access_log_parser_spark.pages import synth_pages
 
-    routed = parse_routed(pages_to_lines(synth_pages(spark, 5, 4, 2)), "s3")
+    routed = parse_routed(explode_lines(synth_pages(spark, 5, 4, 2)), "s3")
     assert sinks.iceberg_available(spark) is False
 
     calls = {}
@@ -367,7 +368,7 @@ def test_write_routed_only_replaces(spark, tmp_path):
     which a re-run would duplicate, is refused before anything is written."""
     from access_log_parser_spark import sinks
 
-    routed = parse_routed(pages_to_lines(synth_pages(spark, 5, 4, 2)), "s3")
+    routed = parse_routed(explode_lines(synth_pages(spark, 5, 4, 2)), "s3")
     out = str(tmp_path / "twice")
     for _ in range(2):
         sinks.write_routed(routed, out)
@@ -485,7 +486,7 @@ def test_pipeline_writes_only_the_files_the_table_needs(spark, tmp_path):
     assert 2 < max(parts.values()) <= 8 and other == []
 
     plain = str(tmp_path / "plain")
-    write_routed(parse_routed(pages_to_lines(pages), "s3"), plain)
+    write_routed(parse_routed(explode_lines(pages), "s3"), plain)
     parts, other = _written(plain)
     assert parts and not any(p.startswith("batch_id=") for p in parts)
     assert other == []

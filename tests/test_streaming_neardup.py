@@ -264,3 +264,33 @@ def test_explicit_modulus_mismatch_raises(spark, tmp_path):
     run_streaming_minhash_dedup(*args, n_key_buckets=8)
     with pytest.raises(ValueError, match="n_key_buckets=8"):
         run_streaming_minhash_dedup(*args, n_key_buckets=16)
+
+
+def test_micro_batch_writes_parquet_only_and_counts_its_footers(spark, tmp_path):
+    """Each micro-batch replaces its own ``batch_id=<n>`` directories with
+    part files alone (no ``.crc``, no ``.spark-staging-*``), and its
+    ``n_kept`` is the footer sum of what it committed: a read of
+    ``out/batch_id=<n>`` agrees, and an all-dropped batch reads 0."""
+    import os
+
+    docs = _corpus(spark, n_unique=6, n_dups=6)
+    rows = docs.orderBy("doc_id").collect()
+    originals = spark.createDataFrame(rows[:6], docs.schema)
+    copies = spark.createDataFrame(rows[6:], docs.schema)  # all dropped
+    out, idx = str(tmp_path / "out"), str(tmp_path / "idx")
+    metrics: list[dict] = []
+    proc = make_batch_processor(spark, out, idx, metrics=metrics)
+    proc(originals, 0)
+    proc(copies, 1)
+    stray = [
+        os.path.join(d, name)
+        for top in (out, idx)
+        for d, dirs, files in os.walk(top)
+        for name in dirs + files
+        if name.endswith(".crc") or name.startswith(".spark-staging-")
+    ]
+    assert stray == []
+    assert sorted(os.listdir(idx)) == ["batch_id=0", "batch_id=1"]
+    for m in metrics:
+        assert m["n_kept"] == spark.read.parquet(f"{out}/batch_id={m['batch_id']}").count()
+    assert [(m["batch_id"], m["n_in"], m["n_kept"]) for m in metrics] == [(0, 6, 6), (1, 6, 0)]
