@@ -82,7 +82,7 @@ class DecodePlan:
         None for unmatched lines, otherwise values are the positional
         capture-group strings of the winning pattern, with "" for groups
         that did not take part (Go's ``matches[1:]``)."""
-        pids, matches = self._match(lines)
+        pids, matches = self.match(lines)
         widths = [len(names) for names in self.names]
         vals = [
             None if m is None else list(m.groups("")[: widths[pid]])
@@ -96,7 +96,7 @@ class DecodePlan:
         """(pattern_ids, one value column per name in ``fields``). A field
         the winning pattern lacks, or any field of an unmatched line, is
         None; a group of the winner that did not take part is ""."""
-        pids, matches = self._match(lines)
+        pids, matches = self.match(lines)
         width = len(fields)
         getters = self._getters.get(tuple(fields))
         if getters is None:
@@ -115,15 +115,17 @@ class DecodePlan:
         ]
         return pids, (list(zip(*rows)) if rows else [()] * width)
 
-    def _match(self, lines: Sequence[str | None]) -> tuple[list[int], list[re.Match | None]]:
+    def match(self, lines: Sequence[str | None]) -> tuple[list[int], list[re.Match | None]]:
         """Winning pattern_id (-1 if none) and its match, per line; a NULL
         line is unmatched. A fused match also holds groups of deeper
-        tails, all unset."""
+        tails, all unset, after the winner's own. The routed core reads
+        the groups itself (``engine._Router.route``); :meth:`decode` and
+        :meth:`columns` build lists and columns from them."""
         if None in lines:
             live = [i for i, line in enumerate(lines) if line is not None]
             pids = [-1] * len(lines)
             matches: list[re.Match | None] = [None] * len(lines)
-            for i, pid, m in zip(live, *self._match([lines[i] for i in live])):
+            for i, pid, m in zip(live, *self.match([lines[i] for i in live])):
                 pids[i] = pid
                 matches[i] = m
             return pids, matches

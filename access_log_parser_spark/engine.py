@@ -15,6 +15,15 @@ Design goals at 100 TB:
   prefix-chained pattern list such as the S3 preset compiles into one
   fused regex, so a line costs one search instead of up to five
   (:class:`.decoders.DecodePlan`);
+- the per-line body is specialised once per pattern, per task
+  (``_RouteSpec.compile``): each pattern gets its filter bound to its
+  labels, the getter of its selected groups, the ``no`` slot and a row
+  function from the handler's compiler (:mod:`.handlers`), so a matched
+  line costs one ``Match.groups`` read, one template fill and, for the
+  escaping handlers, one escape call, with no per-line label list.
+  LTSV input, whose labels are the line's own, keeps the per-line path
+  through the public handler; a user callable gets each pattern's label
+  list and the line's values as fresh lists;
 - everything the driver can settle (pattern and filter validation, the
   handler, the prefix pair and its tty color check) is settled once in
   ``_RouteSpec.build``, never in a task, and no global ordering is ever
@@ -51,6 +60,7 @@ from __future__ import annotations
 import sys
 from collections.abc import Callable, Iterator, Sequence
 from dataclasses import dataclass
+from operator import itemgetter
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -66,8 +76,8 @@ from pyspark.sql.types import (
 
 from . import decoders, patterns as pat
 from .decoders import EXCLUDED, MATCHED, SKIPPED, UNMATCHED
-from .filters import apply_filters, compile_filters
-from .handlers import HANDLERS, apply_prefix, prefix_strings
+from .filters import apply_filters, bind_filters, compile_filters
+from .handlers import COMPILERS, HANDLERS, LineHandler, RowFn, apply_prefix, prefix_strings
 from .options import Option
 from .sources.ziparchive import _scan_lines
 
@@ -101,6 +111,32 @@ def _resolve_patterns(fmt: str | Sequence[str]) -> list[str] | None:
     return [str(p) for p in fmt]
 
 
+def _user_row(handler: LineHandler, labels: Sequence[str]) -> RowFn:
+    """A user callable as a row function: fresh label and value lists per
+    call, as the per-line loop hands them."""
+
+    def row(values: Sequence[str], is_first: bool) -> str:
+        return handler(list(labels), list(values), is_first)
+
+    return row
+
+
+def _picker(idx: Sequence[int]) -> Callable[[tuple], tuple]:
+    """The values at ``idx`` of a match's groups, as a tuple: one slice
+    when ``idx`` is a leading run (no label selection)."""
+    if list(idx) == list(range(len(idx))):
+        return itemgetter(slice(0, len(idx)))
+    if len(idx) == 1:
+        i = idx[0]
+        return lambda g: (g[i],)
+    return itemgetter(*idx)
+
+
+# per pattern: the filter over the match's groups (None without filters),
+# the output values' getter and the row function
+_PatternRoute = tuple[Callable[[tuple], bool] | None, Callable[[tuple], tuple], RowFn]
+
+
 @dataclass(frozen=True)
 class _RouteSpec:
     """Everything the per-line core needs, validated on the driver and
@@ -110,7 +146,9 @@ class _RouteSpec:
     skip_set: frozenset[int]
     labels_sel: tuple[str, ...]
     add_no: bool
-    handler: Callable[[Sequence[str], Sequence[str], bool], str]
+    handler: LineHandler
+    # the handler's compiler for a built-in handler, None for a user callable
+    compiler: Callable[[Sequence[str]], RowFn] | None
     reads_first: bool
     filter_exprs: tuple[str, ...]
     emit_unmatch: bool
@@ -129,16 +167,18 @@ class _RouteSpec:
         # value) still abort at execution, matching parser_core.go:220-223.
         compile_filters(opt.filters)
         handler = opt.resolve_handler()
-        # identity check, not the name: every built-in but tsv ignores
-        # isFirst, while tsv and any user callable may read it
-        reads_first = not any(handler is HANDLERS[n] for n in _FLAGLESS_HANDLERS)
+        # identity, not the name: Option(line_handler=handlers.tsv_line_handler)
+        # is the built-in; every built-in but tsv ignores isFirst, while tsv
+        # and any user callable may read it
+        name = next((n for n, h in HANDLERS.items() if h is handler), None)
         return cls(
             pattern_strs=pattern_strs,
             skip_set=frozenset(int(s) for s in opt.skip_lines),
             labels_sel=tuple(opt.labels),
             add_no=bool(opt.line_number),
             handler=handler,
-            reads_first=reads_first,
+            compiler=COMPILERS.get(name),
+            reads_first=name not in _FLAGLESS_HANDLERS,
             filter_exprs=tuple(opt.filters),
             emit_unmatch=bool(opt.unmatch_lines),
             # ANSI-colored pair on a tty (parser_core.go:186-189) or with
@@ -148,18 +188,40 @@ class _RouteSpec:
 
     def compile(self) -> _Router:
         """Once per task: the decode plan, compiled from the pattern strings
-        (a plan cannot be pickled), and the filter predicates."""
-        plan = (
-            decoders.compile_plan(self.pattern_strs) if self.pattern_strs is not None else None
-        )
-        return _Router(self, plan, compile_filters(self.filter_exprs))
+        (a plan cannot be pickled), the filter predicates and, per pattern,
+        its route: the filter bound to the pattern's labels, the getter of
+        the selected groups (selectLabels, parser_core.go:291-305) and the
+        row function compiled for the output labels, ``no`` first with
+        ``Option(line_number=True)``."""
+        filt = compile_filters(self.filter_exprs)
+        if self.pattern_strs is None:
+            return _Router(self, None, filt, ())
+        plan = decoders.compile_plan(self.pattern_strs)
+        return _Router(self, plan, filt, tuple(self._route(names, filt) for names in plan.names))
+
+    def _route(self, names: Sequence[str], filt: dict) -> _PatternRoute:
+        if self.labels_sel:
+            wanted = set(self.labels_sel)
+            idx = [j for j, name in enumerate(names) if name in wanted]
+        else:
+            idx = range(len(names))
+        labels = [names[j] for j in idx]
+        if self.add_no:
+            labels.insert(0, "no")
+        if self.compiler is not None:
+            row = self.compiler(tuple(labels))
+        else:
+            row = _user_row(self.handler, labels)
+        return (bind_filters(filt, names) if filt else None), _picker(idx), row
 
 
 @dataclass
 class _Router:
     spec: _RouteSpec
     plan: decoders.DecodePlan | None
-    filt: list
+    filt: dict
+    # one route per pattern of ``plan``
+    routes: tuple[_PatternRoute, ...]
     # key of the last line that reached the handler, across the batches
     # of one task
     last_key: object = _NO_KEY
@@ -181,56 +243,79 @@ class _Router:
         Returns the (status, pattern_id, out_line, raw) Arrow arrays;
         ``raw`` is kept only on unmatched rows, for the errors sink
         (parser_result.go:32-36). A NULL line that is not skipped is
-        unmatched, with a NULL ``out_line`` and ``raw``."""
-        spec, plan, filt = self.spec, self.plan, self.filt
+        unmatched, with a NULL ``out_line`` and ``raw``.
+
+        A regex line runs its pattern's route on the match's groups, read
+        once; an LTSV line, whose labels are its own, runs the filter,
+        the selection and the public handler on its label and value
+        lists."""
+        spec = self.spec
         n = len(raws)
         status = [MATCHED] * n
         pids = [-1] * n
         out: list[str | None] = [None] * n
         err: list[str | None] = [None] * n
 
-        live = []
-        for i, ln in enumerate(line_nos):
-            if ln in spec.skip_set:
-                status[i] = SKIPPED
-            else:
-                live.append(i)
-
-        # pattern_id, labels and values per live line; labels None if
-        # unmatched, a NULL line among them (the decoders' rule)
-        live_raws = [raws[i] for i in live]
-        if plan is not None:
-            live_pids, live_vs = plan.decode(live_raws)
-            names = plan.names
-            live_ls = [names[pid] if pid >= 0 else None for pid in live_pids]
+        if spec.skip_set:
+            live = []
+            for i, ln in enumerate(line_nos):
+                if ln in spec.skip_set:
+                    status[i] = SKIPPED
+                else:
+                    live.append(i)
+            live_raws = [raws[i] for i in live]
         else:
-            live_ls, live_vs = decoders.ltsv_decode_batch(live_raws)
-            live_pids = [-1 if ls is None else 0 for ls in live_ls]
-
-        handler = spec.handler
+            live, live_raws = range(n), raws
         mpref, upref = spec.prefixes or (None, "")
+        add_no = spec.add_no
         last_key = self.last_key
-        for i, pid, ls, vs in zip(live, live_pids, live_ls, live_vs):
-            pids[i] = pid
-            if ls is None:
-                status[i] = UNMATCHED
-                err[i] = raws[i]
-                if spec.emit_unmatch and raws[i] is not None:
-                    # the single-line UNMATCHED prefix (parser_core.go:203-205)
-                    out[i] = upref + raws[i]
-                continue
-            if filt and not apply_filters(filt, ls, vs):
-                status[i] = EXCLUDED
-                continue
-            if spec.labels_sel:
-                ls, vs = decoders.select_labels(spec.labels_sel, ls, vs)
-            if spec.add_no:
-                ls = ["no", *ls]
-                vs = [str(line_nos[i]), *vs]
-            key = keys[i]
-            line = handler(ls, vs, key != last_key)
-            last_key = key
-            out[i] = line if mpref is None else apply_prefix(line, mpref)
+        if self.plan is not None:
+            routes = self.routes
+            live_pids, matches = self.plan.match(live_raws)
+            for i, pid, m in zip(live, live_pids, matches):
+                pids[i] = pid
+                if m is None:
+                    status[i] = UNMATCHED
+                    err[i] = raws[i]
+                    if spec.emit_unmatch and raws[i] is not None:
+                        # the single-line UNMATCHED prefix (parser_core.go:203-205)
+                        out[i] = upref + raws[i]
+                    continue
+                keep, pick, row = routes[pid]
+                g = m.groups("")
+                if keep is not None and not keep(g):
+                    status[i] = EXCLUDED
+                    continue
+                vs = pick(g)
+                if add_no:
+                    vs = (str(line_nos[i]), *vs)
+                key = keys[i]
+                line = row(vs, key != last_key)
+                last_key = key
+                out[i] = line if mpref is None else apply_prefix(line, mpref)
+        else:
+            filt, handler = self.filt, spec.handler
+            live_ls, live_vs = decoders.ltsv_decode_batch(live_raws)
+            for i, ls, vs in zip(live, live_ls, live_vs):
+                if ls is None:
+                    status[i] = UNMATCHED
+                    err[i] = raws[i]
+                    if spec.emit_unmatch and raws[i] is not None:
+                        out[i] = upref + raws[i]
+                    continue
+                pids[i] = 0
+                if filt and not apply_filters(filt, ls, vs):
+                    status[i] = EXCLUDED
+                    continue
+                if spec.labels_sel:
+                    ls, vs = decoders.select_labels(spec.labels_sel, ls, vs)
+                if add_no:
+                    ls = ["no", *ls]
+                    vs = [str(line_nos[i]), *vs]
+                key = keys[i]
+                line = handler(ls, vs, key != last_key)
+                last_key = key
+                out[i] = line if mpref is None else apply_prefix(line, mpref)
         self.last_key = last_key
         return [
             pa.array(status, pa.string()),
@@ -238,6 +323,16 @@ class _Router:
             pa.array(out, pa.string()),
             pa.array(err, pa.string()),
         ]
+
+
+def _pylist(arr: pa.Array) -> list:
+    """``arr.to_pylist()``, built by ``to_numpy`` where that gives the same
+    values: pyarrow's ``to_pylist`` makes a Scalar per element, ~7x slower
+    on a batch of S3 lines (pyarrow 16). An integer array with NULLs would
+    come back as floats, so it keeps ``to_pylist``."""
+    if arr.null_count and pa.types.is_integer(arr.type):
+        return arr.to_pylist()
+    return arr.to_numpy(zero_copy_only=False).tolist()
 
 
 def parse_routed(
@@ -274,8 +369,8 @@ def parse_routed(
         for batch in batches:
             sources, line_nos = batch.column(0), batch.column(1)
             # flagless handlers ignore isFirst: one key for every line
-            keys = sources.to_pylist() if spec.reads_first else [None] * batch.num_rows
-            arrays = router.route(batch.column(2).to_pylist(), line_nos.to_pylist(), keys)
+            keys = _pylist(sources) if spec.reads_first else [None] * batch.num_rows
+            arrays = router.route(_pylist(batch.column(2)), _pylist(line_nos), keys)
             yield pa.RecordBatch.from_arrays(
                 [sources, line_nos, *arrays], names=ROUTED_SCHEMA.fieldNames()
             )

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import re
 from collections.abc import Callable, Sequence
+from functools import partial
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -127,22 +128,49 @@ def compile_filters(filters: Sequence[str]) -> dict[str, Callable[[str], bool]]:
     return m
 
 
+def _bind(
+    compiled: dict[str, Callable[[str], bool]], labels: Sequence[str]
+) -> tuple[str | None, list[tuple[int, Callable[[str], bool]]]]:
+    """The first filter label missing from ``labels`` (None if none), and
+    each label's predicate by position, in label order."""
+    missing = None
+    for flabel in compiled:
+        if flabel not in labels:
+            missing = flabel
+            break
+    return missing, [(i, compiled[label]) for i, label in enumerate(labels) if label in compiled]
+
+
+def _keep(
+    missing: str | None, checks: list[tuple[int, Callable[[str], bool]]], values: Sequence[str]
+) -> bool:
+    """applyFilter (parser_core.go:338-355): abort on a missing filter
+    label, else AND the predicates in label order."""
+    if missing is not None:
+        raise FilterError(f'{FILTER_ERROR}: "{missing}": invalid field name')
+    for i, fn in checks:
+        if not fn(values[i]):
+            return False
+    return True
+
+
+def bind_filters(
+    compiled: dict[str, Callable[[str], bool]], labels: Sequence[str]
+) -> Callable[[Sequence[str]], bool]:
+    """applyFilter bound to one label list: a predicate over that list's
+    values. A filter label missing from ``labels`` makes every call abort,
+    so a pattern that lacks the label fails on its first line, as the
+    reference does."""
+    return partial(_keep, *_bind(compiled, labels))
+
+
 def apply_filters(
     compiled: dict[str, Callable[[str], bool]],
     labels: Sequence[str],
     values: Sequence[str],
 ) -> bool:
-    """applyFilter (parser_core.go:338-355): AND across labels; every filter
-    label must exist in this row's labels, else abort."""
-    label_set = set(labels)
-    for flabel in compiled:
-        if flabel not in label_set:
-            raise FilterError(f'{FILTER_ERROR}: "{flabel}": invalid field name')
-    for i, label in enumerate(labels):
-        fn = compiled.get(label)
-        if fn is not None and not fn(values[i]):
-            return False
-    return True
+    """applyFilter for one line, as :func:`bind_filters` would bind it."""
+    return _keep(*_bind(compiled, labels), values)
 
 
 def filters_to_column(filters: Sequence[str], columns: Sequence[str]) -> Column:

@@ -51,7 +51,11 @@ same way, compacts it, and optionally fronts it with a bloom filter
 (dedup.build_bloom). State size is ``n_bands`` rows per ingested doc,
 independent of text length. Per-batch metrics count the batch's kept
 rows from the footers of the part files its write committed to
-``out_dir/batch_id=<n>`` — no data is read back and no Spark job runs.
+``out_dir/batch_id=<n>`` — no data is read back and no Spark job runs —
+and its input rows with an Observation that the kept write's own job
+computes: the micro-batch frame is a LogicalRDD, whose ``inputFiles()``
+is empty, so there is no input footer to read, and a ``count()`` would
+re-scan the input in jobs of its own.
 """
 
 from __future__ import annotations
@@ -59,8 +63,9 @@ from __future__ import annotations
 import glob
 import math
 import os
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (
@@ -242,8 +247,12 @@ def make_batch_processor(
             drops = within_drops.union(cross_drops).distinct()
         else:  # first batch: no index yet
             drops = within_drops.distinct()
-        kept = batch_df.join(drops, "doc_id", "left_anti")
-        n_in = batch_df.count()
+        # n_in is counted by the kept write's own job: the foreachBatch
+        # frame is a LogicalRDD, so inputFiles() names no footer to read
+        seen_in = Observation(f"neardup-in-{uuid.uuid4().hex}")
+        kept = batch_df.observe(seen_in, F.count(F.lit(1)).alias("n")).join(
+            drops, "doc_id", "left_anti"
+        )
         kept_dir = os.path.join(out_dir, f"batch_id={batch_id}")
         _replace(kept, kept_dir)
         # one file per key bucket: without the repartition every upstream
@@ -260,7 +269,7 @@ def make_batch_processor(
             parts = glob.glob(os.path.join(glob.escape(kept_dir), "*.parquet"))
             n_kept = sum(map(_footer_rows, parts))
             metrics.append(
-                {"batch_id": int(batch_id), "n_in": n_in, "n_kept": n_kept}
+                {"batch_id": int(batch_id), "n_in": seen_in.get["n"], "n_kept": n_kept}
             )
 
     return process

@@ -1,6 +1,7 @@
 """Python cost of the routed per-line core, without Spark.
 
     python scripts/route_cost.py [--lines N] [--handler H ...] [--prefix]
+        [--labels A,B,...] [--line-number] [--filter EXPR ...] [--profile]
 
 Routes N lines of the golden S3 corpus (``functions.corpus``, laid out as
 ``pages.synth_pages`` does: 20-line pages, 1 line in 5 the truncated,
@@ -10,12 +11,25 @@ that reads ``isFirst`` (``tsv``) gets each page's url as its input key.
 No Spark session is started. Each ``--handler`` gets one warm-up run and
 5 timed runs; the single output line is JSON with the min and median
 seconds per run and the median microseconds per line, per handler.
-Run from the repository root.
+``--labels``, ``--line-number`` and ``--filter`` set the Options the
+router compiles into each pattern's route (filters on this corpus: e.g.
+``"http_status == 200"``). ``--profile`` adds one cProfile'd run per
+handler, its self time split into buckets by function: ``handler``
+(``handlers.py``), ``search`` (``decoders.py`` and the ``re.Pattern``
+match calls), ``route`` (``engine.py``: the router's loop),
+``arrow`` (the router's ``pa.array`` calls) and ``other``. A C
+function's self time goes to the bucket of its caller, so ``str.join``
+inside a row function counts as ``handler``; the buckets sum to the
+profiled run's total. cProfile does not see into pyarrow's Cython
+functions, so the profiled run routes through a ``pyarrow`` stand-in
+whose ``array`` is a Python frame. cProfile inflates that total, so compare buckets
+within one profile. Run from the repository root.
 """
 
 from __future__ import annotations
 
 import argparse
+import cProfile
 import json
 import os
 import statistics
@@ -25,7 +39,9 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-from access_log_parser_spark import Option  # noqa: E402
+import pyarrow as pa  # noqa: E402
+
+from access_log_parser_spark import Option, engine  # noqa: E402
 from access_log_parser_spark.engine import _RouteSpec  # noqa: E402
 from access_log_parser_spark.functions.corpus import (  # noqa: E402
     GOLDEN_S3_LINES,
@@ -35,6 +51,10 @@ from access_log_parser_spark.functions.corpus import (  # noqa: E402
 BATCH = 10_000
 PAGE = 20
 RUNS = 5
+BUCKETS = ("handler", "search", "route", "arrow", "other")
+_SEARCH_CALLS = {
+    f"<method '{m}' of 're.Pattern' objects>" for m in ("search", "match", "fullmatch")
+}
 
 
 def corpus(n: int) -> tuple[list[str], list[int], list[str]]:
@@ -61,17 +81,82 @@ def route_once(spec: _RouteSpec, raws, line_nos, keys) -> float:
     return time.perf_counter() - start
 
 
+def _pa_array(*args, **kwargs):
+    """``pa.array`` as a Python frame, for the profile's ``arrow`` bucket."""
+    return pa.array(*args, **kwargs)
+
+
+class _ProfiledArrow:
+    """``pyarrow`` for the profiled run: ``array`` is :func:`_pa_array`."""
+
+    array = staticmethod(_pa_array)
+
+    def __getattr__(self, name: str):
+        return getattr(pa, name)
+
+
+def _bucket(func: tuple[str, int, str]) -> str | None:
+    """Bucket of a profiled function; None for a C function outside the
+    named ones, whose self time belongs to its caller."""
+    path, _, name = func
+    if name == "_pa_array":
+        return "arrow"
+    if path.endswith("handlers.py"):
+        return "handler"
+    if path.endswith("decoders.py") or name in _SEARCH_CALLS:
+        return "search"
+    if path.endswith("engine.py"):
+        return "route"
+    return None if path == "~" else "other"
+
+
+def profile_buckets(spec: _RouteSpec, raws, line_nos, keys) -> dict[str, float]:
+    """Self seconds per bucket of one cProfile'd :func:`route_once`."""
+    prof = cProfile.Profile()
+    engine.pa = _ProfiledArrow()
+    try:
+        prof.runcall(route_once, spec, raws, line_nos, keys)
+    finally:
+        engine.pa = pa
+    prof.create_stats()
+    buckets = dict.fromkeys(BUCKETS, 0.0)
+    for func, (_, _, self_s, _, callers) in prof.stats.items():
+        bucket = _bucket(func)
+        if bucket is not None or not callers:
+            buckets[bucket or "other"] += self_s
+            continue
+        # a C function: its self time under each caller goes to that caller
+        for caller, (_, _, caller_s, _) in callers.items():
+            buckets[_bucket(caller) or "other"] += caller_s
+    total = sum(buckets.values())
+    return {"total_s": round(total, 4), **{k: round(v, 4) for k, v in buckets.items()}}
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--lines", type=int, default=200_000, help="lines routed per run")
     ap.add_argument("--handler", action="append", help="line handler (repeatable; default json)")
     ap.add_argument("--prefix", action="store_true", help="Option(prefix=True, color=False)")
+    ap.add_argument("--labels", default="", help="Option(labels=...), comma-separated")
+    ap.add_argument("--line-number", action="store_true", help="Option(line_number=True)")
+    ap.add_argument(
+        "--filter", action="append", default=[], help="Option(filters=...) expression (repeatable)"
+    )
+    ap.add_argument("--profile", action="store_true", help="add one profiled run's buckets")
     args = ap.parse_args(argv)
 
     raws, line_nos, urls = corpus(args.lines)
+    labels = tuple(x for x in args.labels.split(",") if x)
     results = {}
     for handler in args.handler or ["json"]:
-        opt = Option(line_handler=handler, prefix=args.prefix, color=False)
+        opt = Option(
+            line_handler=handler,
+            prefix=args.prefix,
+            color=False,
+            labels=labels,
+            line_number=args.line_number,
+            filters=tuple(args.filter),
+        )
         spec = _RouteSpec.build("s3", opt)
         keys = urls if spec.reads_first else [None] * len(raws)
         route_once(spec, raws, line_nos, keys)  # warm-up
@@ -82,7 +167,17 @@ def main(argv: list[str] | None = None) -> int:
             "median_s": round(median, 4),
             "us_per_line": round(median / args.lines * 1e6, 3),
         }
-    summary = {"lines": args.lines, "batch": BATCH, "runs": RUNS, "prefix": args.prefix}
+        if args.profile:
+            results[handler]["profile"] = profile_buckets(spec, raws, line_nos, keys)
+    summary = {
+        "lines": args.lines,
+        "batch": BATCH,
+        "runs": RUNS,
+        "prefix": args.prefix,
+        "labels": list(labels),
+        "line_number": args.line_number,
+        "filters": args.filter,
+    }
     print(json.dumps({**summary, "handlers": results}))
     return 0
 

@@ -294,3 +294,50 @@ def test_micro_batch_writes_parquet_only_and_counts_its_footers(spark, tmp_path)
     for m in metrics:
         assert m["n_kept"] == spark.read.parquet(f"{out}/batch_id={m['batch_id']}").count()
     assert [(m["batch_id"], m["n_in"], m["n_kept"]) for m in metrics] == [(0, 6, 6), (1, 6, 0)]
+
+
+def test_n_in_counts_every_input_row_including_null_text(spark, tmp_path):
+    """``n_in`` is the micro-batch's input rows, a doc with a NULL text
+    among them (no signature, so no band key, but still an input row)."""
+    import pyarrow.parquet as pq
+
+    docs = spark.createDataFrame(
+        [(i, None if i % 3 == 0 else f"doc {i} " + "word " * 10) for i in range(12)],
+        "doc_id long, text string",
+    )
+    files = write_ordered_batches(docs, str(tmp_path / "in"), n_batches=3)
+    metrics = run_streaming_minhash_dedup(
+        spark,
+        str(tmp_path / "in"),
+        docs.schema,
+        str(tmp_path / "out"),
+        str(tmp_path / "idx"),
+        str(tmp_path / "ck"),
+    )
+    assert [m["n_in"] for m in metrics] == [pq.read_metadata(f).num_rows for f in files]
+    assert [m["n_in"] for m in metrics] == [4, 4, 4]
+
+
+def _job_ids(spark) -> set[int]:
+    jvm = spark.sparkContext._jvm
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    return {job.jobId() for job in jvm.scala.jdk.javaapi.CollectionConverters.asJava(jobs)}
+
+
+def test_stream_runs_no_job_to_count_its_input(spark, tmp_path):
+    """The 40-doc, 4-micro-batch stream's Spark jobs, counted in the
+    status store: ``n_in`` comes from the kept write's own job, not from
+    a ``count()`` of the micro-batch (2 jobs each, 47 for this run)."""
+    docs = _corpus(spark)
+    write_ordered_batches(docs, str(tmp_path / "in"), n_batches=4)
+    before = _job_ids(spark)
+    metrics = run_streaming_minhash_dedup(
+        spark,
+        str(tmp_path / "in"),
+        docs.schema,
+        str(tmp_path / "out"),
+        str(tmp_path / "idx"),
+        str(tmp_path / "ck"),
+    )
+    assert [m["n_in"] for m in metrics] == [10, 10, 10, 10]
+    assert len(_job_ids(spark) - before) == 39
