@@ -46,12 +46,17 @@ parse-file-cost:
 	python3 scripts/parse_file_cost.py --lines $(LINES)
 
 # seconds and microseconds per line of the routed per-line core
-# (_Router.route) on the golden S3 corpus, no Spark (scripts/route_cost.py),
-# for all five built-in handlers by default; LABELS (comma-separated),
+# (_Router.route) on the golden S3 corpus, or with FORMAT=ltsv the golden
+# LTSV corpus (DISTINCT_LABELS=1: one label tuple per line), no Spark
+# (scripts/route_cost.py), for all five built-in handlers by default;
+# LABELS (comma-separated),
 # LINE_NUMBER=1 and FILTER (one expression) set the Options each pattern's
 # route is compiled for, PROFILE=1 adds cProfile buckets per handler:
 #   make route-cost LINES=200000 HANDLERS="json tsv" PREFIX=1 PROFILE=1
 #   make route-cost LABELS=bucket,http_status LINE_NUMBER=1 FILTER="http_status == 200"
+#   make route-cost FORMAT=ltsv FILTER="status == 200" DISTINCT_LABELS=1
+FORMAT ?= s3
+DISTINCT_LABELS ?=
 HANDLERS ?= json pretty_json kv ltsv tsv
 PREFIX ?=
 LABELS ?=
@@ -59,7 +64,8 @@ LINE_NUMBER ?=
 FILTER ?=
 PROFILE ?=
 route-cost:
-	python3 scripts/route_cost.py --lines $(LINES) $(foreach h,$(HANDLERS),--handler $(h)) \
+	python3 scripts/route_cost.py --format $(FORMAT) $(if $(DISTINCT_LABELS),--distinct-labels) \
+		--lines $(LINES) $(foreach h,$(HANDLERS),--handler $(h)) \
 		$(if $(PREFIX),--prefix) $(if $(LABELS),--labels $(LABELS)) \
 		$(if $(LINE_NUMBER),--line-number) $(if $(FILTER),--filter "$(FILTER)") \
 		$(if $(PROFILE),--profile)

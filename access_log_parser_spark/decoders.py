@@ -215,17 +215,3 @@ def ltsv_decode_batch(
             out_vs.append(None)
     return out_ls, out_vs
 
-
-def select_labels(
-    targets: Sequence[str], labels: Sequence[str], values: Sequence[str]
-) -> tuple[list[str], list[str]]:
-    """Keep original line order, silently drop unknown targets
-    (parser_core.go:291-305)."""
-    tset = set(targets)
-    ls: list[str] = []
-    vs: list[str] = []
-    for j, label in enumerate(labels):
-        if label in tset:
-            ls.append(label)
-            vs.append(values[j])
-    return ls, vs

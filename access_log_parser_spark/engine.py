@@ -20,10 +20,12 @@ Design goals at 100 TB:
   labels, the getter of its selected groups, the ``no`` slot and a row
   function from the handler's compiler (:mod:`.handlers`), so a matched
   line costs one ``Match.groups`` read, one template fill and, for the
-  escaping handlers, one escape call, with no per-line label list.
-  LTSV input, whose labels are the line's own, keeps the per-line path
-  through the public handler; a user callable gets each pattern's label
-  list and the line's values as fresh lists;
+  escaping handlers, one escape call, with no per-line label list. LTSV
+  input, whose labels are the line's own, runs the same loop: each
+  distinct label tuple of a batch gets one route, built for that batch
+  only, so a batch that repeats its label tuples builds few. A user
+  callable gets each route's label list and the line's values as fresh
+  lists;
 - everything the driver can settle (pattern and filter validation, the
   handler, the prefix pair and its tty color check) is settled once in
   ``_RouteSpec.build``, never in a task, and no global ordering is ever
@@ -60,6 +62,7 @@ from __future__ import annotations
 import sys
 from collections.abc import Callable, Iterator, Sequence
 from dataclasses import dataclass
+from functools import partial
 from operator import itemgetter
 
 import pyarrow as pa
@@ -76,7 +79,7 @@ from pyspark.sql.types import (
 
 from . import decoders, patterns as pat
 from .decoders import EXCLUDED, MATCHED, SKIPPED, UNMATCHED
-from .filters import apply_filters, bind_filters, compile_filters
+from .filters import bind_filters, compile_filters
 from .handlers import COMPILERS, HANDLERS, LineHandler, RowFn, apply_prefix, prefix_strings
 from .options import Option
 from .sources.ziparchive import _scan_lines
@@ -121,9 +124,9 @@ def _user_row(handler: LineHandler, labels: Sequence[str]) -> RowFn:
     return row
 
 
-def _picker(idx: Sequence[int]) -> Callable[[tuple], tuple]:
-    """The values at ``idx`` of a match's groups, as a tuple: one slice
-    when ``idx`` is a leading run (no label selection)."""
+def _picker(idx: Sequence[int]) -> Callable[[Sequence[str]], Sequence[str]]:
+    """The values at ``idx`` of a line's groups: one slice when ``idx`` is
+    a leading run (no label selection)."""
     if list(idx) == list(range(len(idx))):
         return itemgetter(slice(0, len(idx)))
     if len(idx) == 1:
@@ -132,9 +135,12 @@ def _picker(idx: Sequence[int]) -> Callable[[tuple], tuple]:
     return itemgetter(*idx)
 
 
-# per pattern: the filter over the match's groups (None without filters),
-# the output values' getter and the row function
-_PatternRoute = tuple[Callable[[tuple], bool] | None, Callable[[tuple], tuple], RowFn]
+# per pattern or LTSV label tuple: the pattern_id, the filter over the
+# line's groups (None without filters), the output values' getter and the
+# row function
+_Route = tuple[
+    int, Callable[[Sequence[str]], bool] | None, Callable[[Sequence[str]], Sequence[str]], RowFn
+]
 
 
 @dataclass(frozen=True)
@@ -146,9 +152,9 @@ class _RouteSpec:
     skip_set: frozenset[int]
     labels_sel: tuple[str, ...]
     add_no: bool
-    handler: LineHandler
-    # the handler's compiler for a built-in handler, None for a user callable
-    compiler: Callable[[Sequence[str]], RowFn] | None
+    # labels -> row function: a built-in's compiler, or a user callable
+    # wrapped by ``_user_row``
+    compiler: Callable[[Sequence[str]], RowFn]
     reads_first: bool
     filter_exprs: tuple[str, ...]
     emit_unmatch: bool
@@ -176,8 +182,7 @@ class _RouteSpec:
             skip_set=frozenset(int(s) for s in opt.skip_lines),
             labels_sel=tuple(opt.labels),
             add_no=bool(opt.line_number),
-            handler=handler,
-            compiler=COMPILERS.get(name),
+            compiler=COMPILERS.get(name) or partial(_user_row, handler),
             reads_first=name not in _FLAGLESS_HANDLERS,
             filter_exprs=tuple(opt.filters),
             emit_unmatch=bool(opt.unmatch_lines),
@@ -188,18 +193,21 @@ class _RouteSpec:
 
     def compile(self) -> _Router:
         """Once per task: the decode plan, compiled from the pattern strings
-        (a plan cannot be pickled), the filter predicates and, per pattern,
-        its route: the filter bound to the pattern's labels, the getter of
-        the selected groups (selectLabels, parser_core.go:291-305) and the
-        row function compiled for the output labels, ``no`` first with
-        ``Option(line_number=True)``."""
+        (a plan cannot be pickled), the filter predicates and each
+        pattern's route (:meth:`_route`). LTSV routes are built per batch,
+        in ``_Router.route``."""
         filt = compile_filters(self.filter_exprs)
         if self.pattern_strs is None:
             return _Router(self, None, filt, ())
         plan = decoders.compile_plan(self.pattern_strs)
-        return _Router(self, plan, filt, tuple(self._route(names, filt) for names in plan.names))
+        routes = tuple(self._route(pid, names, filt) for pid, names in enumerate(plan.names))
+        return _Router(self, plan, filt, routes)
 
-    def _route(self, names: Sequence[str], filt: dict) -> _PatternRoute:
+    def _route(self, pid: int, names: Sequence[str], filt: dict) -> _Route:
+        """The route of one label list: ``pid``, the filter bound to
+        ``names``, the getter of the selected values (selectLabels,
+        parser_core.go:291-305) and the row function compiled for the
+        output labels, ``no`` first with ``Option(line_number=True)``."""
         if self.labels_sel:
             wanted = set(self.labels_sel)
             idx = [j for j, name in enumerate(names) if name in wanted]
@@ -208,11 +216,8 @@ class _RouteSpec:
         labels = [names[j] for j in idx]
         if self.add_no:
             labels.insert(0, "no")
-        if self.compiler is not None:
-            row = self.compiler(tuple(labels))
-        else:
-            row = _user_row(self.handler, labels)
-        return (bind_filters(filt, names) if filt else None), _picker(idx), row
+        keep = bind_filters(filt, names) if filt else None
+        return pid, keep, _picker(idx), self.compiler(tuple(labels))
 
 
 @dataclass
@@ -221,7 +226,7 @@ class _Router:
     plan: decoders.DecodePlan | None
     filt: dict
     # one route per pattern of ``plan``
-    routes: tuple[_PatternRoute, ...]
+    routes: tuple[_Route, ...]
     # key of the last line that reached the handler, across the batches
     # of one task
     last_key: object = _NO_KEY
@@ -245,10 +250,11 @@ class _Router:
         (parser_result.go:32-36). A NULL line that is not skipped is
         unmatched, with a NULL ``out_line`` and ``raw``.
 
-        A regex line runs its pattern's route on the match's groups, read
-        once; an LTSV line, whose labels are its own, runs the filter,
-        the selection and the public handler on its label and value
-        lists."""
+        A line runs the route of its key: a regex line's key is its
+        pattern_id and its groups are the match's, read once; an LTSV
+        line's key is its label tuple and its groups are its values. Each
+        distinct label tuple of the batch gets its route here, and no LTSV
+        route outlives the batch."""
         spec = self.spec
         n = len(raws)
         status = [MATCHED] * n
@@ -266,56 +272,38 @@ class _Router:
             live_raws = [raws[i] for i in live]
         else:
             live, live_raws = range(n), raws
+        regex = self.plan is not None
+        if regex:
+            route_keys, found = self.plan.match(live_raws)
+            routes = self.routes
+        else:
+            live_ls, found = decoders.ltsv_decode_batch(live_raws)
+            route_keys = [None if ls is None else tuple(ls) for ls in live_ls]
+            routes = {ls: spec._route(0, ls, self.filt) for ls in set(route_keys) - {None}}
         mpref, upref = spec.prefixes or (None, "")
         add_no = spec.add_no
         last_key = self.last_key
-        if self.plan is not None:
-            routes = self.routes
-            live_pids, matches = self.plan.match(live_raws)
-            for i, pid, m in zip(live, live_pids, matches):
-                pids[i] = pid
-                if m is None:
-                    status[i] = UNMATCHED
-                    err[i] = raws[i]
-                    if spec.emit_unmatch and raws[i] is not None:
-                        # the single-line UNMATCHED prefix (parser_core.go:203-205)
-                        out[i] = upref + raws[i]
-                    continue
-                keep, pick, row = routes[pid]
-                g = m.groups("")
-                if keep is not None and not keep(g):
-                    status[i] = EXCLUDED
-                    continue
-                vs = pick(g)
-                if add_no:
-                    vs = (str(line_nos[i]), *vs)
-                key = keys[i]
-                line = row(vs, key != last_key)
-                last_key = key
-                out[i] = line if mpref is None else apply_prefix(line, mpref)
-        else:
-            filt, handler = self.filt, spec.handler
-            live_ls, live_vs = decoders.ltsv_decode_batch(live_raws)
-            for i, ls, vs in zip(live, live_ls, live_vs):
-                if ls is None:
-                    status[i] = UNMATCHED
-                    err[i] = raws[i]
-                    if spec.emit_unmatch and raws[i] is not None:
-                        out[i] = upref + raws[i]
-                    continue
-                pids[i] = 0
-                if filt and not apply_filters(filt, ls, vs):
-                    status[i] = EXCLUDED
-                    continue
-                if spec.labels_sel:
-                    ls, vs = decoders.select_labels(spec.labels_sel, ls, vs)
-                if add_no:
-                    ls = ["no", *ls]
-                    vs = [str(line_nos[i]), *vs]
-                key = keys[i]
-                line = handler(ls, vs, key != last_key)
-                last_key = key
-                out[i] = line if mpref is None else apply_prefix(line, mpref)
+        for i, rkey, m in zip(live, route_keys, found):
+            if m is None:
+                status[i] = UNMATCHED
+                err[i] = raws[i]
+                if spec.emit_unmatch and raws[i] is not None:
+                    # the single-line UNMATCHED prefix (parser_core.go:203-205)
+                    out[i] = upref + raws[i]
+                continue
+            pid, keep, pick, row = routes[rkey]
+            pids[i] = pid
+            g = m.groups("") if regex else m
+            if keep is not None and not keep(g):
+                status[i] = EXCLUDED
+                continue
+            vs = pick(g)
+            if add_no:
+                vs = (str(line_nos[i]), *vs)
+            key = keys[i]
+            line = row(vs, key != last_key)
+            last_key = key
+            out[i] = line if mpref is None else apply_prefix(line, mpref)
         self.last_key = last_key
         return [
             pa.array(status, pa.string()),
@@ -450,9 +438,7 @@ def parse_documents(
             # a document never spans two Arrow batches: its index in the
             # batch is the input key
             router.last_key = _NO_KEY
-            for doc_ids, line_nos, raws in _line_chunks(
-                batch.column(1).to_pylist(), size
-            ):
+            for doc_ids, line_nos, raws in _line_chunks(_pylist(batch.column(1)), size):
                 arrays = router.route(raws, line_nos, doc_ids)
                 take = pa.array(doc_ids, pa.int32())
                 arrays = [
@@ -520,7 +506,7 @@ def extract_fields(
         plan = decoders.compile_plan(pattern_strs)
         for batch in batches:
             # columns by position: line_col may also be a passthrough column
-            raws = batch.column(n_pass).to_pylist()
+            raws = _pylist(batch.column(n_pass))
             pids, cols = plan.columns(raws, union)
             arrays = [batch.column(k) for k in range(n_pass)]
             arrays.append(pa.array(pids, pa.int32()))
@@ -562,7 +548,7 @@ def extract_ltsv(
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             # columns by position: line_col may also be a passthrough column
-            ls, vs = decoders.ltsv_decode_batch(batch.column(n_pass).to_pylist())
+            ls, vs = decoders.ltsv_decode_batch(_pylist(batch.column(n_pass)))
             arrays = [batch.column(k) for k in range(n_pass)]
             arrays += [pa.array(ls, list_type), pa.array(vs, list_type)]
             yield pa.RecordBatch.from_arrays(arrays, names=out_schema.fieldNames())

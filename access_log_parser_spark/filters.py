@@ -128,19 +128,6 @@ def compile_filters(filters: Sequence[str]) -> dict[str, Callable[[str], bool]]:
     return m
 
 
-def _bind(
-    compiled: dict[str, Callable[[str], bool]], labels: Sequence[str]
-) -> tuple[str | None, list[tuple[int, Callable[[str], bool]]]]:
-    """The first filter label missing from ``labels`` (None if none), and
-    each label's predicate by position, in label order."""
-    missing = None
-    for flabel in compiled:
-        if flabel not in labels:
-            missing = flabel
-            break
-    return missing, [(i, compiled[label]) for i, label in enumerate(labels) if label in compiled]
-
-
 def _keep(
     missing: str | None, checks: list[tuple[int, Callable[[str], bool]]], values: Sequence[str]
 ) -> bool:
@@ -158,19 +145,13 @@ def bind_filters(
     compiled: dict[str, Callable[[str], bool]], labels: Sequence[str]
 ) -> Callable[[Sequence[str]], bool]:
     """applyFilter bound to one label list: a predicate over that list's
-    values. A filter label missing from ``labels`` makes every call abort,
-    so a pattern that lacks the label fails on its first line, as the
-    reference does."""
-    return partial(_keep, *_bind(compiled, labels))
-
-
-def apply_filters(
-    compiled: dict[str, Callable[[str], bool]],
-    labels: Sequence[str],
-    values: Sequence[str],
-) -> bool:
-    """applyFilter for one line, as :func:`bind_filters` would bind it."""
-    return _keep(*_bind(compiled, labels), values)
+    values, checking each label's predicate by position, in label order.
+    A filter label missing from ``labels`` makes every call abort, so a
+    pattern or LTSV label tuple that lacks the label fails on its first
+    line, as the reference does."""
+    missing = next((flabel for flabel in compiled if flabel not in labels), None)
+    checks = [(i, compiled[label]) for i, label in enumerate(labels) if label in compiled]
+    return partial(_keep, missing, checks)
 
 
 def filters_to_column(filters: Sequence[str], columns: Sequence[str]) -> Column:

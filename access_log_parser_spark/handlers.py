@@ -4,13 +4,16 @@ Byte-compatible re-implementations of the reference's five output encoders
 (its `handler.go:15-144`). Each is a COMPILER: it takes a
 label tuple and returns a row function ``row(values, is_first)`` that
 serializes one values tuple under those labels. The engine compiles one
-row function per pattern, once per task, inside its single ``mapInArrow``
-pass (:class:`..engine._RouteSpec`). The public ``(labels, values,
+row function per route, inside its single ``mapInArrow`` pass
+(:class:`..engine._RouteSpec`): per regex pattern once per task, per
+LTSV label tuple once per batch. The public ``(labels, values,
 is_first)`` functions in :data:`HANDLERS` build the same template and
-call the same fill per line, for the per-line path (LTSV input, whose
-labels vary per line) and for direct use; a row function is the fill
-with its template bound (``functools.partial``). They are the engine's
-only serializers. ``json.dumps`` /
+call the same fill per call. They serve direct use and ``Option``
+resolution: ``Option(line_handler=...)`` names one of them, by name or
+by the function itself, and the engine runs its compiler from
+:data:`COMPILERS`. A row function is the fill with its template bound
+(``functools.partial``). They are the engine's only serializers.
+``json.dumps`` /
 ``F.to_json`` are NOT used: the reference escapes only ``\\ " \\n \\r
 \\t`` and passes every other byte through raw (`handler.go:127-144`),
 which differs from standard JSON encoders.

@@ -1,12 +1,21 @@
 """Python cost of the routed per-line core, without Spark.
 
-    python scripts/route_cost.py [--lines N] [--handler H ...] [--prefix]
-        [--labels A,B,...] [--line-number] [--filter EXPR ...] [--profile]
+    python scripts/route_cost.py [--format {s3,ltsv}] [--distinct-labels]
+        [--lines N] [--handler H ...] [--prefix] [--labels A,B,...]
+        [--line-number] [--filter EXPR ...] [--profile]
 
-Routes N lines of the golden S3 corpus (``functions.corpus``, laid out as
+Routes N lines through ``_RouteSpec.build(format, opt).compile().route``
+in 10k-line batches, the way one ``parse_routed`` task does. The ``s3``
+corpus is the golden S3 lines (``functions.corpus``, laid out as
 ``pages.synth_pages`` does: 20-line pages, 1 line in 5 the truncated,
-unmatchable line) through ``_RouteSpec.build("s3", opt).compile().route``
-in 10k-line batches, the way one ``parse_routed`` task does: a handler
+unmatchable line). The ``ltsv`` corpus is the golden LTSV lines T1-T5
+(``tests/golden_ltsv.py``) laid out as ``perfbench/gen.py`` lays out
+``ltsv_pipeline``: pages of 16-24 lines, each line one of the six invalid
+lines with chance 1 in 6 and otherwise one of T1-T5, drawn from a seeded
+``random.Random``. Its valid lines come from two label tuples, so each
+batch builds two routes; ``--distinct-labels`` appends the line's index to
+its first label, so that every line has its own label tuple and its own
+route, the LTSV router's worst case. A handler
 that reads ``isFirst`` (``tsv``) gets each page's url as its input key.
 No Spark session is started. Each ``--handler`` gets one warm-up run and
 5 timed runs; the single output line is JSON with the min and median
@@ -30,8 +39,10 @@ from __future__ import annotations
 
 import argparse
 import cProfile
+import importlib.util
 import json
 import os
+import random
 import statistics
 import sys
 import time
@@ -50,6 +61,8 @@ from access_log_parser_spark.functions.corpus import (  # noqa: E402
 
 BATCH = 10_000
 PAGE = 20
+LTSV_PAGE = (16, 24)  # inclusive range, as perfbench/gen.py
+LTSV_SEED = 7
 RUNS = 5
 BUCKETS = ("handler", "search", "route", "arrow", "other")
 _SEARCH_CALLS = {
@@ -58,7 +71,7 @@ _SEARCH_CALLS = {
 
 
 def corpus(n: int) -> tuple[list[str], list[int], list[str]]:
-    """(raws, line_nos, urls) of ``n`` lines: line j of page p is
+    """(raws, line_nos, urls) of ``n`` S3 lines: line j of page p is
     ``GOLDEN_S3_LINES[(p + j) % 5]``, or the truncated line when
     ``j % 5 == p % 5``."""
     raws, line_nos, urls = [], [], []
@@ -69,6 +82,32 @@ def corpus(n: int) -> tuple[list[str], list[int], list[str]]:
         line_nos.append(j + 1)
         urls.append(f"https://host/page/{p}")
     return raws, line_nos, urls
+
+
+def ltsv_corpus(n: int, distinct_labels: bool) -> tuple[list[str], list[int], list[str]]:
+    """(raws, line_nos, urls) of ``n`` LTSV lines, paged and drawn as
+    ``perfbench/gen.py`` draws ``ltsv_pipeline``; with ``distinct_labels``
+    line i's first label ends in ``i``."""
+    path = os.path.join(ROOT, "tests", "golden_ltsv.py")
+    spec = importlib.util.spec_from_file_location("route_cost_golden_ltsv", path)
+    g = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(g)
+    valid = [g.T1, g.T2, g.T3, g.T4, g.T5]
+    invalid = [g.T4_BAD, g.AU1, g.AU2, g.AU3, g.AU4, g.AU5]
+    rng = random.Random(LTSV_SEED)
+    raws, line_nos, urls = [], [], []
+    p = 0
+    while len(raws) < n:
+        for no in range(1, rng.randint(*LTSV_PAGE) + 1):
+            line = rng.choice(invalid) if rng.randrange(6) == 0 else rng.choice(valid)
+            if distinct_labels:
+                label, sep, rest = line.partition(":")
+                line = f"{label}{len(raws)}{sep}{rest}"
+            raws.append(line)
+            line_nos.append(no)
+            urls.append(f"https://host/page/{p}")
+        p += 1
+    return raws[:n], line_nos[:n], urls[:n]
 
 
 def route_once(spec: _RouteSpec, raws, line_nos, keys) -> float:
@@ -134,6 +173,10 @@ def profile_buckets(spec: _RouteSpec, raws, line_nos, keys) -> dict[str, float]:
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--format", choices=("s3", "ltsv"), default="s3", help="corpus and format")
+    ap.add_argument(
+        "--distinct-labels", action="store_true", help="ltsv: one label tuple per line"
+    )
     ap.add_argument("--lines", type=int, default=200_000, help="lines routed per run")
     ap.add_argument("--handler", action="append", help="line handler (repeatable; default json)")
     ap.add_argument("--prefix", action="store_true", help="Option(prefix=True, color=False)")
@@ -144,8 +187,13 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument("--profile", action="store_true", help="add one profiled run's buckets")
     args = ap.parse_args(argv)
+    if args.distinct_labels and args.format != "ltsv":
+        ap.error("--distinct-labels needs --format ltsv")
 
-    raws, line_nos, urls = corpus(args.lines)
+    if args.format == "ltsv":
+        raws, line_nos, urls = ltsv_corpus(args.lines, args.distinct_labels)
+    else:
+        raws, line_nos, urls = corpus(args.lines)
     labels = tuple(x for x in args.labels.split(",") if x)
     results = {}
     for handler in args.handler or ["json"]:
@@ -157,7 +205,7 @@ def main(argv: list[str] | None = None) -> int:
             line_number=args.line_number,
             filters=tuple(args.filter),
         )
-        spec = _RouteSpec.build("s3", opt)
+        spec = _RouteSpec.build(args.format, opt)
         keys = urls if spec.reads_first else [None] * len(raws)
         route_once(spec, raws, line_nos, keys)  # warm-up
         times = [route_once(spec, raws, line_nos, keys) for _ in range(RUNS)]
@@ -170,6 +218,8 @@ def main(argv: list[str] | None = None) -> int:
         if args.profile:
             results[handler]["profile"] = profile_buckets(spec, raws, line_nos, keys)
     summary = {
+        "format": args.format,
+        "distinct_labels": args.distinct_labels,
         "lines": args.lines,
         "batch": BATCH,
         "runs": RUNS,

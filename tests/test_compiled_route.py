@@ -1,11 +1,12 @@
 """The compiled route against the per-line reference model, without Spark.
 
 ``_RouteSpec.build(fmt, opt).compile().route(...)`` compiles one route per
-pattern (filter bound to the pattern's labels, selected group indices,
-``no`` slot, row function) and reads each match's groups once. The model
-below is the loop it replaced: per line, ``plan.decode``, then
-``apply_filters``, ``select_labels``, the line number and the public
-``(labels, values, is_first)`` handler, then ``apply_prefix``. Both must
+pattern, and per LTSV label tuple of a batch (filter bound to the labels,
+selected group indices, ``no`` slot, row function), and reads each match's
+groups once. The model below is the per-line loop: per line, ``plan.decode``
+or the LTSV decode, then the filter bound to that line's labels, its own
+label selection, the line number and the public ``(labels, values,
+is_first)`` handler, then ``apply_prefix``. Both must
 give the same routed arrays, or abort with the same ``FilterError`` at the
 same line, over every Option and over lines salted with a NUL and the five
 escaped characters.
@@ -30,10 +31,9 @@ from access_log_parser_spark.decoders import (
     UNMATCHED,
     compile_plan,
     ltsv_decode_batch,
-    select_labels,
 )
 from access_log_parser_spark.engine import _RouteSpec
-from access_log_parser_spark.filters import FilterError, apply_filters, compile_filters
+from access_log_parser_spark.filters import FilterError, bind_filters, compile_filters
 from access_log_parser_spark.functions.corpus import GOLDEN_S3_LINES, GOLDEN_S3_TRUNC_LINE
 from tests.test_fast_twin import _cf_line
 
@@ -75,9 +75,19 @@ FORMATS = {
         ["date", "sc_status", "cs_referer", "sc_bytes", "cs_user_agent"],
         ["sc_status == 200", "cs_referer !~ zz", "sc_bytes <= 1000", "x_edge_location =~ LAX"],
     ),
-    # per-line labels: T4 and T5 lack referer and user_agent
+    # per-line labels: T4 and T5 lack referer and user_agent; a duplicate
+    # and a reordered label tuple
     "ltsv": (
-        [gl.T1, gl.T2, gl.T3, gl.T4, gl.T4_BAD, gl.T5],
+        [
+            gl.T1,
+            gl.T2,
+            gl.T3,
+            gl.T4,
+            gl.T4_BAD,
+            gl.T5,
+            "status:200\tstatus:404\tsize:1",
+            "size:5\tstatus:200",
+        ],
         ["status", "remote_user", "size", "user_agent"],
         ["status == 200", "size >= 600", "user_agent =~ Mac", "remote_user !=* JOHN"],
     ),
@@ -108,11 +118,14 @@ def _model(fmt, opt, raws, line_nos, keys):
             out = upref + raw if opt.unmatch_lines and raw is not None else None
             rows.append((UNMATCHED, -1, out, raw))
             continue
-        if filt and not apply_filters(filt, ls, vs):
+        if filt and not bind_filters(filt, ls)(vs):
             rows.append((EXCLUDED, pid, None, None))
             continue
         if opt.labels:
-            ls, vs = select_labels(opt.labels, ls, vs)
+            # selectLabels (parser_core.go:291-305): line order, every
+            # occurrence of a wanted label, unknown targets dropped
+            kept = [j for j, label in enumerate(ls) if label in opt.labels]
+            ls, vs = [ls[j] for j in kept], [vs[j] for j in kept]
         if opt.line_number:
             ls, vs = ["no", *ls], [str(ln), *vs]
         line = handler(ls, vs, key != last_key)

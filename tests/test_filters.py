@@ -4,7 +4,7 @@ import pytest
 
 from access_log_parser_spark.filters import (
     FilterError,
-    apply_filters,
+    bind_filters,
     compile_filters,
     parse_filter,
 )
@@ -13,7 +13,7 @@ LS = ["name", "code", "score"]
 
 
 def run(filters, labels, values):
-    return apply_filters(compile_filters(filters), labels, values)
+    return bind_filters(compile_filters(filters), labels)(values)
 
 
 def test_string_ops():
