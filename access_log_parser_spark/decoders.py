@@ -188,30 +188,27 @@ def compile_plan(pattern_strs: Sequence[str]) -> DecodePlan:
 
 def ltsv_decode_batch(
     lines: Sequence[str | None],
-) -> tuple[list[list[str] | None], list[list[str] | None]]:
-    """Decode LTSV lines; returns (labels, values), None/None when invalid
-    or NULL."""
+) -> tuple[list[tuple[str, ...] | None], list[tuple[str, ...] | None]]:
+    """Decode LTSV lines in one pass per line; returns (labels, values)
+    tuples, None/None when invalid or NULL. A label tuple is the key of
+    its route in ``engine._Router.route``."""
     if None in lines:
         # a NULL line reads as "", which has no ":" and so is invalid
         lines = ["" if line is None else line for line in lines]
-    out_ls: list[list[str] | None] = []
-    out_vs: list[list[str] | None] = []
+    out_ls: list[tuple[str, ...] | None] = []
+    out_vs: list[tuple[str, ...] | None] = []
     for line in lines:
         ls: list[str] = []
         vs: list[str] = []
-        ok = True
         for fld in line.split("\t"):
             label, sep, value = fld.partition(":")
             if not sep:
-                ok = False
+                out_ls.append(None)
+                out_vs.append(None)
                 break
             ls.append(label)
             vs.append(value)
-        if ok:
-            out_ls.append(ls)
-            out_vs.append(vs)
         else:
-            out_ls.append(None)
-            out_vs.append(None)
+            out_ls.append(tuple(ls))
+            out_vs.append(tuple(vs))
     return out_ls, out_vs
-

@@ -35,17 +35,18 @@ Surfaces:
 
 - reference parity (Option semantics, byte-exact serialized output lines,
   status routing column, error rows): ONE routed implementation. Two
-  entries share one per-line core (``_RouteSpec`` built and validated
-  before any task runs, ``_Router.route`` per batch, which also builds the
-  batch's routed Arrow arrays), so their outputs cannot drift apart:
+  entries share one ``mapInArrow`` body (``_route_batches``) and so one
+  per-line core (``_RouteSpec`` built and validated before any task runs,
+  ``_Router.route`` per batch, which also builds the batch's routed Arrow
+  arrays), so their outputs cannot drift apart:
 
-  - :func:`parse_documents` takes whole documents and is one
-    ``mapInArrow`` stage: it splits each text with the scanner's exact
-    ``bufio.ScanLines`` model and hands carried document columns back as
-    Arrow arrays. The Parser verbs, the pipeline and the streaming surface
-    use it;
-  - :func:`parse_routed` takes exploded lines through ``mapInArrow``, for
-    callers that already hold lines (the bench, the registry queries);
+  - :func:`parse_routed` takes exploded lines, for callers that already
+    hold them (the bench, the registry queries);
+  - :func:`parse_documents` takes whole documents, splits them with
+    :func:`.sources.text.explode_lines` (the one line scanner, in
+    Catalyst) and runs the same hop, handing carried document columns
+    back as Arrow arrays. The Parser verbs, the pipeline and the streaming
+    surface use it;
 
   ``isFirst`` has one model, in the router: the handler gets True for the
   first line of each input that reaches it (parser_core.go:182,245), an
@@ -59,10 +60,10 @@ Surfaces:
 
 from __future__ import annotations
 
-import sys
 from collections.abc import Callable, Iterator, Sequence
 from dataclasses import dataclass
 from functools import partial
+from itertools import accumulate
 from operator import itemgetter
 
 import pyarrow as pa
@@ -82,7 +83,7 @@ from .decoders import EXCLUDED, MATCHED, SKIPPED, UNMATCHED
 from .filters import bind_filters, compile_filters
 from .handlers import COMPILERS, HANDLERS, LineHandler, RowFn, apply_prefix, prefix_strings
 from .options import Option
-from .sources.ziparchive import _scan_lines
+from .sources.text import explode_lines
 
 ROUTED_SCHEMA = StructType(
     [
@@ -101,8 +102,6 @@ _FLAGLESS_HANDLERS = ("json", "pretty_json", "kv", "ltsv")
 
 # the key no input has: the first line to reach a task's handler is first
 _NO_KEY = object()
-
-_BATCH_ROWS_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
 def _resolve_patterns(fmt: str | Sequence[str]) -> list[str] | None:
@@ -277,8 +276,7 @@ class _Router:
             route_keys, found = self.plan.match(live_raws)
             routes = self.routes
         else:
-            live_ls, found = decoders.ltsv_decode_batch(live_raws)
-            route_keys = [None if ls is None else tuple(ls) for ls in live_ls]
+            route_keys, found = decoders.ltsv_decode_batch(live_raws)
             routes = {ls: spec._route(0, ls, self.filt) for ls in set(route_keys) - {None}}
         mpref, upref = spec.prefixes or (None, "")
         add_no = spec.add_no
@@ -323,6 +321,38 @@ def _pylist(arr: pa.Array) -> list:
     return arr.to_numpy(zero_copy_only=False).tolist()
 
 
+def _route_batches(
+    spec: _RouteSpec, by_doc: bool, batches: Iterator[pa.RecordBatch]
+) -> Iterator[pa.RecordBatch]:
+    """The ``mapInArrow`` body of both routed entries: (source, line_no,
+    raw, *carried) batches in, (source, line_no, status, pattern_id,
+    out_line, raw, *carried) out, the source, line_no and carried columns
+    being the Arrow arrays they arrived in.
+
+    The input key is ``source``, or with ``by_doc`` a document counter
+    that goes up at each ``line_no == 1`` and carries across the task's
+    batches, as the router's last key does; the flagless handlers ignore
+    ``isFirst``, so they get one key for every line."""
+    router = spec.compile()
+    doc = 0
+    for batch in batches:
+        sources, line_nos = batch.column(0), batch.column(1)
+        nos = _pylist(line_nos)
+        if not spec.reads_first:
+            keys: Sequence[object] = [None] * batch.num_rows
+        elif by_doc:
+            # each document starts at its line 1
+            starts = list(accumulate((n == 1 for n in nos), initial=doc))
+            keys, doc = starts[1:], starts[-1]
+        else:
+            keys = _pylist(sources)
+        arrays = router.route(_pylist(batch.column(2)), nos, keys)
+        yield pa.RecordBatch.from_arrays(
+            [sources, line_nos, *arrays, *batch.columns[3:]],
+            names=ROUTED_SCHEMA.fieldNames() + batch.schema.names[3:],
+        )
+
+
 def parse_routed(
     lines_df: DataFrame,
     fmt: str | Sequence[str],
@@ -351,53 +381,15 @@ def parse_routed(
     """
     opt = opt or Option()
     spec = _RouteSpec.build(fmt, opt)
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        router = spec.compile()
-        for batch in batches:
-            sources, line_nos = batch.column(0), batch.column(1)
-            # flagless handlers ignore isFirst: one key for every line
-            keys = _pylist(sources) if spec.reads_first else [None] * batch.num_rows
-            arrays = router.route(_pylist(batch.column(2)), _pylist(line_nos), keys)
-            yield pa.RecordBatch.from_arrays(
-                [sources, line_nos, *arrays], names=ROUTED_SCHEMA.fieldNames()
-            )
-
     lines = lines_df.select(
         F.col("source").cast("string"), F.col("line_no").cast("long"), "raw"
     )
     if spec.reads_first:
         lines = lines.repartition("source").sortWithinPartitions("source", "line_no")
-    return lines.mapInArrow(run, ROUTED_SCHEMA)
+    return lines.mapInArrow(partial(_route_batches, spec, False), ROUTED_SCHEMA)
 
 
 fast_parse_routed = parse_routed
-
-
-def _line_chunks(
-    texts: list[str], size: int
-) -> Iterator[tuple[list[int], list[int], list[str]]]:
-    """The lines of ``texts`` in order, split with ``bufio.ScanLines``
-    semantics, as (document index, line_no, raw) lists of at most ``size``
-    lines (no limit when ``size <= 0``); a long document spans several."""
-    size = size if size > 0 else sys.maxsize
-    doc_ids: list[int] = []
-    line_nos: list[int] = []
-    raws: list[str] = []
-    for d, text in enumerate(texts):
-        lines = _scan_lines(text)
-        lo = 0
-        while lo < len(lines):
-            hi = min(len(lines), lo + size - len(raws))
-            doc_ids.extend([d] * (hi - lo))
-            line_nos.extend(range(lo + 1, hi + 1))
-            raws.extend(lines[lo:hi])
-            lo = hi
-            if len(raws) == size:
-                yield doc_ids, line_nos, raws
-                doc_ids, line_nos, raws = [], [], []
-    if raws:
-        yield doc_ids, line_nos, raws
 
 
 def parse_documents(
@@ -408,53 +400,26 @@ def parse_documents(
     text_col: str = "text",
     keep: Sequence[str] = (),
 ) -> DataFrame:
-    """Whole documents in, routed lines out, in ONE ``mapInArrow`` stage.
+    """Whole documents in, routed lines out: :func:`.sources.text.explode_lines`
+    into the ``mapInArrow`` hop that :func:`parse_routed` runs.
 
-    Each non-empty ``text_col`` is split with ``bufio.ScanLines``
-    semantics (``ziparchive._scan_lines``, the model
-    :func:`.sources.text.explode_lines` follows) and its lines run the same
-    core as :func:`parse_routed`. Returns (source, line_no, status,
-    pattern_id, out_line, raw, *keep): ``explode_lines(keep=keep)`` then
-    ``parse_routed`` row for row, except that each DOCUMENT is one input:
-    the line handler gets ``is_first=True`` for the first line of each
-    document that reaches it, as in the reference (parser_core.go:182,245),
-    so a url on two pages gets a ``tsv`` header on each. The ``keep``
-    columns are the document's own Arrow values repeated per line
-    (``pa.Array.take``), never converted to Python. Lines are routed and
-    yielded at most ``spark.sql.execution.arrow.maxRecordsPerBatch`` at a
-    time, so a whole file (``parse_file``) spans several output batches
-    instead of building one that grows with the file.
+    Returns (source, line_no, status, pattern_id, out_line, raw, *keep):
+    ``explode_lines(keep=keep)`` then ``parse_routed`` row for row, except
+    that each DOCUMENT is one input: the line handler gets
+    ``is_first=True`` for the first line of each document that reaches it,
+    as in the reference (parser_core.go:182,245), so a url on two pages
+    gets a ``tsv`` header on each. The explode keeps each document's lines
+    contiguous and in order, and the hop needs no Exchange. The ``keep``
+    columns go back as the Arrow arrays they arrived in, never converted
+    to Python, and the Python worker gets at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` lines at a time,
+    never a whole document.
     """
     opt = opt or Option()
     spec = _RouteSpec.build(fmt, opt)
-    keep = list(keep)
-    out_schema = StructType(ROUTED_SCHEMA.fields + [docs.schema[c] for c in keep])
-
-    size = int(docs.sparkSession.conf.get(_BATCH_ROWS_CONF, "10000"))
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        router = spec.compile()
-        for batch in batches:
-            # a document never spans two Arrow batches: its index in the
-            # batch is the input key
-            router.last_key = _NO_KEY
-            for doc_ids, line_nos, raws in _line_chunks(_pylist(batch.column(1)), size):
-                arrays = router.route(raws, line_nos, doc_ids)
-                take = pa.array(doc_ids, pa.int32())
-                arrays = [
-                    batch.column(0).take(take),
-                    pa.array(line_nos, pa.int64()),
-                    *arrays,
-                ]
-                arrays.extend(batch.column(2 + k).take(take) for k in range(len(keep)))
-                yield pa.RecordBatch.from_arrays(arrays, names=out_schema.fieldNames())
-
-    text = F.col(text_col)
-    return (
-        docs.filter(text.isNotNull() & (text != ""))
-        .select(F.col(source_col).alias("source"), text.alias("text"), *keep)
-        .mapInArrow(run, out_schema)
-    )
+    lines = explode_lines(docs, text_col, source_col, tuple(keep))
+    out_schema = StructType(ROUTED_SCHEMA.fields + [lines.schema[c] for c in keep])
+    return lines.mapInArrow(partial(_route_batches, spec, True), out_schema)
 
 
 def extract_fields(

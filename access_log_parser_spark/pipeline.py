@@ -9,11 +9,11 @@ One batch run over a pages table is ONE job with ONE Python stage:
    afterwards. Each lookup is materialized once per run (a persisted
    derived frame, released when every batch has finished), not
    re-computed per batch;
-2. **parse**: every format, LTSV and regex presets alike, parses whole
-   documents in one ``mapInArrow`` stage (:func:`.engine.parse_documents`:
-   split, decode, filter, serialize, with the reference's per-document
-   ``isFirst`` for the TSV header), carrying the lookup columns through as
-   Arrow arrays. No shuffle;
+2. **parse**: every format, LTSV and regex presets alike, splits the
+   documents into lines in Catalyst and routes them in one ``mapInArrow``
+   stage (:func:`.engine.parse_documents`: decode, filter, serialize, with
+   the reference's per-document ``isFirst`` for the TSV header), carrying
+   the lookup columns through as Arrow arrays. No shuffle;
 3. **route**: one write fans rows out to ``(status, pattern_id)`` sinks
    under the batch's own ``data/batch_id=<id>`` directory, replacing it.
    With two batches in flight, pages of at most as many splits as cores

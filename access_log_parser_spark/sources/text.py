@@ -8,9 +8,10 @@ included; newline-terminated input yields no trailing empty line, and empty
 input yields no line at all. Line numbers are 1-based per source.
 :func:`explode_lines` reproduces exactly that with pure Catalyst
 expressions and no regex, so document-level predicates still push down to
-the scan and no Python runs. ``ziparchive._scan_lines`` is the same
-semantics in plain Python: ``engine.parse_documents`` (every Parser verb)
-splits documents with it, and it is the test oracle.
+the scan and no Python runs. It is the routed path's one line scanner:
+``engine.parse_documents`` (every Parser verb, every pipeline batch) splits
+documents with it too. ``ziparchive._scan_lines`` is the same semantics in
+plain Python, kept as the test oracle.
 """
 
 from __future__ import annotations

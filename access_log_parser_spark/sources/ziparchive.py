@@ -36,9 +36,9 @@ def _scan_lines(text: str) -> list[str]:
     """``bufio.ScanLines`` in plain Python: drop one final ``\\n``, split on
     ``\\n``, then drop one trailing ``\\r`` per token (``dropCR``, which
     Go applies to the unterminated last token too). Empty input has no
-    lines. ``sources.text.explode_lines`` must agree with this row for row,
-    and ``engine.parse_documents`` splits documents (zip entries included)
-    with it (tests/test_scanner.py)."""
+    lines. The test oracle of ``sources.text.explode_lines``, which splits
+    every routed document (zip entries included) and must agree with this
+    row for row (tests/test_scanner.py)."""
     if text == "":
         return []
     if text.endswith("\n"):

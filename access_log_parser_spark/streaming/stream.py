@@ -5,7 +5,8 @@ cancellable — parser_core.go:177-194) but stateless. The Spark mapping
 (SURVEY.md §2.5): an incremental Structured Streaming reader over the
 pages table with ``trigger(availableNow=True)`` for resumable batch-like
 runs, checkpointed to disk; the SAME engine stage
-(:func:`..engine.parse_documents`, one ``mapInArrow`` over whole pages)
+(:func:`..engine.parse_documents`: the pages exploded into lines, then
+one ``mapInArrow``)
 parses each micro-batch, and fan-out happens in
 ``foreachBatch`` with the batch writer: micro-batch ``n`` replaces its
 own ``data/batch_id=<n>`` directory, as a pipeline batch does.

@@ -114,6 +114,9 @@ def _model(fmt, opt, raws, line_nos, keys):
         else:
             (ls,), (vs,) = ltsv_decode_batch([raw])
             pid = -1 if ls is None else 0
+            if ls is not None:
+                # the decoder's tuples as the fresh lists a handler gets
+                ls, vs = list(ls), list(vs)
         if ls is None:
             out = upref + raw if opt.unmatch_lines and raw is not None else None
             rows.append((UNMATCHED, -1, out, raw))

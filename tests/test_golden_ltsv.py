@@ -102,6 +102,6 @@ def test_extract_ltsv_matches_decoder_over_arrow(spark):
     ls, vs = ltsv_decode_batch(raws)
     assert [r["line_no"] for r in rows] == [1, 2, 3, 4, 5]
     assert {r["source"] for r in rows} == {"src"}
-    assert [r["labels"] for r in rows] == ls
-    assert [r["values"] for r in rows] == vs
+    assert [r["labels"] for r in rows] == [None if x is None else list(x) for x in ls]
+    assert [r["values"] for r in rows] == [None if x is None else list(x) for x in vs]
     assert rows[1]["labels"] is None and rows[1]["values"] is None

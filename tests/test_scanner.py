@@ -2,8 +2,10 @@
 
 ``ScanLines`` cuts a token at every ``\\n`` and drops one trailing ``\\r``
 from each token, the unterminated last one included. ``explode_lines``
-(Catalyst, every text source) and ``ziparchive._scan_lines`` (Python, zip
-entries) must both reproduce it; ``_scan_lines`` is the oracle for the fuzz.
+(Catalyst) is the routed path's one line scanner: every text source and
+``parse_documents`` (every Parser verb) split with it.
+``ziparchive._scan_lines`` is the same semantics in plain Python, the
+oracle the fuzz checks ``explode_lines`` against.
 """
 
 from __future__ import annotations
@@ -244,25 +246,48 @@ def test_custom_handler_is_first_once_per_document(spark):
 
 
 def test_is_first_carries_across_arrow_batches(spark):
-    """One line or document per Arrow batch: the last key that reached the
-    handler carries over, so an input that spans batches is first once,
-    and each one-document batch is first."""
+    """One line per Arrow batch, every page on one url: the last key that
+    reached the handler carries over, and so does ``parse_documents``'
+    document counter, so an input that spans batches is first once and
+    each document's first line to reach the handler is first, even when a
+    document between two others has no matched line or a document's line
+    1 is skipped."""
     from access_log_parser_spark import parse_documents, parse_routed
+    from access_log_parser_spark.handlers import tsv_line_handler
 
     def handler(labels, values, is_first):
         return f"{is_first}|{values[0]}"
+
+    def routed(pages, opt):
+        docs = spark.createDataFrame(
+            [("u", text) for text in pages], "url string, text string"
+        ).coalesce(1)
+        return sorted(r.out_line for r in parse_documents(docs, "ltsv", opt).collect()
+                      if r.out_line is not None)
 
     opt = Option(line_handler=handler)
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, "1")
     try:
-        docs = spark.createDataFrame(
-            [("u", "k:1"), ("u", "k:2"), ("u", "k:3\nk:4\nk:5")],
-            "url string, text string",
-        ).coalesce(1)
-        got = sorted(r.out_line for r in parse_documents(docs, "ltsv", opt).collect())
+        got = routed(["k:1", "k:2", "k:3\nk:4\nk:5"], opt)
         assert got == ["False|4", "False|5", "True|1", "True|2", "True|3"]
+        # the tsv header once per document, the first spanning two batches
+        got = routed(["k:1\tv:a\nk:2\tv:b", "k:3\tv:c"], Option(line_handler="tsv"))
+        kv = ("k", "v")
+        assert got == sorted(
+            [
+                tsv_line_handler(kv, ("1", "a"), True),
+                tsv_line_handler(kv, ("2", "b"), False),
+                tsv_line_handler(kv, ("3", "c"), True),
+            ]
+        )
+        assert sum(line.startswith("k\tv\n") for line in got) == 2
+        # a document whose only line is unmatched, between two matched ones
+        assert routed(["k:1", "bad", "k:2"], opt) == ["True|1", "True|2"]
+        # line 1 skipped: each document's line 2 is still its first
+        got = routed(["k:0\nk:1\nk:2", "k:3\nk:4"], Option(line_handler=handler, skip_lines=[1]))
+        assert got == ["False|2", "True|1", "True|4"]
         lines = spark.createDataFrame(
             [("s", n, f"k:{n}") for n in range(1, 8)],
             "source string, line_no long, raw string",
@@ -271,29 +296,3 @@ def test_is_first_carries_across_arrow_batches(spark):
         assert got == ["False|2", "False|3", "False|4", "False|5", "False|6", "False|7", "True|1"]
     finally:
         spark.conf.set(key, old)
-
-
-@pytest.mark.parametrize("size", [1, 2, 3, 7, 0])
-def test_line_chunks_bound_output_batches(size):
-    """``parse_documents`` routes and yields at most ``size`` lines at a
-    time, so a long document never builds one unbounded output batch; the
-    chunks concatenate to the documents' scanned lines in order."""
-    from access_log_parser_spark.engine import _line_chunks
-
-    texts = ["a\nb\nc\nd\ne\n", "", "f", "g\r\nh\n\ni", "\n"]
-    chunks = list(_line_chunks(texts, size))
-    if size > 0:
-        assert all(0 < len(raws) <= size for _, _, raws in chunks)
-        assert all(len(raws) == size for _, _, raws in chunks[:-1])
-    else:
-        assert len(chunks) == 1
-    flat = [
-        (d, n, r)
-        for doc_ids, line_nos, raws in chunks
-        for d, n, r in zip(doc_ids, line_nos, raws, strict=True)
-    ]
-    assert flat == [
-        (d, n, r)
-        for d, text in enumerate(texts)
-        for n, r in enumerate(_scan_lines(text), start=1)
-    ]
