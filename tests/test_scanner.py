@@ -282,7 +282,6 @@ def test_is_first_carries_across_arrow_batches(spark):
                 tsv_line_handler(kv, ("3", "c"), True),
             ]
         )
-        assert sum(line.startswith("k\tv\n") for line in got) == 2
         # a document whose only line is unmatched, between two matched ones
         assert routed(["k:1", "bad", "k:2"], opt) == ["True|1", "True|2"]
         # line 1 skipped: each document's line 2 is still its first
